@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** The listener bus drain is package-private to Spark; the benchmark needs
+  * it to read task metrics of jobs that have just finished. */
+object PerfbenchAccess {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
