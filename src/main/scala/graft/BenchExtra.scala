@@ -18,9 +18,16 @@ import org.apache.spark.sql.SparkSession
  * - SPARK_GRAFT_EXTRA_PLANDIR=<dir> additionally writes
  *   <dir>/<query>.txt with `.explain("formatted")` for each query.
  *
- * Prints one JSON line: {"queries_min":{...},"queries_samples":{...}}.
+ * Prints one JSON line: {"queries_min":{...},"queries_samples":{...}};
+ * a failed rep is sampled as -1.0 and left out of `queries_min`.
  */
 object BenchExtra {
+  /** A query's fastest successful rep; a failed rep is recorded as a
+    * negative sample and never counts, so a query whose every rep failed
+    * has no minimum (emitted as `null`). */
+  def queryMin(samples: Seq[Double]): Option[Double] =
+    samples.filter(_ >= 0).minOption
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -75,12 +82,13 @@ object BenchExtra {
       name -> samples
     }
     def f(d: Double): String = "%.4f".format(d)
-    val mins = results.map { case (k, v) => "\"" + k + "\":" + f(v.min) }
-      .mkString("{", ",", "}")
+    val mins = results.map { case (k, v) =>
+      "\"" + k + "\":" + queryMin(v).map(f).getOrElse("null")
+    }.mkString("{", ",", "}")
     val all = results.map { case (k, v) =>
       "\"" + k + "\":" + v.map(f).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val total = results.map(_._2.min).filter(_ >= 0).sum
+    val total = results.flatMap(r => queryMin(r._2)).sum
     println(s"""{"metric":"extra","total_min":${f(total)},""" +
       s""""queries_min":$mins,"queries_samples":$all,"sf":"$sfDir",""" +
       s""""noop":$useNoop,"reps":$reps}""")

@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.build.{IbfParams, ProbeDb, SketchBuild, SketchDb, TwoLevelSketchDb}
+import graft.build.{IbfParams, ProbeDb, SketchBuild, SketchDb, TwoLevelDb}
 import graft.classify.{Classify, ClassifyParams, Em, ReadResult}
 import graft.core.Lca
 import graft.io.{Formats, SketchStore}
@@ -163,22 +163,18 @@ object Ganon {
     graft.streaming.StreamClassify.ingestForeachBatch(spark, stream,
       targetCol, contentCol, storeDir, params, gcKeepGens, ingestId)
 
-  /** Persist a db. For the in-memory layouts this writes a new store; for
-    * a store-backed [[graft.build.LazyTwoLevelDb]] handle it EXPORTS the
-    * handle's pinned snapshot into `dir` as a fresh self-contained store
-    * (distributed blob copy — a consistent backup of exactly the bits the
-    * handle serves, immune to concurrent updates of the source store).
-    * Saving a lazy handle back onto its own store directory is an error:
-    * that snapshot already lives there. */
+  /** Persist a db as a new store generation in `dir`. A store-backed
+    * [[graft.build.TwoLevelDb]] handle EXPORTS its pinned snapshot (a
+    * consistent backup of exactly the bits the handle serves, immune to
+    * concurrent updates of the source store); saving it back onto its own
+    * store directory is an error — that snapshot already lives there. */
   def save(spark: SparkSession, db: ProbeDb, dir: String): Unit = db match {
     case flat: SketchDb => SketchStore.save(spark, flat, dir)
-    case two: TwoLevelSketchDb => SketchStore.saveTwoLevel(spark, two, dir)
-    case lazyDb: graft.build.LazyTwoLevelDb =>
-      SketchStore.exportSnapshot(spark, lazyDb, dir)
+    case two: TwoLevelDb => SketchStore.saveTwoLevel(spark, two, dir)
     case other =>
       throw new IllegalArgumentException(
-        s"cannot save a ${other.getClass.getSimpleName}: only in-memory " +
-          "SketchDb/TwoLevelSketchDb persist via save")
+        s"cannot save a ${other.getClass.getSimpleName}: only SketchDb and " +
+          "TwoLevelDb persist via save")
   }
 
   def load(spark: SparkSession, dir: String): ProbeDb =

@@ -169,66 +169,6 @@ final class SketchDb(
   def sizeBytes: Long = ibf.sizeBytes
 }
 
-/**
- * Two-level (HIBF-like) layout: a coarse IBF over 64-bin GROUPS prunes
- * which fine shards to probe. The coarse bin of group g contains the union
- * of the hashes routed into the group, so coarseCount(g) >= count(any
- * member bin) — a group below the read's threshold can be skipped with
- * zero false negatives. When a split target spans groups its total count
- * is divided between coarse bins, so full-cutoff pruning is only safe for
- * span-free layouts; otherwise we fall back to presence pruning
- * (skip only zero-hit groups), which is always lossless.
- * Executor memory: only the coarse IBF must stay hot; shards are
- * independent blobs (loadable lazily from the sketch store at real scale).
- */
-final class TwoLevelSketchDb(
-    val coarse: InterleavedBloom,          // bins = groups
-    val shards: Array[InterleavedBloom],   // one fine IBF per 64-bin group
-    val targets: Array[String],
-    val targetHashes: Array[Long],
-    val layout: BinLayout,
-    val params: IbfParams,
-    val plan: IbfPlan) extends SplitBinDb {
-
-  private val groupCutoffSafe = !layout.anyGroupSpanning
-
-  // per-thread coarse count scratch — the probe runs once per READ,
-  // so per-row allocation here is pure GC churn (same discipline as
-  // techScratch)
-  @transient private lazy val gcScratch: ThreadLocal[Array[Int]] =
-    ThreadLocal.withInitial(() => new Array[Int](shards.length))
-
-  def probe(hashes: Array[Long], counts: Array[Int], cutoff: Int): Unit = {
-    val gc = gcScratch.get()
-    java.util.Arrays.fill(gc, 0)
-    coarse.bulkCount(hashes, gc)
-    val effCutoff = if (groupCutoffSafe) cutoff else 1
-    val tech = techScratch.get()
-    java.util.Arrays.fill(tech, 0)
-    // every shard shares (bitsPerBin, numHashes): derive each hash's probe
-    // rows ONCE into a matrix, then sweep the surviving shards GROUP-MAJOR
-    // (one shard's ~bitsPerBin/8-byte word array stays cache-resident for
-    // the whole hash sweep; a hash-major walk across shards thrashes)
-    var any = false
-    var g = 0
-    while (g < shards.length && !any) { any = gc(g) >= effCutoff; g += 1 }
-    if (any) {
-      val rows = rowMatrix(hashes.length)
-      InterleavedBloom.probeRowsAll(hashes, plan.bitsPerBin, plan.numHashes,
-        rows)
-      g = 0
-      while (g < shards.length) {
-        if (gc(g) >= effCutoff)
-          shards(g).countAtRowsMatrix1(rows, hashes.length, tech, g * 64)
-        g += 1
-      }
-    }
-    foldToTargets(tech, counts)
-  }
-
-  def sizeBytes: Long = coarse.sizeBytes + shards.map(_.sizeBytes).sum
-}
-
 /** Minimal serializable Hadoop-configuration carrier for executor-side
   * filesystem access (Hadoop's `Configuration` is Writable, not
   * Serializable). */
@@ -247,26 +187,42 @@ final class SerializableHadoopConf(
 }
 
 /**
- * Two-level layout with LAZY shards: only the coarse filter and the bin
- * metadata ship with the broadcast; each executor fetches a group's fine
- * shard from the sketch store ON FIRST PROBE of that group and caches it.
- * With coarse pruning, shards for groups a workload never hits are never
- * read — executor memory is bounded by the WORKING SET of groups, not the
- * database size (the HIBF lazy-load story; the reference keeps the whole
- * HIBF resident, GanonClassify.cpp:949-986) — and `maxCacheBytes` bounds
- * even the working set: past it, the least-recently-probed shard is
- * evicted (a shifting workload over a 500 GB store no longer resident-sets
- * every shard it ever touched). SIZE THE BOUND ABOVE THE WORKLOAD'S
- * INSTANTANEOUS working set: eviction granularity is per probe, so a
- * bound below what one saturating sweep needs degrades to a blob
- * re-fetch+parse per (read, evicted group) — the bound protects memory
- * across workload SHIFTS, it is not a magic way to probe a store bigger
- * than the reads' own reach.
+ * The two-level (HIBF-like) layout: a coarse IBF over 64-bin GROUPS prunes
+ * which fine shards to probe. The coarse bin of group g contains the union
+ * of the hashes routed into the group, so coarseCount(g) >= count(any
+ * member bin) — a group below the read's threshold can be skipped with
+ * zero false negatives. When a split target spans groups its total count
+ * is divided between coarse bins, so full-cutoff pruning is only safe for
+ * span-free layouts; otherwise we fall back to presence pruning
+ * (skip only zero-hit groups), which is always lossless.
  *
- * SNAPSHOT PINNING: the handle carries its generation's per-group blob
- * pointers (`shardGens`), and updates never mutate committed blobs — only
- * write the next generation's — so this handle keeps reading exactly the
- * bits it was loaded with even while the store is updated underneath it.
+ * Where shard g comes from is the only thing that varies:
+ *  - RESIDENT (`buildTwoLevel`): `shards` holds every group's filter; it
+ *    ships with the broadcast and pre-fills the shard cache, so no probe
+ *    ever touches a store.
+ *  - STORE-BACKED (`buildToStore`, `updateStored`, `compactStored`,
+ *    `SketchStore.loadAny`/`loadTwoLevelLazy`): `shards` is null; only the
+ *    coarse filter and the bin metadata ship with the broadcast, and each
+ *    executor fetches a group's shard from the sketch store ON FIRST PROBE
+ *    of that group and caches it. With coarse pruning, shards for groups a
+ *    workload never hits are never read — executor memory is bounded by
+ *    the WORKING SET of groups, not the database size (the HIBF lazy-load
+ *    story; the reference keeps the whole HIBF resident,
+ *    GanonClassify.cpp:949-986) — and `maxCacheBytes` bounds even the
+ *    working set: past it, the least-recently-probed shard is evicted (a
+ *    shifting workload over a 500 GB store no longer resident-sets every
+ *    shard it ever touched). SIZE THE BOUND ABOVE THE WORKLOAD'S
+ *    INSTANTANEOUS working set: eviction granularity is per probe, so a
+ *    bound below what one saturating sweep needs degrades to a blob
+ *    re-fetch+parse per (read, evicted group) — the bound protects memory
+ *    across workload SHIFTS, it is not a magic way to probe a store bigger
+ *    than the reads' own reach.
+ *
+ * SNAPSHOT PINNING: a store-backed handle carries its generation's
+ * per-group blob pointers (`shardGens`), and updates never mutate
+ * committed blobs — only write the next generation's — so the handle
+ * keeps reading exactly the bits it was loaded with even while the store
+ * is updated underneath it.
  *
  * `readShard` resolves through the Hadoop FileSystem API, so the store can
  * live on file://, hdfs:// or any mounted FS. The SESSION's Hadoop
@@ -274,24 +230,39 @@ final class SerializableHadoopConf(
  * executor would drop every `spark.hadoop.*` setting (object-store
  * credentials, HA nameservice mappings) and break the first shard fetch.
  */
-final class LazyTwoLevelDb(
-    val coarse: InterleavedBloom,
+final class TwoLevelDb private (
+    val coarse: InterleavedBloom,          // bins = groups
     val targets: Array[String],
     val targetHashes: Array[Long],
     val layout: BinLayout,
     val params: IbfParams,
     val plan: IbfPlan,
-    val storeDir: String,
+    shards: Array[InterleavedBloom],       // resident shards, or null
+    val storeDir: String,                  // null for a resident db
     val generation: Int,
     val shardGens: Array[Int],
     hadoopConf: SerializableHadoopConf,
-    maxCacheBytes: Long = Long.MaxValue) extends SplitBinDb {
+    maxCacheBytes: Long) extends SplitBinDb {
 
   private val groupCutoffSafe = !layout.anyGroupSpanning
 
-  @transient private lazy val shardCache =
-    new java.util.concurrent.atomic.AtomicReferenceArray[InterleavedBloom](
-      layout.numGroups)
+  /** Every shard ships with this db (nothing is read from a store). */
+  def isResident: Boolean = shards != null
+
+  /** Resident shard g (a resident db only; for saving). */
+  private[graft] def residentShard(g: Int): InterleavedBloom = shards(g)
+
+  @transient private lazy val shardCache = {
+    val c = new java.util.concurrent.atomic.AtomicReferenceArray[
+      InterleavedBloom](layout.numGroups)
+    if (shards != null) {
+      var g = 0
+      while (g < shards.length) {
+        c.set(g, shards(g)); cachedBytes.addAndGet(shards(g).sizeBytes); g += 1
+      }
+    }
+    c
+  }
   // LRU bookkeeping: a coarse monotonic clock stamped per access (lazySet —
   // no fence on the probe hot path) + resident-byte accounting. Eviction
   // only runs on load (rare), where a synchronized scan over numGroups is
@@ -300,14 +271,15 @@ final class LazyTwoLevelDb(
     new java.util.concurrent.atomic.AtomicLongArray(layout.numGroups)
   @transient private lazy val accessClock =
     new java.util.concurrent.atomic.AtomicLong()
-  @transient private lazy val resident =
+  @transient private lazy val cachedBytes =
     new java.util.concurrent.atomic.AtomicLong()
 
   // recency stamps exist only to pick eviction victims; with an unbounded
-  // cache (the default) nothing ever evicts, so skip the per-(read, group)
-  // accessClock.incrementAndGet on the probe hot path entirely — a full
-  // RMW on one shared cache line across all probe threads is real money
-  // at millions of probes/second on a wide executor
+  // cache (the default, and always for a resident db) nothing ever evicts,
+  // so skip the per-(read, group) accessClock.incrementAndGet on the probe
+  // hot path entirely — a full RMW on one shared cache line across all
+  // probe threads is real money at millions of probes/second on a wide
+  // executor
   private val lruBounded = maxCacheBytes != Long.MaxValue
 
   private def shard(g: Int): InterleavedBloom = {
@@ -318,16 +290,16 @@ final class LazyTwoLevelDb(
       // the in-flight shard as the zero-stamped "oldest" entry, and
       // account the bytes BEFORE the CAS so a racing evictor's
       // subtraction can never precede this addition (that ordering would
-      // leave `resident` permanently overcounting an evicted shard and
+      // leave `cachedBytes` permanently overcounting an evicted shard and
       // degrade the cache toward per-probe refetches)
       if (lruBounded) lastAccess.lazySet(g, accessClock.incrementAndGet())
-      resident.addAndGet(s.sizeBytes)
+      cachedBytes.addAndGet(s.sizeBytes)
       if (shardCache.compareAndSet(g, null, s)) {
-        if (resident.get() > maxCacheBytes) evictLru(keep = g)
+        if (cachedBytes.get() > maxCacheBytes) evictLru(keep = g)
       } else {
         // CAS lost: another thread cached it first — back out our
         // accounting; the locally read shard is correct either way
-        resident.addAndGet(-s.sizeBytes)
+        cachedBytes.addAndGet(-s.sizeBytes)
       }
     }
     if (lruBounded) lastAccess.lazySet(g, accessClock.incrementAndGet())
@@ -335,7 +307,7 @@ final class LazyTwoLevelDb(
   }
 
   private def evictLru(keep: Int): Unit = synchronized {
-    while (resident.get() > maxCacheBytes) {
+    while (cachedBytes.get() > maxCacheBytes) {
       var victim = -1
       var oldest = Long.MaxValue
       var g = 0
@@ -348,22 +320,17 @@ final class LazyTwoLevelDb(
       }
       if (victim < 0) return // only the just-loaded shard is resident
       val s = shardCache.getAndSet(victim, null)
-      if (s != null) resident.addAndGet(-s.sizeBytes)
+      if (s != null) cachedBytes.addAndGet(-s.sizeBytes)
     }
   }
 
   private def readShard(g: Int): InterleavedBloom =
     graft.io.SketchStore.readShardBlob(hadoopConf.value, storeDir,
-      shardGens, g).getOrElse {
-      // None only for the NoBlobGen sentinel (appended group that routed
-      // zero hashes): probe it as all-empty bins. A blob MISSING under a
-      // real pointer throws inside readShardBlob — a gc'd pinned
-      // generation must fail fast, not silently lose its matches.
-      val nLocal = math.min(64, layout.numBins - g * 64)
-      InterleavedBloom.empty(nLocal, plan.bitsPerBin, plan.numHashes)
-    }
+      shardGens, g).getOrElse(TwoLevelDb.emptyShard(layout, plan, g))
 
-  // per-thread count scratch — probe runs per read (see TwoLevelSketchDb)
+  // per-thread coarse count scratch — the probe runs once per READ,
+  // so per-row allocation here is pure GC churn (same discipline as
+  // techScratch)
   @transient private lazy val gcScratch: ThreadLocal[Array[Int]] =
     ThreadLocal.withInitial(() => new Array[Int](layout.numGroups))
 
@@ -374,9 +341,11 @@ final class LazyTwoLevelDb(
     val effCutoff = if (groupCutoffSafe) cutoff else 1
     val tech = techScratch.get()
     java.util.Arrays.fill(tech, 0)
-    // group-major with the shared position matrix (see
-    // TwoLevelSketchDb.probe); first probe of a group fetches its shard
-    // from the store
+    // every shard shares (bitsPerBin, numHashes): derive each hash's probe
+    // rows ONCE into a matrix, then sweep the surviving shards GROUP-MAJOR
+    // (one shard's ~bitsPerBin/8-byte word array stays cache-resident for
+    // the whole hash sweep; a hash-major walk across shards thrashes); the
+    // first probe of a store-backed group fetches its shard
     var any = false
     var g = 0
     while (g < layout.numGroups && !any) { any = gc(g) >= effCutoff; g += 1 }
@@ -394,9 +363,11 @@ final class LazyTwoLevelDb(
     foldToTargets(tech, counts)
   }
 
-  /** Broadcast footprint: the coarse filter only (shards stay off-heap of
-    * the broadcast, fetched per executor on demand). */
-  def sizeBytes: Long = coarse.sizeBytes
+  /** Broadcast footprint: the coarse filter plus the resident shards (a
+    * store-backed db ships the coarse only; shards are fetched per
+    * executor on demand). */
+  def sizeBytes: Long =
+    coarse.sizeBytes + (if (shards == null) 0L else shards.map(_.sizeBytes).sum)
 
   /** How many shards this JVM has materialized (observability/tests). */
   def loadedShards: Int = {
@@ -408,8 +379,45 @@ final class LazyTwoLevelDb(
     n
   }
 
-  /** Resident shard-cache bytes in this JVM (bounded by maxCacheBytes). */
-  def residentBytes: Long = resident.get()
+  /** Resident shard-cache bytes in this JVM (bounded by maxCacheBytes);
+    * touching `shardCache` first counts a resident db's pre-filled shards. */
+  def residentBytes: Long = { shardCache; cachedBytes.get() }
+}
+
+object TwoLevelDb {
+  /** A db whose every shard is in memory (no store behind it). */
+  def resident(coarse: InterleavedBloom, shards: Array[InterleavedBloom],
+      targets: Array[String], targetHashes: Array[Long], layout: BinLayout,
+      params: IbfParams, plan: IbfPlan): TwoLevelDb =
+    new TwoLevelDb(coarse, targets, targetHashes, layout, params, plan,
+      shards, null, 0, Array.empty[Int], null, Long.MaxValue)
+
+  /** A handle on generation `generation` of the store at `storeDir`;
+    * `shardGens(g)` names the generation owning group g's blob. Every
+    * handle carries the session's Hadoop configuration and honors its
+    * per-executor resident-shard-byte bound
+    * (`spark.graft.shard.cache.bytes`, LRU eviction past it; default
+    * unbounded) — a handle returned by buildToStore/updateStored obeys the
+    * same bound as a loaded one. */
+  def stored(spark: SparkSession, coarse: InterleavedBloom,
+      targets: Array[String], targetHashes: Array[Long], layout: BinLayout,
+      params: IbfParams, plan: IbfPlan, storeDir: String, generation: Int,
+      shardGens: Array[Int]): TwoLevelDb =
+    new TwoLevelDb(coarse, targets, targetHashes, layout, params, plan,
+      null, storeDir, generation, shardGens,
+      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
+      spark.conf.getOption("spark.graft.shard.cache.bytes")
+        .map(_.toLong).getOrElse(Long.MaxValue))
+
+  /** Group g's all-empty shard: a group that routed zero hashes (no shard
+    * row at build time, or the NoBlobGen sentinel in a store). A blob
+    * MISSING under a real pointer throws inside readShardBlob instead — a
+    * gc'd pinned generation must fail fast, not silently lose its
+    * matches. */
+  private[graft] def emptyShard(layout: BinLayout, plan: IbfPlan,
+      g: Int): InterleavedBloom =
+    InterleavedBloom.empty(math.min(64, layout.numBins - g * 64),
+      plan.bitsPerBin, plan.numHashes)
 }
 
 /**
@@ -476,21 +484,15 @@ object SketchBuild {
 
   def build(spark: SparkSession, df: DataFrame, targetCol: String,
       contentCol: String, p: IbfParams = IbfParams(),
-      checkpointDir: Option[String] = None,
-      persistShingles: Boolean = false): SketchDb = {
-    val (cards, thePlan, layout, shardRows) =
-      buildShards(spark, df, targetCol, contentCol, p, checkpointDir,
-        twoLevel = false, persistShingles)
+      checkpointDir: Option[String] = None): SketchDb = {
+    val (cards, thePlan, layout, binsDf) =
+      planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
+        twoLevel = false)
     val ibf = InterleavedBloom.empty(layout.numBins, thePlan.bitsPerBin,
       thePlan.numHashes)
-    val w = ibf.wordsPerRow
-    shardRows.foreach { case (g, blob, _) =>
-      val shard = InterleavedBloom.fromBytes(blob)
-      var pos = 0
-      while (pos < thePlan.bitsPerBin) {
-        ibf.words(pos * w + g) = shard.words(pos)
-        pos += 1
-      }
+    binsDf.collect().foreach { r =>
+      orGroup(ibf, r.getInt(0),
+        InterleavedBloom.fromBytes(r.getAs[Array[Byte]]("shard")))
     }
     new SketchDb(ibf, cards.map(_._1).toArray, cards.map(_._2).toArray,
       layout, p, thePlan)
@@ -499,66 +501,44 @@ object SketchBuild {
   /**
    * Two-level build: the SAME single pass also aggregates one coarse
    * union-Bloom per 64-bin group (no third scan over the content, no
-   * bin re-extraction); shards are kept as independent per-group filters.
+   * bin re-extraction); shards are kept as independent per-group filters,
+   * all resident.
    */
   def buildTwoLevel(spark: SparkSession, df: DataFrame, targetCol: String,
-      contentCol: String, p: IbfParams = IbfParams(), groupSize: Int = 64,
-      checkpointDir: Option[String] = None,
-      persistShingles: Boolean = false): TwoLevelSketchDb = {
-    require(groupSize == 64, "interleaved layout fixes the group size at 64")
-    val (cards, thePlan, layout, shardRows) =
-      buildShards(spark, df, targetCol, contentCol, p, checkpointDir,
-        twoLevel = true, persistShingles)
+      contentCol: String, p: IbfParams = IbfParams(),
+      checkpointDir: Option[String] = None): TwoLevelDb = {
+    val (cards, thePlan, layout, binsDf) =
+      planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
+        twoLevel = true)
     val nGroups = layout.numGroups
     val shards = new Array[InterleavedBloom](nGroups)
-    val coarseBins = new Array[(Int, Bloom)](nGroups)
-    shardRows.foreach { case (g, blob, coarseBlob) =>
+    val coarseBins = binsDf.collect().toSeq.map { r =>
       // re-window the 64-wide shard to the group's real bin count
-      val full = InterleavedBloom.fromBytes(blob)
-      val nLocal = math.min(64, layout.numBins - g * 64)
-      shards(g) = new InterleavedBloom(nLocal, full.bitsPerBin,
-        full.numHashes, full.words)
-      coarseBins(g) = (g, Bloom.fromBytes(coarseBlob))
+      val g = r.getInt(0)
+      shards(g) = windowed(
+        InterleavedBloom.fromBytes(r.getAs[Array[Byte]]("shard")), g,
+        layout.numBins)
+      (g, Bloom.fromBytes(r.getAs[Array[Byte]]("coarse")))
     }
     // groups whose targets routed ZERO hashes (all content empty/filtered)
     // produce no shard row: materialize empty shards so probe/sizeBytes
     // see zero-count bins, matching the flat build's tolerance
-    var g = 0
-    while (g < nGroups) {
-      if (shards(g) == null) {
-        val nLocal = math.min(64, layout.numBins - g * 64)
-        shards(g) = InterleavedBloom.empty(nLocal, thePlan.bitsPerBin,
-          thePlan.numHashes)
-      }
-      g += 1
+    shards.indices.foreach { g =>
+      if (shards(g) == null) shards(g) = TwoLevelDb.emptyShard(layout, thePlan, g)
     }
-    val presentCoarse = coarseBins.toSeq.filter(_ != null)
-    val coarse =
-      if (presentCoarse.nonEmpty) InterleavedBloom.fromBins(presentCoarse, nGroups)
-      else InterleavedBloom.empty(nGroups, 64L, 1)
-    new TwoLevelSketchDb(coarse, shards, cards.map(_._1).toArray,
-      cards.map(_._2).toArray, layout, p, thePlan)
+    TwoLevelDb.resident(coarseOf(coarseBins, nGroups), shards,
+      cards.map(_._1).toArray, cards.map(_._2).toArray, layout, p, thePlan)
   }
 
   /** The shared two-pass pipeline with the pass-2 result left DISTRIBUTED:
-    * one row per touched 64-bin group (grp, shard[, coarse]). With
-    * `persistShingles` the (target, hs) projection is computed ONCE and
-    * persisted (memory-and-disk) between the passes — the Spark analog of
-    * the reference's `.min` hash spill files (GanonBuild.cpp:139-182),
-    * trading cache space for a second full shingle scan. The returned
-    * cleanup releases it AFTER the caller's pass-2 action. */
+    * one row per touched 64-bin group (grp, shard[, coarse]). */
   private def planAndShard(spark: SparkSession, df: DataFrame,
       targetCol: String, contentCol: String, p: IbfParams,
-      checkpointDir: Option[String], twoLevel: Boolean,
-      persistShingles: Boolean = false)
-      : (Seq[(String, Long)], IbfPlan, BinLayout, DataFrame, () => Unit) = {
+      checkpointDir: Option[String], twoLevel: Boolean)
+      : (Seq[(String, Long)], IbfPlan, BinLayout, DataFrame) = {
     import spark.implicits._
 
-    var hashed = hashedProjection(df, targetCol, contentCol, p)
-    if (persistShingles) hashed = hashed.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cleanup: () => Unit =
-      if (persistShingles) () => { hashed.unpersist(); () } else () => ()
+    val hashed = hashedProjection(df, targetCol, contentCol, p)
 
     // ---- pass 1 (or resume) ----
     val tag = paramsTag(p) + s";target=$targetCol;content=$contentCol;two=$twoLevel"
@@ -576,15 +556,18 @@ object SketchBuild {
       if (twoLevel) coarseSizing(cards, layout, p.maxFp) else (64L, 1)
 
     // ---- pass 2 (or resume): route -> one shard per 64-bin group ----
-    val entries = cards.indices.map(i =>
-      (cards(i)._1, layout.base(i), layout.split(i)))
     val binsDf = checkpointed(spark, checkpointDir, "pass2_group_shards",
         tag) {
-      shardPass(spark, hashed, thePlan, entries,
+      shardPass(spark, hashed, thePlan, entriesOf(cards, layout),
         layout.numGroups, coarseBits, coarseH, twoLevel)
     }
-    (cards, thePlan, layout, binsDf, cleanup)
+    (cards, thePlan, layout, binsDf)
   }
+
+  /** Bin-map entries (target, base, split) of a planned layout. */
+  private def entriesOf(cards: Seq[(String, Long)],
+      layout: BinLayout): Seq[(String, Int, Int)] =
+    cards.indices.map(i => (cards(i)._1, layout.base(i), layout.split(i)))
 
   /** Coarse-filter sizing for a two-level layout: each group's union is at
     * most the sum of the full hash sets of the targets touching it (span
@@ -604,21 +587,30 @@ object SketchBuild {
     (m, math.min(16, Bloom.optimalHashes(m, maxN)))
   }
 
-  /** In-memory variant: collect the (small) shard rows to the driver. */
-  private def buildShards(spark: SparkSession, df: DataFrame,
-      targetCol: String, contentCol: String, p: IbfParams,
-      checkpointDir: Option[String], twoLevel: Boolean,
-      persistShingles: Boolean)
-      : (Seq[(String, Long)], IbfPlan, BinLayout, Array[(Int, Array[Byte], Array[Byte])]) = {
-    val (cards, thePlan, layout, binsDf, cleanup) =
-      planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
-        twoLevel, persistShingles)
-    val shardRows = binsDf.collect().map { r =>
-      (r.getInt(0), r.getAs[Array[Byte]]("shard"),
-        if (twoLevel) r.getAs[Array[Byte]]("coarse") else null)
+  /** A 64-wide aggregated shard re-windowed to group g's real bin count
+    * (<=64-bin shards always carry bitsPerBin words, so this is a pure
+    * header change). */
+  private def windowed(full: InterleavedBloom, g: Int,
+      numBins: Int): InterleavedBloom =
+    new InterleavedBloom(math.min(64, numBins - g * 64), full.bitsPerBin,
+      full.numHashes, full.words)
+
+  /** The coarse filter stitched from per-group union Blooms (all-empty
+    * when no group received a hash). */
+  private def coarseOf(bins: Seq[(Int, Bloom)], nGroups: Int): InterleavedBloom =
+    if (bins.nonEmpty) InterleavedBloom.fromBins(bins, nGroups)
+    else InterleavedBloom.empty(nGroups, 64L, 1)
+
+  /** OR a (<=64-bin) group shard into word column g of a flat filter with
+    * the same bitsPerBin. */
+  private def orGroup(ibf: InterleavedBloom, g: Int,
+      shard: InterleavedBloom): Unit = {
+    val w = ibf.wordsPerRow
+    var pos = 0
+    while (pos < ibf.bitsPerBin) {
+      ibf.words(pos * w + g) |= shard.words(pos)
+      pos += 1
     }
-    cleanup()
-    (cards, thePlan, layout, shardRows)
   }
 
   /**
@@ -632,19 +624,18 @@ object SketchBuild {
    * the driver. The build writes a NEW generation (blobs into
    * `shards_v<N>/`, committed by flipping CURRENT last), so a rebuild over
    * an existing store never disturbs readers pinned to the old snapshot
-   * and a crash leaves the old generation fully loadable. Returns the lazy
-   * db over the store just written — no Array[InterleavedBloom] ever
+   * and a crash leaves the old generation fully loadable. Returns the
+   * store-backed db over the store just written — no shard array ever
    * materializes on the driver.
    */
   def buildToStore(spark: SparkSession, df: DataFrame, targetCol: String,
       contentCol: String, dir: String, p: IbfParams = IbfParams(),
       checkpointDir: Option[String] = None,
-      persistShingles: Boolean = false,
-      commitTag: Option[(String, Long)] = None): LazyTwoLevelDb = {
-    val (cards, thePlan, layout, binsDf, cleanup) =
+      commitTag: Option[(String, Long)] = None): TwoLevelDb = {
+    val (cards, thePlan, layout, binsDf) =
       planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
-        twoLevel = true, persistShingles)
-    storeGeneration(spark, dir, p, cards, thePlan, layout, binsDf, cleanup,
+        twoLevel = true)
+    storeGeneration(spark, dir, p, cards, thePlan, layout, binsDf,
       commitTag = commitTag)
   }
 
@@ -654,9 +645,8 @@ object SketchBuild {
     * the coarse filter driver-side, commit the manifest. */
   private def storeGeneration(spark: SparkSession, dir: String, p: IbfParams,
       cards: Seq[(String, Long)], thePlan: IbfPlan, layout: BinLayout,
-      binsDf: DataFrame, cleanup: () => Unit,
-      basedOnGen: Option[Int] = None,
-      commitTag: Option[(String, Long)] = None): LazyTwoLevelDb = {
+      binsDf: DataFrame, basedOnGen: Option[Int] = None,
+      commitTag: Option[(String, Long)] = None): TwoLevelDb = {
     import spark.implicits._
     val numBins = layout.numBins
     val nGroups = layout.numGroups
@@ -683,33 +673,24 @@ object SketchBuild {
       .as[(Int, Array[Byte], Array[Byte])]
       .mapPartitions { iter =>
         iter.map { case (g, blob, coarseBlob) =>
-          val full = InterleavedBloom.fromBytes(blob)
-          val nLocal = math.min(64, numBins - g * 64)
-          val windowed = new InterleavedBloom(nLocal, full.bitsPerBin,
-            full.numHashes, full.words)
           graft.io.SketchStore.writeShardBlob(conf.value, shardDir, g,
-            windowed.toBytes)
+            windowed(InterleavedBloom.fromBytes(blob), g, numBins).toBytes)
           (g, coarseBlob)
         }
       }.collect()
-    cleanup()
     // untouched groups (all content empty/filtered) get the NoBlobGen
-    // sentinel: readers probe them as all-empty bins (both the lazy and
-    // eager loaders special-case the sentinel), so NO blob is written —
-    // the old driver-serial empty-blob loop was one filesystem round-trip
-    // per untouched group, 100k round-trips on a sparse 100k-group store
+    // sentinel: readers probe them as all-empty bins, so NO blob is
+    // written — the old driver-serial empty-blob loop was one filesystem
+    // round-trip per untouched group, 100k round-trips on a sparse
+    // 100k-group store
     val present = coarseRows.map(_._1).toSet
     val shardGens = Array.tabulate(nGroups)(g =>
       if (present(g)) gen else graft.io.SketchStore.NoBlobGen)
-    val coarse =
-      if (coarseRows.nonEmpty)
-        InterleavedBloom.fromBins(
-          coarseRows.toSeq.map { case (g, cb) => (g, Bloom.fromBytes(cb)) },
-          nGroups)
-      else InterleavedBloom.empty(nGroups, 64L, 1)
-    val db = new LazyTwoLevelDb(coarse, cards.map(_._1).toArray,
-      cards.map(_._2).toArray, layout, p, thePlan, dir, gen, shardGens, conf,
-      graft.io.SketchStore.configuredCacheBytes(spark))
+    val coarse = coarseOf(
+      coarseRows.toSeq.map { case (g, cb) => (g, Bloom.fromBytes(cb)) },
+      nGroups)
+    val db = TwoLevelDb.stored(spark, coarse, cards.map(_._1).toArray,
+      cards.map(_._2).toArray, layout, p, thePlan, dir, gen, shardGens)
     graft.io.SketchStore.writeManifest(spark, db, "two", coarse.toBytes, dir,
       gen, shardGens, commitTag)
     db
@@ -815,25 +796,55 @@ object SketchBuild {
   def update(spark: SparkSession, db: SketchDb, addDf: DataFrame,
       targetCol: String, contentCol: String,
       removeTargets: Seq[String] = Nil): SketchDb = {
-    import spark.implicits._
     val p = db.params
+    val hashedOpt =
+      Option(addDf).map(hashedProjection(_, targetCol, contentCol, p))
+    val a = appendLayout(spark, db, hashedOpt, removeTargets)
+    // re-stride the old filter into the (possibly wider) new bin space,
+    // zero removed targets' bin columns
+    val ibf = restride(db.ibf, a.layout.numBins)
+    a.removed.foreach { case (lo, hi) => ibf.zeroBins(lo, hi) }
+    // shard-aggregate the delta and OR the touched group columns in
+    hashedOpt.filter(_ => a.delta.nonEmpty).foreach { h =>
+      shardPass(spark, h, db.plan, a.delta, a.layout.numGroups)
+        .collect().foreach { r =>
+          orGroup(ibf, r.getInt(0),
+            InterleavedBloom.fromBytes(r.getAs[Array[Byte]]("shard")))
+        }
+    }
+    new SketchDb(ibf, a.targets, a.counts, a.layout, p, a.plan)
+  }
+
+  /** The frozen-plan layout append shared by [[update]] and
+    * [[updateStored]]: `targets`/`counts`/`layout`/`plan` of the updated
+    * db, the bin-map entries the delta routes through (`delta`, empty
+    * without additions) and the OLD layout's bin ranges [lo, hi) of the
+    * removed targets (`removed`, in target-name order). */
+  private final case class Appended(targets: Array[String],
+      counts: Array[Long], layout: BinLayout, plan: IbfPlan,
+      delta: Seq[(String, Int, Int)], removed: Seq[(Int, Int)])
+
+  /** Pass 1 on the delta only, then the frozen-plan append: survivors
+    * keep their bases, removed targets' bins stay allocated as masked
+    * holes, new targets get fresh bins after the current layout (split at
+    * the planned capacity), and rows for existing targets route into
+    * their existing bins. */
+  private def appendLayout(spark: SparkSession, db: SplitBinDb,
+      hashedOpt: Option[DataFrame], removeTargets: Seq[String]): Appended = {
+    import spark.implicits._
     val removeSet = removeTargets.toSet
     val unknown = removeSet.filterNot(db.targetIndex.contains)
     require(unknown.isEmpty,
       s"removeTargets not in the db: ${unknown.toSeq.sorted.mkString(", ")}")
-
-    // pass 1 on the delta only
-    val addCards =
-      if (addDf == null) Seq.empty[(String, Long)]
-      else targetCardinalities(addDf, targetCol, contentCol, p)
-        .as[(String, Long)].collect().sortBy(_._1).toSeq
+    val addCards = hashedOpt
+      .map(h => targetCardinalitiesHashed(h, db.params)
+        .as[(String, Long)].collect().sortBy(_._1).toSeq)
+      .getOrElse(Seq.empty[(String, Long)])
+    require(addCards.forall(c => !removeSet.contains(c._1)),
+      "cannot add and remove the same target")
     val (existingAdds, newAdds) =
       addCards.partition(c => db.targetIndex.contains(c._1))
-    require(existingAdds.forall(c => !removeSet.contains(c._1)) &&
-      newAdds.forall(c => !removeSet.contains(c._1)),
-      "cannot add and remove the same target")
 
-    // surviving + new layout entries (bases of survivors are untouched)
     val survivors = db.targets.indices.filterNot(i => removeSet(db.targets(i)))
     var nextBin = db.layout.numBins
     val newEntries = newAdds.map { case (t, c) =>
@@ -843,72 +854,28 @@ object SketchBuild {
       nextBin += split
       e
     }
-    val targets =
-      (survivors.map(db.targets) ++ newAdds.map(_._1)).toArray
     val addByTarget = existingAdds.toMap
     val counts =
       (survivors.map(i => db.targetHashes(i) +
         addByTarget.getOrElse(db.targets(i), 0L)) ++ newAdds.map(_._2)).toArray
-    val bases =
-      (survivors.map(db.layout.base) ++ newEntries.map(_._2)).toArray
-    val splits =
-      (survivors.map(db.layout.split) ++ newEntries.map(_._3)).toArray
-    val layout = BinLayout(bases, splits, nextBin)
-
-    // re-stride the old filter into the (possibly wider) new bin space
-    val ibf = InterleavedBloom.empty(nextBin, db.plan.bitsPerBin,
-      db.plan.numHashes)
-    val wOld = db.ibf.wordsPerRow
-    val wNew = ibf.wordsPerRow
-    var pos = 0L
-    while (pos < db.plan.bitsPerBin) {
-      var g = 0
-      while (g < wOld) {
-        ibf.words((pos * wNew + g).toInt) = db.ibf.words((pos * wOld + g).toInt)
-        g += 1
-      }
-      pos += 1
-    }
-    // zero removed targets' bin columns
-    removeSet.foreach { t =>
+    val layout = BinLayout(
+      (survivors.map(db.layout.base) ++ newEntries.map(_._2)).toArray,
+      (survivors.map(db.layout.split) ++ newEntries.map(_._3)).toArray,
+      nextBin)
+    def entryOf(t: String): (String, Int, Int) = {
       val i = db.targetIndex(t)
-      var b = db.layout.base(i)
-      val end = b + db.layout.split(i)
-      while (b < end) {
-        val word = b >>> 6
-        val mask = ~(1L << (b & 63))
-        var p2 = 0L
-        while (p2 < db.plan.bitsPerBin) {
-          ibf.words((p2 * wNew + word).toInt) &= mask
-          p2 += 1
-        }
-        b += 1
-      }
+      (t, db.layout.base(i), db.layout.split(i))
     }
-    // shard-aggregate the delta and OR the touched group columns in
-    if (addDf != null && addCards.nonEmpty) {
-      val entries = existingAdds.map { case (t, _) =>
-        val i = db.targetIndex(t)
-        (t, db.layout.base(i), db.layout.split(i))
-      } ++ newEntries
-      val touched = shardPass(spark,
-        hashedProjection(addDf, targetCol, contentCol, p),
-        db.plan, entries, layout.numGroups)
-        .collect().map(r => (r.getInt(0), r.getAs[Array[Byte]]("shard")))
-      touched.foreach { case (g, blob) =>
-        val shard = InterleavedBloom.fromBytes(blob)
-        var p2 = 0L
-        while (p2 < db.plan.bitsPerBin) {
-          ibf.words((p2 * wNew + g).toInt) |= shard.words(p2.toInt)
-          p2 += 1
-        }
-      }
-    }
+    val delta = existingAdds.map(c => entryOf(c._1)) ++ newEntries
     val (maxFpReal, _) = Sizing.trueFalsePositive(
       counts.map(math.max(1L, _)), db.plan.maxHashesBin, db.plan.bitsPerBin,
       db.plan.numHashes)
-    new SketchDb(ibf, targets, counts, layout, p,
-      db.plan.copy(numBins = nextBin, expectedMaxFp = maxFpReal))
+    Appended((survivors.map(db.targets) ++ newAdds.map(_._1)).toArray,
+      counts, layout,
+      db.plan.copy(numBins = nextBin, expectedMaxFp = maxFpReal),
+      delta, removeSet.toSeq.sorted.map(entryOf).map { case (_, b, n) =>
+        (b, b + n)
+      })
   }
 
   /**
@@ -935,7 +902,7 @@ object SketchBuild {
    *
    * SNAPSHOT ISOLATION: the update reads generation N's blobs and writes
    * only `shards_v<N+1>/`, flipping CURRENT after the new manifest lands —
-   * committed blobs are never mutated. A LazyTwoLevelDb loaded before (or
+   * committed blobs are never mutated. A store-backed db loaded before (or
    * DURING) the update keeps serving generation N's exact bits; loads
    * after the flip see N+1. Concurrent updates are excluded by the
    * generation lock (the second claimant fails fast). A crash mid-update
@@ -944,65 +911,23 @@ object SketchBuild {
   def updateStored(spark: SparkSession, dir: String, addDf: DataFrame,
       targetCol: String, contentCol: String,
       removeTargets: Seq[String] = Nil,
-      persistShingles: Boolean = false,
-      commitTag: Option[(String, Long)] = None): LazyTwoLevelDb = {
+      commitTag: Option[(String, Long)] = None): TwoLevelDb = {
     import spark.implicits._
     val db0 = graft.io.SketchStore.loadTwoLevelLazy(spark, dir)
     val p = db0.params
-    val removeSet = removeTargets.toSet
-    val unknown = removeSet.filterNot(db0.targetIndex.contains)
-    require(unknown.isEmpty,
-      s"removeTargets not in the db: ${unknown.toSeq.sorted.mkString(", ")}")
-
     // pass 1 on the delta only; the same projection feeds the shard pass
-    // (one delta scan, optionally persisted — see planAndShard's note)
-    val hashedOpt = Option(addDf).map { d =>
-      val h = hashedProjection(d, targetCol, contentCol, p)
-      if (persistShingles)
-        h.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else h
-    }
-    val addCards = hashedOpt
-      .map(h => targetCardinalitiesHashed(h, p)
-        .as[(String, Long)].collect().sortBy(_._1).toSeq)
-      .getOrElse(Seq.empty[(String, Long)])
-    val (existingAdds, newAdds) =
-      addCards.partition(c => db0.targetIndex.contains(c._1))
-    require(addCards.forall(c => !removeSet.contains(c._1)),
-      "cannot add and remove the same target")
-
-    // frozen-plan layout append (bases of survivors untouched; removed
-    // targets' bins stay allocated as masked holes)
-    val survivors = db0.targets.indices.filterNot(i => removeSet(db0.targets(i)))
-    var nextBin = db0.layout.numBins
-    val newEntries = newAdds.map { case (t, c) =>
-      val split = math.max(1L, (math.max(1L, c) + db0.plan.maxHashesBin - 1) /
-        db0.plan.maxHashesBin).toInt
-      val e = (t, nextBin, split)
-      nextBin += split
-      e
-    }
-    val targets =
-      (survivors.map(db0.targets) ++ newAdds.map(_._1)).toArray
-    val addByTarget = existingAdds.toMap
-    val counts =
-      (survivors.map(i => db0.targetHashes(i) +
-        addByTarget.getOrElse(db0.targets(i), 0L)) ++ newAdds.map(_._2)).toArray
-    val bases =
-      (survivors.map(db0.layout.base) ++ newEntries.map(_._2)).toArray
-    val splits =
-      (survivors.map(db0.layout.split) ++ newEntries.map(_._3)).toArray
-    val layout = BinLayout(bases, splits, nextBin)
-    val nGroupsNew = layout.numGroups
+    val hashedOpt =
+      Option(addDf).map(hashedProjection(_, targetCol, contentCol, p))
+    val a = appendLayout(spark, db0, hashedOpt, removeTargets)
+    val nGroupsNew = a.layout.numGroups
     val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val hconf = spark.sparkContext.hadoopConfiguration
 
     // claim the NEXT generation and write only into its shard dir; the old
     // generation's blobs are read-only inputs (snapshot isolation)
-    val gen0 = db0.generation
     val gens0 = db0.shardGens
     val oldNumGroups = db0.layout.numGroups
-    val gen = gen0 + 1
+    val gen = db0.generation + 1
     graft.io.SketchStore.claimGeneration(hconf, dir, gen)
     graft.io.SketchStore.releaseClaimOnFailure(hconf, dir, gen) {
     val newShardDir = graft.io.SketchStore.shardDirOf(dir, gen)
@@ -1013,10 +938,7 @@ object SketchBuild {
     val maskRanges: Map[Int, Array[(Int, Int)]] = {
       val m = scala.collection.mutable.Map
         .empty[Int, scala.collection.mutable.ArrayBuffer[(Int, Int)]]
-      removeSet.toSeq.sorted.foreach { t =>
-        val i = db0.targetIndex(t)
-        val b0 = db0.layout.base(i)
-        val b1 = b0 + db0.layout.split(i)
+      a.removed.foreach { case (b0, b1) =>
         (b0 / 64 to (b1 - 1) / 64).foreach { g =>
           m.getOrElseUpdate(g,
             scala.collection.mutable.ArrayBuffer.empty) +=
@@ -1031,29 +953,22 @@ object SketchBuild {
     //    executor reads the OLD blob (pinned generation), applies its
     //    removal mask, ORs the delta in, and writes the NEW generation's
     //    blob; only coarse deltas return to the driver
-    val numBinsNew = nextBin
-    val bitsPerBin = db0.plan.bitsPerBin
+    val numBinsNew = a.layout.numBins
     val coarseBits = db0.coarse.bitsPerBin
     val coarseH = db0.coarse.numHashes
     val touchedCoarse: Array[(Int, Array[Byte])] =
-      if (hashedOpt.nonEmpty && addCards.nonEmpty) {
-        val entries = existingAdds.map { case (t, _) =>
-          val i = db0.targetIndex(t)
-          (t, db0.layout.base(i), db0.layout.split(i))
-        } ++ newEntries
-        shardPass(spark, hashedOpt.get,
-          db0.plan, entries,
-          nGroupsNew, coarseBits, coarseH, twoLevel = true)
+      hashedOpt.filter(_ => a.delta.nonEmpty).map { h =>
+        shardPass(spark, h, db0.plan, a.delta, nGroupsNew, coarseBits,
+          coarseH, twoLevel = true)
           .select(col("grp"), col("shard"), col("coarse"))
           .as[(Int, Array[Byte], Array[Byte])]
           .mapPartitions { iter =>
             val masks = maskB.value
             iter.map { case (g, blob, coarseBlob) =>
-              val delta = InterleavedBloom.fromBytes(blob)
-              val nLocal = math.min(64, numBinsNew - g * 64)
-              // <=64-bin shards always carry bitsPerBin words, so widening
-              // the group's bin count (appends extending the last old
-              // group) is a pure header change
+              // widening the group's bin count (appends extending the last
+              // old group) is a pure header change
+              val delta = windowed(InterleavedBloom.fromBytes(blob), g,
+                numBinsNew)
               if (g < oldNumGroups)
                 graft.io.SketchStore.readShardBlob(conf.value, dir, gens0, g)
                   .foreach { old =>
@@ -1066,13 +981,11 @@ object SketchBuild {
                     }
                   }
               graft.io.SketchStore.writeShardBlob(conf.value, newShardDir, g,
-                new InterleavedBloom(nLocal, delta.bitsPerBin,
-                  delta.numHashes, delta.words).toBytes)
+                delta.toBytes)
               (g, coarseBlob)
             }
           }.collect()
-      } else Array.empty
-    if (persistShingles) hashedOpt.foreach(_.unpersist())
+      }.getOrElse(Array.empty)
 
     // 2. removal-ONLY groups (masked, no delta): mask + rewrite in a
     //    parallel executor pass — a mega-target's thousands of touched
@@ -1126,13 +1039,8 @@ object SketchBuild {
     }
 
     // 5. manifest + CURRENT flip LAST (the commit point)
-    val (maxFpReal, _) = Sizing.trueFalsePositive(
-      counts.map(math.max(1L, _)), db0.plan.maxHashesBin, bitsPerBin,
-      db0.plan.numHashes)
-    val db = new LazyTwoLevelDb(coarseNew, targets, counts, layout, p,
-      db0.plan.copy(numBins = nextBin, expectedMaxFp = maxFpReal),
-      dir, gen, gens1, conf,
-      graft.io.SketchStore.configuredCacheBytes(spark))
+    val db = TwoLevelDb.stored(spark, coarseNew, a.targets, a.counts,
+      a.layout, p, a.plan, dir, gen, gens1)
     graft.io.SketchStore.writeManifest(spark, db, "two", coarseNew.toBytes,
       dir, gen, gens1, commitTag)
     db
@@ -1179,18 +1087,16 @@ object SketchBuild {
    * from `df` would come back with empty bins.
    */
   def compactStored(spark: SparkSession, dir: String, df: DataFrame,
-      targetCol: String, contentCol: String,
-      persistShingles: Boolean = false): LazyTwoLevelDb =
+      targetCol: String, contentCol: String): TwoLevelDb =
     compactStoredFrom(spark, dir, df, targetCol, contentCol,
-      graft.io.SketchStore.readManifest(spark, dir), persistShingles)
+      graft.io.SketchStore.readManifest(spark, dir))
 
   /** [[compactStored]] body, split at the manifest read so the
     * stale-manifest race (an update committing between the read and the
     * generation claim) is deterministically testable. */
   private[graft] def compactStoredFrom(spark: SparkSession, dir: String,
       df: DataFrame, targetCol: String, contentCol: String,
-      m: graft.io.SketchStore.Manifest,
-      persistShingles: Boolean = false): LazyTwoLevelDb = {
+      m: graft.io.SketchStore.Manifest): TwoLevelDb = {
     require(m.layoutKind == "two", s"not a two-level store: ${m.layoutKind}")
     val p = m.params
     // fresh plan from the manifest's survivor cardinalities: holes gone,
@@ -1198,16 +1104,10 @@ object SketchBuild {
     val cards = m.targets.zip(m.counts).sortBy(_._1).toSeq
     val (thePlan, layout) = plan(cards, p)
     val (coarseBits, coarseH) = coarseSizing(cards, layout, p.maxFp)
-    var hashed = hashedProjection(df, targetCol, contentCol, p)
-    if (persistShingles) hashed = hashed.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cleanup: () => Unit =
-      if (persistShingles) () => { hashed.unpersist(); () } else () => ()
-    val entries = cards.indices.map(i =>
-      (cards(i)._1, layout.base(i), layout.split(i)))
-    val binsDf = shardPass(spark, hashed, thePlan, entries,
-      layout.numGroups, coarseBits, coarseH, twoLevel = true)
-    storeGeneration(spark, dir, p, cards, thePlan, layout, binsDf, cleanup,
+    val binsDf = shardPass(spark, hashedProjection(df, targetCol, contentCol, p),
+      thePlan, entriesOf(cards, layout), layout.numGroups, coarseBits, coarseH,
+      twoLevel = true)
+    storeGeneration(spark, dir, p, cards, thePlan, layout, binsDf,
       basedOnGen = Some(m.generation))
   }
 

@@ -5,10 +5,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.schema.MessageTypeParser
+import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
 /**
  * Driver-direct parquet I/O for the store's CONTROL PLANE (bins + manifest,
@@ -23,8 +24,8 @@ import org.apache.parquet.schema.MessageTypeParser
  * The on-disk format is unchanged — standard parquet at the same paths
  * with the same column names/types, so Spark (and DuckDB) still read
  * these files, and this reader still reads directory-shaped metadata
- * written by older generations via `df.coalesce(1).write.parquet`
- * (part-files under a `.parquet` directory).
+ * written by older generations via `df.write.parquet` (part-files under a
+ * `.parquet` directory).
  */
 private[graft] object ParquetMeta {
 
@@ -92,17 +93,39 @@ private[graft] object ParquetMeta {
       .sortBy(_.getName.toString).toSeq
   }
 
-  private def readGroups(conf: Configuration, path: Path): Vector[Group] = {
+  private def readGroups(conf: Configuration, path: Path,
+      support: GroupReadSupport = new GroupReadSupport()): Vector[Group] = {
     val out = Vector.newBuilder[Group]
     partFiles(conf, path).foreach { f =>
       val r = org.apache.parquet.hadoop.ParquetReader
-        .builder(new GroupReadSupport(), f).withConf(conf).build()
+        .builder(support, f).withConf(conf).build()
       try {
         var g = r.read()
         while (g != null) { out += g; g = r.read() }
       } finally r.close()
     }
     out.result()
+  }
+
+  /** Reads only the named top-level column, typed as the FILE declares it
+    * (legacy Spark writers mark columns optional where ParquetMeta writes
+    * required), so the other column chunks are never decoded. */
+  private final class Projection(field: String) extends GroupReadSupport {
+    override def init(context: InitContext): ReadSupport.ReadContext = {
+      val file = context.getFileSchema
+      new ReadSupport.ReadContext(new MessageType(file.getName,
+        file.getType(file.getFieldIndex(field))))
+    }
+  }
+
+  /** The one logical row of a manifest: a legacy multi-part directory may
+    * repeat it across part files, which is fine as long as every copy
+    * agrees. */
+  private def oneRow[T](path: Path, rows: Seq[T])(same: (T, T) => Boolean): T = {
+    require(rows.nonEmpty, s"manifest at $path holds 0 rows")
+    require(rows.tail.forall(same(rows.head, _)),
+      s"manifest at $path holds ${rows.length} rows that disagree")
+    rows.head
   }
 
   def writeBins(conf: Configuration, path: Path,
@@ -155,27 +178,39 @@ private[graft] object ParquetMeta {
     } finally w.close()
   }
 
-  def readManifestRow(conf: Configuration, path: Path): ManifestRow = {
-    val gs = readGroups(conf, path)
-    require(gs.length == 1, s"manifest at $path holds ${gs.length} rows")
-    val g = gs.head
-    // index-based list access tolerates legacy writers' inner field names
+  // index-based list access tolerates legacy writers' inner field names
+  private def shardGensOf(g: Group): Array[Int] = {
     val sgIdx = g.getType.getFieldIndex("shard_gens")
-    val shardGens =
-      if (g.getFieldRepetitionCount(sgIdx) == 0) Array.empty[Int]
-      else {
-        val sg = g.getGroup(sgIdx, 0)
-        Array.tabulate(sg.getFieldRepetitionCount(0))(i =>
-          sg.getGroup(0, i).getInteger(0, 0))
-      }
-    ManifestRow(
-      g.getInteger("version", 0), g.getInteger("generation", 0),
-      g.getString("layout", 0), g.getInteger("k", 0), g.getInteger("w", 0),
-      g.getLong("seed", 0), g.getDouble("max_fp", 0),
-      g.getInteger("hll_p", 0), g.getInteger("min_content_len", 0),
-      g.getString("sizing_mode", 0), g.getLong("bits_per_bin", 0),
-      g.getInteger("num_hashes", 0), g.getLong("max_hashes_bin", 0),
-      g.getInteger("num_bins", 0), shardGens,
-      g.getBinary("ibf", 0).getBytes)
+    if (g.getFieldRepetitionCount(sgIdx) == 0) Array.empty[Int]
+    else {
+      val sg = g.getGroup(sgIdx, 0)
+      Array.tabulate(sg.getFieldRepetitionCount(0))(i =>
+        sg.getGroup(0, i).getInteger(0, 0))
+    }
   }
+
+  def readManifestRow(conf: Configuration, path: Path): ManifestRow = {
+    val rows = readGroups(conf, path).map { g =>
+      ManifestRow(
+        g.getInteger("version", 0), g.getInteger("generation", 0),
+        g.getString("layout", 0), g.getInteger("k", 0), g.getInteger("w", 0),
+        g.getLong("seed", 0), g.getDouble("max_fp", 0),
+        g.getInteger("hll_p", 0), g.getInteger("min_content_len", 0),
+        g.getString("sizing_mode", 0), g.getLong("bits_per_bin", 0),
+        g.getInteger("num_hashes", 0), g.getLong("max_hashes_bin", 0),
+        g.getInteger("num_bins", 0), shardGensOf(g),
+        g.getBinary("ibf", 0).getBytes)
+    }
+    oneRow(path, rows) { (a, b) =>
+      a.copy(shardGens = null, ibf = null) ==
+        b.copy(shardGens = null, ibf = null) &&
+        a.shardGens.sameElements(b.shardGens) && a.ibf.sameElements(b.ibf)
+    }
+  }
+
+  /** A manifest's `shard_gens` alone — the gc path's read, which must not
+    * decode the filter bytes every kept generation's row carries. */
+  def readShardGens(conf: Configuration, path: Path): Array[Int] =
+    oneRow(path, readGroups(conf, path, new Projection("shard_gens"))
+      .map(shardGensOf))(_ sameElements _)
 }

@@ -4,7 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
-import graft.build.{BinLayout, IbfParams, IbfPlan, LazyTwoLevelDb, ProbeDb, SketchDb, SplitBinDb, TwoLevelSketchDb}
+import graft.build.{BinLayout, IbfParams, IbfPlan, ProbeDb, SketchDb, SplitBinDb,
+  TwoLevelDb}
 import graft.core.sketch.InterleavedBloom
 
 /**
@@ -28,11 +29,12 @@ import graft.core.sketch.InterleavedBloom
  * Snapshot isolation: `shard_gens(g)` names the generation whose
  * `shards_v<gen>/grp_<g>.bin` is group g's current blob. A writer never
  * mutates an existing blob — updates write only into `shards_v<N+1>/` and
- * flip CURRENT last — so a reader (or a long-lived [[LazyTwoLevelDb]]
- * handle) that loaded generation N keeps reading exactly generation N's
- * bits for its whole lifetime, even across concurrent updates. A crash
- * mid-update leaves CURRENT at N: the store stays loadable and correct,
- * and the partial `shards_v<N+1>` garbage is invisible (GC'able).
+ * flip CURRENT last — so a reader (or a long-lived store-backed
+ * [[TwoLevelDb]] handle) that loaded generation N keeps reading exactly
+ * generation N's bits for its whole lifetime, even across concurrent
+ * updates. A crash mid-update leaves CURRENT at N: the store stays
+ * loadable and correct, and the partial `shards_v<N+1>` garbage is
+ * invisible (GC'able).
  * Superseded generations are reclaimed by [[gcGenerations]] after a
  * configurable grace of pinned snapshots.
  *
@@ -311,18 +313,90 @@ object SketchStore {
     }
   }
 
-  def saveTwoLevel(spark: SparkSession, db: TwoLevelSketchDb, dir: String): Unit = {
+  /**
+   * Write a two-level db into `dir` as a fresh, self-contained store
+   * generation: a resident db writes its shards from the driver; a
+   * store-backed db copies its PINNED snapshot — every referenced blob is
+   * re-homed under the ONE new generation (per-group generation pointers
+   * collapse to it). The manifest commits last — the usual CURRENT-flip
+   * discipline, so a crashed save leaves `dir` unchanged-or-previous,
+   * never torn.
+   *
+   * Store-backed blob copies run one task per group on executors as
+   * bounded-buffer stream copies (no whole-blob byte[], so >2 GB groups
+   * are fine): a 300+ GB store exports at cluster width while the driver
+   * moves only the manifest. The source is never mutated, and because the
+   * copy reads the handle's per-group generation POINTERS (not the
+   * source's CURRENT), a concurrent update to the source store cannot
+   * tear the exported snapshot — this is "back up the exact bits this
+   * handle serves". Saving a handle onto its own store is an error: that
+   * snapshot already lives there.
+   */
+  def saveTwoLevel(spark: SparkSession, db: TwoLevelDb, dir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val nG = db.layout.numGroups
+    if (!db.isResident) {
+      // fully-qualified comparison (scheme + authority + resolved path): a
+      // relative spelling of the source dir must not slip past the guard,
+      // and the same path on two DIFFERENT filesystems is a legitimate
+      // cross-filesystem backup, not a self-export
+      def qualified(d: String) = {
+        val p = new Path(d); p.getFileSystem(conf).makeQualified(p)
+      }
+      require(qualified(dir) != qualified(db.storeDir),
+        s"export destination ${qualified(dir)} is the source store itself " +
+          "— the snapshot already lives there; pick a different directory")
+    }
     val gen = currentGeneration(conf, dir).getOrElse(0) + 1
     claimGeneration(conf, dir, gen)
     releaseClaimOnFailure(conf, dir, gen) {
       val sd = shardDirOf(dir, gen)
       clearClaimedShardDir(conf, sd)
-      db.shards.zipWithIndex.foreach { case (shard, g) =>
-        writeShardBlob(conf, sd, g, shard.toBytes)
+      val shardGens =
+        if (db.isResident) {
+          (0 until nG).foreach(g =>
+            writeShardBlob(conf, sd, g, db.residentShard(g).toBytes))
+          Array.fill(nG)(gen)
+        } else {
+          copyPinnedBlobs(spark, db, sd)
+          // blob-less groups keep their sentinel — pointing them at the
+          // new generation would read as "blob lost"
+          db.shardGens.map(v => if (v == NoBlobGen) NoBlobGen else gen)
+        }
+      writeManifest(spark, db, "two", db.coarse.toBytes, dir, gen, shardGens)
+    }
+  }
+
+  /** Stream-copy every blob a store-backed handle pins into `destShardDir`
+    * (one task per group; NoBlobGen groups are legitimately blob-less). */
+  private def copyPinnedBlobs(spark: SparkSession, db: TwoLevelDb,
+      destShardDir: String): Unit = {
+    val srcDir = db.storeDir
+    val srcGens = db.shardGens
+    val nG = db.layout.numGroups
+    val hc = new graft.build.SerializableHadoopConf(
+      spark.sparkContext.hadoopConfiguration)
+    spark.sparkContext.parallelize(0 until nG,
+        math.min(nG, spark.sparkContext.defaultParallelism)).foreach { g =>
+      if (srcGens(g) != NoBlobGen) {
+        val c = hc.value
+        val src = new Path(s"$srcDir/shards_v${srcGens(g)}/grp_$g.bin")
+        val srcFs = src.getFileSystem(c)
+        if (!srcFs.exists(src))
+          throw new IllegalStateException(
+            s"shard blob $src missing during snapshot export — the " +
+              "handle's generation was gc'd underneath it")
+        val dest = new Path(s"$destShardDir/grp_$g.bin")
+        val destFs = dest.getFileSystem(c)
+        val tmp =
+          new Path(s"$destShardDir/.grp_$g.${java.util.UUID.randomUUID()}.tmp")
+        val in = srcFs.open(src)
+        val out = destFs.create(tmp, true)
+        try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false)
+        finally { in.close(); out.close() }
+        commitBlobRename(c, destFs, tmp, dest,
+          srcFs.getFileStatus(src).getLen)
       }
-      writeManifest(spark, db, "two", db.coarse.toBytes, dir, gen,
-        Array.fill(db.layout.numGroups)(gen))
     }
   }
 
@@ -366,76 +440,6 @@ object SketchStore {
     }
   }
 
-  /**
-   * Copy the handle's PINNED snapshot into `destDir` as a fresh,
-   * self-contained store: every referenced blob is re-homed under ONE new
-   * generation there (per-group generation pointers collapse to it), then
-   * the manifest commits last — the usual CURRENT-flip discipline, so a
-   * crashed export leaves destDir unchanged-or-previous, never torn.
-   *
-   * Blob copies run one task per group on executors as bounded-buffer
-   * stream copies (no whole-blob byte[], so >2 GB groups are fine): a
-   * 300+ GB store exports at cluster width while the driver moves only
-   * the manifest. The source is never mutated, and because the copy reads
-   * the handle's per-group generation POINTERS (not the source's CURRENT),
-   * a concurrent update to the source store cannot tear the exported
-   * snapshot — this is "back up the exact bits this handle serves".
-   */
-  def exportSnapshot(spark: SparkSession, db: LazyTwoLevelDb,
-      destDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcDir = db.storeDir
-    // fully-qualified comparison (scheme + authority + resolved path): a
-    // relative spelling of the source dir must not slip past the guard,
-    // and the same path on two DIFFERENT filesystems is a legitimate
-    // cross-filesystem backup, not a self-export
-    val destQ = {
-      val p = new Path(destDir); p.getFileSystem(conf).makeQualified(p)
-    }
-    val srcQ = {
-      val p = new Path(srcDir); p.getFileSystem(conf).makeQualified(p)
-    }
-    require(destQ != srcQ,
-      s"export destination $destQ is the source store itself — the " +
-        "snapshot already lives there; pick a different directory")
-    val gen = currentGeneration(conf, destDir).getOrElse(0) + 1
-    claimGeneration(conf, destDir, gen)
-    releaseClaimOnFailure(conf, destDir, gen) {
-      val sd = shardDirOf(destDir, gen)
-      clearClaimedShardDir(conf, sd)
-      val srcGens = db.shardGens
-      val nG = db.layout.numGroups
-      val hc = new graft.build.SerializableHadoopConf(conf)
-      spark.sparkContext.parallelize(0 until nG,
-          math.min(nG, spark.sparkContext.defaultParallelism)).foreach { g =>
-        if (srcGens(g) != NoBlobGen) { // sentinel: legitimately blob-less
-          val c = hc.value
-          val src = new Path(s"$srcDir/shards_v${srcGens(g)}/grp_$g.bin")
-          val srcFs = src.getFileSystem(c)
-          if (!srcFs.exists(src))
-            throw new IllegalStateException(
-              s"shard blob $src missing during snapshot export — the " +
-                "handle's generation was gc'd underneath it")
-          val dest = new Path(s"$sd/grp_$g.bin")
-          val destFs = dest.getFileSystem(c)
-          val tmp =
-            new Path(s"$sd/.grp_$g.${java.util.UUID.randomUUID()}.tmp")
-          val in = srcFs.open(src)
-          val out = destFs.create(tmp, true)
-          try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false)
-          finally { in.close(); out.close() }
-          commitBlobRename(c, destFs, tmp, dest,
-            srcFs.getFileStatus(src).getLen)
-        }
-      }
-      // blob-less groups keep their sentinel in the exported manifest —
-      // pointing them at the new generation would read as "blob lost"
-      writeManifest(spark, db, "two", db.coarse.toBytes, destDir, gen,
-        Array.tabulate(nG)(g =>
-          if (db.shardGens(g) == NoBlobGen) NoBlobGen else gen))
-    }
-  }
-
   /** Per-group generation-pointer sentinel: the group LEGITIMATELY has no
     * blob (an updateStored-appended group that received zero delta
     * hashes). Distinguishes "probe as all-empty bins" from a blob that
@@ -453,30 +457,24 @@ object SketchStore {
   private[graft] def readShardBlob(conf: Configuration, dir: String,
       shardGens: Array[Int], g: Int): Option[InterleavedBloom] =
     if (shardGens(g) == NoBlobGen) None
-    else Some(readShardBlobAt(conf, shardDirOf(dir, shardGens(g)), g)
-      .getOrElse(throw new IllegalStateException(
+    else {
+      val path = new Path(s"${shardDirOf(dir, shardGens(g))}/grp_$g.bin")
+      val fs = path.getFileSystem(conf)
+      if (!fs.exists(path)) throw new IllegalStateException(
         s"shard blob grp_$g.bin missing at generation ${shardGens(g)} " +
           s"under $dir — a superseded generation was gc'd while a handle " +
           "was still pinned to it (raise gcGenerations keepGens), or the " +
-          "store is corrupt")))
+          "store is corrupt")
+      shardBlobReads.incrementAndGet()
+      val in = fs.open(path)
+      try Some(readIbfStream(in)) finally in.close()
+    }
 
   /** JVM-wide count of shard-blob fetches (observability: in local mode
     * it proves cache-warmth claims — e.g. a live-store stream reusing one
     * broadcast per generation fetches each shard ONCE across
     * micro-batches, not once per batch). */
   val shardBlobReads = new java.util.concurrent.atomic.AtomicLong()
-
-  private[graft] def readShardBlobAt(conf: Configuration,
-      shardDir: String, g: Int): Option[InterleavedBloom] = {
-    val path = new Path(s"$shardDir/grp_$g.bin")
-    val fs = path.getFileSystem(conf)
-    if (!fs.exists(path)) None
-    else {
-      shardBlobReads.incrementAndGet()
-      val in = fs.open(path)
-      try Some(readIbfStream(in)) finally in.close()
-    }
-  }
 
   /** Chunked deserialization of [[InterleavedBloom.toBytes]]' layout
     * (20-byte header + little-endian longs) from a positioned stream. */
@@ -506,34 +504,17 @@ object SketchStore {
 
   // ---- load ----------------------------------------------------------------
 
-  /** Two-level load with LAZY shards: ships only coarse + metadata;
-    * executors fetch each group's blob (through its PINNED generation
-    * pointer) on first probe and cache it (see [[graft.build.LazyTwoLevelDb]]).
+  /** Two-level load: the store-backed [[graft.build.TwoLevelDb]] ships
+    * only coarse + metadata; executors fetch each group's blob (through
+    * its PINNED generation pointer) on first probe and cache it.
     * `spark.graft.shard.cache.bytes` bounds the per-executor resident
     * shard bytes (LRU eviction); default unbounded. */
-  def loadTwoLevelLazy(spark: SparkSession, dir: String): LazyTwoLevelDb = {
-    val m = readManifest(spark, dir)
-    require(m.layoutKind == "two", s"not a two-level store: ${m.layoutKind}")
-    lazyFromManifest(spark, dir, m)
-  }
-
-  /** The session's per-executor resident-shard-byte bound (LRU eviction
-    * past it); default unbounded. EVERY LazyTwoLevelDb construction must
-    * read this — a handle returned by buildToStore/updateStored has to
-    * honor the same bound as one from loadTwoLevelLazy, or a long-running
-    * service probing the returned handle silently bypasses the LRU cap. */
-  private[graft] def configuredCacheBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.shard.cache.bytes")
-      .map(_.toLong).getOrElse(Long.MaxValue)
-
-  private def lazyFromManifest(spark: SparkSession, dir: String,
-      m: Manifest): LazyTwoLevelDb = {
-    val maxCache = configuredCacheBytes(spark)
-    new LazyTwoLevelDb(InterleavedBloom.fromBytes(m.ibfBytes), m.targets,
-      m.counts, m.layout, m.params, m.plan, dir, m.generation, m.shardGens,
-      new graft.build.SerializableHadoopConf(
-        spark.sparkContext.hadoopConfiguration), maxCache)
-  }
+  def loadTwoLevelLazy(spark: SparkSession, dir: String): TwoLevelDb =
+    loadAny(spark, dir) match {
+      case two: TwoLevelDb => two
+      case _ =>
+        throw new IllegalArgumentException(s"not a two-level store: $dir is flat")
+    }
 
   private[graft] final case class Manifest(
       params: IbfParams, layout: BinLayout, plan: IbfPlan,
@@ -574,50 +555,34 @@ object SketchStore {
     val numBins = m.numBins
     val layout = BinLayout(bins.map(_._3), bins.map(_._4), numBins)
     val plan = IbfPlan(numBins, m.bitsPerBin, m.numHashes, m.maxHashesBin,
-      Sizing2.maxFpOf(bins.map(_._2), m.maxHashesBin, m.bitsPerBin,
-        m.numHashes))
+      graft.build.Sizing.trueFalsePositive(bins.map(_._2), m.maxHashesBin,
+        m.bitsPerBin, m.numHashes)._1)
     Manifest(params, layout, plan, bins.map(_._1), bins.map(_._2),
       m.ibf, m.layout, gen, m.shardGens)
   }
 
-  /** Load either layout, dispatching on the manifest. */
-  def loadAny(spark: SparkSession, dir: String): ProbeDb =
-    eagerFromManifest(spark, dir, readManifest(spark, dir))
-
-  private def eagerFromManifest(spark: SparkSession, dir: String,
-      m: Manifest): ProbeDb = {
-    val blob = InterleavedBloom.fromBytes(m.ibfBytes)
+  /** Load either layout, dispatching on the manifest: a flat store loads
+    * its filter eagerly (it fits by construction); a two-level store comes
+    * back store-backed — driver/broadcast footprint = coarse + metadata,
+    * shards fetched per executor on demand — so no load materializes
+    * every blob on the driver (at a 300+ GB store that is an OOM, not a
+    * load). */
+  def loadAny(spark: SparkSession, dir: String): ProbeDb = {
+    val m = readManifest(spark, dir)
     m.layoutKind match {
       case "flat" =>
-        new SketchDb(blob, m.targets, m.counts, m.layout, m.params, m.plan)
+        new SketchDb(InterleavedBloom.fromBytes(m.ibfBytes), m.targets,
+          m.counts, m.layout, m.params, m.plan)
       case "two" =>
-        val conf = spark.sparkContext.hadoopConfiguration
-        val shards = Array.tabulate(m.layout.numGroups) { g =>
-          // None only for the NoBlobGen sentinel; a lost blob throws
-          readShardBlob(conf, dir, m.shardGens, g).getOrElse {
-            val nLocal = math.min(64, m.layout.numBins - g * 64)
-            InterleavedBloom.empty(nLocal, m.plan.bitsPerBin, m.plan.numHashes)
-          }
-        }
-        new TwoLevelSketchDb(blob, shards, m.targets, m.counts,
-          m.layout, m.params, m.plan)
+        TwoLevelDb.stored(spark, InterleavedBloom.fromBytes(m.ibfBytes),
+          m.targets, m.counts, m.layout, m.params, m.plan, dir, m.generation,
+          m.shardGens)
       case other => throw new IllegalArgumentException(s"unknown layout $other")
     }
   }
 
   def load(spark: SparkSession, dir: String): SketchDb =
     loadAny(spark, dir).asInstanceOf[SketchDb]
-
-  /** Load for PROBING at scale: a two-level store comes back as the lazy
-    * handle (driver/broadcast footprint = coarse + metadata; shards fetch
-    * per executor on demand) — [[loadAny]] would materialize every blob
-    * on the driver, which at a 300+ GB store is an OOM, not a load. Flat
-    * stores load eagerly as before (they fit by construction). */
-  def loadForProbe(spark: SparkSession, dir: String): graft.build.ProbeDb = {
-    val m = readManifest(spark, dir) // ONE manifest read, then dispatch
-    if (m.layoutKind == "two") lazyFromManifest(spark, dir, m)
-    else eagerFromManifest(spark, dir, m)
-  }
 
   // ---- pins ------------------------------------------------------------------
 
@@ -628,11 +593,11 @@ object SketchStore {
    * pinned generation fully readable (its metadata and every blob it
    * references) no matter how far CURRENT advances — the cooperative
    * alternative to sizing `keepGens` for the slowest reader. A long-lived
-   * [[graft.build.LazyTwoLevelDb]] handle pins its own `generation` when
-   * it will outlive the gc grace window, and MUST [[unpin]] when done (a
-   * leaked pin blocks reclamation of that one generation until an
-   * operator deletes `pins/pin_<id>`; gc reports what it skipped, so a
-   * leak is visible, never silent). Returns the pin id.
+   * store-backed [[graft.build.TwoLevelDb]] handle pins its own
+   * `generation` when it will outlive the gc grace window, and MUST
+   * [[unpin]] when done (a leaked pin blocks reclamation of that one
+   * generation until an operator deletes `pins/pin_<id>`; gc reports what
+   * it skipped, so a leak is visible, never silent). Returns the pin id.
    */
   def pin(conf: Configuration, dir: String, gen: Int): String = {
     val id = java.util.UUID.randomUUID().toString
@@ -684,7 +649,7 @@ object SketchStore {
 
   /** Reclaim superseded generations, keeping the last `keepGens` SNAPSHOTS
     * fully readable (their gen_<v> metadata and every blob any of them
-    * references — a pinned [[LazyTwoLevelDb]] loaded up to keepGens-1
+    * references — a pinned [[TwoLevelDb]] handle loaded up to keepGens-1
     * generations ago keeps working). Everything older, and every blob no
     * kept snapshot references, is deleted — EXCEPT generations registered
     * in the pin directory ([[pin]]), which stay readable regardless of
@@ -718,8 +683,7 @@ object SketchStore {
     val needed = ((oldest to cur) ++ pinnedOld).flatMap { v =>
       val mp = new Path(s"${genDir(dir, v)}/manifest.parquet")
       if (!fs.exists(mp)) Nil
-      else ParquetMeta.readManifestRow(conf, mp).shardGens
-        .zipWithIndex.map { case (gv, g) => (gv, g) }
+      else ParquetMeta.readShardGens(conf, mp).zipWithIndex
     }.toSet
     var files = 0L
     var bytes = 0L
@@ -777,11 +741,5 @@ object SketchStore {
       }
     }
     GcReport(files, bytes, pinnedOld)
-  }
-
-  private object Sizing2 {
-    def maxFpOf(counts: Array[Long], maxHashesBin: Long, bits: Long,
-        h: Int): Double =
-      graft.build.Sizing.trueFalsePositive(counts, maxHashesBin, bits, h)._1
   }
 }

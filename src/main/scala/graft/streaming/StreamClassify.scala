@@ -191,7 +191,7 @@ object StreamClassify {
       // FIRST lock section: ownership + hook registration + staleness
       // check. Kept FAST — the listener takes this same lock on the
       // session's shared listener-bus thread, so holding it across a
-      // Spark job (loadForProbe) or a blocking destroy would stall every
+      // store load (loadAny) or a blocking destroy would stall every
       // listener in the session and can drop events
       val needRotate = state.synchronized {
         if (runId != null && runId != state.activeRun) {
@@ -226,12 +226,12 @@ object StreamClassify {
       val (dbForBatch, genForBatch) =
         if (!needRotate) state.synchronized((state.dbB, state.gen))
         else {
-          // rotation work OUTSIDE the lock: loadForProbe is a driver
-          // Spark job and broadcast/destroy can block. Only this query's
+          // rotation work OUTSIDE the lock: loadAny does driver store
+          // I/O and broadcast/destroy can block. Only this query's
           // microbatch thread rotates, so the gen can't change under us;
           // the one competitor is our own termination listener (stop()
           // mid-batch), handled by the ownership re-check at swap time
-          val db = graft.io.SketchStore.loadForProbe(spark, storeDir)
+          val db = graft.io.SketchStore.loadAny(spark, storeDir)
           val fresh = spark.sparkContext.broadcast(db)
           val old = state.synchronized {
             if (state.activeRun != runId) {

@@ -37,8 +37,7 @@ object Demo {
     val p = IbfParams(k = 19, w = 31, maxFp = 0.01)
     val db: graft.build.ProbeDb =
       if (args.length > 1 && args(1) == "two")
-        SketchBuild.buildTwoLevel(spark, corpus, "repo", "content", p,
-          groupSize = 8)
+        SketchBuild.buildTwoLevel(spark, corpus, "repo", "content", p)
       else SketchBuild.build(spark, corpus, "repo", "content", p)
     println(s"[demo] db bins=${db.targets.length} " +
       s"h=${db.plan.numHashes} cap=${db.plan.maxHashesBin} bins=${db.plan.numBins} " +

@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.build.{IbfParams, TwoLevelSketchDb}
+import graft.build.{IbfParams, TwoLevelDb}
 import graft.classify.ClassifyParams
 import graft.spark.SparkTestSession
 import graft.synth.Corpus
@@ -198,7 +198,7 @@ class GanonApiSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_api2").toString
     Ganon.save(spark, two, dir)
     val loaded = Ganon.load(spark, dir)
-    assert(loaded.isInstanceOf[TwoLevelSketchDb])
+    assert(loaded.isInstanceOf[TwoLevelDb])
     val reads = corpus.limit(60).withColumn("id", $"path")
     val a = Ganon.classify(spark, reads, "id", "content", two)
       .all.collect().map(_.toString).sorted

@@ -57,11 +57,11 @@ class BuildToStoreSpec extends AnyFunSuite {
     assert(matches(lazyDb, docs) == matches(flat, docs))
     assert(lazyDb.loadedShards > 0, "probing fetched the working set")
 
-    // the store round-trips through both load paths
+    // the store round-trips through both load verbs
     val reread = graft.io.SketchStore.loadTwoLevelLazy(spark, dir)
     assert(matches(reread, docs) == matches(flat, docs))
-    val eager = graft.io.SketchStore.loadAny(spark, dir)
-    assert(matches(eager, docs) == matches(flat, docs))
+    val any = graft.io.SketchStore.loadAny(spark, dir)
+    assert(matches(any, docs) == matches(flat, docs))
     docs.unpersist()
   }
 
@@ -77,8 +77,7 @@ class BuildToStoreSpec extends AnyFunSuite {
     val base = SketchBuild.buildToStore(spark,
       docs.filter(col("half")), "repo", "content", dir, p)
     val grown = SketchBuild.updateStored(spark, dir,
-      docs.filter(!col("half")), "repo", "content",
-      persistShingles = true)
+      docs.filter(!col("half")), "repo", "content")
     // no new bins were allocated (same targets, frozen plan)...
     assert(grown.layout.numBins == base.layout.numBins)
     // ...and every read now fully contains its own repo bin, matching a
@@ -207,7 +206,7 @@ class BuildToStoreSpec extends AnyFunSuite {
     docs.unpersist()
   }
 
-  test("exportSnapshot clears a crashed prior attempt's leftover blobs") {
+  test("saveTwoLevel of a handle clears a crashed save's leftover blobs") {
     val docs = graft.synth.Corpus.df(spark, 600, numRepos = 150,
       partitions = 4).cache()
     val p = IbfParams(k = 19, w = 31, maxFp = 0.001)
@@ -232,7 +231,7 @@ class BuildToStoreSpec extends AnyFunSuite {
     val junk = new java.io.FileOutputStream(
       s"$dest/shards_v1/grp_$victim.bin")
     try junk.write(Array.fill[Byte](64)(0x5A)) finally junk.close()
-    graft.io.SketchStore.exportSnapshot(spark, handle, dest)
+    graft.io.SketchStore.saveTwoLevel(spark, handle, dest)
     assert(!new java.io.File(s"$dest/shards_v1/grp_$victim.bin").exists(),
       "the dead attempt's junk blob must not survive into the commit")
     // and the exported store answers exactly like the handle
@@ -360,12 +359,12 @@ class BuildToStoreSpec extends AnyFunSuite {
       removeTargets = Seq("zempty"))
     assert(rm.shardGens(1) == graft.io.SketchStore.NoBlobGen,
       "removal-only pass writes no blob for a sentinel group")
-    // every read path still works: eager load, lazy probe, export
-    val eager = graft.io.SketchStore.loadAny(spark, dir)
+    // every read path still works: load + probe, export
+    val loaded = graft.io.SketchStore.loadAny(spark, dir)
     val fresh = SketchBuild.build(spark, docs, "repo", "content", p)
-    assert(matches(eager, docs) == matches(fresh, docs))
+    assert(matches(loaded, docs) == matches(fresh, docs))
     val dest = freshDir("sentinelrm_exp")
-    graft.io.SketchStore.exportSnapshot(spark,
+    graft.io.SketchStore.saveTwoLevel(spark,
       graft.io.SketchStore.loadTwoLevelLazy(spark, dir), dest)
     assert(matches(graft.io.SketchStore.loadTwoLevelLazy(spark, dest), docs)
       == matches(fresh, docs))
@@ -440,19 +439,6 @@ class BuildToStoreSpec extends AnyFunSuite {
       s"resident ${lru.residentBytes} > bound $bound")
     assert(lru.loadedShards < lru.layout.numGroups,
       "a rotating workload over a bounded cache cannot keep every shard")
-    docs.unpersist()
-  }
-
-  test("persistShingles build: bit-identical to the two-scan build") {
-    val docs = graft.synth.Corpus.df(spark, 400, numRepos = 12, partitions = 4)
-      .cache()
-    val p = IbfParams(k = 19, w = 31, maxFp = 0.01)
-    val a = SketchBuild.build(spark, docs, "repo", "content", p)
-    val b = SketchBuild.build(spark, docs, "repo", "content", p,
-      persistShingles = true)
-    assert(a.targets.sameElements(b.targets))
-    assert(a.plan == b.plan)
-    assert(a.ibf.words.sameElements(b.ibf.words))
     docs.unpersist()
   }
 

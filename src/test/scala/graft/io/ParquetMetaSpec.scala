@@ -79,4 +79,72 @@ class ParquetMetaSpec extends AnyFunSuite {
       row.copy(layout = "flat", shardGens = Array.empty[Int]))
     assert(ParquetMeta.readManifestRow(conf, p).shardGens.isEmpty)
   }
+
+  test("projected shard_gens read == readManifestRow(...).shardGens " +
+      "(flat, two-level, sentinel-bearing, legacy-written)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pm").toString
+    Seq("flat" -> Array.empty[Int], "two" -> Array(3, 3, 3),
+        "sentinel" -> Array(3, -1, 2)).foreach { case (name, gens) =>
+      val p = new Path(s"$dir/$name/manifest.parquet")
+      ParquetMeta.writeManifestRow(conf, p, row.copy(
+        layout = if (name == "flat") "flat" else "two", shardGens = gens))
+      val full = ParquetMeta.readManifestRow(conf, p).shardGens
+      assert(full.toSeq == gens.toSeq)
+      assert(ParquetMeta.readShardGens(conf, p).toSeq == full.toSeq, name)
+    }
+    // Spark-written metadata declares its columns optional
+    val legacy = new Path(s"$dir/legacy/manifest.parquet")
+    legacyManifest(Seq(row)).coalesce(1).write.parquet(legacy.toString)
+    assert(ParquetMeta.readShardGens(conf, legacy).toSeq ==
+      ParquetMeta.readManifestRow(conf, legacy).shardGens.toSeq)
+  }
+
+  private def legacyManifest(rows: Seq[ParquetMeta.ManifestRow]) = {
+    import spark.implicits._
+    rows.map(r => (r.version, r.generation, r.layout, r.k, r.w, r.seed,
+      r.maxFp, r.hllP, r.minContentLen, r.sizingMode, r.bitsPerBin,
+      r.numHashes, r.maxHashesBin, r.numBins, r.shardGens, r.ibf))
+      .toDF("version", "generation", "layout", "k", "w", "seed", "max_fp",
+        "hll_p", "min_content_len", "sizing_mode", "bits_per_bin",
+        "num_hashes", "max_hashes_bin", "num_bins", "shard_gens", "ibf")
+  }
+
+  /** A legacy multi-part manifest directory, one row per part file. */
+  private def multiPart(rows: ParquetMeta.ManifestRow*): Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pm").toString
+    val p = new Path(s"$dir/manifest.parquet")
+    rows.zipWithIndex.foreach { case (r, i) =>
+      ParquetMeta.writeManifestRow(conf, new Path(p, f"part-$i%05d.parquet"), r)
+    }
+    p
+  }
+
+  test("multi-part manifest: identical rows read as that row") {
+    val p = multiPart(row, row.copy(shardGens = row.shardGens.clone(),
+      ibf = row.ibf.clone()))
+    val r = ParquetMeta.readManifestRow(conf, p)
+    assert(r.copy(shardGens = null, ibf = null) ==
+      row.copy(shardGens = null, ibf = null))
+    assert(r.shardGens.toSeq == row.shardGens.toSeq)
+    assert(ParquetMeta.readShardGens(conf, p).toSeq == row.shardGens.toSeq)
+  }
+
+  test("multi-part manifest: rows that disagree are an error") {
+    val p = multiPart(row, row.copy(shardGens = Array(3, 4, 2)))
+    val e = intercept[IllegalArgumentException] {
+      ParquetMeta.readManifestRow(conf, p)
+    }
+    assert(e.getMessage.contains("disagree"))
+    intercept[IllegalArgumentException](ParquetMeta.readShardGens(conf, p))
+  }
+
+  test("multi-part manifest: zero rows keep the row-count message") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pm").toString
+    val p = s"$dir/manifest.parquet"
+    legacyManifest(Seq(row)).limit(0).coalesce(1).write.parquet(p)
+    val e = intercept[IllegalArgumentException] {
+      ParquetMeta.readManifestRow(conf, new Path(p))
+    }
+    assert(e.getMessage.contains("holds 0 rows"))
+  }
 }

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.build.{IbfParams, SketchBuild}
+import graft.build.{IbfParams, SketchBuild, TwoLevelDb}
 import graft.classify.{Classify, ClassifyParams}
 import graft.spark.SparkTestSession
 import graft.synth.Corpus
@@ -26,8 +26,9 @@ class TwoLevelSpec extends AnyFunSuite {
   test("two-level classify == flat classify (all params)") {
     val flat = SketchBuild.build(spark, corpus, "repo", "content", p)
     val two = SketchBuild.buildTwoLevel(spark, corpus, "repo", "content", p)
-    assert(two.shards.length == flat.layout.numGroups)
-    assert(two.shards.length >= 3)
+    // one resident shard per 64-bin group, all materialized at build
+    assert(two.isResident && two.loadedShards == flat.layout.numGroups)
+    assert(two.loadedShards >= 3)
     Seq(ClassifyParams(relCutoff = 0.25), ClassifyParams(relCutoff = 0.75))
       .foreach { cp =>
         val reads = corpus.limit(120).withColumn("id", $"path")
@@ -95,6 +96,30 @@ class TwoLevelSpec extends AnyFunSuite {
     val counts = new Array[Int](lazyDb.targets.length)
     lazyDb.probe(hs, counts, math.max(1, hs.length))
     assert(lazyDb.loadedShards >= 1)
+  }
+
+  test("loadAny on a two-level store is store-backed: no shard before " +
+      "the first probe, classify == flat") {
+    val flat = SketchBuild.build(spark, corpus, "repo", "content", p)
+    val two = SketchBuild.buildTwoLevel(spark, corpus, "repo", "content", p)
+    val dir = java.nio.file.Files.createTempDirectory("graft_loadany").toString
+    graft.io.SketchStore.saveTwoLevel(spark, two, dir)
+    val blobReads = graft.io.SketchStore.shardBlobReads.get()
+    val loaded = graft.io.SketchStore.loadAny(spark, dir)
+    assert(graft.io.SketchStore.shardBlobReads.get() == blobReads,
+      "loading must read no shard blob")
+    val handle = loaded match {
+      case t: TwoLevelDb => t
+      case other => fail(s"expected a TwoLevelDb, got ${other.getClass}")
+    }
+    assert(!handle.isResident && handle.loadedShards == 0)
+    val reads = corpus.limit(120).withColumn("id", $"path")
+    val cp = ClassifyParams(relCutoff = 0.25)
+    def all(db: graft.build.ProbeDb) = Classify.allMatches(
+      Classify.classify(spark, reads, "id", "content", db, cp))
+      .collect().map(_.toString).sorted
+    assert(all(handle).sameElements(all(flat)))
+    assert(handle.loadedShards > 0, "probing fetched the working set")
   }
 
   test("two-level probe prunes: zero FN survives group pruning") {
