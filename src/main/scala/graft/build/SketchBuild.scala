@@ -1,6 +1,6 @@
 package graft.build
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Hashing
@@ -559,7 +559,7 @@ object SketchBuild {
     val binsDf = checkpointed(spark, checkpointDir, "pass2_group_shards",
         tag) {
       shardPass(spark, hashed, thePlan, entriesOf(cards, layout),
-        layout.numGroups, coarseBits, coarseH, twoLevel)
+        coarseBits, coarseH, twoLevel)
     }
     (cards, thePlan, layout, binsDf)
   }
@@ -699,16 +699,21 @@ object SketchBuild {
 
   /** The routed shard aggregation over the (target, hs) projection for the
     * given bin-map entries (target, base, split). Returns one row per
-    * touched 64-bin group. */
+    * touched 64-bin group; each of `maskGroups` also gets a row, with a
+    * null shard when no hash routed to it. The shuffle is as wide as the
+    * groups the entries and `maskGroups` span: every group for a build,
+    * only the touched ones for an update. */
   private def shardPass(spark: SparkSession, hashed: DataFrame,
-      thePlan: IbfPlan,
-      entries: Seq[(String, Int, Int)], numGroups: Int,
+      thePlan: IbfPlan, entries: Seq[(String, Int, Int)],
       coarseBits: Long = 64L, coarseH: Int = 1,
-      twoLevel: Boolean = false): DataFrame = {
+      twoLevel: Boolean = false, maskGroups: Seq[Int] = Nil): DataFrame = {
+    import spark.implicits._
     val layoutDf = broadcast(
       spark.createDataFrame(entries).toDF("target", "base", "split"))
     val parts = math.max(spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    val numGroups = (entries.flatMap { case (_, b, n) =>
+      b / 64 to (b + n - 1) / 64 } ++ maskGroups).distinct.size
 
     // SPLIT-FREE layouts (every target fits one technical bin — the common
     // case whenever maxHashesBin covers the largest target): a row's whole
@@ -723,7 +728,7 @@ object SketchBuild {
     // are instead ignored by IbfShardAgg and never-fed groups drop via
     // the null-shard filter after the aggregation.
     val anySplit = entries.exists(_._3 > 1)
-    val routed =
+    val routedDelta =
       if (!anySplit)
         hashed.join(layoutDf, Seq("target"))
           .select(shiftright(col("base"), 6).as("grp"), col("base"),
@@ -754,6 +759,13 @@ object SketchBuild {
           .select(col("r._1").as("grp"), col("base"), col("split"),
             col("r._2").as("hs"))
       }
+    // one hash-less slice per mask group: it lands in the group's
+    // aggregation, so the group comes out even when no delta reaches it
+    val routed =
+      if (maskGroups.isEmpty) routedDelta
+      else routedDelta.unionByName(maskGroups
+        .map(g => (g, g * 64, 1, null: Array[Long]))
+        .toDF("grp", "base", "split", "hs"))
     // enough groups -> exchange-free complete aggregation (one task per
     // group, zero partial blobs); few groups -> map-side partials are
     // cheap (numGroups x shardBytes per task) and keep input parallelism
@@ -772,9 +784,12 @@ object SketchBuild {
        else Nil)
     // a null shard marks a group that never received a non-empty slice
     // (all its targets' content empty/filtered): drop it, preserving the
-    // untouched-group semantics (NoBlobGen sentinel / implicit empty)
-    pre.groupBy("grp").agg(aggCols.head, aggCols.tail: _*)
-      .filter(col("shard").isNotNull)
+    // untouched-group semantics (NoBlobGen sentinel / implicit empty),
+    // unless it is a mask group
+    val keep =
+      if (maskGroups.isEmpty) col("shard").isNotNull
+      else col("shard").isNotNull || col("grp").isin(maskGroups: _*)
+    pre.groupBy("grp").agg(aggCols.head, aggCols.tail: _*).filter(keep)
   }
 
   /**
@@ -806,7 +821,7 @@ object SketchBuild {
     a.removed.foreach { case (lo, hi) => ibf.zeroBins(lo, hi) }
     // shard-aggregate the delta and OR the touched group columns in
     hashedOpt.filter(_ => a.delta.nonEmpty).foreach { h =>
-      shardPass(spark, h, db.plan, a.delta, a.layout.numGroups)
+      shardPass(spark, h, db.plan, a.delta)
         .collect().foreach { r =>
           orGroup(ibf, r.getInt(0),
             InterleavedBloom.fromBytes(r.getAs[Array[Byte]]("shard")))
@@ -893,12 +908,14 @@ object SketchBuild {
    * pruning remains lossless and removed groups are merely probed once
    * before their zeroed fine bins report nothing.
    *
-   * Work split: the delta aggregation is distributed; each touched group's
-   * mask + OR-merge + rewrite happens on the executor that aggregated it,
-   * and removal-ONLY groups (masked but receiving no delta) are masked in
-   * a parallel executor pass — removing a mega-target split across
-   * thousands of groups never funnels blob I/O through the driver. The
-   * manifest commits last.
+   * Work split: the delta aggregation is distributed and shuffles only
+   * into the groups the commit touches (delta groups plus masked groups),
+   * so its task count follows the delta, not the store's width. Each
+   * touched group's mask + OR-merge + rewrite happens on the executor that
+   * aggregated it, all in one job; removal-ONLY groups (masked but
+   * receiving no delta) ride in that job as null-shard rows — removing a
+   * mega-target split across thousands of groups never funnels blob I/O
+   * through the driver. The manifest commits last.
    *
    * SNAPSHOT ISOLATION: the update reads generation N's blobs and writes
    * only `shards_v<N+1>/`, flipping CURRENT after the new manifest lands —
@@ -949,81 +966,69 @@ object SketchBuild {
     }
     val maskB = spark.sparkContext.broadcast(maskRanges)
 
-    // 1. additions: shard-aggregate the delta; each touched group's
-    //    executor reads the OLD blob (pinned generation), applies its
-    //    removal mask, ORs the delta in, and writes the NEW generation's
-    //    blob; only coarse deltas return to the driver
+    // 1. ONE executor job rewrites every touched group: delta groups come
+    //    out of the shard pass, masked groups ride along as null-shard
+    //    rows. Each row's executor reads the OLD blob (pinned generation),
+    //    applies its removal mask, ORs the delta in (a null shard means
+    //    "apply the mask only") and writes the NEW generation's blob; only
+    //    the written groups and their coarse deltas return to the driver
     val numBinsNew = a.layout.numBins
-    val coarseBits = db0.coarse.bitsPerBin
-    val coarseH = db0.coarse.numHashes
-    val touchedCoarse: Array[(Int, Array[Byte])] =
-      hashedOpt.filter(_ => a.delta.nonEmpty).map { h =>
-        shardPass(spark, h, db0.plan, a.delta, nGroupsNew, coarseBits,
-          coarseH, twoLevel = true)
+    val masked = maskRanges.keys.toSeq.sorted
+    val rows: Option[Dataset[(Int, Array[Byte], Array[Byte])]] =
+      hashedOpt.filter(_ => a.delta.nonEmpty) match {
+        case Some(h) => Some(shardPass(spark, h, db0.plan, a.delta,
+            db0.coarse.bitsPerBin, db0.coarse.numHashes, twoLevel = true,
+            maskGroups = masked)
           .select(col("grp"), col("shard"), col("coarse"))
-          .as[(Int, Array[Byte], Array[Byte])]
-          .mapPartitions { iter =>
-            val masks = maskB.value
-            iter.map { case (g, blob, coarseBlob) =>
-              // widening the group's bin count (appends extending the last
-              // old group) is a pure header change
-              val delta = windowed(InterleavedBloom.fromBytes(blob), g,
-                numBinsNew)
-              if (g < oldNumGroups)
-                graft.io.SketchStore.readShardBlob(conf.value, dir, gens0, g)
-                  .foreach { old =>
-                    masks.get(g).foreach(_.foreach { case (lo, hi) =>
-                      old.zeroBins(lo, hi)
-                    })
-                    var i = 0
-                    while (i < delta.words.length) {
-                      delta.words(i) |= old.words(i); i += 1
-                    }
-                  }
-              graft.io.SketchStore.writeShardBlob(conf.value, newShardDir, g,
-                delta.toBytes)
-              (g, coarseBlob)
-            }
-          }.collect()
-      }.getOrElse(Array.empty)
-
-    // 2. removal-ONLY groups (masked, no delta): mask + rewrite in a
-    //    parallel executor pass — a mega-target's thousands of touched
-    //    groups distribute instead of serializing through the driver
-    val touchedSet = touchedCoarse.map(_._1).toSet
-    val removalOnly = maskRanges.keysIterator.filterNot(touchedSet).toSeq.sorted
-    if (removalOnly.nonEmpty) {
-      val parts = math.min(removalOnly.size,
-        math.max(1, spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(removalOnly, parts).foreach { g =>
-        graft.io.SketchStore.readShardBlob(conf.value, dir, gens0, g)
-          .foreach { sh =>
-            maskB.value(g).foreach { case (lo, hi) => sh.zeroBins(lo, hi) }
-            graft.io.SketchStore.writeShardBlob(conf.value, newShardDir, g,
-              sh.toBytes)
-          }
+          .as[(Int, Array[Byte], Array[Byte])])
+        case None if masked.nonEmpty =>
+          Some(masked.map(g => (g, null: Array[Byte], null: Array[Byte])).toDS())
+        case None => None
       }
-    }
-    // both consumers of the mask (the delta pass, collected above, and the
-    // removal-only pass) have completed — destroy the broadcast now rather
-    // than leaking one per update on a long-lived session
+    val written: Array[(Int, Array[Byte])] = rows.map(_.mapPartitions { iter =>
+      val masks = maskB.value
+      iter.flatMap { case (g, blob, coarseBlob) =>
+        val old =
+          if (g < oldNumGroups)
+            graft.io.SketchStore.readShardBlob(conf.value, dir, gens0, g)
+          else None
+        old.foreach(o => masks.get(g).foreach(_.foreach { case (lo, hi) =>
+          o.zeroBins(lo, hi)
+        }))
+        // a masked sentinel group has no old blob and no delta: nothing to
+        // write, so its pointer keeps the sentinel
+        val out =
+          if (blob == null) old
+          else {
+            // widening the group's bin count (appends extending the last
+            // old group) is a pure header change
+            val delta = windowed(InterleavedBloom.fromBytes(blob), g,
+              numBinsNew)
+            old.foreach { o =>
+              var i = 0
+              while (i < delta.words.length) {
+                delta.words(i) |= o.words(i); i += 1
+              }
+            }
+            Some(delta)
+          }
+        out.map { sh =>
+          graft.io.SketchStore.writeShardBlob(conf.value, newShardDir, g,
+            sh.toBytes)
+          (g, if (blob == null) null else coarseBlob)
+        }
+      }
+    }.collect()).getOrElse(Array.empty)
+    // the one consumer of the mask has completed — destroy the broadcast
+    // now rather than leaking one per update on a long-lived session
     maskB.destroy()
 
-    // 3. per-group generation pointers: groups whose blob was WRITTEN this
+    // 2. per-group generation pointers: groups whose blob was WRITTEN this
     //    generation point at it; untouched groups keep their old pointers
     //    (the O(delta) property — nothing is copied or hard-linked)
-    val removalOnlySet = removalOnly.toSet
+    val writtenSet = written.map(_._1).toSet
     val gens1 = Array.tabulate(nGroupsNew) { g =>
-      if (touchedSet(g)) gen // delta pass always writes these blobs
-      else if (removalOnlySet(g))
-        // the removal-only pass writes a blob ONLY if the old pointer had
-        // one (readShardBlob's Option is empty for the sentinel) — a
-        // sentinel group must KEEP its sentinel, or the pointer would name
-        // a blob that was never written and every later read fails fast
-        // with a bogus "gc'd or corrupt" diagnosis
-        (if (gens0(g) == graft.io.SketchStore.NoBlobGen)
-          graft.io.SketchStore.NoBlobGen
-        else gen)
+      if (writtenSet(g)) gen
       else if (g < gens0.length) gens0(g)
       // appended group with no delta rows: no blob on disk — the sentinel
       // says so explicitly, so readers probe it as empty instead of
@@ -1031,14 +1036,14 @@ object SketchBuild {
       else graft.io.SketchStore.NoBlobGen
     }
 
-    // 4. coarse: re-stride to the (possibly wider) new group count, OR in
-    //    the touched groups' delta unions
+    // 3. coarse: re-stride to the (possibly wider) new group count, OR in
+    //    the delta groups' unions
     val coarseNew = restride(db0.coarse, nGroupsNew)
-    touchedCoarse.foreach { case (g, cb) =>
-      coarseNew.orBin(g, Bloom.fromBytes(cb))
+    written.foreach { case (g, cb) =>
+      if (cb != null) coarseNew.orBin(g, Bloom.fromBytes(cb))
     }
 
-    // 5. manifest + CURRENT flip LAST (the commit point)
+    // 4. manifest + CURRENT flip LAST (the commit point)
     val db = TwoLevelDb.stored(spark, coarseNew, a.targets, a.counts,
       a.layout, p, a.plan, dir, gen, gens1)
     graft.io.SketchStore.writeManifest(spark, db, "two", coarseNew.toBytes,
@@ -1105,8 +1110,7 @@ object SketchBuild {
     val (thePlan, layout) = plan(cards, p)
     val (coarseBits, coarseH) = coarseSizing(cards, layout, p.maxFp)
     val binsDf = shardPass(spark, hashedProjection(df, targetCol, contentCol, p),
-      thePlan, entriesOf(cards, layout), layout.numGroups, coarseBits, coarseH,
-      twoLevel = true)
+      thePlan, entriesOf(cards, layout), coarseBits, coarseH, twoLevel = true)
     storeGeneration(spark, dir, p, cards, thePlan, layout, binsDf,
       basedOnGen = Some(m.generation))
   }

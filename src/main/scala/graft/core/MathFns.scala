@@ -9,29 +9,27 @@ package graft.core
  */
 object MathFns {
 
+  /** Lanczos coefficients (g=7, n=9). */
+  private val LanczosC = Array(
+    0.99999999999980993, 676.5203681218851, -1259.1392167224028,
+    771.32342877765313, -176.61502916214059, 12.507343278686905,
+    -0.13857109526572012, 9.9843695780195716e-6, 1.5056327351493116e-7)
+
   /** Lanczos log-gamma (g=7, n=9), |err| < 1e-13 for x > 0. */
   def lgamma(x0: Double): Double = {
     val g = 7.0
-    val c = Array(
-      0.99999999999980993, 676.5203681218851, -1259.1392167224028,
-      771.32342877765313, -176.61502916214059, 12.507343278686905,
-      -0.13857109526572012, 9.9843695780195716e-6, 1.5056327351493116e-7)
     if (x0 < 0.5) {
       // reflection
       math.log(math.Pi / math.sin(math.Pi * x0)) - lgamma(1.0 - x0)
     } else {
       val x = x0 - 1.0
-      var a = c(0)
+      var a = LanczosC(0)
       val t = x + g + 0.5
       var i = 1
-      while (i < 9) { a += c(i) / (x + i); i += 1 }
+      while (i < 9) { a += LanczosC(i) / (x + i); i += 1 }
       0.5 * math.log(2.0 * math.Pi) + (x + 0.5) * math.log(t) - t + math.log(a)
     }
   }
-
-  def logChoose(n: Long, k: Long): Double =
-    if (k < 0 || k > n) Double.NegativeInfinity
-    else lgamma(n + 1.0) - lgamma(k + 1.0) - lgamma(n - k + 1.0)
 
   /**
    * P(X >= k) for X ~ Binomial(n, p). Sums the tail in log space from the
@@ -47,13 +45,17 @@ object MathFns {
     // terms rise to the distribution mode then fall monotonically: once a
     // term past the mode underflows to 0.0 every later term is 0 too, so
     // stop — without this, a confident match in a low-FPR db (q below
-    // double range) would scan all n-k terms at 3 lgamma calls each
+    // double range) would scan all n-k terms at 2 lgamma calls each
     val mode = math.floor((n + 1) * p).toLong
+    // log C(n, i) = lgamma(n+1) - lgamma(i+1) - lgamma(n-i+1), with
+    // lgamma(n+1) computed once per tail
+    val lgN = lgamma(n + 1.0)
     var acc = 0.0
     var i = k
     var consecTiny = 0
     while (i <= n && consecTiny < 3) {
-      val lt = logChoose(n, i) + i * lp + (n - i) * lq
+      val lt = (lgN - lgamma(i + 1.0) - lgamma(n - i + 1.0)) +
+        i * lp + (n - i) * lq
       val t = math.exp(lt)
       if (t == 0.0 && i >= mode) return math.min(1.0, acc)
       acc += t

@@ -416,6 +416,7 @@ object SketchStore {
     val out = fs.create(tmp, true)
     try out.write(bytes) finally out.close()
     commitBlobRename(conf, fs, tmp, dest, bytes.length.toLong)
+    shardBlobWrites.incrementAndGet()
   }
 
   /** The shared tmp→dest commit: OVERWRITE-rename, suppressing a failure
@@ -475,6 +476,10 @@ object SketchStore {
     * broadcast per generation fetches each shard ONCE across
     * micro-batches, not once per batch). */
   val shardBlobReads = new java.util.concurrent.atomic.AtomicLong()
+
+  /** JVM-wide count of shard blobs written (observability: in local mode
+    * it proves a commit rewrites only the groups it touches). */
+  val shardBlobWrites = new java.util.concurrent.atomic.AtomicLong()
 
   /** Chunked deserialization of [[InterleavedBloom.toBytes]]' layout
     * (20-byte header + little-endian longs) from a positioned stream. */
