@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.build.{IbfParams, ProbeDb, SketchBuild, SketchDb, TwoLevelDb}
@@ -27,7 +27,7 @@ object Ganon {
 
   /** All outputs of one classify run (the .all/.one/.rep/.unc/.sta files). */
   final case class ClassifyOutput(
-      results: org.apache.spark.sql.Dataset[ReadResult],
+      results: Dataset[ReadResult],
       all: DataFrame, one: DataFrame, rep: DataFrame,
       unc: DataFrame, sta: DataFrame)
 
@@ -98,13 +98,9 @@ object Ganon {
   def classifyPaired(spark: SparkSession, reads: DataFrame, idCol: String,
       content1Col: String, content2Col: String, db: ProbeDb,
       params: ClassifyParams = ClassifyParams(),
-      taxonomy: Option[DataFrame] = None): ClassifyOutput = {
-    val lca = taxonomy.map(tax => Lca.build(Formats.taxToParents(tax), "root"))
-    val res = Classify.classifyPaired(spark, reads, idCol, content1Col,
-      content2Col, db, params, lca)
-    ClassifyOutput(res, Classify.allMatches(res), Classify.oneAssignments(res),
-      Classify.report(res), Classify.unclassified(res), Classify.stats(res))
-  }
+      taxonomy: Option[DataFrame] = None): ClassifyOutput =
+    outputs(Classify.classifyPaired(spark, reads, idCol, content1Col,
+      content2Col, db, params, lcaOf(taxonomy)))
 
   /** ganon classify over a batch manifest: one job, per-sample .rep/.sta.
     * Returns (per-read results with `sample`, per-sample rep, per-sample
@@ -114,7 +110,6 @@ object Ganon {
       params: ClassifyParams = ClassifyParams(),
       taxonomy: Option[DataFrame] = None)
       : (DataFrame, DataFrame, DataFrame) = {
-    val lca = taxonomy.map(tax => Lca.build(Formats.taxToParents(tax), "root"))
     val reads = Formats.readsFromManifest(spark, manifest, idCol, contentCol)
     // paired manifest rows carry their mate in content2 (null for
     // single-end rows, which degrade to mate-1-only hashing) — the read's
@@ -124,7 +119,7 @@ object Ganon {
       !manifest.filter(org.apache.spark.sql.functions.col("file2").isNotNull)
         .isEmpty
     val res = Classify.classifyBySample(spark, reads, "sample", idCol,
-      contentCol, db, params, lca,
+      contentCol, db, params, lcaOf(taxonomy),
       content2Col = if (hasPaired) Some("content2") else None)
     (res, Classify.reportBySample(res), Classify.staBySample(res))
   }
@@ -184,12 +179,18 @@ object Ganon {
   def classify(spark: SparkSession, reads: DataFrame, idCol: String,
       contentCol: String, db: ProbeDb,
       params: ClassifyParams = ClassifyParams(),
-      taxonomy: Option[DataFrame] = None): ClassifyOutput = {
-    val lca = taxonomy.map(tax => Lca.build(Formats.taxToParents(tax), "root"))
-    val res = Classify.classify(spark, reads, idCol, contentCol, db, params, lca)
+      taxonomy: Option[DataFrame] = None): ClassifyOutput =
+    outputs(Classify.classify(spark, reads, idCol, contentCol, db, params,
+      lcaOf(taxonomy)))
+
+  /** The LCA over a `.tax` table (first-wins merge, rooted at "root"). */
+  private def lcaOf(taxonomy: Option[DataFrame]): Option[Lca] =
+    taxonomy.map(tax => Lca.build(Formats.taxToParents(tax), "root"))
+
+  /** The .all/.one/.rep/.unc/.sta relations of one per-read result. */
+  private def outputs(res: Dataset[ReadResult]): ClassifyOutput =
     ClassifyOutput(res, Classify.allMatches(res), Classify.oneAssignments(res),
       Classify.report(res), Classify.unclassified(res), Classify.stats(res))
-  }
 
   /** ganon reassign: EM over the .all relation -> final .one. */
   def reassign(spark: SparkSession, all: DataFrame, maxIter: Int = 10,

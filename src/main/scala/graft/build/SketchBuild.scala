@@ -724,7 +724,7 @@ object SketchBuild {
     // either path feeds IbfShardAgg, which re-routes per hash anyway.
     // NOTE: no row-level empty-hs filter here — a predicate on `hs` gets
     // pushed through the shingle projection by substitution and re-runs
-    // the kernel per row (verified in the physical plan); empty slices
+    // the kernel per row (asserted by PlanShapeSpec); empty slices
     // are instead ignored by IbfShardAgg and never-fed groups drop via
     // the null-shard filter after the aggregation.
     val anySplit = entries.exists(_._3 > 1)

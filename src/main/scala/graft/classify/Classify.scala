@@ -1,10 +1,12 @@
 package graft.classify
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.build.ProbeDb
+import graft.build.{IbfParams, ProbeDb}
 import graft.core.{Lca, MathFns}
+import graft.spark.{GraftFunctions, ShinglesExpr}
 
 /** Per-read thresholds — same semantics & defaults as the reference
   * (rel-cutoff GanonClassify.cpp:492-495/:718-724, rel-filter :756-762,
@@ -49,17 +51,21 @@ object Classify {
    */
   def classify(spark: SparkSession, reads: DataFrame, idCol: String,
       contentCol: String, db: ProbeDb, cp: ClassifyParams = ClassifyParams(),
-      lcaOpt: Option[Lca] = None): Dataset[ReadResult] = {
-    import spark.implicits._
-    // shingles run inside whole-stage codegen (native expression); the
-    // probe mapPartitions receives primitive long[] — no boxing anywhere
-    val shExpr = graft.spark.ShinglesExpr.col(
-      coalesce(col(contentCol), lit("")), db.params.k, db.params.w, db.params.seed)
-    classifyHashed(spark, reads
-      .select(col(idCol).cast("string").as("read_id"),
-        coalesce(octet_length(col(contentCol)), lit(0)).as("len"), shExpr.as("hs"))
-      .as[(String, Int, Array[Long])], db, cp, lcaOpt)
-  }
+      lcaOpt: Option[Lca] = None): Dataset[ReadResult] =
+    classifyB(spark, reads, idCol, contentCol, spark.sparkContext.broadcast(db),
+      cp, lcaOpt)
+
+  /** [[classify]] over a CALLER-OWNED broadcast. Repeated calls with the
+    * SAME broadcast (e.g. every micro-batch of a stream) reuse the one
+    * deserialized db instance per executor, so a lazy handle's shard cache
+    * survives across batches — re-broadcasting per batch would re-fetch
+    * every touched shard each time. The caller manages the broadcast's
+    * lifetime (destroy it when rotating to a new store generation). */
+  def classifyB(spark: SparkSession, reads: DataFrame, idCol: String,
+      contentCol: String, dbB: Broadcast[ProbeDb],
+      cp: ClassifyParams = ClassifyParams(),
+      lcaOpt: Option[Lca] = None): Dataset[ReadResult] =
+    classifyReads(spark, reads, idCol, contentCol, None, dbB, cp, lcaOpt)
 
   /**
    * Paired-read classify (GanonClassify.cpp:695-700; reference test
@@ -73,82 +79,68 @@ object Classify {
   def classifyPaired(spark: SparkSession, reads: DataFrame, idCol: String,
       content1Col: String, content2Col: String, db: ProbeDb,
       cp: ClassifyParams = ClassifyParams(),
-      lcaOpt: Option[Lca] = None): Dataset[ReadResult] = {
+      lcaOpt: Option[Lca] = None): Dataset[ReadResult] =
+    classifyReads(spark, reads, idCol, content1Col, Some(content2Col),
+      spark.sparkContext.broadcast(db), cp, lcaOpt)
+
+  private def classifyReads(spark: SparkSession, reads: DataFrame,
+      idCol: String, contentCol: String, content2Col: Option[String],
+      dbB: Broadcast[ProbeDb], cp: ClassifyParams,
+      lcaOpt: Option[Lca]): Dataset[ReadResult] = {
     import spark.implicits._
-    val p = db.params
-    val hsCol = graft.spark.GraftFunctions.pairedShingles(
-      coalesce(col(content1Col), lit("")), coalesce(col(content2Col), lit("")),
-      p.k, p.w, p.seed)
-    classifyHashed(spark, reads
-      .select(col(idCol).cast("string").as("read_id"),
-        (coalesce(octet_length(col(content1Col)), lit(0)) +
-          coalesce(octet_length(col(content2Col)), lit(0))).as("len"),
-        hsCol.as("hs"))
-      .as[(String, Int, Array[Long])], db, cp, lcaOpt)
-  }
-
-  /** One partition's classifier: scratch allocated once, then a pure
-    * per-row function — the shared core of every probe variant. */
-  private def rowClassifier(d: ProbeDb, lca: Option[Lca], cp: ClassifyParams)
-      : (String, Int, Array[Long]) => ReadResult = {
-    val counts = new Array[Int](d.targets.length)
-    (id, len, hs) => classifyOne(id, len, hs, d, cp, lca, counts)
-  }
-
-  /** Shared probe stage over precomputed (read_id, byte-len, shingle set)
-    * rows — the single- and paired-read projections both feed this. */
-  private[graft] def classifyHashed(spark: SparkSession,
-      hashed: Dataset[(String, Int, Array[Long])], db: ProbeDb,
-      cp: ClassifyParams, lcaOpt: Option[Lca]): Dataset[ReadResult] =
-    classifyHashedB(spark, hashed, spark.sparkContext.broadcast(db), cp,
-      lcaOpt)
-
-  /** Probe stage over a CALLER-OWNED broadcast. Repeated calls with the
-    * SAME broadcast (e.g. every micro-batch of a stream) reuse the one
-    * deserialized db instance per executor, so a lazy handle's shard cache
-    * survives across batches — re-broadcasting per batch would re-fetch
-    * every touched shard each time. The caller manages the broadcast's
-    * lifetime (destroy it when rotating to a new store generation). */
-  private[graft] def classifyHashedB(spark: SparkSession,
-      hashed: Dataset[(String, Int, Array[Long])],
-      dbB: org.apache.spark.broadcast.Broadcast[ProbeDb],
-      cp: ClassifyParams, lcaOpt: Option[Lca]): Dataset[ReadResult] = {
-    import spark.implicits._
-    // no LCA (every streaming live-store batch, most batch calls): nothing
-    // to broadcast — a per-call broadcast of None would leak one handle
-    // per micro-batch on a long-lived stream, since the result is lazy and
-    // the broadcast can only be destroyed when the result is dead. With an
-    // LCA the broadcast is real (Euler/RMQ arrays) and lives exactly as
-    // long as the returned Dataset — one per classify() call, not per
-    // batch, because the cascade paths reuse the level's Dataset.
-    val lcaB =
-      if (lcaOpt.isEmpty) null
-      else spark.sparkContext.broadcast(lcaOpt.get)
-    hashed.mapPartitions { iter =>
-      val one = rowClassifier(dbB.value,
-        if (lcaB == null) None else Some(lcaB.value), cp)
-      iter.map { case (id, len, hs) => one(id, len, hs) }
+    probeStage(spark,
+      readProjection(reads, idCol, contentCol, content2Col, dbB.value.params)
+        .as[(String, Int, Array[Long])], dbB, cp, lcaOpt) {
+      case ((id, len, hs), one) => one(id, len, hs)
     }
   }
 
-  /** [[classify]] over a caller-owned broadcast db (see
-    * [[classifyHashedB]] for the reuse contract). The shingle projection's
-    * params come from the broadcast value itself (driver-local access —
-    * no fetch), so they can never drift from the db being probed. */
-  def classifyB(spark: SparkSession, reads: DataFrame, idCol: String,
-      contentCol: String,
-      dbB: org.apache.spark.broadcast.Broadcast[ProbeDb],
-      cp: ClassifyParams = ClassifyParams(),
-      lcaOpt: Option[Lca] = None): Dataset[ReadResult] = {
-    import spark.implicits._
-    val params = dbB.value.params
-    val shExpr = graft.spark.ShinglesExpr.col(
-      coalesce(col(contentCol), lit("")), params.k, params.w, params.seed)
-    classifyHashedB(spark, reads
-      .select(col(idCol).cast("string").as("read_id"),
-        coalesce(octet_length(col(contentCol)), lit(0)).as("len"),
-        shExpr.as("hs"))
-      .as[(String, Int, Array[Long])], dbB, cp, lcaOpt)
+  /** The one read projection: `lead` columns, then (read_id, len, hs). The
+    * shingles run inside whole-stage codegen (native expression), so the
+    * probe receives primitive long[] — no boxing anywhere. With a mate
+    * column `hs` is the mates' distinct union and `len` their combined
+    * byte length; a null mate degrades to single-end. The params come
+    * from the db being probed (a broadcast's driver-local value — no
+    * fetch), so they can never drift from it. */
+  private def readProjection(reads: DataFrame, idCol: String,
+      contentCol: String, content2Col: Option[String], p: IbfParams,
+      lead: Column*): DataFrame = {
+    def content(c: String) = coalesce(col(c), lit(""))
+    def len(c: String) = coalesce(octet_length(col(c)), lit(0))
+    val (lenCol, hsCol) = content2Col match {
+      case None => (len(contentCol),
+        ShinglesExpr.col(content(contentCol), p.k, p.w, p.seed))
+      case Some(c2) => (len(contentCol) + len(c2),
+        GraftFunctions.pairedShingles(content(contentCol), content(c2),
+          p.k, p.w, p.seed))
+    }
+    reads.select(lead ++ Seq(col(idCol).cast("string").as("read_id"),
+      lenCol.as("len"), hsCol.as("hs")): _*)
+  }
+
+  /** The one probe stage: a map-only pass over the projected rows against
+    * the broadcast db, counts scratch allocated once per partition. `emit`
+    * turns a row and the partition's classifier into an output row.
+    * This is the only place the LCA is broadcast, and only when there is
+    * one: every streaming live-store batch (and most batch calls) has
+    * none, and a per-call broadcast of None would leak one handle per
+    * micro-batch on a long-lived stream, since the result is lazy and the
+    * broadcast can only be destroyed when the result is dead. With an
+    * LCA the broadcast is real (Euler/RMQ arrays) and lives as long as
+    * the returned Dataset — one per classify call, not per batch, because
+    * the cascade paths reuse the level's Dataset. */
+  private def probeStage[I, O: Encoder](spark: SparkSession, rows: Dataset[I],
+      dbB: Broadcast[ProbeDb], cp: ClassifyParams, lcaOpt: Option[Lca])(
+      emit: (I, (String, Int, Array[Long]) => ReadResult) => O): Dataset[O] = {
+    val lcaB = lcaOpt.map(spark.sparkContext.broadcast(_))
+    rows.mapPartitions { iter =>
+      val d = dbB.value
+      val lca = lcaB.map(_.value)
+      val counts = new Array[Int](d.targets.length)
+      val one = (id: String, len: Int, hs: Array[Long]) =>
+        classifyOne(id, len, hs, d, cp, lca, counts)
+      iter.map(emit(_, one))
+    }
   }
 
   private[classify] def classifyOne(id: String, contentLen: Int,
@@ -362,35 +354,13 @@ object Classify {
       lcaOpt: Option[Lca] = None,
       content2Col: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val dbB = spark.sparkContext.broadcast(db)
-    // same no-LCA-no-broadcast rule as classifyHashedB: don't mint a
-    // broadcast handle just to carry None
-    val lcaB =
-      if (lcaOpt.isEmpty) null
-      else spark.sparkContext.broadcast(lcaOpt.get)
-    val p = db.params
-    val hsCol = content2Col match {
-      case Some(c2) => graft.spark.GraftFunctions.pairedShingles(
-        coalesce(col(contentCol), lit("")), coalesce(col(c2), lit("")),
-        p.k, p.w, p.seed)
-      case None => graft.spark.ShinglesExpr.col(
-        coalesce(col(contentCol), lit("")), p.k, p.w, p.seed)
-    }
-    val lenCol = content2Col match {
-      case Some(c2) => coalesce(octet_length(col(contentCol)), lit(0)) +
-        coalesce(octet_length(col(c2)), lit(0))
-      case None => coalesce(octet_length(col(contentCol)), lit(0))
-    }
-    reads
-      .select(col(sampleCol).cast("string").as("sample"),
-        col(idCol).cast("string").as("read_id"),
-        lenCol.as("len"), hsCol.as("hs"))
-      .as[(String, String, Int, Array[Long])]
-      .mapPartitions { iter =>
-        val one = rowClassifier(dbB.value,
-          if (lcaB == null) None else Some(lcaB.value), cp)
-        iter.map { case (sample, id, len, hs) => (sample, one(id, len, hs)) }
-      }.toDF("sample", "r")
+    probeStage(spark,
+      readProjection(reads, idCol, contentCol, content2Col, db.params,
+        col(sampleCol).cast("string").as("sample"))
+        .as[(String, String, Int, Array[Long])],
+      spark.sparkContext.broadcast(db), cp, lcaOpt) {
+      case ((sample, id, len, hs), one) => (sample, one(id, len, hs))
+    }.toDF("sample", "r")
       .select(col("sample"), col("r.*"))
   }
 
@@ -423,8 +393,9 @@ object Classify {
   /**
    * Multi-filter level (GanonClassify.cpp:528-539): probe SEVERAL dbs in
    * one hierarchy level; a target matched by more than one filter keeps its
-   * MAX count. All dbs must share shingling params. Implemented as one
-   * fused per-read pass over the broadcast dbs — still zero shuffles.
+   * MAX count. All dbs must share shingling params. The level is one
+   * broadcast [[MergedProbeDb]] through the same probe stage as
+   * [[classify]] — still zero shuffles.
    */
   /**
    * @param perFilterCutoff optional per-db rel-cutoff overrides (the
@@ -444,32 +415,15 @@ object Classify {
       "multi-filter dbs must share shingling params")
     require(perFilterCutoff.isEmpty || perFilterCutoff.length == dbs.length,
       "one cutoff per filter")
-    import spark.implicits._
     val rels =
       if (perFilterCutoff.isEmpty) Array.fill(dbs.length)(cp.relCutoff)
       else perFilterCutoff.toArray
     // the merged pass re-checks at the LOOSEST cutoff; per-filter strictness
     // is enforced inside the merged probe before the max-count merge
     val cpEff = cp.copy(relCutoff = rels.min)
-    val dbsB = spark.sparkContext.broadcast(dbs.toArray)
-    val relsB = spark.sparkContext.broadcast(rels)
-    val lcaB = spark.sparkContext.broadcast(lcaOpt)
-    val p0 = dbs.head.params
-    val shExpr = graft.spark.ShinglesExpr.col(
-      coalesce(col(contentCol), lit("")), p0.k, p0.w, p0.seed)
-    reads
-      .select(col(idCol).cast("string").as("read_id"),
-        coalesce(octet_length(col(contentCol)), lit(0)).as("len"), shExpr.as("hs"))
-      .as[(String, Int, Array[Long])]
-      .mapPartitions { iter =>
-        val ds = dbsB.value
-        val lca = lcaB.value
-        val merged = new MergedProbeDb(ds, relsB.value)
-        val counts = new Array[Int](merged.targets.length)
-        iter.map { case (id, len, hs) =>
-          classifyOne(id, len, hs, merged, cpEff, lca, counts)
-        }
-      }
+    classifyB(spark, reads, idCol, contentCol,
+      spark.sparkContext.broadcast(new MergedProbeDb(dbs.toArray, rels)),
+      cpEff, lcaOpt)
   }
 
   /** View over several dbs: union of targets; per-target count = MAX across
@@ -478,15 +432,14 @@ object Classify {
     * the reference's ordered merge). */
   private[classify] final class MergedProbeDb(dbs: Array[ProbeDb],
       rels: Array[Double]) extends ProbeDb {
-    def this(dbs: Array[ProbeDb]) = this(dbs, dbs.map(_ => 0.0))
     val targets: Array[String] = {
       val seen = new scala.collection.mutable.LinkedHashSet[String]
       dbs.foreach(_.targets.foreach(seen += _))
       seen.toArray
     }
     private val idx: Map[String, Int] = targets.zipWithIndex.toMap
-    // per-db local target index -> merged index, precomputed once (the
-    // instance is built once per partition) so probe never hashes strings
+    // per-db local target index -> merged index, precomputed once (on the
+    // driver, then broadcast) so probe never hashes strings
     private val globalOf: Array[Array[Int]] =
       dbs.map(d => d.targets.map(idx))
     val targetHashes: Array[Long] = {
@@ -509,10 +462,12 @@ object Classify {
       }
       out
     }
-    // the merged db is instantiated per task (single-threaded), so one
-    // reusable scratch buffer covers all member filters
-    private val scratch = new Array[Int](
-      dbs.iterator.map(_.targets.length).max)
+    // one broadcast instance serves every task on an executor, so the
+    // scratch buffer (sized for the largest member filter) is per thread
+    @transient private lazy val scratch: ThreadLocal[Array[Int]] = {
+      val n = dbs.iterator.map(_.targets.length).max
+      ThreadLocal.withInitial(() => new Array[Int](n))
+    }
     def params: graft.build.IbfParams = dbs.head.params
     def plan: graft.build.IbfPlan = dbs.head.plan
     def binFpr(bin: Int): Double = fprOf(bin)
@@ -524,7 +479,7 @@ object Classify {
         val nLocal = d.targets.length
         val dCut = math.max(cutoff,
           math.max(1, math.ceil(hashes.length * rels(di)).toInt))
-        val local = scratch
+        val local = scratch.get()
         java.util.Arrays.fill(local, 0, nLocal, 0)
         d.probe(hashes, local, dCut)
         var i = 0

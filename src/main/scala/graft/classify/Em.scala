@@ -2,6 +2,7 @@ package graft.classify
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /**
  * EM reassignment of multi-match reads (capability of ganon reassign,
@@ -43,7 +44,6 @@ object Em {
    */
   def reassign(spark: SparkSession, all: DataFrame, maxIter: Int = 10,
       threshold: Double = 0.001): DataFrame = {
-    import spark.implicits._
     // first-listed order: present when the caller fed allMatches output
     val ordCol =
       if (all.columns.contains("match_order")) col("match_order").cast("long")
@@ -68,32 +68,31 @@ object Em {
       allTargets.iterator.zipWithIndex.toMap)
     val namesB = spark.sparkContext.broadcast(allTargets)
 
-    // group each multi-match read's candidates ONCE, interning the target
-    // in the same pass; the loop never touches strings again
+    // group each multi-match read's candidates ONCE into compact
+    // primitive-array rows (read_id, tids, counts, orders), interning the
+    // target in the same pass; the loop never touches strings again. The
+    // loop only needs per-target COUNTS, so it scans these rows map-side
+    // (no per-iteration encode, no groupBy exchange) and the full
+    // (read_id, pick) assignment materializes exactly once after
+    // convergence — with the same probs the final iteration used
     val intern = udf((t: String) => tIdxB.value(t))
-    val multiReads = withN.filter(col("n_m").isNull)
+    val compactRdd = withN.filter(col("n_m").isNull)
       .groupBy("read_id")
       .agg(collect_list(struct(intern(col("target")).as("tid"),
         col("kmer_count"), col("ord"))).as("ms"))
-      .persist()
-    // primitive-array twin of multiReads for the E-step count jobs: the
-    // loop only needs per-target COUNTS, so it scans these compact rows
-    // map-side (no per-iteration UDF encode, no groupBy exchange) and the
-    // full (read_id, pick) assignment materializes exactly once after
-    // convergence — with the same probs the final iteration used
-    val compactRdd = multiReads.select(col("ms")).rdd.map { r =>
-      val ms = r.getSeq[Row](0)
-      val m = ms.length
-      val ts = new Array[Int](m); val cs = new Array[Long](m)
-      val os = new Array[Long](m)
-      var i = 0
-      while (i < m) {
-        val e = ms(i)
-        ts(i) = e.getInt(0); cs(i) = e.getLong(1); os(i) = e.getLong(2)
-        i += 1
-      }
-      (ts, cs, os)
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .rdd.map { r =>
+        val ms = r.getSeq[Row](1)
+        val m = ms.length
+        val ts = new Array[Int](m); val cs = new Array[Long](m)
+        val os = new Array[Long](m)
+        var i = 0
+        while (i < m) {
+          val e = ms(i)
+          ts(i) = e.getInt(0); cs(i) = e.getLong(1); os(i) = e.getLong(2)
+          i += 1
+        }
+        (r.get(0), ts, cs, os)
+      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // init probs from unique counts (+1 smoothing so zero-unique targets
     // can still attract reads, as reassign.py's eps does)
@@ -108,31 +107,6 @@ object Em {
     }
     var probs = normalized(uniqueCounts.map(_ + 1.0))
 
-    // argmax over the read's candidate array given the broadcast prob
-    // array; ties by first-listed order, then tid asc (== target asc by
-    // the sorted interning above)
-    def assign(pB: org.apache.spark.broadcast.Broadcast[Array[Double]])
-        : DataFrame = {
-      val pick = udf((ms: Seq[Row]) => {
-        val p = pB.value
-        var bt = -1; var bc = 0L; var bs = -1.0
-        var bo = Long.MaxValue
-        ms.foreach { r =>
-          val t = r.getInt(0); val c = r.getLong(1); val o = r.getLong(2)
-          val s = c * p(t)
-          val better = s > bs || (s == bs &&
-            (o < bo || (o == bo && (bt < 0 || t < bt))))
-          if (better) { bs = s; bt = t; bc = c; bo = o }
-        }
-        (bt, bc)
-      })
-      multiReads
-        .select(col("read_id"), pick(col("ms")).as("pick"))
-        .select(col("read_id"), col("pick._1").as("tid"),
-          col("pick._2").as("kmer_count"))
-    }
-
-    var assigned: DataFrame = null
     // probs the most recent EXECUTED iteration assigned with — the final
     // materialized assignment must use these, not the post-update probs
     var probsUsed: Array[Double] = null
@@ -145,9 +119,8 @@ object Em {
       // DIRECTLY over the compact candidate rows: one map-side job per
       // iteration folding picks into a dense Array[Long] — no per-read
       // assignment row is encoded, shuffled or collected inside the loop
-      // (the old shape ran the pick UDF into a DataFrame and then a
-      // groupBy+collect per iteration; the assignment itself is only
-      // needed ONCE, after convergence). Two merge regimes, same answer:
+      // (the assignment itself is only needed ONCE, after convergence).
+      // Two merge regimes, same answer:
       // - SMALL |targets| (< 64k): rdd.aggregate — the driver merges
       //   numPartitions dense arrays of n longs (tiny), one job, no
       //   shuffle stage at all.
@@ -155,21 +128,11 @@ object Em {
       //   handful of pre-combined arrays instead of one per partition
       //   (the 10^7-target shape; see tools/EmScale).
       val seqOp = (a0: Array[Long],
-          row: (Array[Int], Array[Long], Array[Long])) => {
+          row: (Any, Array[Int], Array[Long], Array[Long])) => {
         val a = if (a0 == null) new Array[Long](n) else a0
-        val p = pB.value
-        val (ts, cs, os) = row
-        var bt = -1; var bs = -1.0; var bo = Long.MaxValue
-        var i = 0
-        while (i < ts.length) {
-          val t = ts(i); val o = os(i)
-          val s = cs(i) * p(t)
-          val better = s > bs || (s == bs &&
-            (o < bo || (o == bo && (bt < 0 || t < bt))))
-          if (better) { bs = s; bt = t; bo = o }
-          i += 1
-        }
-        if (bt >= 0) a(bt) += 1
+        val (_, ts, cs, os) = row
+        val i = argmax(ts, cs, os, pB.value)
+        if (i >= 0) a(ts(i)) += 1
         a
       }
       val combOp = (a: Array[Long], b: Array[Long]) =>
@@ -198,34 +161,51 @@ object Em {
       iter += 1
     }
     // materialize the assignment ONCE, with the probs the last executed
-    // iteration used — identical rows to materializing every iteration
-    var liveB: org.apache.spark.broadcast.Broadcast[Array[Double]] = null
+    // iteration used — identical rows to materializing every iteration —
+    // restoring string targets on the way out (one lookup per ASSIGNED
+    // read, not per candidate)
+    var assigned: DataFrame = null
     if (iter > 0) {
-      liveB = spark.sparkContext.broadcast(probsUsed)
-      assigned = assign(liveB)
+      val liveB = spark.sparkContext.broadcast(probsUsed)
+      val picks = compactRdd.flatMap { case (id, ts, cs, os) =>
+        val i = argmax(ts, cs, os, liveB.value)
+        if (i < 0) None else Some(Row(id, namesB.value(ts(i)), cs(i)))
+      }
+      val schema = StructType(Seq(matches.schema("read_id"),
+        StructField("target", StringType), StructField("kmer_count", LongType)))
+      // sever the broadcast dependencies before destroying them (otherwise
+      // one prob-array broadcast leaks per reassign() call on a long-lived
+      // session): eager localCheckpoint materializes the assignment, so no
+      // recompute can ever dereference a destroyed value; `uniques` never
+      // referenced them
+      assigned = spark.createDataFrame(picks, schema).localCheckpoint(true)
+      liveB.destroy()
     }
-    // restore string targets on the way out (one map-side lookup per
-    // ASSIGNED read, not per candidate)
-    val unintern = udf((t: Int) => namesB.value(t))
-    if (assigned != null) assigned = assigned
-      .select(col("read_id"), unintern(col("tid")).as("target"),
-        col("kmer_count"))
-    // sever the final iteration's broadcast dependency before destroying
-    // it (otherwise one prob-map broadcast leaks per reassign() call on a
-    // long-lived session): eager localCheckpoint materializes the
-    // assignment, so no recompute can ever dereference the destroyed
-    // value. The intern/name broadcasts are severed by the same
-    // checkpoint; `uniques` never referenced them.
-    if (assigned != null) assigned = assigned.localCheckpoint(true)
-    if (liveB != null) { liveB.destroy(); liveB = null }
     val result = uniques.unionByName(
       if (assigned == null)
         uniques.limit(0)
       else assigned)
-    compactRdd.unpersist()
-    multiReads.unpersist(); matches.unpersist()
+    compactRdd.unpersist(); matches.unpersist()
     tIdxB.destroy(); namesB.destroy()
     result
+  }
+
+  /** The read's EM pick: index of the candidate maximizing
+    * count × p(target), ties by first-listed order, then tid asc (== target
+    * asc by the sorted interning); -1 for no candidate. */
+  private def argmax(ts: Array[Int], cs: Array[Long], os: Array[Long],
+      p: Array[Double]): Int = {
+    var bi = -1; var bt = -1; var bs = -1.0; var bo = Long.MaxValue
+    var i = 0
+    while (i < ts.length) {
+      val t = ts(i); val o = os(i)
+      val s = cs(i) * p(t)
+      val better = s > bs || (s == bs &&
+        (o < bo || (o == bo && (bt < 0 || t < bt))))
+      if (better) { bi = i; bs = s; bt = t; bo = o }
+      i += 1
+    }
+    bi
   }
 
   /** EM `.one` plus the rewritten `.rep` (reference reassign.py:180-224:

@@ -116,7 +116,7 @@ object StreamClassify {
    * is classified entirely by one generation, never a mix.
    *
    * Broadcast discipline: ONE broadcast per generation, reused across
-   * batches (`Classify.classifyHashedB`), so each executor's lazy shard
+   * batches (`Classify.classifyB`), so each executor's lazy shard
    * cache persists between micro-batches instead of re-fetching every
    * touched shard per batch; the superseded generation's broadcast is
    * destroyed at rotation — foreachBatch bodies run synchronously, so

@@ -62,6 +62,34 @@ class TwoLevelSpec extends AnyFunSuite {
     assert(!m.contains("tB"))
   }
 
+  test("multi-filter level: 16 concurrent partitions == 1 partition") {
+    // one broadcast merged db serves every task thread of the executor;
+    // per-filter cutoffs and an LCA exercise the whole per-read path
+    val dbA = SketchBuild.build(spark, corpus.filter(hash($"repo") % 2 === 0),
+      "repo", "content", p)
+    val dbB = SketchBuild.build(spark, corpus.filter(hash($"path") % 3 === 0),
+      "repo", "content", p)
+    val targets = (dbA.targets ++ dbB.targets).distinct
+    val lca = graft.core.Lca.build(
+      targets.map(t => t -> s"g${math.abs(t.hashCode % 7)}").toMap ++
+        (0 until 7).map(g => s"g$g" -> "root"), "root")
+    val reads = corpus.select($"path".as("id"), $"content")
+    def run(parts: Int) = Classify.classifyMultiFilter(spark,
+      reads.repartition(parts), "id", "content", Seq(dbA, dbB),
+      ClassifyParams(relCutoff = 0.25), Some(lca), Seq(0.2, 0.5)).collect()
+    def rows(rs: Array[graft.classify.ReadResult]) = rs.map(r => (r.read_id,
+      r.n_hashes, r.matches.map(m => s"${m.target}:${m.count}").mkString(","),
+      r.assignment, r.unique, r.skipped, r.discarded_filter,
+      r.discarded_fpr).toString).sorted
+    val res1 = run(1)
+    assert(res1.length == 2000)
+    assert(res1.count(_.matches.length > 1) > 100, "multi-matches expected")
+    val one = rows(res1)
+    val many = rows(run(16))
+    assert(many.sameElements(one),
+      many.zip(one).filter { case (a, b) => a != b }.take(3).mkString("\n"))
+  }
+
   test("paired shingles == union of mates' shingle sets") {
     import org.apache.spark.sql.functions._
     val df = Seq(("aa bb cc", "cc dd ee")).toDF("c1", "c2")
