@@ -3,7 +3,7 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.build.{IbfParams, ProbeDb, SketchBuild, SketchDb, TwoLevelDb}
+import graft.build.{IbfParams, ProbeDb, SketchBuild, SketchDb}
 import graft.classify.{Classify, ClassifyParams, Em, ReadResult}
 import graft.core.Lca
 import graft.io.{Formats, SketchStore}
@@ -35,7 +35,7 @@ object Ganon {
     * `twoLevel` selects the HIBF-like layout (ganon's --hibf). */
   def build(spark: SparkSession, df: DataFrame, targetCol: String,
       contentCol: String, params: IbfParams = IbfParams(),
-      twoLevel: Boolean = false, checkpointDir: Option[String] = None): ProbeDb =
+      twoLevel: Boolean = false, checkpointDir: Option[String] = None): SketchDb =
     if (twoLevel)
       SketchBuild.buildTwoLevel(spark, df, targetCol, contentCol, params,
         checkpointDir = checkpointDir)
@@ -47,7 +47,7 @@ object Ganon {
     * and the returned lazy db probes the store on demand. */
   def buildToStore(spark: SparkSession, df: DataFrame, targetCol: String,
       contentCol: String, dir: String, params: IbfParams = IbfParams(),
-      checkpointDir: Option[String] = None): ProbeDb =
+      checkpointDir: Option[String] = None): SketchDb =
     SketchBuild.buildToStore(spark, df, targetCol, contentCol, dir, params,
       checkpointDir)
 
@@ -56,7 +56,7 @@ object Ganon {
     * snapshot keep serving it); returns the refreshed lazy db. */
   def updateStored(spark: SparkSession, dir: String, addDf: DataFrame,
       targetCol: String, contentCol: String,
-      removeTargets: Seq[String] = Nil): ProbeDb =
+      removeTargets: Seq[String] = Nil): SketchDb =
     SketchBuild.updateStored(spark, dir, addDf, targetCol, contentCol,
       removeTargets)
 
@@ -65,7 +65,7 @@ object Ganon {
     * capacity, re-derive the coarse — one content scan, committed as the
     * next generation. [[compactionAdvised]] is the metadata-only trigger. */
   def compactStored(spark: SparkSession, dir: String, df: DataFrame,
-      targetCol: String, contentCol: String): ProbeDb =
+      targetCol: String, contentCol: String): SketchDb =
     SketchBuild.compactStored(spark, dir, df, targetCol, contentCol)
 
   def compactionAdvised(spark: SparkSession, dir: String)
@@ -159,20 +159,14 @@ object Ganon {
       targetCol, contentCol, storeDir, params, gcKeepGens, ingestId)
 
   /** Persist a db as a new store generation in `dir`. A store-backed
-    * [[graft.build.TwoLevelDb]] handle EXPORTS its pinned snapshot (a
-    * consistent backup of exactly the bits the handle serves, immune to
-    * concurrent updates of the source store); saving it back onto its own
-    * store directory is an error — that snapshot already lives there. */
-  def save(spark: SparkSession, db: ProbeDb, dir: String): Unit = db match {
-    case flat: SketchDb => SketchStore.save(spark, flat, dir)
-    case two: TwoLevelDb => SketchStore.saveTwoLevel(spark, two, dir)
-    case other =>
-      throw new IllegalArgumentException(
-        s"cannot save a ${other.getClass.getSimpleName}: only SketchDb and " +
-          "TwoLevelDb persist via save")
-  }
+    * handle EXPORTS its pinned snapshot (a consistent backup of exactly
+    * the bits the handle serves, immune to concurrent updates of the
+    * source store); saving it back onto its own store directory is an
+    * error — that snapshot already lives there. */
+  def save(spark: SparkSession, db: SketchDb, dir: String): Unit =
+    SketchStore.save(spark, db, dir)
 
-  def load(spark: SparkSession, dir: String): ProbeDb =
+  def load(spark: SparkSession, dir: String): SketchDb =
     SketchStore.loadAny(spark, dir)
 
   /** ganon classify: one db or a hierarchy of (label, db) levels. */

@@ -67,8 +67,8 @@ object BinLayout {
   }
 }
 
-/** Broadcastable probe side of the classify join: flat IBF or the
-  * two-level (HIBF-like) layout — Classify is layout-agnostic. `counts`
+/** Broadcastable probe side of the classify join: a [[SketchDb]] or a
+  * view over several — Classify is layout-agnostic. `counts`
   * passed to probe are PER TARGET (split technical bins already summed,
   * GanonClassify.cpp:517-527 semantics; clamping at n_hashes happens in
   * the classifier). */
@@ -81,92 +81,12 @@ trait ProbeDb extends Serializable {
     * 1 - (1 - fp_bin)^n_bins_target over the average per-bin load). */
   def binFpr(t: Int): Double
   /** Count hash membership per TARGET into `counts` (len >= targets.length).
-    * `cutoff` is the per-read threshold known BEFORE probing — two-level
-    * layouts use it to prune whole groups (the reference's HIBF pushdown,
+    * `cutoff` is the per-read threshold known BEFORE probing — a coarse
+    * level uses it to prune whole groups (the reference's HIBF pushdown,
     * hierarchical_interleaved_bloom_filter.hpp:433-460). */
   def probe(hashes: Array[Long], counts: Array[Int], cutoff: Int): Unit
   def sizeBytes: Long
   @transient lazy val targetIndex: Map[String, Int] = targets.zipWithIndex.toMap
-}
-
-/** Shared split-bin bookkeeping for both concrete layouts. */
-private[graft] trait SplitBinDb extends ProbeDb {
-  def layout: BinLayout
-
-  protected def isFlat: Boolean = layout.numBins == targets.length
-
-  // per-target split-corrected fp, precomputed once per executor
-  @transient private lazy val fprByTarget: Array[Double] =
-    Array.tabulate(targets.length) { t =>
-      val s = layout.split(t)
-      val c = math.max(1L, targetHashes(t))
-      val perBin = (c + s - 1) / s
-      val single = Bloom.falsePositiveRate(plan.bitsPerBin, plan.numHashes, perBin)
-      Bloom.splitCorrectedFpr(single, s)
-    }
-
-  def binFpr(t: Int): Double = fprByTarget(t)
-
-  // per-thread technical-bin scratch (the broadcast db is shared across
-  // tasks in one executor; per-row allocation would churn the TLAB)
-  @transient protected lazy val techScratch: ThreadLocal[Array[Int]] =
-    ThreadLocal.withInitial(() => new Array[Int](layout.numBins))
-
-  // grow-on-demand per-thread position matrix (n_hashes x numHashes ints)
-  // shared by both two-level probe variants
-  @transient private lazy val rowScratch: ThreadLocal[Array[Int]] =
-    ThreadLocal.withInitial(() => new Array[Int](1024 * plan.numHashes))
-  protected def rowMatrix(n: Int): Array[Int] = {
-    var m = rowScratch.get()
-    if (m.length < n * plan.numHashes) {
-      m = new Array[Int](n * plan.numHashes)
-      rowScratch.set(m)
-    }
-    m
-  }
-
-  /** Fold technical-bin counts into per-target counts (+=). */
-  protected def foldToTargets(tech: Array[Int], counts: Array[Int]): Unit = {
-    var t = 0
-    while (t < targets.length) {
-      val b0 = layout.base(t)
-      val n = layout.split(t)
-      var acc = 0
-      var s = 0
-      while (s < n) { acc += tech(b0 + s); s += 1 }
-      counts(t) += acc
-      t += 1
-    }
-  }
-}
-
-/**
- * The flat sketch database: one interleaved Bloom over all TECHNICAL bins
- * plus the target->bins layout (role of ganon's serialized (IBFConfig,
- * hashes_count, bin_map, ibf) — src/ganon-build/GanonBuild.cpp:251-288).
- */
-final class SketchDb(
-    val ibf: InterleavedBloom,
-    val targets: Array[String],       // target index -> name (sorted)
-    val targetHashes: Array[Long],    // target index -> estimated distinct hashes
-    val layout: BinLayout,
-    val params: IbfParams,
-    val plan: IbfPlan) extends SplitBinDb {
-
-  def probe(hashes: Array[Long], counts: Array[Int], cutoff: Int): Unit =
-    if (isFlat) ibf.bulkCount(hashes, counts)
-    else {
-      val tech = techScratch.get()
-      java.util.Arrays.fill(tech, 0)
-      ibf.bulkCount(hashes, tech)
-      foldToTargets(tech, counts)
-    }
-
-  /** Union-membership FPR probe for target `t` (any of its split bins). */
-  def containsTarget(hash: Long, t: Int): Boolean =
-    ibf.containsInBins(hash, layout.base(t), layout.base(t) + layout.split(t))
-
-  def sizeBytes: Long = ibf.sizeBytes
 }
 
 /** Minimal serializable Hadoop-configuration carrier for executor-side
@@ -187,19 +107,29 @@ final class SerializableHadoopConf(
 }
 
 /**
- * The two-level (HIBF-like) layout: a coarse IBF over 64-bin GROUPS prunes
- * which fine shards to probe. The coarse bin of group g contains the union
- * of the hashes routed into the group, so coarseCount(g) >= count(any
- * member bin) — a group below the read's threshold can be skipped with
- * zero false negatives. When a split target spans groups its total count
- * is divided between coarse bins, so full-cutoff pruning is only safe for
- * span-free layouts; otherwise we fall back to presence pruning
- * (skip only zero-hit groups), which is always lossless.
+ * The sketch database: the target->technical-bins layout over one
+ * interleaved SHARD per 64-bin group (role of ganon's serialized
+ * (IBFConfig, hashes_count, bin_map, ibf) — GanonBuild.cpp:251-288),
+ * plus an OPTIONAL coarse IBF over the groups (the HIBF-like top level,
+ * hierarchical_interleaved_bloom_filter.hpp:87-171). `build` leaves the
+ * coarse out; `buildTwoLevel`, `buildToStore` and `compactStored` build it.
  *
- * Where shard g comes from is the only thing that varies:
- *  - RESIDENT (`buildTwoLevel`): `shards` holds every group's filter; it
- *    ships with the broadcast and pre-fills the shard cache, so no probe
- *    ever touches a store.
+ * PROBE. Without a coarse level every group survives; with one, a group
+ * survives when its coarse count reaches the read's cutoff. The coarse
+ * bin of group g holds the union of the hashes routed into the group, so
+ * coarseCount(g) >= count(any member bin) and skipping a group below the
+ * cutoff loses nothing. When a split target spans groups its total count
+ * is divided between coarse bins, so full-cutoff pruning is only safe for
+ * span-free layouts; otherwise only zero-hit groups are skipped. The
+ * kernel follows the survivor count: ONE survivor (every read of a
+ * one-group db) takes the shard's one-word lazy kernel
+ * (`InterleavedBloom.bulkCount1`); more derive every hash's probe rows
+ * once and sweep the survivors group-major (`countAtRowsMatrix1`).
+ *
+ * Where shard g comes from is the only other thing that varies:
+ *  - RESIDENT (`build`, `buildTwoLevel`, `update`, a legacy flat store):
+ *    `shards` holds every group's filter and ships with the broadcast, so
+ *    no probe ever touches a store.
  *  - STORE-BACKED (`buildToStore`, `updateStored`, `compactStored`,
  *    `SketchStore.loadAny`/`loadTwoLevelLazy`): `shards` is null; only the
  *    coarse filter and the bin metadata ship with the broadcast, and each
@@ -230,10 +160,10 @@ final class SerializableHadoopConf(
  * executor would drop every `spark.hadoop.*` setting (object-store
  * credentials, HA nameservice mappings) and break the first shard fetch.
  */
-final class TwoLevelDb private (
-    val coarse: InterleavedBloom,          // bins = groups
-    val targets: Array[String],
-    val targetHashes: Array[Long],
+final class SketchDb private (
+    val coarse: InterleavedBloom,          // bins = groups; null: no coarse
+    val targets: Array[String],            // target index -> name
+    val targetHashes: Array[Long],         // target index -> distinct hashes
     val layout: BinLayout,
     val params: IbfParams,
     val plan: IbfPlan,
@@ -242,27 +172,140 @@ final class TwoLevelDb private (
     val generation: Int,
     val shardGens: Array[Int],
     hadoopConf: SerializableHadoopConf,
-    maxCacheBytes: Long) extends SplitBinDb {
+    maxCacheBytes: Long) extends ProbeDb {
 
   private val groupCutoffSafe = !layout.anyGroupSpanning
+
+  // split-free and hole-free: technical bin b IS target b, so a probe
+  // counts straight into the per-target counts
+  private val isFlat: Boolean = layout.numBins == targets.length
 
   /** Every shard ships with this db (nothing is read from a store). */
   def isResident: Boolean = shards != null
 
-  /** Resident shard g (a resident db only; for saving). */
-  private[graft] def residentShard(g: Int): InterleavedBloom = shards(g)
-
-  @transient private lazy val shardCache = {
-    val c = new java.util.concurrent.atomic.AtomicReferenceArray[
-      InterleavedBloom](layout.numGroups)
-    if (shards != null) {
-      var g = 0
-      while (g < shards.length) {
-        c.set(g, shards(g)); cachedBytes.addAndGet(shards(g).sizeBytes); g += 1
-      }
+  // per-target split-corrected fp, precomputed once per executor
+  @transient private lazy val fprByTarget: Array[Double] =
+    Array.tabulate(targets.length) { t =>
+      val s = layout.split(t)
+      val c = math.max(1L, targetHashes(t))
+      val perBin = (c + s - 1) / s
+      val single = Bloom.falsePositiveRate(plan.bitsPerBin, plan.numHashes, perBin)
+      Bloom.splitCorrectedFpr(single, s)
     }
+
+  def binFpr(t: Int): Double = fprByTarget(t)
+
+  // per-thread scratch (the broadcast db is shared across tasks in one
+  // executor; per-read allocation would churn the TLAB): technical-bin
+  // counts, coarse group counts, and a grow-on-demand position matrix
+  // (n_hashes x numHashes ints)
+  @transient private lazy val techScratch: ThreadLocal[Array[Int]] =
+    ThreadLocal.withInitial(() => new Array[Int](layout.numBins))
+  @transient private lazy val gcScratch: ThreadLocal[Array[Int]] =
+    ThreadLocal.withInitial(() => new Array[Int](layout.numGroups))
+  @transient private lazy val rowScratch: ThreadLocal[Array[Int]] =
+    ThreadLocal.withInitial(() => new Array[Int](1024 * plan.numHashes))
+  private def rowMatrix(n: Int): Array[Int] = {
+    var m = rowScratch.get()
+    if (m.length < n * plan.numHashes) {
+      m = new Array[Int](n * plan.numHashes)
+      rowScratch.set(m)
+    }
+    m
+  }
+
+  /** Fold technical-bin counts into per-target counts (+=). */
+  private def foldToTargets(tech: Array[Int], counts: Array[Int]): Unit = {
+    var t = 0
+    while (t < targets.length) {
+      val b0 = layout.base(t)
+      val n = layout.split(t)
+      var acc = 0
+      var s = 0
+      while (s < n) { acc += tech(b0 + s); s += 1 }
+      counts(t) += acc
+      t += 1
+    }
+  }
+
+  def probe(hashes: Array[Long], counts: Array[Int], cutoff: Int): Unit = {
+    val gc = if (coarse == null) null else coarseCounts(hashes)
+    val effCutoff = if (groupCutoffSafe) cutoff else 1
+    var survivors = 0
+    var last = -1
+    var g = 0
+    while (g < layout.numGroups) {
+      if (gc == null || gc(g) >= effCutoff) { survivors += 1; last = g }
+      g += 1
+    }
+    if (survivors == 0) return
+    val tech = if (isFlat) counts else clearedTech()
+    // the first probe of a store-backed group fetches its shard. The
+    // sweep and the coarse count stay out of line: inlined into this
+    // method they cost the one-survivor path ~8% per hash (in-process
+    // microbenchmark, one group of corpus_selfhit's size, 4-CPU box)
+    if (survivors == 1) shard(last).bulkCount1(hashes, tech, last * 64)
+    else sweep(hashes, gc, effCutoff, tech)
+    if (tech ne counts) foldToTargets(tech, counts)
+  }
+
+  private def coarseCounts(hashes: Array[Long]): Array[Int] = {
+    val c = gcScratch.get()
+    java.util.Arrays.fill(c, 0)
+    coarse.bulkCount(hashes, c)
     c
   }
+
+  private def clearedTech(): Array[Int] = {
+    val t = techScratch.get()
+    java.util.Arrays.fill(t, 0)
+    t
+  }
+
+  /** Every shard shares (bitsPerBin, numHashes): derive each hash's probe
+    * rows ONCE into a matrix, then sweep the surviving shards GROUP-MAJOR
+    * (one shard's ~bitsPerBin/8-byte word array stays cache-resident for
+    * the whole hash sweep; a hash-major walk across shards thrashes). */
+  private def sweep(hashes: Array[Long], gc: Array[Int], effCutoff: Int,
+      tech: Array[Int]): Unit = {
+    val rows = rowMatrix(hashes.length)
+    InterleavedBloom.probeRowsAll(hashes, plan.bitsPerBin, plan.numHashes,
+      rows)
+    var g = 0
+    while (g < layout.numGroups) {
+      if (gc == null || gc(g) >= effCutoff)
+        shard(g).countAtRowsMatrix1(rows, hashes.length, tech, g * 64)
+      g += 1
+    }
+  }
+
+  /** Union-membership FPR probe for target `t` (any of its split bins,
+    * across every group they span). */
+  def containsTarget(hash: Long, t: Int): Boolean = {
+    val lo = layout.base(t)
+    val hi = lo + layout.split(t)
+    (lo / 64 to (hi - 1) / 64).exists { g =>
+      shard(g).containsInBins(hash, math.max(lo, g * 64) - g * 64,
+        math.min(hi, g * 64 + 64) - g * 64)
+    }
+  }
+
+  /** The whole fine level as ONE flat filter over every technical bin (a
+    * store-backed db fetches every shard). */
+  def ibf: InterleavedBloom =
+    InterleavedBloom.stitch(Array.tabulate(layout.numGroups)(shard),
+      layout.numBins)
+
+  /** Broadcast footprint: the coarse filter plus the resident shards (a
+    * store-backed db ships the coarse only; shards are fetched per
+    * executor on demand). */
+  def sizeBytes: Long =
+    (if (coarse == null) 0L else coarse.sizeBytes) +
+      (if (shards == null) 0L else shards.map(_.sizeBytes).sum)
+
+  @transient private lazy val shardCache =
+    new java.util.concurrent.atomic.AtomicReferenceArray[InterleavedBloom](
+      layout.numGroups)
   // LRU bookkeeping: a coarse monotonic clock stamped per access (lazySet —
   // no fence on the probe hot path) + resident-byte accounting. Eviction
   // only runs on load (rare), where a synchronized scan over numGroups is
@@ -275,14 +318,17 @@ final class TwoLevelDb private (
     new java.util.concurrent.atomic.AtomicLong()
 
   // recency stamps exist only to pick eviction victims; with an unbounded
-  // cache (the default, and always for a resident db) nothing ever evicts,
-  // so skip the per-(read, group) accessClock.incrementAndGet on the probe
-  // hot path entirely — a full RMW on one shared cache line across all
-  // probe threads is real money at millions of probes/second on a wide
-  // executor
+  // cache (the default) nothing ever evicts, so skip the per-(read, group)
+  // accessClock.incrementAndGet on the probe hot path entirely — a full
+  // RMW on one shared cache line across all probe threads is real money
+  // at millions of probes/second on a wide executor
   private val lruBounded = maxCacheBytes != Long.MaxValue
 
-  private def shard(g: Int): InterleavedBloom = {
+  /** Group g's shard: resident, cached, or fetched from the store. */
+  private[graft] def shard(g: Int): InterleavedBloom =
+    if (shards != null) shards(g) else cachedShard(g)
+
+  private def cachedShard(g: Int): InterleavedBloom = {
     var s = shardCache.get(g)
     if (s == null) {
       s = readShard(g)
@@ -326,70 +372,27 @@ final class TwoLevelDb private (
 
   private def readShard(g: Int): InterleavedBloom =
     graft.io.SketchStore.readShardBlob(hadoopConf.value, storeDir,
-      shardGens, g).getOrElse(TwoLevelDb.emptyShard(layout, plan, g))
+      shardGens, g).getOrElse(SketchDb.emptyShard(layout, plan, g))
 
-  // per-thread coarse count scratch — the probe runs once per READ,
-  // so per-row allocation here is pure GC churn (same discipline as
-  // techScratch)
-  @transient private lazy val gcScratch: ThreadLocal[Array[Int]] =
-    ThreadLocal.withInitial(() => new Array[Int](layout.numGroups))
+  /** How many shards this JVM holds (observability/tests): every group of
+    * a resident db, the fetched ones of a store-backed db. */
+  def loadedShards: Int =
+    if (shards != null) shards.length
+    else (0 until layout.numGroups).count(shardCache.get(_) != null)
 
-  def probe(hashes: Array[Long], counts: Array[Int], cutoff: Int): Unit = {
-    val gc = gcScratch.get()
-    java.util.Arrays.fill(gc, 0)
-    coarse.bulkCount(hashes, gc)
-    val effCutoff = if (groupCutoffSafe) cutoff else 1
-    val tech = techScratch.get()
-    java.util.Arrays.fill(tech, 0)
-    // every shard shares (bitsPerBin, numHashes): derive each hash's probe
-    // rows ONCE into a matrix, then sweep the surviving shards GROUP-MAJOR
-    // (one shard's ~bitsPerBin/8-byte word array stays cache-resident for
-    // the whole hash sweep; a hash-major walk across shards thrashes); the
-    // first probe of a store-backed group fetches its shard
-    var any = false
-    var g = 0
-    while (g < layout.numGroups && !any) { any = gc(g) >= effCutoff; g += 1 }
-    if (any) {
-      val rows = rowMatrix(hashes.length)
-      InterleavedBloom.probeRowsAll(hashes, plan.bitsPerBin, plan.numHashes,
-        rows)
-      g = 0
-      while (g < layout.numGroups) {
-        if (gc(g) >= effCutoff)
-          shard(g).countAtRowsMatrix1(rows, hashes.length, tech, g * 64)
-        g += 1
-      }
-    }
-    foldToTargets(tech, counts)
-  }
-
-  /** Broadcast footprint: the coarse filter plus the resident shards (a
-    * store-backed db ships the coarse only; shards are fetched per
-    * executor on demand). */
-  def sizeBytes: Long =
-    coarse.sizeBytes + (if (shards == null) 0L else shards.map(_.sizeBytes).sum)
-
-  /** How many shards this JVM has materialized (observability/tests). */
-  def loadedShards: Int = {
-    var n = 0; var g = 0
-    while (g < layout.numGroups) {
-      if (shardCache.get(g) != null) n += 1
-      g += 1
-    }
-    n
-  }
-
-  /** Resident shard-cache bytes in this JVM (bounded by maxCacheBytes);
-    * touching `shardCache` first counts a resident db's pre-filled shards. */
-  def residentBytes: Long = { shardCache; cachedBytes.get() }
+  /** Shard bytes this JVM holds (a store-backed db's are bounded by
+    * maxCacheBytes). */
+  def residentBytes: Long =
+    if (shards != null) shards.map(_.sizeBytes).sum else cachedBytes.get()
 }
 
-object TwoLevelDb {
-  /** A db whose every shard is in memory (no store behind it). */
+object SketchDb {
+  /** A db whose every shard is in memory (no store behind it); `coarse`
+    * may be null. */
   def resident(coarse: InterleavedBloom, shards: Array[InterleavedBloom],
       targets: Array[String], targetHashes: Array[Long], layout: BinLayout,
-      params: IbfParams, plan: IbfPlan): TwoLevelDb =
-    new TwoLevelDb(coarse, targets, targetHashes, layout, params, plan,
+      params: IbfParams, plan: IbfPlan): SketchDb =
+    new SketchDb(coarse, targets, targetHashes, layout, params, plan,
       shards, null, 0, Array.empty[Int], null, Long.MaxValue)
 
   /** A handle on generation `generation` of the store at `storeDir`;
@@ -402,8 +405,8 @@ object TwoLevelDb {
   def stored(spark: SparkSession, coarse: InterleavedBloom,
       targets: Array[String], targetHashes: Array[Long], layout: BinLayout,
       params: IbfParams, plan: IbfPlan, storeDir: String, generation: Int,
-      shardGens: Array[Int]): TwoLevelDb =
-    new TwoLevelDb(coarse, targets, targetHashes, layout, params, plan,
+      shardGens: Array[Int]): SketchDb =
+    new SketchDb(coarse, targets, targetHashes, layout, params, plan,
       null, storeDir, generation, shardGens,
       new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
       spark.conf.getOption("spark.graft.shard.cache.bytes")
@@ -428,9 +431,9 @@ object TwoLevelDb {
  *   driver  Sizing.optimalHashes: capacity simulation + split-bin layout
  *   pass 2  route hashes to 64-bin groups map-side, groupBy(grp) building
  *           one interleaved SHARD per group on executors
- *   driver  stitch the G shard columns into the broadcastable IBF
- *           (a strided memcopy of the final filter — no OR-merging, no
- *           transposing, no per-partition partials on the driver)
+ *   driver  keep the G shards as the db's groups (a header re-window
+ *           per shard — no OR-merging, no transposing, no per-partition
+ *           partials on the driver)
  *
  * Shuffle discipline: per-row-deduped hash subsets shuffle exactly once,
  * keyed by group. When numGroups >= parallelism the aggregation is
@@ -482,52 +485,51 @@ object SketchBuild {
       layout)
   }
 
+  /** One resident db: a shard per 64-bin group, no coarse level (every
+    * group survives every probe). */
   def build(spark: SparkSession, df: DataFrame, targetCol: String,
       contentCol: String, p: IbfParams = IbfParams(),
-      checkpointDir: Option[String] = None): SketchDb = {
-    val (cards, thePlan, layout, binsDf) =
-      planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
-        twoLevel = false)
-    val ibf = InterleavedBloom.empty(layout.numBins, thePlan.bitsPerBin,
-      thePlan.numHashes)
-    binsDf.collect().foreach { r =>
-      orGroup(ibf, r.getInt(0),
-        InterleavedBloom.fromBytes(r.getAs[Array[Byte]]("shard")))
-    }
-    new SketchDb(ibf, cards.map(_._1).toArray, cards.map(_._2).toArray,
-      layout, p, thePlan)
-  }
+      checkpointDir: Option[String] = None): SketchDb =
+    buildResident(spark, df, targetCol, contentCol, p, checkpointDir,
+      twoLevel = false)
 
   /**
    * Two-level build: the SAME single pass also aggregates one coarse
    * union-Bloom per 64-bin group (no third scan over the content, no
-   * bin re-extraction); shards are kept as independent per-group filters,
-   * all resident.
+   * bin re-extraction), so probes prune groups below the read's cutoff.
    */
   def buildTwoLevel(spark: SparkSession, df: DataFrame, targetCol: String,
       contentCol: String, p: IbfParams = IbfParams(),
-      checkpointDir: Option[String] = None): TwoLevelDb = {
+      checkpointDir: Option[String] = None): SketchDb =
+    buildResident(spark, df, targetCol, contentCol, p, checkpointDir,
+      twoLevel = true)
+
+  private def buildResident(spark: SparkSession, df: DataFrame,
+      targetCol: String, contentCol: String, p: IbfParams,
+      checkpointDir: Option[String], twoLevel: Boolean): SketchDb = {
     val (cards, thePlan, layout, binsDf) =
       planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
-        twoLevel = true)
+        twoLevel)
     val nGroups = layout.numGroups
     val shards = new Array[InterleavedBloom](nGroups)
-    val coarseBins = binsDf.collect().toSeq.map { r =>
+    val coarseBins = binsDf.collect().toSeq.flatMap { r =>
       // re-window the 64-wide shard to the group's real bin count
       val g = r.getInt(0)
       shards(g) = windowed(
         InterleavedBloom.fromBytes(r.getAs[Array[Byte]]("shard")), g,
         layout.numBins)
-      (g, Bloom.fromBytes(r.getAs[Array[Byte]]("coarse")))
+      if (twoLevel) Some((g, Bloom.fromBytes(r.getAs[Array[Byte]]("coarse"))))
+      else None
     }
     // groups whose targets routed ZERO hashes (all content empty/filtered)
     // produce no shard row: materialize empty shards so probe/sizeBytes
-    // see zero-count bins, matching the flat build's tolerance
+    // see zero-count bins
     shards.indices.foreach { g =>
-      if (shards(g) == null) shards(g) = TwoLevelDb.emptyShard(layout, thePlan, g)
+      if (shards(g) == null) shards(g) = SketchDb.emptyShard(layout, thePlan, g)
     }
-    TwoLevelDb.resident(coarseOf(coarseBins, nGroups), shards,
-      cards.map(_._1).toArray, cards.map(_._2).toArray, layout, p, thePlan)
+    SketchDb.resident(if (twoLevel) coarseOf(coarseBins, nGroups) else null,
+      shards, cards.map(_._1).toArray, cards.map(_._2).toArray, layout, p,
+      thePlan)
   }
 
   /** The shared two-pass pipeline with the pass-2 result left DISTRIBUTED:
@@ -549,17 +551,11 @@ object SketchBuild {
     val cards = cardsDf.as[(String, Long)].collect().sortBy(_._1).toSeq
     val (thePlan, layout) = plan(cards, p)
 
-    // coarse at a LOOSER fp than the fine bins (see coarseSizing): at 0.05
-    // the resident top level costs ~6.2 bits/element vs 14.4 at 0.001 —
-    // the broadcast shrinks ~2.3x for free
-    val (coarseBits, coarseH) =
-      if (twoLevel) coarseSizing(cards, layout, p.maxFp) else (64L, 1)
-
     // ---- pass 2 (or resume): route -> one shard per 64-bin group ----
     val binsDf = checkpointed(spark, checkpointDir, "pass2_group_shards",
         tag) {
       shardPass(spark, hashed, thePlan, entriesOf(cards, layout),
-        coarseBits, coarseH, twoLevel)
+        if (twoLevel) Some(coarseSizing(cards, layout, p.maxFp)) else None)
     }
     (cards, thePlan, layout, binsDf)
   }
@@ -569,10 +565,12 @@ object SketchBuild {
       layout: BinLayout): Seq[(String, Int, Int)] =
     cards.indices.map(i => (cards(i)._1, layout.base(i), layout.split(i)))
 
-  /** Coarse-filter sizing for a two-level layout: each group's union is at
-    * most the sum of the full hash sets of the targets touching it (span
-    * superset); the coarse fp is deliberately looser than the fine one —
-    * a coarse FP only costs an extra shard probe, never a result FP. */
+  /** Coarse-filter sizing (bits, hashes) for a two-level layout: each
+    * group's union is at most the sum of the full hash sets of the targets
+    * touching it (span superset). The coarse fp is deliberately LOOSER
+    * than the fine one — a coarse FP only costs an extra shard probe,
+    * never a result FP — and at 0.05 the resident top level costs ~6.2
+    * bits/element vs 14.4 at 0.001, so the broadcast shrinks ~2.3x. */
   private def coarseSizing(cards: Seq[(String, Long)], layout: BinLayout,
       maxFp: Double): (Long, Int) = {
     val groupLoad = new Array[Long](layout.numGroups)
@@ -601,18 +599,6 @@ object SketchBuild {
     if (bins.nonEmpty) InterleavedBloom.fromBins(bins, nGroups)
     else InterleavedBloom.empty(nGroups, 64L, 1)
 
-  /** OR a (<=64-bin) group shard into word column g of a flat filter with
-    * the same bitsPerBin. */
-  private def orGroup(ibf: InterleavedBloom, g: Int,
-      shard: InterleavedBloom): Unit = {
-    val w = ibf.wordsPerRow
-    var pos = 0
-    while (pos < ibf.bitsPerBin) {
-      ibf.words(pos * w + g) |= shard.words(pos)
-      pos += 1
-    }
-  }
-
   /**
    * Build DIRECTLY into the sketch store with driver memory bounded by
    * coarse + metadata: each 64-bin group's shard blob is written to
@@ -631,7 +617,7 @@ object SketchBuild {
   def buildToStore(spark: SparkSession, df: DataFrame, targetCol: String,
       contentCol: String, dir: String, p: IbfParams = IbfParams(),
       checkpointDir: Option[String] = None,
-      commitTag: Option[(String, Long)] = None): TwoLevelDb = {
+      commitTag: Option[(String, Long)] = None): SketchDb = {
     val (cards, thePlan, layout, binsDf) =
       planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
         twoLevel = true)
@@ -646,7 +632,7 @@ object SketchBuild {
   private def storeGeneration(spark: SparkSession, dir: String, p: IbfParams,
       cards: Seq[(String, Long)], thePlan: IbfPlan, layout: BinLayout,
       binsDf: DataFrame, basedOnGen: Option[Int] = None,
-      commitTag: Option[(String, Long)] = None): TwoLevelDb = {
+      commitTag: Option[(String, Long)] = None): SketchDb = {
     import spark.implicits._
     val numBins = layout.numBins
     val nGroups = layout.numGroups
@@ -689,24 +675,25 @@ object SketchBuild {
     val coarse = coarseOf(
       coarseRows.toSeq.map { case (g, cb) => (g, Bloom.fromBytes(cb)) },
       nGroups)
-    val db = TwoLevelDb.stored(spark, coarse, cards.map(_._1).toArray,
+    val db = SketchDb.stored(spark, coarse, cards.map(_._1).toArray,
       cards.map(_._2).toArray, layout, p, thePlan, dir, gen, shardGens)
-    graft.io.SketchStore.writeManifest(spark, db, "two", coarse.toBytes, dir,
-      gen, shardGens, commitTag)
+    graft.io.SketchStore.writeManifest(spark, db, dir, gen, shardGens,
+      commitTag)
     db
     } // releaseClaimOnFailure
   }
 
   /** The routed shard aggregation over the (target, hs) projection for the
     * given bin-map entries (target, base, split). Returns one row per
-    * touched 64-bin group; each of `maskGroups` also gets a row, with a
-    * null shard when no hash routed to it. The shuffle is as wide as the
-    * groups the entries and `maskGroups` span: every group for a build,
-    * only the touched ones for an update. */
+    * touched 64-bin group (grp, shard), plus the group's coarse union Bloom
+    * (`coarse`) when `coarse` gives its (bits, hashes); each of
+    * `maskGroups` also gets a row, with a null shard when no hash routed
+    * to it. The shuffle is as wide as the groups the entries and
+    * `maskGroups` span: every group for a build, only the touched ones for
+    * an update. */
   private def shardPass(spark: SparkSession, hashed: DataFrame,
       thePlan: IbfPlan, entries: Seq[(String, Int, Int)],
-      coarseBits: Long = 64L, coarseH: Int = 1,
-      twoLevel: Boolean = false, maskGroups: Seq[Int] = Nil): DataFrame = {
+      coarse: Option[(Long, Int)], maskGroups: Seq[Int] = Nil): DataFrame = {
     import spark.implicits._
     val layoutDf = broadcast(
       spark.createDataFrame(entries).toDF("target", "base", "split"))
@@ -778,10 +765,9 @@ object SketchBuild {
     val aggCols =
       GraftFunctions.ibfShard(col("grp"), col("base"), col("split"),
         col("hs"), thePlan.bitsPerBin, thePlan.numHashes).as("shard") ::
-      (if (twoLevel)
-        List(GraftFunctions.bloomSketch(col("hs"), coarseBits, coarseH)
-          .as("coarse"))
-       else Nil)
+      coarse.map { case (bits, h) =>
+        GraftFunctions.bloomSketch(col("hs"), bits, h).as("coarse")
+      }.toList
     // a null shard marks a group that never received a non-empty slice
     // (all its targets' content empty/filtered): drop it, preserving the
     // untouched-group semantics (NoBlobGen sentinel / implicit empty),
@@ -811,40 +797,48 @@ object SketchBuild {
   def update(spark: SparkSession, db: SketchDb, addDf: DataFrame,
       targetCol: String, contentCol: String,
       removeTargets: Seq[String] = Nil): SketchDb = {
-    val p = db.params
     val hashedOpt =
-      Option(addDf).map(hashedProjection(_, targetCol, contentCol, p))
+      Option(addDf).map(hashedProjection(_, targetCol, contentCol, db.params))
     val a = appendLayout(spark, db, hashedOpt, removeTargets)
-    // re-stride the old filter into the (possibly wider) new bin space,
-    // zero removed targets' bin columns
-    val ibf = restride(db.ibf, a.layout.numBins)
-    a.removed.foreach { case (lo, hi) => ibf.zeroBins(lo, hi) }
-    // shard-aggregate the delta and OR the touched group columns in
-    hashedOpt.filter(_ => a.delta.nonEmpty).foreach { h =>
-      shardPass(spark, h, db.plan, a.delta)
-        .collect().foreach { r =>
-          orGroup(ibf, r.getInt(0),
-            InterleavedBloom.fromBytes(r.getAs[Array[Byte]]("shard")))
-        }
+    // aggregate the delta into the groups it touches, then apply every
+    // group on the driver; old shards are read through the db's own
+    // accessor, so a store-backed db updates too
+    val delta = hashedOpt.filter(_ => a.delta.nonEmpty)
+      .map(deltaShards(spark, db, _, a.delta, Nil).collect())
+      .getOrElse(Array.empty)
+    val deltaOf = delta.map { case (g, shard, _) => g -> shard }.toMap
+    val numBins = a.layout.numBins
+    val shards = Array.tabulate(a.layout.numGroups) { g =>
+      val old = if (g < db.layout.numGroups) Some(db.shard(g)) else None
+      val mask = a.masks.getOrElse(g, Array.empty[(Int, Int)])
+      // the mask zeroes in place: never in the old db's own shard
+      applyGroup(g, if (mask.isEmpty) old else old.map(o => new InterleavedBloom(
+          o.numBins, o.bitsPerBin, o.numHashes, o.words.clone())),
+        deltaOf.getOrElse(g, null), mask, numBins)
+        .map(windowed(_, g, numBins))
+        .getOrElse(SketchDb.emptyShard(a.layout, a.plan, g))
     }
-    new SketchDb(ibf, a.targets, a.counts, a.layout, p, a.plan)
+    SketchDb.resident(
+      coarseWith(db.coarse, a.layout.numGroups,
+        delta.map { case (g, _, c) => (g, c) }),
+      shards, a.targets, a.counts, a.layout, db.params, a.plan)
   }
 
   /** The frozen-plan layout append shared by [[update]] and
     * [[updateStored]]: `targets`/`counts`/`layout`/`plan` of the updated
     * db, the bin-map entries the delta routes through (`delta`, empty
-    * without additions) and the OLD layout's bin ranges [lo, hi) of the
-    * removed targets (`removed`, in target-name order). */
+    * without additions) and, per group, the group-local bin ranges
+    * [lo, hi) of the removed targets (`masks`). */
   private final case class Appended(targets: Array[String],
       counts: Array[Long], layout: BinLayout, plan: IbfPlan,
-      delta: Seq[(String, Int, Int)], removed: Seq[(Int, Int)])
+      delta: Seq[(String, Int, Int)], masks: Map[Int, Array[(Int, Int)]])
 
   /** Pass 1 on the delta only, then the frozen-plan append: survivors
     * keep their bases, removed targets' bins stay allocated as masked
     * holes, new targets get fresh bins after the current layout (split at
     * the planned capacity), and rows for existing targets route into
     * their existing bins. */
-  private def appendLayout(spark: SparkSession, db: SplitBinDb,
+  private def appendLayout(spark: SparkSession, db: SketchDb,
       hashedOpt: Option[DataFrame], removeTargets: Seq[String]): Appended = {
     import spark.implicits._
     val removeSet = removeTargets.toSet
@@ -885,13 +879,69 @@ object SketchBuild {
     val (maxFpReal, _) = Sizing.trueFalsePositive(
       counts.map(math.max(1L, _)), db.plan.maxHashesBin, db.plan.bitsPerBin,
       db.plan.numHashes)
+    // removal = per-group bin-column masks over the OLD layout (bases are
+    // frozen, so they hold in the new one too)
+    val masks = removeSet.toSeq.sorted.map(entryOf).flatMap { case (_, b0, n) =>
+      (b0 / 64 to (b0 + n - 1) / 64).map(g =>
+        g -> ((math.max(0, b0 - g * 64), math.min(64, b0 + n - g * 64))))
+    }.groupBy(_._1).map { case (g, rs) => g -> rs.map(_._2).toArray }
     Appended((survivors.map(db.targets) ++ newAdds.map(_._1)).toArray,
       counts, layout,
       db.plan.copy(numBins = nextBin, expectedMaxFp = maxFpReal),
-      delta, removeSet.toSeq.sorted.map(entryOf).map { case (_, b, n) =>
-        (b, b + n)
-      })
+      delta, masks)
   }
+
+  /** The delta's shard pass for an update of `db`: (grp, shard, coarse
+    * union — null without a coarse level) per touched group, plus a
+    * null-shard row per `maskGroups` group the delta misses. */
+  private def deltaShards(spark: SparkSession, db: SketchDb,
+      hashed: DataFrame, entries: Seq[(String, Int, Int)],
+      maskGroups: Seq[Int]): Dataset[(Int, Array[Byte], Array[Byte])] = {
+    import spark.implicits._
+    val coarse = Option(db.coarse).map(c => (c.bitsPerBin, c.numHashes))
+    shardPass(spark, hashed, db.plan, entries, coarse, maskGroups)
+      .select(col("grp"), col("shard"),
+        if (coarse.isDefined) col("coarse")
+        else lit(null).cast("binary").as("coarse"))
+      .as[(Int, Array[Byte], Array[Byte])]
+  }
+
+  /** The one per-group delta apply of [[update]] and [[updateStored]]:
+    * zero the group's removed bin ranges `mask` in `old` (IN PLACE — pass
+    * a private copy), OR the aggregated `delta` shard in (null: mask only)
+    * and re-window it to the group's bin count in the updated layout
+    * (`numBins`; appends extending the last old group only widen the
+    * header). None when the group has neither an old shard nor a delta. */
+  private def applyGroup(g: Int, old: Option[InterleavedBloom],
+      delta: Array[Byte], mask: Array[(Int, Int)],
+      numBins: Int): Option[InterleavedBloom] = {
+    old.foreach(o => mask.foreach { case (lo, hi) => o.zeroBins(lo, hi) })
+    if (delta == null) old
+    else {
+      val d = windowed(InterleavedBloom.fromBytes(delta), g, numBins)
+      old.foreach { o =>
+        var i = 0
+        while (i < d.words.length) { d.words(i) |= o.words(i); i += 1 }
+      }
+      Some(d)
+    }
+  }
+
+  /** `coarse` re-strided to `nGroups` groups with the delta groups' union
+    * Blooms ORed in (a Bloom cannot forget, so removals leave it an upper
+    * bound); null without a coarse level. */
+  private def coarseWith(coarse: InterleavedBloom, nGroups: Int,
+      unions: Seq[(Int, Array[Byte])]): InterleavedBloom =
+    if (coarse == null) null
+    else {
+      // the coarse's word columns, re-stitched into the wider group space
+      val out = InterleavedBloom.stitch(
+        Array.tabulate(coarse.wordsPerRow)(coarse.group), nGroups)
+      unions.foreach { case (g, cb) =>
+        if (cb != null) out.orBin(g, Bloom.fromBytes(cb))
+      }
+      out
+    }
 
   /**
    * Incremental update of a STORED two-level db — the O(delta) case the
@@ -928,9 +978,12 @@ object SketchBuild {
   def updateStored(spark: SparkSession, dir: String, addDf: DataFrame,
       targetCol: String, contentCol: String,
       removeTargets: Seq[String] = Nil,
-      commitTag: Option[(String, Long)] = None): TwoLevelDb = {
+      commitTag: Option[(String, Long)] = None): SketchDb = {
     import spark.implicits._
-    val db0 = graft.io.SketchStore.loadTwoLevelLazy(spark, dir)
+    val db0 = graft.io.SketchStore.loadAny(spark, dir)
+    require(!db0.isResident, s"$dir holds a legacy flat-layout store, " +
+      "which has no shard blobs to rewrite: load it, update() it in memory " +
+      "and save the result as a new store")
     val p = db0.params
     // pass 1 on the delta only; the same projection feeds the shard pass
     val hashedOpt =
@@ -950,37 +1003,18 @@ object SketchBuild {
     val newShardDir = graft.io.SketchStore.shardDirOf(dir, gen)
     graft.io.SketchStore.clearClaimedShardDir(hconf, newShardDir)
 
-    // removal = per-group bin-column masks over the OLD layout, applied
-    // wherever the old blob is first read (no driver-side blob I/O)
-    val maskRanges: Map[Int, Array[(Int, Int)]] = {
-      val m = scala.collection.mutable.Map
-        .empty[Int, scala.collection.mutable.ArrayBuffer[(Int, Int)]]
-      a.removed.foreach { case (b0, b1) =>
-        (b0 / 64 to (b1 - 1) / 64).foreach { g =>
-          m.getOrElseUpdate(g,
-            scala.collection.mutable.ArrayBuffer.empty) +=
-            ((math.max(0, b0 - g * 64), math.min(64, b1 - g * 64)))
-        }
-      }
-      m.map { case (k, v) => k -> v.toArray }.toMap
-    }
-    val maskB = spark.sparkContext.broadcast(maskRanges)
-
     // 1. ONE executor job rewrites every touched group: delta groups come
     //    out of the shard pass, masked groups ride along as null-shard
     //    rows. Each row's executor reads the OLD blob (pinned generation),
-    //    applies its removal mask, ORs the delta in (a null shard means
-    //    "apply the mask only") and writes the NEW generation's blob; only
-    //    the written groups and their coarse deltas return to the driver
+    //    applies the group (no driver-side blob I/O) and writes the NEW
+    //    generation's blob; only the written groups and their coarse deltas
+    //    return to the driver
     val numBinsNew = a.layout.numBins
-    val masked = maskRanges.keys.toSeq.sorted
+    val maskB = spark.sparkContext.broadcast(a.masks)
+    val masked = a.masks.keys.toSeq.sorted
     val rows: Option[Dataset[(Int, Array[Byte], Array[Byte])]] =
       hashedOpt.filter(_ => a.delta.nonEmpty) match {
-        case Some(h) => Some(shardPass(spark, h, db0.plan, a.delta,
-            db0.coarse.bitsPerBin, db0.coarse.numHashes, twoLevel = true,
-            maskGroups = masked)
-          .select(col("grp"), col("shard"), col("coarse"))
-          .as[(Int, Array[Byte], Array[Byte])])
+        case Some(h) => Some(deltaShards(spark, db0, h, a.delta, masked))
         case None if masked.nonEmpty =>
           Some(masked.map(g => (g, null: Array[Byte], null: Array[Byte])).toDS())
         case None => None
@@ -992,31 +1026,14 @@ object SketchBuild {
           if (g < oldNumGroups)
             graft.io.SketchStore.readShardBlob(conf.value, dir, gens0, g)
           else None
-        old.foreach(o => masks.get(g).foreach(_.foreach { case (lo, hi) =>
-          o.zeroBins(lo, hi)
-        }))
         // a masked sentinel group has no old blob and no delta: nothing to
         // write, so its pointer keeps the sentinel
-        val out =
-          if (blob == null) old
-          else {
-            // widening the group's bin count (appends extending the last
-            // old group) is a pure header change
-            val delta = windowed(InterleavedBloom.fromBytes(blob), g,
-              numBinsNew)
-            old.foreach { o =>
-              var i = 0
-              while (i < delta.words.length) {
-                delta.words(i) |= o.words(i); i += 1
-              }
-            }
-            Some(delta)
+        applyGroup(g, old, blob, masks.getOrElse(g, Array.empty), numBinsNew)
+          .map { sh =>
+            graft.io.SketchStore.writeShardBlob(conf.value, newShardDir, g,
+              sh.toBytes)
+            (g, if (blob == null) null else coarseBlob)
           }
-        out.map { sh =>
-          graft.io.SketchStore.writeShardBlob(conf.value, newShardDir, g,
-            sh.toBytes)
-          (g, if (blob == null) null else coarseBlob)
-        }
       }
     }.collect()).getOrElse(Array.empty)
     // the one consumer of the mask has completed — destroy the broadcast
@@ -1036,18 +1053,11 @@ object SketchBuild {
       else graft.io.SketchStore.NoBlobGen
     }
 
-    // 3. coarse: re-stride to the (possibly wider) new group count, OR in
-    //    the delta groups' unions
-    val coarseNew = restride(db0.coarse, nGroupsNew)
-    written.foreach { case (g, cb) =>
-      if (cb != null) coarseNew.orBin(g, Bloom.fromBytes(cb))
-    }
-
-    // 4. manifest + CURRENT flip LAST (the commit point)
-    val db = TwoLevelDb.stored(spark, coarseNew, a.targets, a.counts,
+    // 3. manifest + CURRENT flip LAST (the commit point)
+    val db = SketchDb.stored(spark,
+      coarseWith(db0.coarse, nGroupsNew, written.toSeq), a.targets, a.counts,
       a.layout, p, a.plan, dir, gen, gens1)
-    graft.io.SketchStore.writeManifest(spark, db, "two", coarseNew.toBytes,
-      dir, gen, gens1, commitTag)
+    graft.io.SketchStore.writeManifest(spark, db, dir, gen, gens1, commitTag)
     db
     } // releaseClaimOnFailure
   }
@@ -1092,7 +1102,7 @@ object SketchBuild {
    * from `df` would come back with empty bins.
    */
   def compactStored(spark: SparkSession, dir: String, df: DataFrame,
-      targetCol: String, contentCol: String): TwoLevelDb =
+      targetCol: String, contentCol: String): SketchDb =
     compactStoredFrom(spark, dir, df, targetCol, contentCol,
       graft.io.SketchStore.readManifest(spark, dir))
 
@@ -1101,36 +1111,17 @@ object SketchBuild {
     * generation claim) is deterministically testable. */
   private[graft] def compactStoredFrom(spark: SparkSession, dir: String,
       df: DataFrame, targetCol: String, contentCol: String,
-      m: graft.io.SketchStore.Manifest): TwoLevelDb = {
-    require(m.layoutKind == "two", s"not a two-level store: ${m.layoutKind}")
+      m: graft.io.SketchStore.Manifest): SketchDb = {
     val p = m.params
     // fresh plan from the manifest's survivor cardinalities: holes gone,
     // capacity re-fit, split counts re-derived
     val cards = m.targets.zip(m.counts).sortBy(_._1).toSeq
     val (thePlan, layout) = plan(cards, p)
-    val (coarseBits, coarseH) = coarseSizing(cards, layout, p.maxFp)
     val binsDf = shardPass(spark, hashedProjection(df, targetCol, contentCol, p),
-      thePlan, entriesOf(cards, layout), coarseBits, coarseH, twoLevel = true)
+      thePlan, entriesOf(cards, layout),
+      Some(coarseSizing(cards, layout, p.maxFp)))
     storeGeneration(spark, dir, p, cards, thePlan, layout, binsDf,
       basedOnGen = Some(m.generation))
-  }
-
-  /** Copy an interleaved filter into a wider bin space (same bitsPerBin,
-    * bin columns preserved; new columns zero). */
-  private def restride(src: InterleavedBloom, newNumBins: Int): InterleavedBloom = {
-    val out = InterleavedBloom.empty(newNumBins, src.bitsPerBin, src.numHashes)
-    val wOld = src.wordsPerRow
-    val wNew = out.wordsPerRow
-    var pos = 0L
-    while (pos < src.bitsPerBin) {
-      var g = 0
-      while (g < wOld) {
-        out.words((pos * wNew + g).toInt) = src.words((pos * wOld + g).toInt)
-        g += 1
-      }
-      pos += 1
-    }
-    out
   }
 
   /** Resume guard: a checkpoint is only valid for the PARAMS that produced

@@ -109,7 +109,8 @@ object Em {
 
     // probs the most recent EXECUTED iteration assigned with — the final
     // materialized assignment must use these, not the post-update probs
-    var probsUsed: Array[Double] = null
+    // (the initial probs when no iteration runs)
+    var probsUsed = probs
     var iter = 0
     var diff = Double.MaxValue
     while (iter < maxIter && diff > threshold) {
@@ -164,27 +165,21 @@ object Em {
     // iteration used — identical rows to materializing every iteration —
     // restoring string targets on the way out (one lookup per ASSIGNED
     // read, not per candidate)
-    var assigned: DataFrame = null
-    if (iter > 0) {
-      val liveB = spark.sparkContext.broadcast(probsUsed)
-      val picks = compactRdd.flatMap { case (id, ts, cs, os) =>
-        val i = argmax(ts, cs, os, liveB.value)
-        if (i < 0) None else Some(Row(id, namesB.value(ts(i)), cs(i)))
-      }
-      val schema = StructType(Seq(matches.schema("read_id"),
-        StructField("target", StringType), StructField("kmer_count", LongType)))
-      // sever the broadcast dependencies before destroying them (otherwise
-      // one prob-array broadcast leaks per reassign() call on a long-lived
-      // session): eager localCheckpoint materializes the assignment, so no
-      // recompute can ever dereference a destroyed value; `uniques` never
-      // referenced them
-      assigned = spark.createDataFrame(picks, schema).localCheckpoint(true)
-      liveB.destroy()
+    val liveB = spark.sparkContext.broadcast(probsUsed)
+    val picks = compactRdd.flatMap { case (id, ts, cs, os) =>
+      val i = argmax(ts, cs, os, liveB.value)
+      if (i < 0) None else Some(Row(id, namesB.value(ts(i)), cs(i)))
     }
-    val result = uniques.unionByName(
-      if (assigned == null)
-        uniques.limit(0)
-      else assigned)
+    val schema = StructType(Seq(matches.schema("read_id"),
+      StructField("target", StringType), StructField("kmer_count", LongType)))
+    // sever the broadcast dependencies before destroying them (otherwise
+    // one prob-array broadcast leaks per reassign() call on a long-lived
+    // session): eager localCheckpoint materializes the assignment, so no
+    // recompute can ever dereference a destroyed value; `uniques` never
+    // referenced them
+    val assigned = spark.createDataFrame(picks, schema).localCheckpoint(true)
+    liveB.destroy()
+    val result = uniques.unionByName(assigned)
     compactRdd.unpersist(); matches.unpersist()
     tIdxB.destroy(); namesB.destroy()
     result

@@ -104,27 +104,14 @@ object Hashing {
     if (n < k || k <= 0) return Array.emptyLongArray
     val nKmers = n - k + 1
     val kmersPerWin = w - k + 1
+    // no windowing: all distinct k-mer hashes
+    if (kmersPerWin <= 1 || nKmers == 1)
+      return sortedDistinct(kmerHashesBytes(content, k, seed))
 
     // P^(k-1) mod 2^64
     var pk1 = 1L
     var j = 1
     while (j < k) { pk1 *= Prime; j += 1 }
-
-    if (kmersPerWin <= 1 || nKmers == 1) {
-      // no windowing: all distinct k-mer hashes (fused rolling loop)
-      val out = new Array[Long](nKmers)
-      var h = 0L
-      var i = 0
-      while (i < k) { h = h * Prime + (content(i) & 0xFF); i += 1 }
-      out(0) = mix64(h ^ seed)
-      i = k
-      while (i < n) {
-        h = (h - (content(i - k) & 0xFF) * pk1) * Prime + (content(i) & 0xFF)
-        out(i - k + 1) = mix64(h ^ seed)
-        i += 1
-      }
-      return sortedDistinct(out)
-    }
 
     // sliding minimum via recompute-on-expiry: track the current window
     // minimum (newest wins ties); only when it falls out of the window,

@@ -50,7 +50,7 @@ final class InterleavedBloom(
    * popcount-accumulate set bins. `counts` must have length >= numBins.
    */
   def bulkCount(hashes: Array[Long], counts: Array[Int]): Unit = {
-    if (wordsPerRow == 1) { bulkCount1(hashes, counts); return }
+    if (wordsPerRow == 1) { bulkCount1(hashes, counts, 0); return }
     val tmp = new Array[Long](wordsPerRow)
     var hi = 0
     while (hi < hashes.length) {
@@ -118,8 +118,9 @@ final class InterleavedBloom(
 
   /** <=64-bin fast path: the row is ONE word — accumulate in a register
     * and stop probing a hash as soon as its AND hits zero (most hashes
-    * miss most bins, so the early exit usually fires on probe 2-3). */
-  private def bulkCount1(hashes: Array[Long], counts: Array[Int]): Unit = {
+    * miss most bins, so the early exit usually fires on probe 2-3). Set
+    * bins accumulate into counts at `off`. */
+  def bulkCount1(hashes: Array[Long], counts: Array[Int], off: Int): Unit = {
     var hi = 0
     while (hi < hashes.length) {
       val hash = hashes(hi)
@@ -133,7 +134,7 @@ final class InterleavedBloom(
       }
       while (acc != 0L) {
         val bin = java.lang.Long.numberOfTrailingZeros(acc)
-        if (bin < numBins) counts(bin) += 1
+        if (bin < numBins) counts(off + bin) += 1
         acc &= acc - 1
       }
       hi += 1
@@ -170,6 +171,19 @@ final class InterleavedBloom(
       w += 1
     }
     acc != 0L
+  }
+
+  /** Bins [64g, 64g+64) as their own (<=64-bin) filter: word column g of
+    * every row — the inverse of [[InterleavedBloom.stitch]]. */
+  def group(g: Int): InterleavedBloom = {
+    val out = InterleavedBloom.empty(math.min(64, numBins - g * 64),
+      bitsPerBin, numHashes)
+    var pos = 0
+    while (pos < bitsPerBin) {
+      out.words(pos) = words(pos * wordsPerRow + g)
+      pos += 1
+    }
+    out
   }
 
   /** Zero the bin columns [binLo, binHi) in place — the removal primitive
@@ -243,6 +257,23 @@ object InterleavedBloom {
       }
       hi += 1
     }
+  }
+
+  /** One flat filter over `numBins` bins from its 64-bin group filters
+    * (all sharing bitsPerBin/numHashes): group g becomes word column g. */
+  def stitch(groups: Array[InterleavedBloom], numBins: Int): InterleavedBloom = {
+    val out = empty(numBins, groups(0).bitsPerBin, groups(0).numHashes)
+    val w = out.wordsPerRow
+    var g = 0
+    while (g < groups.length) {
+      var pos = 0
+      while (pos < out.bitsPerBin) {
+        out.words(pos * w + g) = groups(g).words(pos)
+        pos += 1
+      }
+      g += 1
+    }
+    out
   }
 
   def empty(numBins: Int, bitsPerBin: Long, numHashes: Int): InterleavedBloom = {

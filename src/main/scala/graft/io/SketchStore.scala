@@ -4,8 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
-import graft.build.{BinLayout, IbfParams, IbfPlan, ProbeDb, SketchDb, SplitBinDb,
-  TwoLevelDb}
+import graft.build.{BinLayout, IbfParams, IbfPlan, SketchDb}
 import graft.core.sketch.InterleavedBloom
 
 /**
@@ -23,14 +22,15 @@ import graft.core.sketch.InterleavedBloom
  *                            being produced (create-without-overwrite)
  *   gen_<N>/bins.parquet     (target, n_hashes, base, split) — the bin map
  *   gen_<N>/manifest.parquet (version, generation, layout, params, plan,
- *                            shard_gens, ibf=serialized coarse)
+ *                            shard_gens, ibf=serialized coarse — empty
+ *                            for a db without a coarse level)
  *   shards_v<N>/grp_<g>.bin  raw blobs WRITTEN BY generation N
  *
  * Snapshot isolation: `shard_gens(g)` names the generation whose
  * `shards_v<gen>/grp_<g>.bin` is group g's current blob. A writer never
  * mutates an existing blob — updates write only into `shards_v<N+1>/` and
  * flip CURRENT last — so a reader (or a long-lived store-backed
- * [[TwoLevelDb]] handle) that loaded generation N keeps reading exactly
+ * [[SketchDb]] handle) that loaded generation N keeps reading exactly
  * generation N's bits for its whole lifetime, even across concurrent
  * updates. A crash mid-update leaves CURRENT at N: the store stays
  * loadable and correct, and the partial `shards_v<N+1>` garbage is
@@ -188,15 +188,13 @@ object SketchStore {
   /** Write bins+manifest for `gen` (into the fresh gen_<gen>/ dir — never
     * an overwrite of live metadata), then COMMIT by flipping CURRENT and
     * release the writer lock. `shardGens(g)` = generation owning group g's
-    * blob (empty for flat layouts, which keep the whole filter in the
-    * manifest row). `ingestTag` = (ingestId, batchId) of the STREAM batch
+    * blob. `ingestTag` = (ingestId, batchId) of the STREAM batch
     * this generation applies, written as a marker INSIDE the gen dir
     * before the CURRENT flip — so the ingest commit record and the data
     * become visible in the same atomic step (the store is its own commit
     * log; see [[lastIngestCommit]]). */
-  private[graft] def writeManifest(spark: SparkSession, db: SplitBinDb,
-      layout: String, ibfBytes: Array[Byte], dir: String, gen: Int,
-      shardGens: Array[Int],
+  private[graft] def writeManifest(spark: SparkSession, db: SketchDb,
+      dir: String, gen: Int, shardGens: Array[Int],
       ingestTag: Option[(String, Long)] = None): Unit = {
     // control-plane write: a handful of rows — direct driver parquet I/O
     // (ParquetMeta), not a scheduled Spark job per file; the ~100 ms/job
@@ -209,11 +207,11 @@ object SketchStore {
           db.layout.split(i))
       })
     ParquetMeta.writeManifestRow(conf, new Path(s"$gd/manifest.parquet"),
-      ParquetMeta.ManifestRow(FormatVersion, gen, layout, db.params.k,
+      ParquetMeta.ManifestRow(FormatVersion, gen, "two", db.params.k,
         db.params.w, db.params.seed, db.params.maxFp, db.params.hllP,
         db.params.minContentLen, db.params.sizingMode, db.plan.bitsPerBin,
         db.plan.numHashes, db.plan.maxHashesBin, db.plan.numBins, shardGens,
-        ibfBytes))
+        if (db.coarse == null) Array.emptyByteArray else db.coarse.toBytes))
     writeIngestMarker(conf, dir, gen, ingestTag)
     commitCurrent(conf, dir, gen)
     releaseLock(conf, dir, gen)
@@ -303,20 +301,11 @@ object SketchStore {
         readMarkerEntries(conf, ingestMarkerPath(dir, gen)).toMap
     }
 
-  def save(spark: SparkSession, db: SketchDb, dir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val gen = currentGeneration(conf, dir).getOrElse(0) + 1
-    claimGeneration(conf, dir, gen)
-    releaseClaimOnFailure(conf, dir, gen) {
-      writeManifest(spark, db, "flat", db.ibf.toBytes, dir, gen,
-        Array.empty[Int])
-    }
-  }
-
   /**
-   * Write a two-level db into `dir` as a fresh, self-contained store
-   * generation: a resident db writes its shards from the driver; a
-   * store-backed db copies its PINNED snapshot — every referenced blob is
+   * Write a db into `dir` as a fresh, self-contained store generation:
+   * per-group shard blobs plus the manifest, which carries the coarse
+   * filter when the db has one. A resident db writes its shards from the
+   * driver; a store-backed db copies its PINNED snapshot — every referenced blob is
    * re-homed under the ONE new generation (per-group generation pointers
    * collapse to it). The manifest commits last — the usual CURRENT-flip
    * discipline, so a crashed save leaves `dir` unchanged-or-previous,
@@ -332,7 +321,7 @@ object SketchStore {
    * handle serves". Saving a handle onto its own store is an error: that
    * snapshot already lives there.
    */
-  def saveTwoLevel(spark: SparkSession, db: TwoLevelDb, dir: String): Unit = {
+  def save(spark: SparkSession, db: SketchDb, dir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val nG = db.layout.numGroups
     if (!db.isResident) {
@@ -355,7 +344,7 @@ object SketchStore {
       val shardGens =
         if (db.isResident) {
           (0 until nG).foreach(g =>
-            writeShardBlob(conf, sd, g, db.residentShard(g).toBytes))
+            writeShardBlob(conf, sd, g, db.shard(g).toBytes))
           Array.fill(nG)(gen)
         } else {
           copyPinnedBlobs(spark, db, sd)
@@ -363,13 +352,16 @@ object SketchStore {
           // new generation would read as "blob lost"
           db.shardGens.map(v => if (v == NoBlobGen) NoBlobGen else gen)
         }
-      writeManifest(spark, db, "two", db.coarse.toBytes, dir, gen, shardGens)
+      writeManifest(spark, db, dir, gen, shardGens)
     }
   }
 
+  def saveTwoLevel(spark: SparkSession, db: SketchDb, dir: String): Unit =
+    save(spark, db, dir)
+
   /** Stream-copy every blob a store-backed handle pins into `destShardDir`
     * (one task per group; NoBlobGen groups are legitimately blob-less). */
-  private def copyPinnedBlobs(spark: SparkSession, db: TwoLevelDb,
+  private def copyPinnedBlobs(spark: SparkSession, db: SketchDb,
       destShardDir: String): Unit = {
     val srcDir = db.storeDir
     val srcGens = db.shardGens
@@ -509,18 +501,6 @@ object SketchStore {
 
   // ---- load ----------------------------------------------------------------
 
-  /** Two-level load: the store-backed [[graft.build.TwoLevelDb]] ships
-    * only coarse + metadata; executors fetch each group's blob (through
-    * its PINNED generation pointer) on first probe and cache it.
-    * `spark.graft.shard.cache.bytes` bounds the per-executor resident
-    * shard bytes (LRU eviction); default unbounded. */
-  def loadTwoLevelLazy(spark: SparkSession, dir: String): TwoLevelDb =
-    loadAny(spark, dir) match {
-      case two: TwoLevelDb => two
-      case _ =>
-        throw new IllegalArgumentException(s"not a two-level store: $dir is flat")
-    }
-
   private[graft] final case class Manifest(
       params: IbfParams, layout: BinLayout, plan: IbfPlan,
       targets: Array[String], counts: Array[Long], ibfBytes: Array[Byte],
@@ -566,28 +546,35 @@ object SketchStore {
       m.ibf, m.layout, gen, m.shardGens)
   }
 
-  /** Load either layout, dispatching on the manifest: a flat store loads
-    * its filter eagerly (it fits by construction); a two-level store comes
-    * back store-backed — driver/broadcast footprint = coarse + metadata,
-    * shards fetched per executor on demand — so no load materializes
-    * every blob on the driver (at a 300+ GB store that is an OOM, not a
-    * load). */
-  def loadAny(spark: SparkSession, dir: String): ProbeDb = {
+  /** Load the committed generation as a store-backed [[SketchDb]]: the
+    * driver/broadcast footprint is coarse + metadata, and executors fetch
+    * each group's blob (through its PINNED generation pointer) on first
+    * probe and cache it, so no load materializes every blob on the driver
+    * (at a 300+ GB store that is an OOM, not a load).
+    * `spark.graft.shard.cache.bytes` bounds the per-executor resident
+    * shard bytes (LRU eviction); default unbounded. A store written in the
+    * legacy `flat` layout (the whole filter in the manifest row) loads
+    * resident, its filter split into group shards. */
+  def loadAny(spark: SparkSession, dir: String): SketchDb = {
     val m = readManifest(spark, dir)
     m.layoutKind match {
-      case "flat" =>
-        new SketchDb(InterleavedBloom.fromBytes(m.ibfBytes), m.targets,
-          m.counts, m.layout, m.params, m.plan)
       case "two" =>
-        TwoLevelDb.stored(spark, InterleavedBloom.fromBytes(m.ibfBytes),
+        SketchDb.stored(spark,
+          if (m.ibfBytes.isEmpty) null else InterleavedBloom.fromBytes(m.ibfBytes),
           m.targets, m.counts, m.layout, m.params, m.plan, dir, m.generation,
           m.shardGens)
+      case "flat" =>
+        val ibf = InterleavedBloom.fromBytes(m.ibfBytes)
+        SketchDb.resident(null, Array.tabulate(m.layout.numGroups)(ibf.group),
+          m.targets, m.counts, m.layout, m.params, m.plan)
       case other => throw new IllegalArgumentException(s"unknown layout $other")
     }
   }
 
-  def load(spark: SparkSession, dir: String): SketchDb =
-    loadAny(spark, dir).asInstanceOf[SketchDb]
+  def load(spark: SparkSession, dir: String): SketchDb = loadAny(spark, dir)
+
+  def loadTwoLevelLazy(spark: SparkSession, dir: String): SketchDb =
+    loadAny(spark, dir)
 
   // ---- pins ------------------------------------------------------------------
 
@@ -598,7 +585,7 @@ object SketchStore {
    * pinned generation fully readable (its metadata and every blob it
    * references) no matter how far CURRENT advances — the cooperative
    * alternative to sizing `keepGens` for the slowest reader. A long-lived
-   * store-backed [[graft.build.TwoLevelDb]] handle pins its own
+   * store-backed [[graft.build.SketchDb]] handle pins its own
    * `generation` when it will outlive the gc grace window, and MUST
    * [[unpin]] when done (a leaked pin blocks reclamation of that one
    * generation until an operator deletes `pins/pin_<id>`; gc reports what
@@ -654,7 +641,7 @@ object SketchStore {
 
   /** Reclaim superseded generations, keeping the last `keepGens` SNAPSHOTS
     * fully readable (their gen_<v> metadata and every blob any of them
-    * references — a pinned [[TwoLevelDb]] handle loaded up to keepGens-1
+    * references — a pinned [[SketchDb]] handle loaded up to keepGens-1
     * generations ago keeps working). Everything older, and every blob no
     * kept snapshot references, is deleted — EXCEPT generations registered
     * in the pin directory ([[pin]]), which stay readable regardless of

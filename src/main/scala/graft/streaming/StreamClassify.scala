@@ -232,7 +232,7 @@ object StreamClassify {
           // the one competitor is our own termination listener (stop()
           // mid-batch), handled by the ownership re-check at swap time
           val db = graft.io.SketchStore.loadAny(spark, storeDir)
-          val fresh = spark.sparkContext.broadcast(db)
+          val fresh = spark.sparkContext.broadcast[ProbeDb](db)
           val old = state.synchronized {
             if (state.activeRun != runId) {
               // terminated during the load: the batch is dead anyway —

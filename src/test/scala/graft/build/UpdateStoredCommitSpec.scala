@@ -61,7 +61,7 @@ class UpdateStoredCommitSpec extends AnyFunSuite {
       .mkString)).toDF("target", "path", "content")
   }
 
-  private def groupsOf(db: TwoLevelDb, t: String): Set[Int] = {
+  private def groupsOf(db: SketchDb, t: String): Set[Int] = {
     val i = db.targetIndex(t)
     (db.layout.base(i) / 64 to
       (db.layout.base(i) + db.layout.split(i) - 1) / 64).toSet

@@ -38,6 +38,50 @@ class StoreStreamSpec extends AnyFunSuite {
     assert(a.sameElements(b))
   }
 
+  test("a legacy flat-layout store loads resident and classifies like " +
+      "the db it came from") {
+    // > 64 targets, so the one manifest filter splits into several groups
+    val rnd = new scala.util.Random(3)
+    val docs = (0 until 90).map(i =>
+      (f"t$i%02d", Array.fill(200)(('a' + rnd.nextInt(26)).toChar).mkString))
+      .toDF("repo", "content")
+    val p = IbfParams(k = 8, w = 12, maxFp = 0.01)
+    val built = SketchBuild.build(spark, docs, "repo", "content", p)
+    assert(built.layout.numGroups == 2)
+    // the flat layout as the store wrote it before the grouped one: the
+    // whole filter in the manifest row, no shard blobs
+    val dir = java.nio.file.Files.createTempDirectory("graft_legacy").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    val gd = SketchStore.genDir(dir, 1)
+    ParquetMeta.writeBins(conf, new org.apache.hadoop.fs.Path(s"$gd/bins.parquet"),
+      built.targets.indices.map(i => (built.targets(i), built.targetHashes(i),
+        built.layout.base(i), built.layout.split(i))))
+    ParquetMeta.writeManifestRow(conf,
+      new org.apache.hadoop.fs.Path(s"$gd/manifest.parquet"),
+      ParquetMeta.ManifestRow(SketchStore.FormatVersion, 1, "flat", p.k, p.w,
+        p.seed, p.maxFp, p.hllP, p.minContentLen, p.sizingMode,
+        built.plan.bitsPerBin, built.plan.numHashes, built.plan.maxHashesBin,
+        built.plan.numBins, Array.empty[Int], built.ibf.toBytes))
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "CURRENT"),
+      "1".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+    val legacy = SketchStore.load(spark, dir)
+    assert(legacy.isResident && legacy.coarse == null)
+    assert(legacy.ibf.words.sameElements(built.ibf.words))
+    // saving converts it to the grouped layout, which loads store-backed
+    val dir2 = java.nio.file.Files.createTempDirectory("graft_legacy2").toString
+    SketchStore.save(spark, legacy, dir2)
+    val converted = SketchStore.load(spark, dir2)
+    assert(!converted.isResident)
+    def all(d: graft.build.ProbeDb) = Classify.allMatches(Classify.classify(
+      spark, docs.withColumn("id", $"repo"), "id", "content", d,
+      ClassifyParams(relCutoff = 0.25))).collect().map(_.toString).sorted
+    val expect = all(built)
+    assert(expect.length >= 90)
+    assert(all(legacy).sameElements(expect))
+    assert(all(converted).sameElements(expect))
+  }
+
   test("task metrics: per-partition rows captured and dumpable") {
     val c = TaskMetricsCollector.attach(spark)
     corpus.limit(100).count()

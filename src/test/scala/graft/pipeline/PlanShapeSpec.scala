@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec,
   ProjectExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,8 +19,9 @@ import graft.spark.{GraftFunctions, ShinglesExpr, SparkTestSession}
 
 /** Physical-plan properties the engine's design relies on: every classify
   * entry point is one map-only probe over the shingle projection, the
-  * split-free build evaluates the shingle kernel once per scan, and LSH
-  * candidate generation plans no Window. */
+  * split-free build evaluates the shingle kernel once per scan, only a
+  * two-level build aggregates a coarse filter, and LSH candidate
+  * generation plans no Window. */
 class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -83,7 +85,8 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     ).foreach { case (name, ds) => assertProbeShape(name, ds) }
   }
 
-  test("split-free SketchBuild.build evaluates graft_shingles once per scan") {
+  /** `body`'s result and the executed plans of every query it ran. */
+  private def withPlans[T](body: => T): (T, Seq[SparkPlan]) = {
     val plans = ArrayBuffer.empty[SparkPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
@@ -94,13 +97,19 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     docs.count() // the fixture's own write/read stays out of the capture
     GraftTestAccess.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
-    val db = try {
-      val built = SketchBuild.build(spark, docs, "target", "content", p)
+    val out = try {
+      val built = body
       GraftTestAccess.drain(spark.sparkContext)
       built
     } finally spark.listenerManager.unregister(listener)
+    (out, plans.synchronized(plans.toSeq))
+  }
+
+  test("split-free SketchBuild.build evaluates graft_shingles once per scan") {
+    val (db, plans) =
+      withPlans(SketchBuild.build(spark, docs, "target", "content", p))
     assert(db.layout.split.forall(_ == 1), "fixture must be split-free")
-    val hashing = plans.toSeq.flatMap { plan =>
+    val hashing = plans.flatMap { plan =>
       val n = collect(plan) { case node => shingleCount(node) }.sum
       if (n == 0) None
       else Some((n, collect(plan) { case s: FileSourceScanExec => s }.size,
@@ -111,6 +120,23 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     hashing.foreach { case (n, scans, tree) =>
       assert(n == scans, s"$n kernel evaluations over $scans scans:\n$tree")
     }
+  }
+
+  test("a flat build aggregates shards only; a two-level build adds the " +
+      "coarse union Bloom") {
+    def aggregates(plans: Seq[SparkPlan]): Set[String] = plans.flatMap { plan =>
+      collect(plan) { case a: BaseAggregateExec =>
+        a.aggregateExpressions.map(_.aggregateFunction.nodeName)
+      }.flatten
+    }.toSet
+    val (_, flat) =
+      withPlans(SketchBuild.build(spark, docs, "target", "content", p))
+    val (_, two) =
+      withPlans(SketchBuild.buildTwoLevel(spark, docs, "target", "content", p))
+    assert(aggregates(flat).contains("IbfShardAgg"), aggregates(flat))
+    assert(!aggregates(flat).contains("BloomSketchAgg"), aggregates(flat))
+    assert(Set("IbfShardAgg", "BloomSketchAgg").subsetOf(aggregates(two)),
+      aggregates(two))
   }
 
   test("Dedup.minhashPairs plans no Window") {

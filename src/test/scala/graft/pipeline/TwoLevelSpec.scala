@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.build.{IbfParams, SketchBuild, TwoLevelDb}
+import graft.build.{IbfParams, SketchBuild, SketchDb}
 import graft.classify.{Classify, ClassifyParams}
 import graft.spark.SparkTestSession
 import graft.synth.Corpus
@@ -136,10 +136,7 @@ class TwoLevelSpec extends AnyFunSuite {
     val loaded = graft.io.SketchStore.loadAny(spark, dir)
     assert(graft.io.SketchStore.shardBlobReads.get() == blobReads,
       "loading must read no shard blob")
-    val handle = loaded match {
-      case t: TwoLevelDb => t
-      case other => fail(s"expected a TwoLevelDb, got ${other.getClass}")
-    }
+    val handle = loaded
     assert(!handle.isResident && handle.loadedShards == 0)
     val reads = corpus.limit(120).withColumn("id", $"path")
     val cp = ClassifyParams(relCutoff = 0.25)
@@ -181,5 +178,72 @@ class TwoLevelSpec extends AnyFunSuite {
     // every non-empty doc still self-hits; empty docs are skipped
     (0 until 64).foreach(i => assert(hits.contains((f"t$i%02d", f"t$i%02d"))))
     assert(!hits.exists(_._2 >= "t64"))
+  }
+
+  /** Per-target counts of `SketchDb.probe`, recomputed by brute force on
+    * the stitched flat filter: a group survives when the db has no coarse
+    * level, or when the read's coarse count for it reaches the cutoff (1
+    * for a group-spanning layout); a target counts, per technical bin in a
+    * surviving group, the hashes that bin contains. */
+  private def bruteCounts(db: SketchDb, hs: Array[Long],
+      cutoff: Int): Array[Int] = {
+    val flat = db.ibf
+    val l = db.layout
+    val effCutoff = if (l.anyGroupSpanning) 1 else cutoff
+    val survives = Array.tabulate(l.numGroups)(g => db.coarse == null ||
+      hs.count(h => db.coarse.containsInBins(h, g, g + 1)) >= effCutoff)
+    Array.tabulate(db.targets.length) { t =>
+      (l.base(t) until l.base(t) + l.split(t)).filter(b => survives(b / 64))
+        .map(b => hs.count(h => flat.containsInBins(h, b, b + 1))).sum
+    }
+  }
+
+  private def survivorCount(db: SketchDb, hs: Array[Long], cutoff: Int): Int =
+    if (db.coarse == null) db.layout.numGroups
+    else (0 until db.layout.numGroups).count(g =>
+      hs.count(h => db.coarse.containsInBins(h, g, g + 1)) >= cutoff)
+
+  test("probe kernels: counts == brute force per technical bin, with 0, 1 " +
+      "and several surviving groups, coarse or not") {
+    val rnd = new scala.util.Random(11)
+    def text(n: Int) = Array.fill(n)(('a' + rnd.nextInt(26)).toChar).mkString
+    // 150 one-bin targets over 3 groups; "t061x" sorts at bin 62 and is
+    // big enough to split across the group-0/group-1 boundary
+    val small = (0 until 150).map(i => (f"t$i%03d", text(300)))
+    val pp = IbfParams(k = 8, w = 10, maxFp = 0.01)
+    val twoDb = SketchBuild.buildTwoLevel(spark, small.toDF("repo", "content"),
+      "repo", "content", pp)
+    val withSplit = small :+ (("t061x", text(60000)))
+    val flatDb = SketchBuild.build(spark, withSplit.toDF("repo", "content"),
+      "repo", "content", pp)
+    val oneGroupDb = SketchBuild.build(spark,
+      small.take(40).toDF("repo", "content"), "repo", "content", pp)
+    assert(twoDb.coarse != null && twoDb.layout.numGroups == 3 &&
+      !twoDb.layout.anyGroupSpanning)
+    assert(flatDb.coarse == null && flatDb.layout.numGroups >= 3)
+    val big = flatDb.targetIndex("t061x")
+    assert(flatDb.layout.base(big) / 64 !=
+      (flatDb.layout.base(big) + flatDb.layout.split(big) - 1) / 64,
+      "the split target must cross a group boundary")
+    assert(oneGroupDb.coarse == null && oneGroupDb.layout.numGroups == 1)
+
+    val reads = small.indices.filter(_ % 7 == 3).map(small(_)._2) ++
+      Seq(withSplit.last._2.substring(0, 2000), text(300))
+    val survivors = scala.collection.mutable.Set.empty[Int]
+    for (db <- Seq(twoDb, flatDb, oneGroupDb); read <- reads) {
+      val hs = graft.core.Hashing.shingles(read, pp.k, pp.w, pp.seed)
+      for (cutoff <- Seq(1, hs.length)) {
+        val counts = new Array[Int](db.targets.length)
+        db.probe(hs, counts, cutoff)
+        val expect = bruteCounts(db, hs, cutoff)
+        assert(counts.sameElements(expect), s"cutoff $cutoff: " +
+          db.targets.indices.filter(t => counts(t) != expect(t)).take(5)
+            .map(t => s"${db.targets(t)} ${counts(t)} != ${expect(t)}")
+            .mkString(", "))
+        if (db eq twoDb) survivors += survivorCount(db, hs, cutoff)
+      }
+    }
+    assert(survivors.contains(0) && survivors.contains(1) &&
+      survivors.exists(_ > 1), s"surviving-group counts seen: $survivors")
   }
 }

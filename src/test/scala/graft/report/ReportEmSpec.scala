@@ -135,4 +135,25 @@ class ReportEmSpec extends AnyFunSuite {
     assert(one.select("read_id").distinct().count() == one.count())
     assert(one.count() == 4)
   }
+
+  test("em: every read of .all comes back exactly once at maxIter 0, 1 " +
+      "and the default") {
+    val rnd = new scala.util.Random(5)
+    // 40 unique-match reads and 60 multi-match reads over 4 targets
+    val rows = (0 until 100).flatMap { r =>
+      val ts = if (r < 40) Seq(s"t${r % 4}")
+        else rnd.shuffle(Seq("t0", "t1", "t2", "t3")).take(2 + r % 3)
+      ts.map(t => (s"r$r", t, 1 + rnd.nextInt(9)))
+    }
+    val all = rows.toDF("read_id", "target", "kmer_count")
+    val cands = rows.groupBy(_._1).map { case (r, ms) => r -> ms.map(_._2).toSet }
+    Seq(Some(0), Some(1), None).foreach { maxIter =>
+      val out = maxIter.map(m => Em.reassign(spark, all, maxIter = m))
+        .getOrElse(Em.reassign(spark, all))
+        .collect().map(r => (r.getString(0), r.getString(1)))
+      assert(out.map(_._1).sorted.sameElements(cands.keys.toSeq.sorted),
+        s"maxIter $maxIter: ${out.length} rows for ${cands.size} reads")
+      assert(out.forall { case (r, t) => cands(r)(t) }, s"maxIter $maxIter")
+    }
+  }
 }
