@@ -2,6 +2,7 @@ package graft.build
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.Hashing
 import graft.core.sketch.{Bloom, InterleavedBloom}
@@ -89,23 +90,6 @@ trait ProbeDb extends Serializable {
   @transient lazy val targetIndex: Map[String, Int] = targets.zipWithIndex.toMap
 }
 
-/** Minimal serializable Hadoop-configuration carrier for executor-side
-  * filesystem access (Hadoop's `Configuration` is Writable, not
-  * Serializable). */
-final class SerializableHadoopConf(
-    @transient var value: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
-  }
-}
-
 /**
  * The sketch database: the target->technical-bins layout over one
  * interleaved SHARD per 64-bin group (role of ganon's serialized
@@ -171,7 +155,7 @@ final class SketchDb private (
     val storeDir: String,                  // null for a resident db
     val generation: Int,
     val shardGens: Array[Int],
-    hadoopConf: SerializableHadoopConf,
+    hadoopConf: SerializableConfiguration,
     maxCacheBytes: Long) extends ProbeDb {
 
   private val groupCutoffSafe = !layout.anyGroupSpanning
@@ -408,7 +392,7 @@ object SketchDb {
       shardGens: Array[Int]): SketchDb =
     new SketchDb(coarse, targets, targetHashes, layout, params, plan,
       null, storeDir, generation, shardGens,
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
       spark.conf.getOption("spark.graft.shard.cache.bytes")
         .map(_.toLong).getOrElse(Long.MaxValue))
 
@@ -626,9 +610,10 @@ object SketchBuild {
   }
 
   /** The executor-blob-writing tail shared by [[buildToStore]] and
-    * [[compactStored]]: claim the next generation, stream every group's
-    * (re-windowed) shard blob from the executor that aggregated it, stitch
-    * the coarse filter driver-side, commit the manifest. */
+    * [[compactStored]]: commit the next generation (base+1 when the plan
+    * came from generation `basedOnGen`), streaming every group's
+    * (re-windowed) shard blob from the executor that aggregated it and
+    * stitching the coarse filter driver-side. */
   private def storeGeneration(spark: SparkSession, dir: String, p: IbfParams,
       cards: Seq[(String, Long)], thePlan: IbfPlan, layout: BinLayout,
       binsDf: DataFrame, basedOnGen: Option[Int] = None,
@@ -636,51 +621,36 @@ object SketchBuild {
     import spark.implicits._
     val numBins = layout.numBins
     val nGroups = layout.numGroups
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    // When the plan was derived FROM an existing generation (compaction),
-    // claim exactly base+1 — claimGeneration's under-lock CURRENT re-read
-    // then fails fast if a concurrent update committed after the manifest
-    // was read. Claiming CURRENT+1 here instead would silently discard
-    // that interleaved commit (lost update: the compacted store would be
-    // built from stale metadata). Fresh builds have no base to go stale.
-    val gen = basedOnGen match {
-      case Some(base) => base + 1
-      case None => graft.io.SketchStore
-        .currentGeneration(conf.value, dir).getOrElse(0) + 1
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    graft.io.SketchStore.commitGeneration(spark, dir, basedOnGen, commitTag) {
+        (gen, shardDir) =>
+      // ONE action: write each group's (re-windowed) shard blob
+      // executor-side, return only (grp, coarseBlob) — the driver-bounded
+      // metadata
+      val coarseRows = binsDf
+        .select(col("grp"), col("shard"), col("coarse"))
+        .as[(Int, Array[Byte], Array[Byte])]
+        .mapPartitions { iter =>
+          iter.map { case (g, blob, coarseBlob) =>
+            graft.io.SketchStore.writeShardBlob(conf.value, shardDir, g,
+              windowed(InterleavedBloom.fromBytes(blob), g, numBins).toBytes)
+            (g, coarseBlob)
+          }
+        }.collect()
+      // untouched groups (all content empty/filtered) get the NoBlobGen
+      // sentinel: readers probe them as all-empty bins, so NO blob is
+      // written — the old driver-serial empty-blob loop was one filesystem
+      // round-trip per untouched group, 100k round-trips on a sparse
+      // 100k-group store
+      val present = coarseRows.map(_._1).toSet
+      val shardGens = Array.tabulate(nGroups)(g =>
+        if (present(g)) gen else graft.io.SketchStore.NoBlobGen)
+      val coarse = coarseOf(
+        coarseRows.toSeq.map { case (g, cb) => (g, Bloom.fromBytes(cb)) },
+        nGroups)
+      SketchDb.stored(spark, coarse, cards.map(_._1).toArray,
+        cards.map(_._2).toArray, layout, p, thePlan, dir, gen, shardGens)
     }
-    graft.io.SketchStore.claimGeneration(conf.value, dir, gen)
-    graft.io.SketchStore.releaseClaimOnFailure(conf.value, dir, gen) {
-    val shardDir = graft.io.SketchStore.shardDirOf(dir, gen)
-    graft.io.SketchStore.clearClaimedShardDir(conf.value, shardDir)
-    // ONE action: write each group's (re-windowed) shard blob executor-side,
-    // return only (grp, coarseBlob) — the driver-bounded metadata
-    val coarseRows = binsDf
-      .select(col("grp"), col("shard"), col("coarse"))
-      .as[(Int, Array[Byte], Array[Byte])]
-      .mapPartitions { iter =>
-        iter.map { case (g, blob, coarseBlob) =>
-          graft.io.SketchStore.writeShardBlob(conf.value, shardDir, g,
-            windowed(InterleavedBloom.fromBytes(blob), g, numBins).toBytes)
-          (g, coarseBlob)
-        }
-      }.collect()
-    // untouched groups (all content empty/filtered) get the NoBlobGen
-    // sentinel: readers probe them as all-empty bins, so NO blob is
-    // written — the old driver-serial empty-blob loop was one filesystem
-    // round-trip per untouched group, 100k round-trips on a sparse
-    // 100k-group store
-    val present = coarseRows.map(_._1).toSet
-    val shardGens = Array.tabulate(nGroups)(g =>
-      if (present(g)) gen else graft.io.SketchStore.NoBlobGen)
-    val coarse = coarseOf(
-      coarseRows.toSeq.map { case (g, cb) => (g, Bloom.fromBytes(cb)) },
-      nGroups)
-    val db = SketchDb.stored(spark, coarse, cards.map(_._1).toArray,
-      cards.map(_._2).toArray, layout, p, thePlan, dir, gen, shardGens)
-    graft.io.SketchStore.writeManifest(spark, db, dir, gen, shardGens,
-      commitTag)
-    db
-    } // releaseClaimOnFailure
   }
 
   /** The routed shard aggregation over the (target, hs) projection for the
@@ -990,76 +960,70 @@ object SketchBuild {
       Option(addDf).map(hashedProjection(_, targetCol, contentCol, p))
     val a = appendLayout(spark, db0, hashedOpt, removeTargets)
     val nGroupsNew = a.layout.numGroups
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val hconf = spark.sparkContext.hadoopConfiguration
-
-    // claim the NEXT generation and write only into its shard dir; the old
-    // generation's blobs are read-only inputs (snapshot isolation)
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val gens0 = db0.shardGens
     val oldNumGroups = db0.layout.numGroups
-    val gen = db0.generation + 1
-    graft.io.SketchStore.claimGeneration(hconf, dir, gen)
-    graft.io.SketchStore.releaseClaimOnFailure(hconf, dir, gen) {
-    val newShardDir = graft.io.SketchStore.shardDirOf(dir, gen)
-    graft.io.SketchStore.clearClaimedShardDir(hconf, newShardDir)
 
-    // 1. ONE executor job rewrites every touched group: delta groups come
-    //    out of the shard pass, masked groups ride along as null-shard
-    //    rows. Each row's executor reads the OLD blob (pinned generation),
-    //    applies the group (no driver-side blob I/O) and writes the NEW
-    //    generation's blob; only the written groups and their coarse deltas
-    //    return to the driver
-    val numBinsNew = a.layout.numBins
-    val maskB = spark.sparkContext.broadcast(a.masks)
-    val masked = a.masks.keys.toSeq.sorted
-    val rows: Option[Dataset[(Int, Array[Byte], Array[Byte])]] =
-      hashedOpt.filter(_ => a.delta.nonEmpty) match {
-        case Some(h) => Some(deltaShards(spark, db0, h, a.delta, masked))
-        case None if masked.nonEmpty =>
-          Some(masked.map(g => (g, null: Array[Byte], null: Array[Byte])).toDS())
-        case None => None
-      }
-    val written: Array[(Int, Array[Byte])] = rows.map(_.mapPartitions { iter =>
-      val masks = maskB.value
-      iter.flatMap { case (g, blob, coarseBlob) =>
-        val old =
-          if (g < oldNumGroups)
-            graft.io.SketchStore.readShardBlob(conf.value, dir, gens0, g)
-          else None
-        // a masked sentinel group has no old blob and no delta: nothing to
-        // write, so its pointer keeps the sentinel
-        applyGroup(g, old, blob, masks.getOrElse(g, Array.empty), numBinsNew)
-          .map { sh =>
-            graft.io.SketchStore.writeShardBlob(conf.value, newShardDir, g,
-              sh.toBytes)
-            (g, if (blob == null) null else coarseBlob)
-          }
-      }
-    }.collect()).getOrElse(Array.empty)
-    // the one consumer of the mask has completed — destroy the broadcast
-    // now rather than leaking one per update on a long-lived session
-    maskB.destroy()
+    // commit the NEXT generation of the one this update was planned from,
+    // writing only into its shard dir; the old generation's blobs are
+    // read-only inputs (snapshot isolation)
+    graft.io.SketchStore.commitGeneration(spark, dir, Some(db0.generation),
+        commitTag) { (gen, newShardDir) =>
+      // 1. ONE executor job rewrites every touched group: delta groups come
+      //    out of the shard pass, masked groups ride along as null-shard
+      //    rows. Each row's executor reads the OLD blob (pinned
+      //    generation), applies the group (no driver-side blob I/O) and
+      //    writes the NEW generation's blob; only the written groups and
+      //    their coarse deltas return to the driver
+      val numBinsNew = a.layout.numBins
+      val maskB = spark.sparkContext.broadcast(a.masks)
+      val masked = a.masks.keys.toSeq.sorted
+      val rows: Option[Dataset[(Int, Array[Byte], Array[Byte])]] =
+        hashedOpt.filter(_ => a.delta.nonEmpty) match {
+          case Some(h) => Some(deltaShards(spark, db0, h, a.delta, masked))
+          case None if masked.nonEmpty =>
+            Some(masked.map(g => (g, null: Array[Byte], null: Array[Byte]))
+              .toDS())
+          case None => None
+        }
+      val written: Array[(Int, Array[Byte])] = rows.map(_.mapPartitions { iter =>
+        val masks = maskB.value
+        iter.flatMap { case (g, blob, coarseBlob) =>
+          val old =
+            if (g < oldNumGroups)
+              graft.io.SketchStore.readShardBlob(conf.value, dir, gens0, g)
+            else None
+          // a masked sentinel group has no old blob and no delta: nothing
+          // to write, so its pointer keeps the sentinel
+          applyGroup(g, old, blob, masks.getOrElse(g, Array.empty), numBinsNew)
+            .map { sh =>
+              graft.io.SketchStore.writeShardBlob(conf.value, newShardDir, g,
+                sh.toBytes)
+              (g, if (blob == null) null else coarseBlob)
+            }
+        }
+      }.collect()).getOrElse(Array.empty)
+      // the one consumer of the mask has completed — destroy the broadcast
+      // now rather than leaking one per update on a long-lived session
+      maskB.destroy()
 
-    // 2. per-group generation pointers: groups whose blob was WRITTEN this
-    //    generation point at it; untouched groups keep their old pointers
-    //    (the O(delta) property — nothing is copied or hard-linked)
-    val writtenSet = written.map(_._1).toSet
-    val gens1 = Array.tabulate(nGroupsNew) { g =>
-      if (writtenSet(g)) gen
-      else if (g < gens0.length) gens0(g)
-      // appended group with no delta rows: no blob on disk — the sentinel
-      // says so explicitly, so readers probe it as empty instead of
-      // mistaking it for a lost blob (which fails fast)
-      else graft.io.SketchStore.NoBlobGen
+      // 2. per-group generation pointers: groups whose blob was WRITTEN
+      //    this generation point at it; untouched groups keep their old
+      //    pointers (the O(delta) property — nothing is copied or
+      //    hard-linked)
+      val writtenSet = written.map(_._1).toSet
+      val gens1 = Array.tabulate(nGroupsNew) { g =>
+        if (writtenSet(g)) gen
+        else if (g < gens0.length) gens0(g)
+        // appended group with no delta rows: no blob on disk — the
+        // sentinel says so explicitly, so readers probe it as empty
+        // instead of mistaking it for a lost blob (which fails fast)
+        else graft.io.SketchStore.NoBlobGen
+      }
+      SketchDb.stored(spark,
+        coarseWith(db0.coarse, nGroupsNew, written.toSeq), a.targets,
+        a.counts, a.layout, p, a.plan, dir, gen, gens1)
     }
-
-    // 3. manifest + CURRENT flip LAST (the commit point)
-    val db = SketchDb.stored(spark,
-      coarseWith(db0.coarse, nGroupsNew, written.toSeq), a.targets, a.counts,
-      a.layout, p, a.plan, dir, gen, gens1)
-    graft.io.SketchStore.writeManifest(spark, db, dir, gen, gens1, commitTag)
-    db
-    } // releaseClaimOnFailure
   }
 
   /** Degradation report of a stored two-level db after update cycles:
@@ -1139,18 +1103,11 @@ object SketchBuild {
     case None => make
     case Some(d) =>
       val path = s"$d/$stage"
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), conf)
       val ok = new org.apache.hadoop.fs.Path(path + "/_SUCCESS")
       val tagPath = new org.apache.hadoop.fs.Path(path + "/_PARAMS")
-      val tagMatches = fs.exists(tagPath) && {
-        val in = fs.open(tagPath)
-        try {
-          val buf = new Array[Byte](fs.getFileStatus(tagPath).getLen.toInt)
-          in.readFully(0, buf)
-          new String(buf, java.nio.charset.StandardCharsets.UTF_8) == tag
-        } finally in.close()
-      }
+      val tagMatches = graft.io.SketchStore.readSmall(conf, tagPath).contains(tag)
       if (!fs.exists(ok) || !tagMatches) {
         make.write.mode("overwrite").parquet(path)
         val out = fs.create(tagPath, true)

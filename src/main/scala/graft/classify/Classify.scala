@@ -264,7 +264,6 @@ object Classify {
   /** `.sta` analog (GanonClassify.cpp:1130-1218): one-row run statistics.
     * Single aggregation over the per-read results — no extra pass. */
   def stats(results: Dataset[ReadResult]): DataFrame = {
-    def zsum(c: org.apache.spark.sql.Column) = coalesce(sum(c), lit(0L))
     results.toDF().agg(
       count(lit(1)).as("seqs_processed"),
       zsum(when(col("assignment").isNotNull, 1L).otherwise(0L)).as("seqs_classified"),

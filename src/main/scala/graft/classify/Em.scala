@@ -18,13 +18,12 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * then a map-only argmax over those rows (probs broadcast as a flat
  * Array[Double] indexed by target id — 8 B/target instead of a boxed
  * string-keyed map, an array load instead of a hash probe per candidate)
- * followed by a per-target count that picks its shape by |targets|:
- * below 64k a plain groupBy+collect (map-side partial agg, trivial
- * collect, fastest at reference-test scale); above it a SHUFFLE-FREE
- * depth-2 treeAggregate of dense per-partition Array[Long]s, so the
- * driver merges a few pre-combined arrays instead of boxing |targets|
- * Rows per iteration (the 10^7-target ceiling the unconditional
- * groupBy+collect had). Nothing rescans or reshuffles the full match
+ * followed by a per-target count: each partition folds its assignments
+ * into a dense Array[Long], merged shuffle-free. Below 64k targets a flat
+ * `aggregate` merges one small array per partition on the driver; above
+ * it a depth-2 treeAggregate, so the driver merges a few pre-combined
+ * arrays instead of one per partition. Neither boxes |targets| Rows per
+ * iteration (the 10^7-target ceiling a groupBy+collect had). Nothing rescans or reshuffles the full match
  * relation inside the loop; at 10^7 targets the per-iteration broadcast
  * is ~80 MB, not the ~1 GB a string map would cost. Measured at 10^6
  * targets / 2x10^6 multi-match reads, local[8]: 3 EM iterations in

@@ -1,8 +1,11 @@
 package graft.io
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.build.{BinLayout, IbfParams, IbfPlan, SketchDb}
 import graft.core.sketch.InterleavedBloom
@@ -52,51 +55,45 @@ object SketchStore {
   private def currentPath(dir: String) = new Path(s"$dir/CURRENT")
   private def lockPath(dir: String, gen: Int) = new Path(s"$dir/LOCK_gen_$gen")
   private[graft] def genDir(dir: String, gen: Int) = s"$dir/gen_$gen"
-  private[graft] def shardDirOf(dir: String, gen: Int) = s"$dir/shards_v$gen"
-
-  /** Clear leftovers of an UNCOMMITTED, exclusively-claimed generation's
-    * shard dir — a crashed earlier attempt's partial blobs. Committed
-    * generations are never touched (pinned readers keep their snapshot).
-    * EVERY claimant that writes blobs must call this right after its
-    * claim: it establishes the invariant [[writeShardBlob]] relies on —
-    * any blob existing at this generation's paths during the job was
-    * written by a duplicate attempt of THIS job, hence identical bytes. */
-  private[graft] def clearClaimedShardDir(conf: Configuration,
-      shardDir: String): Unit = {
-    val p = new Path(shardDir)
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) fs.delete(p, true)
-  }
+  private def shardDirOf(dir: String, gen: Int) = s"$dir/shards_v$gen"
 
   /** The committed generation, if the dir holds a store. */
-  def currentGeneration(conf: Configuration, dir: String): Option[Int] = {
-    val p = currentPath(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val len = fs.getFileStatus(p).getLen.toInt
-        val buf = new Array[Byte](len)
-        in.readFully(0, buf)
-        Some(new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-          .trim.toInt)
-      } finally in.close()
-    }
+  def currentGeneration(conf: Configuration, dir: String): Option[Int] =
+    readSmall(conf, currentPath(dir)).map(_.trim.toInt)
+
+  /** A small control file's whole content (UTF-8); None when it does not
+    * exist. The one read behind CURRENT, ingest markers, pins and build
+    * checkpoint tags. */
+  private[graft] def readSmall(conf: Configuration, p: Path): Option[String] = {
+    val in =
+      try Some(p.getFileSystem(conf).open(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    in.map(s => try new String(s.readAllBytes(), UTF_8) finally s.close())
   }
 
-  /** Atomically flip CURRENT to `gen` (temp file + rename-OVERWRITE — a
-    * racing reader sees the old pointer or the new one, never nothing). */
-  private def commitCurrent(conf: Configuration, dir: String, gen: Int): Unit = {
-    val dest = currentPath(dir)
+  /** The one atomic publish of this store: write into a uniquely named tmp
+    * sibling of `dest` (`.<name>.<uuid>.tmp`, the shape gc's `.grp_*` and
+    * `.pin_*` sweeps reclaim), then OVERWRITE-rename it onto `dest`
+    * (FileContext, atomic on HDFS and posix). Concurrent writers of one
+    * path (task retries, speculative attempts) never interleave bytes, and
+    * a racing reader sees the old file or the new one, never a partial or
+    * missing one. A failed rename removes the tmp and goes to `onFailure`,
+    * the caller's rule; by default it propagates. */
+  private def publish(conf: Configuration, dest: Path,
+      onFailure: (FileSystem, Throwable) => Unit = (_, e) => throw e)(
+      write: java.io.OutputStream => Unit): Unit = {
     val fs = dest.getFileSystem(conf)
-    val tmp = new Path(s"$dir/.CURRENT.${java.util.UUID.randomUUID()}.tmp")
+    val tmp = new Path(dest.getParent,
+      s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, true)
-    try out.write(gen.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(dest.toUri, conf)
-      .rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    try write(out) finally out.close()
+    try FileContext.getFileContext(dest.toUri, conf)
+      .rename(tmp, dest, Options.Rename.OVERWRITE)
+    catch {
+      case e: Throwable =>
+        fs.delete(tmp, false)
+        onFailure(fs, e)
+    }
   }
 
   /** Claim exclusive authorship of generation `gen` (create-no-overwrite of
@@ -149,24 +146,6 @@ object SketchStore {
     lock.getFileSystem(conf).delete(lock, false)
   }
 
-  /** Run a claimed writer's body; on failure release OUR OWN claim before
-    * rethrowing. Without this, any exception between claim and commit (a
-    * lost executor, a blob IO error) leaves LOCK_gen_N behind and turns a
-    * transient job failure into persistent write-unavailability until an
-    * operator calls [[releaseStaleLocks]]. Releasing here is safe: the
-    * lock protects an UNCOMMITTED generation this process exclusively
-    * claimed, and its partial output is cleared by the next claimant. On
-    * success the lock is released by [[writeManifest]]'s commit. */
-  private[graft] def releaseClaimOnFailure[T](conf: Configuration,
-      dir: String, gen: Int)(body: => T): T =
-    try body
-    catch {
-      case e: Throwable =>
-        try releaseLock(conf, dir, gen)
-        catch { case e2: Throwable => e.addSuppressed(e2) }
-        throw e
-    }
-
   /** Drop lock files of UNCOMMITTED generations (gen > CURRENT) — the
     * residue of crashed writers. Only call when no writer is running. */
   def releaseStaleLocks(spark: SparkSession, dir: String): Int = {
@@ -183,38 +162,70 @@ object SketchStore {
     stale.length
   }
 
-  // ---- manifest ------------------------------------------------------------
+  // ---- the one generation commit ---------------------------------------------
 
-  /** Write bins+manifest for `gen` (into the fresh gen_<gen>/ dir — never
-    * an overwrite of live metadata), then COMMIT by flipping CURRENT and
-    * release the writer lock. `shardGens(g)` = generation owning group g's
-    * blob. `ingestTag` = (ingestId, batchId) of the STREAM batch
-    * this generation applies, written as a marker INSIDE the gen dir
-    * before the CURRENT flip — so the ingest commit record and the data
-    * become visible in the same atomic step (the store is its own commit
-    * log; see [[lastIngestCommit]]). */
-  private[graft] def writeManifest(spark: SparkSession, db: SketchDb,
-      dir: String, gen: Int, shardGens: Array[Int],
-      ingestTag: Option[(String, Long)] = None): Unit = {
-    // control-plane write: a handful of rows — direct driver parquet I/O
-    // (ParquetMeta), not a scheduled Spark job per file; the ~100 ms/job
-    // scheduler latency was the commit-latency floor for streaming ingest
+  /**
+   * Commit one new generation of the store at `dir` — the write protocol
+   * of every store writer (`buildToStore`, `updateStored`, `compactStored`,
+   * [[save]]):
+   *
+   *  1. pick the generation: `basedOn + 1` for a writer planned from a
+   *     generation it read, so an interleaved commit since that read fails
+   *     the claim instead of being silently discarded (a lost update);
+   *     CURRENT + 1 for a writer with no base (a fresh build, a save);
+   *  2. claim it, and clear its shard dir: a crashed earlier attempt's
+   *     partial blobs go, so any blob at this generation's paths during
+   *     the job was written by a duplicate attempt of THIS job, hence has
+   *     identical bytes (the invariant [[writeShardBlob]] relies on);
+   *  3. run `blobs(gen, shardDir)`, the caller's blob job, which returns
+   *     the store-backed db of the new generation;
+   *  4. write bins + manifest + ingest marker into the fresh `gen_<gen>/`
+   *     (never an overwrite of live metadata), then flip CURRENT (the one
+   *     commit point) and release the claim.
+   *
+   * Any failure releases the claim before it propagates: the lock guards
+   * an UNCOMMITTED generation this process claimed, and the next claimant
+   * clears its partial output, so a transient job failure never turns
+   * into write-unavailability. `ingestTag` = (ingestId, batchId) of the
+   * stream batch this generation applies (see [[writeIngestMarker]]).
+   */
+  private[graft] def commitGeneration(spark: SparkSession, dir: String,
+      basedOn: Option[Int], ingestTag: Option[(String, Long)] = None)(
+      blobs: (Int, String) => SketchDb): SketchDb = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val gd = genDir(dir, gen)
-    ParquetMeta.writeBins(conf, new Path(s"$gd/bins.parquet"),
-      db.targets.indices.map { i =>
-        (db.targets(i), db.targetHashes(i), db.layout.base(i),
-          db.layout.split(i))
-      })
-    ParquetMeta.writeManifestRow(conf, new Path(s"$gd/manifest.parquet"),
-      ParquetMeta.ManifestRow(FormatVersion, gen, "two", db.params.k,
-        db.params.w, db.params.seed, db.params.maxFp, db.params.hllP,
-        db.params.minContentLen, db.params.sizingMode, db.plan.bitsPerBin,
-        db.plan.numHashes, db.plan.maxHashesBin, db.plan.numBins, shardGens,
-        if (db.coarse == null) Array.emptyByteArray else db.coarse.toBytes))
-    writeIngestMarker(conf, dir, gen, ingestTag)
-    commitCurrent(conf, dir, gen)
-    releaseLock(conf, dir, gen)
+    val gen = basedOn.getOrElse(currentGeneration(conf, dir).getOrElse(0)) + 1
+    claimGeneration(conf, dir, gen)
+    try {
+      val shardDir = new Path(shardDirOf(dir, gen))
+      val fs = shardDir.getFileSystem(conf)
+      if (fs.exists(shardDir)) fs.delete(shardDir, true)
+      val db = blobs(gen, shardDir.toString)
+      // control-plane write: a handful of rows — direct driver parquet I/O
+      // (ParquetMeta), not a scheduled Spark job per file; the ~100 ms/job
+      // scheduler latency was the commit-latency floor for streaming ingest
+      val gd = genDir(dir, gen)
+      ParquetMeta.writeBins(conf, new Path(s"$gd/bins.parquet"),
+        db.targets.indices.map { i =>
+          (db.targets(i), db.targetHashes(i), db.layout.base(i),
+            db.layout.split(i))
+        })
+      ParquetMeta.writeManifestRow(conf, new Path(s"$gd/manifest.parquet"),
+        ParquetMeta.ManifestRow(FormatVersion, gen, "two", db.params.k,
+          db.params.w, db.params.seed, db.params.maxFp, db.params.hllP,
+          db.params.minContentLen, db.params.sizingMode, db.plan.bitsPerBin,
+          db.plan.numHashes, db.plan.maxHashesBin, db.plan.numBins,
+          db.shardGens,
+          if (db.coarse == null) Array.emptyByteArray else db.coarse.toBytes))
+      writeIngestMarker(conf, dir, gen, ingestTag)
+      publish(conf, currentPath(dir))(_.write(gen.toString.getBytes(UTF_8)))
+      releaseLock(conf, dir, gen)
+      db
+    } catch {
+      case e: Throwable =>
+        try releaseLock(conf, dir, gen)
+        catch { case e2: Throwable => e.addSuppressed(e2) }
+        throw e
+    }
   }
 
   // ---- ingest commit log -----------------------------------------------------
@@ -222,66 +233,46 @@ object SketchStore {
   private def ingestMarkerPath(dir: String, gen: Int) =
     new Path(s"${genDir(dir, gen)}/INGEST_COMMIT")
 
-  /** Write (or carry forward) the ingest-commit marker for `gen`. Runs
-    * BEFORE the CURRENT flip, so the marker is atomic with the generation
-    * it describes: a crash between a store commit and the stream's own
-    * checkpoint commit leaves a marker the replayed batch will see. The
-    * marker holds ONE `id\tbatch` LINE PER ingestId (newest commit last),
-    * merged with the previous generation's entries on every write — two
-    * interleaved logical ingest streams each keep their own progress, so
-    * stream B's commit can never erase stream A's replay protection. A
-    * non-ingest commit (manual update/compact/rebuild interleaved with an
-    * ingest stream) COPIES the previous generation's marker forward, so
-    * `gen_<CURRENT>/` always holds the latest applied batches even when
-    * ingest generations have been gc'd. */
+  /** Write the ingest-commit marker for `gen`. Runs BEFORE the CURRENT
+    * flip, so the marker is atomic with the generation it describes: a
+    * crash between a store commit and the stream's own checkpoint commit
+    * leaves a marker the replayed batch will see. The marker holds ONE
+    * `id\tbatch` LINE PER ingestId (newest commit last): generation
+    * N-1's entries, plus this id's entry merged to the max applied batch
+    * when `tag` is set — two interleaved logical ingest streams each keep
+    * their own progress, so stream B's commit can never erase stream A's
+    * replay protection, and a non-ingest commit (manual
+    * update/compact/rebuild interleaved with an ingest stream) carries the
+    * entries forward, so `gen_<CURRENT>/` always holds the latest applied
+    * batches even when ingest generations have been gc'd. */
   private def writeIngestMarker(conf: Configuration, dir: String, gen: Int,
       tag: Option[(String, Long)]): Unit = {
-    val dest = ingestMarkerPath(dir, gen)
-    val fs = dest.getFileSystem(conf)
-    tag match {
-      case Some((id, batch)) =>
-        require(!id.contains('\t') && !id.contains('\n'),
-          s"ingest id must not contain tab/newline: $id")
-        val prev =
-          if (gen > 1) readMarkerEntries(conf, ingestMarkerPath(dir, gen - 1))
-          else Nil
-        // carry every other id forward; this id's entry merges to the max
-        // applied batch and moves to the end (newest-commit-last order)
-        val merged = prev.filterNot(_._1 == id) :+
-          ((id, math.max(batch, prev.toMap.getOrElse(id, Long.MinValue))))
-        val out = fs.create(dest, true)
-        try out.write(merged.map { case (i, b) => s"$i\t$b" }.mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      case None if gen > 1 =>
-        val prev = ingestMarkerPath(dir, gen - 1)
-        if (fs.exists(prev)) {
-          val buf = new Array[Byte](fs.getFileStatus(prev).getLen.toInt)
-          val in = fs.open(prev)
-          try in.readFully(0, buf) finally in.close()
-          val out = fs.create(dest, true)
-          try out.write(buf) finally out.close()
-        }
-      case None => ()
+    val prev =
+      if (gen > 1) readMarkerEntries(conf, ingestMarkerPath(dir, gen - 1))
+      else Nil
+    val entries = tag.fold(prev) { case (id, batch) =>
+      require(!id.contains('\t') && !id.contains('\n'),
+        s"ingest id must not contain tab/newline: $id")
+      prev.filterNot(_._1 == id) :+
+        ((id, math.max(batch, prev.toMap.getOrElse(id, Long.MinValue))))
+    }
+    if (entries.nonEmpty) {
+      val dest = ingestMarkerPath(dir, gen)
+      val out = dest.getFileSystem(conf).create(dest, true)
+      try out.write(entries.map { case (i, b) => s"$i\t$b" }.mkString("\n")
+        .getBytes(UTF_8))
+      finally out.close()
     }
   }
 
   private def readMarkerEntries(conf: Configuration,
-      p: Path): Seq[(String, Long)] = {
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Nil
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-        .split('\n').toSeq.map(_.trim).filter(_.nonEmpty).flatMap { line =>
-          val i = line.lastIndexOf('\t')
-          if (i < 0) None else Some((line.substring(0, i),
-            line.substring(i + 1).toLong))
-        }
-    }
-  }
+      p: Path): Seq[(String, Long)] =
+    readSmall(conf, p).toSeq.flatMap(_.split('\n').toSeq).map(_.trim)
+      .filter(_.nonEmpty).flatMap { line =>
+        val i = line.lastIndexOf('\t')
+        if (i < 0) None else Some((line.substring(0, i),
+          line.substring(i + 1).toLong))
+      }
 
   /** The (ingestId, batchId) of the newest stream batch applied to this
     * store, if any (the marker's last line). For the replay check itself
@@ -336,23 +327,20 @@ object SketchStore {
         s"export destination ${qualified(dir)} is the source store itself " +
           "— the snapshot already lives there; pick a different directory")
     }
-    val gen = currentGeneration(conf, dir).getOrElse(0) + 1
-    claimGeneration(conf, dir, gen)
-    releaseClaimOnFailure(conf, dir, gen) {
-      val sd = shardDirOf(dir, gen)
-      clearClaimedShardDir(conf, sd)
+    commitGeneration(spark, dir, basedOn = None) { (gen, shardDir) =>
       val shardGens =
         if (db.isResident) {
           (0 until nG).foreach(g =>
-            writeShardBlob(conf, sd, g, db.shard(g).toBytes))
+            writeShardBlob(conf, shardDir, g, db.shard(g).toBytes))
           Array.fill(nG)(gen)
         } else {
-          copyPinnedBlobs(spark, db, sd)
+          copyPinnedBlobs(spark, db, shardDir)
           // blob-less groups keep their sentinel — pointing them at the
           // new generation would read as "blob lost"
           db.shardGens.map(v => if (v == NoBlobGen) NoBlobGen else gen)
         }
-      writeManifest(spark, db, dir, gen, shardGens)
+      SketchDb.stored(spark, db.coarse, db.targets, db.targetHashes,
+        db.layout, db.params, db.plan, dir, gen, shardGens)
     }
   }
 
@@ -366,72 +354,52 @@ object SketchStore {
     val srcDir = db.storeDir
     val srcGens = db.shardGens
     val nG = db.layout.numGroups
-    val hc = new graft.build.SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
+    val hc = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     spark.sparkContext.parallelize(0 until nG,
         math.min(nG, spark.sparkContext.defaultParallelism)).foreach { g =>
       if (srcGens(g) != NoBlobGen) {
         val c = hc.value
         val src = new Path(s"$srcDir/shards_v${srcGens(g)}/grp_$g.bin")
         val srcFs = src.getFileSystem(c)
-        if (!srcFs.exists(src))
-          throw new IllegalStateException(
-            s"shard blob $src missing during snapshot export — the " +
-              "handle's generation was gc'd underneath it")
+        val len =
+          try srcFs.getFileStatus(src).getLen
+          catch {
+            case e: java.io.FileNotFoundException =>
+              throw new IllegalStateException(
+                s"shard blob $src missing during snapshot export — the " +
+                  "handle's generation was gc'd underneath it", e)
+          }
         val dest = new Path(s"$destShardDir/grp_$g.bin")
-        val destFs = dest.getFileSystem(c)
-        val tmp =
-          new Path(s"$destShardDir/.grp_$g.${java.util.UUID.randomUUID()}.tmp")
         val in = srcFs.open(src)
-        val out = destFs.create(tmp, true)
-        try org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false)
-        finally { in.close(); out.close() }
-        commitBlobRename(c, destFs, tmp, dest,
-          srcFs.getFileStatus(src).getLen)
+        try publish(c, dest, unlessBlobCommitted(dest, len))(out =>
+          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 1 << 20, false))
+        finally in.close()
       }
     }
   }
 
   // ---- blobs ---------------------------------------------------------------
 
+  /** Publish group g's blob. A blob path is deterministic per (generation,
+    * group), so duplicate attempts of the writing job publish identical
+    * bytes. */
   private[graft] def writeShardBlob(conf: Configuration,
       shardDir: String, g: Int, bytes: Array[Byte]): Unit = {
     val dest = new Path(s"$shardDir/grp_$g.bin")
-    val fs = dest.getFileSystem(conf)
-    // write-then-OVERWRITE-rename (FileContext, atomic on HDFS/posix):
-    // concurrent writers of the same group (task retries, speculative
-    // attempts) can never interleave bytes in the destination, and there
-    // is NO missing-file window — a reader racing the commit sees the old
-    // blob or the new one, never nothing. A blob path is deterministic per
-    // (generation, group), so duplicate attempts write identical bytes.
-    val tmp = new Path(s"$shardDir/.grp_$g.${java.util.UUID.randomUUID()}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    commitBlobRename(conf, fs, tmp, dest, bytes.length.toLong)
+    publish(conf, dest, unlessBlobCommitted(dest, bytes.length))(
+      _.write(bytes))
     shardBlobWrites.incrementAndGet()
   }
 
-  /** The shared tmp→dest commit: OVERWRITE-rename, suppressing a failure
-    * ONLY when dest is positively confirmed as the bytes we meant to
-    * write (same length; content is deterministic per path — duplicate
-    * attempts write identical bytes). Any other dest is stale/foreign:
-    * the rename failure surfaces rather than silently serving old bits
+  /** A blob's failure rule: a failed rename is forgiven ONLY when `dest`
+    * is positively confirmed as the bytes we meant to write (same length;
+    * content is deterministic per path). Any other dest is stale or
+    * foreign: the failure surfaces rather than silently serving old bits
     * under a new manifest. */
-  private def commitBlobRename(conf: Configuration,
-      fs: org.apache.hadoop.fs.FileSystem, tmp: Path, dest: Path,
-      expectedLen: Long): Unit = {
-    try {
-      org.apache.hadoop.fs.FileContext.getFileContext(dest.toUri, conf)
-        .rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case e: Throwable =>
-        fs.delete(tmp, false)
-        val committed = fs.exists(dest) &&
-          fs.getFileStatus(dest).getLen == expectedLen
-        if (!committed)
-          throw new java.io.IOException(s"failed to commit shard blob $dest", e)
-    }
-  }
+  private def unlessBlobCommitted(dest: Path, expectedLen: Long)(
+      fs: FileSystem, e: Throwable): Unit =
+    if (!(fs.exists(dest) && fs.getFileStatus(dest).getLen == expectedLen))
+      throw new java.io.IOException(s"failed to commit shard blob $dest", e)
 
   /** Per-group generation-pointer sentinel: the group LEGITIMATELY has no
     * blob (an updateStored-appended group that received zero delta
@@ -593,18 +561,10 @@ object SketchStore {
    */
   def pin(conf: Configuration, dir: String, gen: Int): String = {
     val id = java.util.UUID.randomUUID().toString
-    val p = new Path(pinsDir(dir), s"pin_$id")
-    val fs = p.getFileSystem(conf)
-    fs.mkdirs(pinsDir(dir))
-    // write-tmp-then-rename, like every other commit in this store: a
-    // concurrent gc (e.g. an ingest stream's per-commit gc) must never
-    // list a visible-but-still-empty pin file
-    val tmp = new Path(pinsDir(dir), s".pin_$id.tmp")
-    val out = fs.create(tmp, false)
-    try out.write(gen.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    require(fs.rename(tmp, p), s"pin commit rename failed: $p")
+    // published, never written in place: a concurrent gc (e.g. an ingest
+    // stream's per-commit gc) must never list a visible-but-still-empty pin
+    publish(conf, new Path(pinsDir(dir), s"pin_$id"))(
+      _.write(gen.toString.getBytes(UTF_8)))
     id
   }
 
@@ -622,14 +582,10 @@ object SketchStore {
     val d = pinsDir(dir)
     val fs = d.getFileSystem(conf)
     if (!fs.exists(d)) Nil
-    else fs.listStatus(d).toSeq
-      .filter(_.getPath.getName.startsWith("pin_"))
-      .map { st =>
-        val buf = new Array[Byte](st.getLen.toInt)
-        val in = fs.open(st.getPath)
-        try in.readFully(0, buf) finally in.close()
-        new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-      }.distinct.sorted
+    else fs.listStatus(d).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("pin_"))
+      // a pin released between the listing and its read drops out
+      .flatMap(readSmall(conf, _)).map(_.trim.toInt).distinct.sorted
   }
 
   // ---- GC ------------------------------------------------------------------

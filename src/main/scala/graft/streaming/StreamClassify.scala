@@ -16,8 +16,7 @@ import graft.core.sketch.Hll
  * GanonClassify.cpp:1426-1441, bounded SafeQueues) maps onto micro-batches
  * probing the broadcast sketch. The probe is stateless/map-only, so any
  * output mode works and no watermark is required (the reference has no
- * event time either — SURVEY.md §2.9); windowed per-bin rates are an
- * optional aggregation on top.
+ * event time either — SURVEY.md §2.9).
  */
 object StreamClassify {
 
@@ -30,28 +29,6 @@ object StreamClassify {
     // unchanged to a streaming child plan
     Classify.allMatches(
       Classify.classify(spark, stream, idCol, contentCol, db, cp))
-  }
-
-  /** Per-event-time-window per-target match counts (adds the watermarked
-    * windowed aggregation the reference never had). */
-  def windowedCounts(spark: SparkSession, stream: DataFrame, idCol: String,
-      contentCol: String, tsCol: String, db: ProbeDb, window_ : String,
-      watermark: String, cp: ClassifyParams = ClassifyParams()): DataFrame = {
-    val withTs = stream.withColumn("__ts", col(tsCol).cast("timestamp"))
-    // round-trip event time at MICROSECOND precision (a cast to long would
-    // truncate to whole seconds, shifting sub-second windows + watermarks)
-    val res = Classify.classify(spark, withTs
-      .withColumn("__id", concat(col(idCol), lit("@"),
-        expr("unix_micros(__ts)"))), "__id", contentCol, db, cp)
-    res.toDF()
-      .select(col("read_id"), explode(col("matches")).as("m"))
-      .withColumn("__ts",
-        expr("timestamp_micros(cast(substring_index(read_id, '@', -1) as long))"))
-      .withWatermark("__ts", watermark)
-      .groupBy(window(col("__ts"), window_), col("m.target").as("target"))
-      .agg(count(lit(1)).as("n_matches"))
-      .select(col("window.start").as("window_start"), col("target"),
-        col("n_matches"))
   }
 
   /**

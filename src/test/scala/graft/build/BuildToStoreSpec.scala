@@ -206,9 +206,11 @@ class BuildToStoreSpec extends AnyFunSuite {
     docs.unpersist()
   }
 
-  test("saveTwoLevel of a handle clears a crashed save's leftover blobs") {
+  test("every writer clears a crashed attempt's leftover blobs") {
     val docs = graft.synth.Corpus.df(spark, 600, numRepos = 150,
       partitions = 4).cache()
+    val repos = docs.select("repo").distinct().orderBy("repo")
+      .collect().map(_.getString(0))
     val p = IbfParams(k = 19, w = 31, maxFp = 0.001)
     val src = freshDir("exp_src")
     val built = SketchBuild.buildToStore(spark, docs, "repo", "content",
@@ -224,16 +226,38 @@ class BuildToStoreSpec extends AnyFunSuite {
     assert(new java.io.File(s"$src/shards_v1/grp_$victim.bin").delete())
     val handle = graft.io.SketchStore.loadTwoLevelLazy(spark, src)
     handle.shardGens(victim) = graft.io.SketchStore.NoBlobGen
-    // a crashed earlier export into destDir left a junk blob at the SAME
-    // generation this retry will claim (the crash released its lock)
     val dest = freshDir("exp_dst")
-    new java.io.File(s"$dest/shards_v1").mkdirs()
-    val junk = new java.io.FileOutputStream(
-      s"$dest/shards_v1/grp_$victim.bin")
-    try junk.write(Array.fill[Byte](64)(0x5A)) finally junk.close()
-    graft.io.SketchStore.saveTwoLevel(spark, handle, dest)
-    assert(!new java.io.File(s"$dest/shards_v1/grp_$victim.bin").exists(),
-      "the dead attempt's junk blob must not survive into the commit")
+    val store = freshDir("hygiene")
+    // no layout here reaches group 999, so no writer rewrites its blob
+    val unwritten = 999
+    // (writer, store dir, generation it claims, group of the junk blob)
+    val writers: Seq[(String, String, Int, Int, () => Any)] = Seq(
+      ("save", dest, 1, victim,
+        () => graft.io.SketchStore.saveTwoLevel(spark, handle, dest)),
+      ("buildToStore", store, 1, unwritten,
+        () => SketchBuild.buildToStore(spark, docs, "repo", "content",
+          store, p)),
+      ("updateStored", store, 2, unwritten,
+        () => SketchBuild.updateStored(spark, store, null, "repo",
+          "content", removeTargets = Seq(repos.last))),
+      ("compactStored", store, 3, unwritten,
+        () => SketchBuild.compactStored(spark, store,
+          docs.filter(col("repo") =!= repos.last), "repo", "content")))
+    val hconf = spark.sparkContext.hadoopConfiguration
+    writers.foreach { case (writer, dir, gen, g, run) =>
+      // a crashed earlier attempt left a junk blob at the SAME generation
+      // this writer will claim (the crash released its lock)
+      val junk = new java.io.File(s"$dir/shards_v$gen/grp_$g.bin")
+      junk.getParentFile.mkdirs()
+      val out = new java.io.FileOutputStream(junk)
+      try out.write(Array.fill[Byte](64)(0x5A)) finally out.close()
+      run()
+      assert(graft.io.SketchStore.currentGeneration(hconf, dir).contains(gen),
+        s"$writer must commit generation $gen")
+      assert(!junk.exists(),
+        s"$writer: the dead attempt's junk blob must not survive into the " +
+          "commit")
+    }
     // and the exported store answers exactly like the handle
     val re = graft.io.SketchStore.loadTwoLevelLazy(spark, dest)
     assert(matches(re, docs) == matches(handle, docs))
