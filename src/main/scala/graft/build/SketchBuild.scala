@@ -7,6 +7,7 @@ import org.apache.spark.util.SerializableConfiguration
 import graft.core.Hashing
 import graft.core.sketch.{Bloom, InterleavedBloom}
 import graft.spark.GraftFunctions
+import graft.spark.udaf.SketchAggs.ShardSlice
 
 /** Shingling + filter-sizing parameters (role of ganon's IBFConfig,
   * src/utils/include/utils/IBFConfig.hpp:5-41). `sizingMode` mirrors the
@@ -56,6 +57,33 @@ object BinLayout {
     if (split == 1) 0
     else java.lang.Long.remainderUnsigned(
       Hashing.mix64(h ^ RouteSeed), split.toLong).toInt
+
+  /** A row's per-group slices (grp, base, split, hs) under the bin map
+    * `bins` (target -> (base, split)). A split-free target gives one slice
+    * carrying the row's own array; a split target gives, per spanned
+    * 64-bin group, exactly the hashes `routeBin` sends into that group's
+    * bins (a group it sends none gets no slice); a target missing from
+    * `bins` gives no slice. */
+  def slices(bins: collection.Map[String, (Int, Int)], target: String,
+      hs: Array[Long]): Iterator[ShardSlice] =
+    bins.get(target) match {
+      case None => Iterator.empty
+      case Some((base, 1)) => Iterator.single(ShardSlice(base >> 6, base, 1, hs))
+      case Some(_) if hs == null => Iterator.empty
+      case Some((base, split)) =>
+        val g0 = base >> 6
+        val out = Array.fill(((base + split - 1) >> 6) - g0 + 1)(
+          new scala.collection.mutable.ArrayBuilder.ofLong)
+        var i = 0
+        while (i < hs.length) {
+          out(((base + routeBin(hs(i), split)) >> 6) - g0) += hs(i)
+          i += 1
+        }
+        out.indices.iterator.collect {
+          case k if out(k).length > 0 =>
+            ShardSlice(g0 + k, base, split, out(k).result())
+        }
+    }
 
   def fromCounts(counts: Array[Long], maxHashesBin: Long): BinLayout = {
     val split = counts.map(c =>
@@ -413,7 +441,8 @@ object SketchDb {
  *
  *   pass 1  groupBy(target).agg(hll(shingles))   -> per-target cardinalities
  *   driver  Sizing.optimalHashes: capacity simulation + split-bin layout
- *   pass 2  route hashes to 64-bin groups map-side, groupBy(grp) building
+ *   pass 2  route each row map-side through the bin map (a lookup the
+ *           routing closure carries — no join), groupBy(grp) building
  *           one interleaved SHARD per group on executors
  *   driver  keep the G shards as the db's groups (a header re-window
  *           per shard — no OR-merging, no transposing, no per-partition
@@ -491,19 +520,15 @@ object SketchBuild {
   private def buildResident(spark: SparkSession, df: DataFrame,
       targetCol: String, contentCol: String, p: IbfParams,
       checkpointDir: Option[String], twoLevel: Boolean): SketchDb = {
-    val (cards, thePlan, layout, binsDf) =
+    val (cards, thePlan, layout, bins) =
       planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
         twoLevel)
     val nGroups = layout.numGroups
     val shards = new Array[InterleavedBloom](nGroups)
-    val coarseBins = binsDf.collect().toSeq.flatMap { r =>
+    val coarseBins = bins.collect().toSeq.flatMap { case (g, blob, coarseBlob) =>
       // re-window the 64-wide shard to the group's real bin count
-      val g = r.getInt(0)
-      shards(g) = windowed(
-        InterleavedBloom.fromBytes(r.getAs[Array[Byte]]("shard")), g,
-        layout.numBins)
-      if (twoLevel) Some((g, Bloom.fromBytes(r.getAs[Array[Byte]]("coarse"))))
-      else None
+      shards(g) = windowed(InterleavedBloom.fromBytes(blob), g, layout.numBins)
+      Option(coarseBlob).map(cb => (g, Bloom.fromBytes(cb)))
     }
     // groups whose targets routed ZERO hashes (all content empty/filtered)
     // produce no shard row: materialize empty shards so probe/sizeBytes
@@ -517,31 +542,34 @@ object SketchBuild {
   }
 
   /** The shared two-pass pipeline with the pass-2 result left DISTRIBUTED:
-    * one row per touched 64-bin group (grp, shard[, coarse]). */
+    * the shard pass's (grp, shard, coarse) rows. */
   private def planAndShard(spark: SparkSession, df: DataFrame,
       targetCol: String, contentCol: String, p: IbfParams,
       checkpointDir: Option[String], twoLevel: Boolean)
-      : (Seq[(String, Long)], IbfPlan, BinLayout, DataFrame) = {
+      : (Seq[(String, Long)], IbfPlan, BinLayout,
+        Dataset[(Int, Array[Byte], Array[Byte])]) = {
     import spark.implicits._
 
     val hashed = hashedProjection(df, targetCol, contentCol, p)
 
     // ---- pass 1 (or resume) ----
-    val tag = paramsTag(p) + s";target=$targetCol;content=$contentCol;two=$twoLevel"
-    val cardsDf = checkpointed(spark, checkpointDir, "pass1_cardinalities",
+    // v2: pass 2 always has a (possibly null) coarse column, so a pass-2
+    // checkpoint of a flat build from before it is recomputed, not misread
+    val tag = paramsTag(p) +
+      s";target=$targetCol;content=$contentCol;two=$twoLevel;v=2"
+    val cards = checkpointed(spark, checkpointDir, "pass1_cardinalities",
         tag) {
-      targetCardinalitiesHashed(hashed, p)
-    }
-    val cards = cardsDf.as[(String, Long)].collect().sortBy(_._1).toSeq
+      targetCardinalitiesHashed(hashed, p).as[(String, Long)]
+    }.collect().sortBy(_._1).toSeq
     val (thePlan, layout) = plan(cards, p)
 
     // ---- pass 2 (or resume): route -> one shard per 64-bin group ----
-    val binsDf = checkpointed(spark, checkpointDir, "pass2_group_shards",
+    val bins = checkpointed(spark, checkpointDir, "pass2_group_shards",
         tag) {
       shardPass(spark, hashed, thePlan, entriesOf(cards, layout),
         if (twoLevel) Some(coarseSizing(cards, layout, p.maxFp)) else None)
     }
-    (cards, thePlan, layout, binsDf)
+    (cards, thePlan, layout, bins)
   }
 
   /** Bin-map entries (target, base, split) of a planned layout. */
@@ -602,10 +630,10 @@ object SketchBuild {
       contentCol: String, dir: String, p: IbfParams = IbfParams(),
       checkpointDir: Option[String] = None,
       commitTag: Option[(String, Long)] = None): SketchDb = {
-    val (cards, thePlan, layout, binsDf) =
+    val (cards, thePlan, layout, bins) =
       planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
         twoLevel = true)
-    storeGeneration(spark, dir, p, cards, thePlan, layout, binsDf,
+    storeGeneration(spark, dir, p, cards, thePlan, layout, bins,
       commitTag = commitTag)
   }
 
@@ -616,7 +644,8 @@ object SketchBuild {
     * stitching the coarse filter driver-side. */
   private def storeGeneration(spark: SparkSession, dir: String, p: IbfParams,
       cards: Seq[(String, Long)], thePlan: IbfPlan, layout: BinLayout,
-      binsDf: DataFrame, basedOnGen: Option[Int] = None,
+      bins: Dataset[(Int, Array[Byte], Array[Byte])],
+      basedOnGen: Option[Int] = None,
       commitTag: Option[(String, Long)] = None): SketchDb = {
     import spark.implicits._
     val numBins = layout.numBins
@@ -627,16 +656,13 @@ object SketchBuild {
       // ONE action: write each group's (re-windowed) shard blob
       // executor-side, return only (grp, coarseBlob) — the driver-bounded
       // metadata
-      val coarseRows = binsDf
-        .select(col("grp"), col("shard"), col("coarse"))
-        .as[(Int, Array[Byte], Array[Byte])]
-        .mapPartitions { iter =>
-          iter.map { case (g, blob, coarseBlob) =>
-            graft.io.SketchStore.writeShardBlob(conf.value, shardDir, g,
-              windowed(InterleavedBloom.fromBytes(blob), g, numBins).toBytes)
-            (g, coarseBlob)
-          }
-        }.collect()
+      val coarseRows = bins.mapPartitions { iter =>
+        iter.map { case (g, blob, coarseBlob) =>
+          graft.io.SketchStore.writeShardBlob(conf.value, shardDir, g,
+            windowed(InterleavedBloom.fromBytes(blob), g, numBins).toBytes)
+          (g, coarseBlob)
+        }
+      }.collect()
       // untouched groups (all content empty/filtered) get the NoBlobGen
       // sentinel: readers probe them as all-empty bins, so NO blob is
       // written — the old driver-serial empty-blob loop was one filesystem
@@ -653,76 +679,40 @@ object SketchBuild {
     }
   }
 
-  /** The routed shard aggregation over the (target, hs) projection for the
-    * given bin-map entries (target, base, split). Returns one row per
-    * touched 64-bin group (grp, shard), plus the group's coarse union Bloom
-    * (`coarse`) when `coarse` gives its (bits, hashes); each of
+  /** The one shard pass of every sketch writer: route each (target, hs)
+    * row through the bin-map entries (target, base, split) and aggregate
+    * one interleaved shard per touched 64-bin group. Returns
+    * (grp, shard, coarse) rows, `coarse` being the group's union Bloom when
+    * `coarse` gives its (bits, hashes) and null otherwise; each of
     * `maskGroups` also gets a row, with a null shard when no hash routed
-    * to it. The shuffle is as wide as the groups the entries and
-    * `maskGroups` span: every group for a build, only the touched ones for
-    * an update. */
+    * to it. Rows of targets missing from the entries route nowhere. The
+    * shuffle is as wide as the groups the entries and `maskGroups` span:
+    * every group for a build, only the touched ones for an update. */
   private def shardPass(spark: SparkSession, hashed: DataFrame,
       thePlan: IbfPlan, entries: Seq[(String, Int, Int)],
-      coarse: Option[(Long, Int)], maskGroups: Seq[Int] = Nil): DataFrame = {
+      coarse: Option[(Long, Int)], maskGroups: Seq[Int] = Nil)
+      : Dataset[(Int, Array[Byte], Array[Byte])] = {
     import spark.implicits._
-    val layoutDf = broadcast(
-      spark.createDataFrame(entries).toDF("target", "base", "split"))
+    // the bin map rides in the routing closure, so it ships with the
+    // stage's task binary: no join, no job, no broadcast handle
+    val bins = entries.map { case (t, b, n) => t -> ((b, n)) }.toMap
     val parts = math.max(spark.sparkContext.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
     val numGroups = (entries.flatMap { case (_, b, n) =>
       b / 64 to (b + n - 1) / 64 } ++ maskGroups).distinct.size
 
-    // SPLIT-FREE layouts (every target fits one technical bin — the common
-    // case whenever maxHashesBin covers the largest target): a row's whole
-    // hash set lands in the single group base/64, so routing is a pure
-    // column function — no per-row UDF invoke, tuple allocation or
-    // generic explode on the build hot path (guide §4: built-ins over
-    // closures). Split layouts keep the per-hash routing UDF below;
-    // either path feeds IbfShardAgg, which re-routes per hash anyway.
-    // NOTE: no row-level empty-hs filter here — a predicate on `hs` gets
-    // pushed through the shingle projection by substitution and re-runs
-    // the kernel per row (asserted by PlanShapeSpec); empty slices
-    // are instead ignored by IbfShardAgg and never-fed groups drop via
-    // the null-shard filter after the aggregation.
-    val anySplit = entries.exists(_._3 > 1)
-    val routedDelta =
-      if (!anySplit)
-        hashed.join(layoutDf, Seq("target"))
-          .select(shiftright(col("base"), 6).as("grp"), col("base"),
-            col("split"), col("hs"))
-      else {
-        // per-(row x spanned-group) hash subsets, computed map-side so the
-        // one shuffle carries exactly the per-row-deduped hashes
-        val route = udf((hs: Array[Long], base: Int, split: Int) => {
-          if (hs == null || hs.isEmpty) Array.empty[(Int, Array[Long])]
-          else if (split == 1) Array((base / 64, hs))
-          else {
-            val byGrp = scala.collection.mutable.LinkedHashMap
-              .empty[Int, scala.collection.mutable.ArrayBuilder.ofLong]
-            var i = 0
-            while (i < hs.length) {
-              val bin = base + BinLayout.routeBin(hs(i), split)
-              byGrp.getOrElseUpdate(bin / 64,
-                new scala.collection.mutable.ArrayBuilder.ofLong) += hs(i)
-              i += 1
-            }
-            byGrp.iterator.map { case (g, b) => (g, b.result()) }.toArray
-          }
-        })
-        hashed
-          .join(layoutDf, Seq("target"))
-          .select(col("base"), col("split"),
-            explode(route(col("hs"), col("base"), col("split"))).as("r"))
-          .select(col("r._1").as("grp"), col("base"), col("split"),
-            col("r._2").as("hs"))
-      }
-    // one hash-less slice per mask group: it lands in the group's
-    // aggregation, so the group comes out even when no delta reaches it
-    val routed =
-      if (maskGroups.isEmpty) routedDelta
-      else routedDelta.unionByName(maskGroups
-        .map(g => (g, g * 64, 1, null: Array[Long]))
-        .toDF("grp", "base", "split", "hs"))
+    // per-(row x spanned-group) hash subsets, computed map-side so the one
+    // shuffle carries exactly the per-row-deduped hashes. NOTE: no
+    // row-level empty-hs filter here — a predicate on `hs` gets pushed
+    // through the shingle projection by substitution and re-runs the
+    // kernel per row (asserted by PlanShapeSpec); empty slices are instead
+    // ignored by IbfShardAgg and never-fed groups drop via the null-shard
+    // filter after the aggregation. One hash-less slice per mask group
+    // lands in the group's aggregation, so the group comes out even when
+    // no delta reaches it
+    val routed = hashed.as[(String, Array[Long])]
+      .flatMap { case (t, hs) => BinLayout.slices(bins, t, hs) }
+      .union(maskGroups.map(g => ShardSlice(g, g * 64, 1, null)).toDS())
     // enough groups -> exchange-free complete aggregation (one task per
     // group, zero partial blobs); few groups -> map-side partials are
     // cheap (numGroups x shardBytes per task) and keep input parallelism
@@ -732,12 +722,9 @@ object SketchBuild {
     val pre =
       if (numGroups >= parts) routed.repartition(numGroups, col("grp"))
       else routed
-    val aggCols =
-      GraftFunctions.ibfShard(col("grp"), col("base"), col("split"),
-        col("hs"), thePlan.bitsPerBin, thePlan.numHashes).as("shard") ::
-      coarse.map { case (bits, h) =>
-        GraftFunctions.bloomSketch(col("hs"), bits, h).as("coarse")
-      }.toList
+    val coarseCol = coarse.fold(lit(null).cast("binary")) { case (bits, h) =>
+      GraftFunctions.bloomSketch(col("hs"), bits, h)
+    }
     // a null shard marks a group that never received a non-empty slice
     // (all its targets' content empty/filtered): drop it, preserving the
     // untouched-group semantics (NoBlobGen sentinel / implicit empty),
@@ -745,7 +732,12 @@ object SketchBuild {
     val keep =
       if (maskGroups.isEmpty) col("shard").isNotNull
       else col("shard").isNotNull || col("grp").isin(maskGroups: _*)
-    pre.groupBy("grp").agg(aggCols.head, aggCols.tail: _*).filter(keep)
+    pre.groupBy("grp")
+      .agg(GraftFunctions.ibfShard(col("grp"), col("base"), col("split"),
+          col("hs"), thePlan.bitsPerBin, thePlan.numHashes).as("shard"),
+        coarseCol.as("coarse"))
+      .filter(keep)
+      .as[(Int, Array[Byte], Array[Byte])]
   }
 
   /**
@@ -774,7 +766,7 @@ object SketchBuild {
     // group on the driver; old shards are read through the db's own
     // accessor, so a store-backed db updates too
     val delta = hashedOpt.filter(_ => a.delta.nonEmpty)
-      .map(deltaShards(spark, db, _, a.delta, Nil).collect())
+      .map(shardPass(spark, _, db.plan, a.delta, coarseParams(db)).collect())
       .getOrElse(Array.empty)
     val deltaOf = delta.map { case (g, shard, _) => g -> shard }.toMap
     val numBins = a.layout.numBins
@@ -861,20 +853,9 @@ object SketchBuild {
       delta, masks)
   }
 
-  /** The delta's shard pass for an update of `db`: (grp, shard, coarse
-    * union — null without a coarse level) per touched group, plus a
-    * null-shard row per `maskGroups` group the delta misses. */
-  private def deltaShards(spark: SparkSession, db: SketchDb,
-      hashed: DataFrame, entries: Seq[(String, Int, Int)],
-      maskGroups: Seq[Int]): Dataset[(Int, Array[Byte], Array[Byte])] = {
-    import spark.implicits._
-    val coarse = Option(db.coarse).map(c => (c.bitsPerBin, c.numHashes))
-    shardPass(spark, hashed, db.plan, entries, coarse, maskGroups)
-      .select(col("grp"), col("shard"),
-        if (coarse.isDefined) col("coarse")
-        else lit(null).cast("binary").as("coarse"))
-      .as[(Int, Array[Byte], Array[Byte])]
-  }
+  /** (bits, hashes) of `db`'s coarse filter; None without one. */
+  private def coarseParams(db: SketchDb): Option[(Long, Int)] =
+    Option(db.coarse).map(c => (c.bitsPerBin, c.numHashes))
 
   /** The one per-group delta apply of [[update]] and [[updateStored]]:
     * zero the group's removed bin ranges `mask` in `old` (IN PLACE — pass
@@ -976,18 +957,20 @@ object SketchBuild {
       //    writes the NEW generation's blob; only the written groups and
       //    their coarse deltas return to the driver
       val numBinsNew = a.layout.numBins
-      val maskB = spark.sparkContext.broadcast(a.masks)
-      val masked = a.masks.keys.toSeq.sorted
+      // the masks ride in the rewrite closure, like the shard pass's bin map
+      val masks = a.masks
+      val masked = masks.keys.toSeq.sorted
       val rows: Option[Dataset[(Int, Array[Byte], Array[Byte])]] =
         hashedOpt.filter(_ => a.delta.nonEmpty) match {
-          case Some(h) => Some(deltaShards(spark, db0, h, a.delta, masked))
+          case Some(h) =>
+            Some(shardPass(spark, h, db0.plan, a.delta, coarseParams(db0),
+              masked))
           case None if masked.nonEmpty =>
             Some(masked.map(g => (g, null: Array[Byte], null: Array[Byte]))
               .toDS())
           case None => None
         }
       val written: Array[(Int, Array[Byte])] = rows.map(_.mapPartitions { iter =>
-        val masks = maskB.value
         iter.flatMap { case (g, blob, coarseBlob) =>
           val old =
             if (g < oldNumGroups)
@@ -1003,9 +986,6 @@ object SketchBuild {
             }
         }
       }.collect()).getOrElse(Array.empty)
-      // the one consumer of the mask has completed — destroy the broadcast
-      // now rather than leaking one per update on a long-lived session
-      maskB.destroy()
 
       // 2. per-group generation pointers: groups whose blob was WRITTEN
       //    this generation point at it; untouched groups keep their old
@@ -1062,8 +1042,8 @@ object SketchBuild {
    *
    * `df` must hold the content of exactly the store's CURRENT targets
    * (`targetCol` matching the manifest's target set): rows for unknown
-   * targets are ignored by the shard rout(e)ing join, and a target absent
-   * from `df` would come back with empty bins.
+   * targets route nowhere in the shard pass, and a target absent from
+   * `df` would come back with empty bins.
    */
   def compactStored(spark: SparkSession, dir: String, df: DataFrame,
       targetCol: String, contentCol: String): SketchDb =
@@ -1081,10 +1061,10 @@ object SketchBuild {
     // capacity re-fit, split counts re-derived
     val cards = m.targets.zip(m.counts).sortBy(_._1).toSeq
     val (thePlan, layout) = plan(cards, p)
-    val binsDf = shardPass(spark, hashedProjection(df, targetCol, contentCol, p),
+    val bins = shardPass(spark, hashedProjection(df, targetCol, contentCol, p),
       thePlan, entriesOf(cards, layout),
       Some(coarseSizing(cards, layout, p.maxFp)))
-    storeGeneration(spark, dir, p, cards, thePlan, layout, binsDf,
+    storeGeneration(spark, dir, p, cards, thePlan, layout, bins,
       basedOnGen = Some(m.generation))
   }
 
@@ -1098,8 +1078,9 @@ object SketchBuild {
     s"k=${p.k};w=${p.w};seed=${p.seed};maxFp=${p.maxFp};hllP=${p.hllP};" +
       s"minLen=${p.minContentLen};mode=${p.sizingMode}"
 
-  private def checkpointed(spark: SparkSession, dir: Option[String],
-      stage: String, tag: String)(make: => DataFrame): DataFrame = dir match {
+  private def checkpointed[T: org.apache.spark.sql.Encoder](
+      spark: SparkSession, dir: Option[String], stage: String, tag: String)(
+      make: => Dataset[T]): Dataset[T] = dir match {
     case None => make
     case Some(d) =>
       val path = s"$d/$stage"
@@ -1114,6 +1095,6 @@ object SketchBuild {
         try out.write(tag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         finally out.close()
       }
-      spark.read.parquet(path)
+      spark.read.parquet(path).as[T]
   }
 }

@@ -420,14 +420,17 @@ object SketchStore {
     if (shardGens(g) == NoBlobGen) None
     else {
       val path = new Path(s"${shardDirOf(dir, shardGens(g))}/grp_$g.bin")
-      val fs = path.getFileSystem(conf)
-      if (!fs.exists(path)) throw new IllegalStateException(
-        s"shard blob grp_$g.bin missing at generation ${shardGens(g)} " +
-          s"under $dir — a superseded generation was gc'd while a handle " +
-          "was still pinned to it (raise gcGenerations keepGens), or the " +
-          "store is corrupt")
+      val in =
+        try path.getFileSystem(conf).open(path)
+        catch {
+          case e: java.io.FileNotFoundException =>
+            throw new IllegalStateException(
+              s"shard blob grp_$g.bin missing at generation ${shardGens(g)} " +
+                s"under $dir — a superseded generation was gc'd while a " +
+                "handle was still pinned to it (raise gcGenerations " +
+                "keepGens), or the store is corrupt", e)
+        }
       shardBlobReads.incrementAndGet()
-      val in = fs.open(path)
       try Some(readIbfStream(in)) finally in.close()
     }
 

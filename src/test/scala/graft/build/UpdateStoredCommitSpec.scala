@@ -99,6 +99,9 @@ class UpdateStoredCommitSpec extends AnyFunSuite {
         "target", "content"))
       assert(cost.jobs == addOnly.jobs,
         s"add+remove ran ${cost.jobs} jobs, add alone ${addOnly.jobs}")
+      // the bin map rides in the shard pass's task binary, so it costs no
+      // job of its own (a broadcast-joined bin map adds a fifth)
+      assert(addOnly.jobs <= 4, s"an add commit ran ${addOnly.jobs} jobs")
       // a removal-only commit is that one rewrite job and nothing else
       val (_, rmOnly) = costOf(SketchBuild.updateStored(spark, dir, null,
         "target", "content", removeTargets = Seq(names(1))))

@@ -114,6 +114,24 @@ class BuildClassifySpec extends AnyFunSuite {
     assert(allRows == repSum)
   }
 
+  test(".rep sink: writeRepTsv writes the report as a headed TSV that reads " +
+      "back equal") {
+    val res = Classify.classify(spark, corpus.limit(100), "path", "content", db)
+    val rep = Classify.report(res).cache()
+    val dir = java.nio.file.Files.createTempDirectory("graft_rep").toString
+    graft.io.Formats.writeRepTsv(rep, s"$dir/rep")
+    val files = new java.io.File(s"$dir/rep").listFiles()
+      .filter(_.getName.endsWith(".csv"))
+    assert(files.length == 1, "one TSV file")
+    val lines = scala.io.Source.fromFile(files.head, "UTF-8").getLines().toList
+    assert(lines.head == rep.columns.mkString("\t"))
+    val back = spark.read.option("sep", "\t").option("header", "true")
+      .schema(rep.schema).csv(s"$dir/rep")
+    assert(back.collect().toSet == rep.collect().toSet)
+    assert(lines.size == rep.count() + 1)
+    rep.unpersist()
+  }
+
   test(".sta report: 18 reference columns, internally consistent counters") {
     val ds = corpus.limit(200).withColumn("id", $"path")
     // strict rel-filter (keep only the max-count match) forces discards on

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec,
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +20,8 @@ import graft.spark.{GraftFunctions, ShinglesExpr, SparkTestSession}
 
 /** Physical-plan properties the engine's design relies on: every classify
   * entry point is one map-only probe over the shingle projection, the
-  * split-free build evaluates the shingle kernel once per scan, only a
+  * build evaluates the shingle kernel once per scan whether or not a
+  * target splits, no sketch writer's shard pass plans a join, only a
   * two-level build aggregates a coarse filter, and LSH candidate
   * generation plans no Window. */
 class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
@@ -28,20 +30,26 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private val p = IbfParams(k = 4, w = 6, maxFp = 0.01)
 
-  /** Equal-length random texts, one per target, read back from parquet so
-    * the plans start at a file scan as in production. */
-  private lazy val docs: DataFrame = {
+  /** Random texts read back from parquet so the plans start at a file
+    * scan as in production: `n` rows per target "t<i>" for each (i, n). */
+  private def parquetDocs(rowsPerTarget: Seq[(Int, Int)]): DataFrame = {
     val rnd = new scala.util.Random(7)
-    val rows = (0 until 24).map { i =>
-      (s"t$i", i.toLong, s"s${i % 3}",
+    val rows = for ((i, n) <- rowsPerTarget; j <- 0 until n) yield
+      (s"t$i", i * 1000L + j, s"s${i % 3}",
         Array.fill(300)("ACGT"(rnd.nextInt(4))).mkString,
         Array.fill(120)("ACGT"(rnd.nextInt(4))).mkString)
-    }
     val dir = java.nio.file.Files.createTempDirectory("graft_plan").toString
     rows.toDF("target", "id", "sample", "content", "mate")
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
   }
+
+  /** Equal-length texts, one per target: a split-free layout. */
+  private lazy val docs: DataFrame = parquetDocs((0 until 24).map(_ -> 1))
+
+  /** The same, with target t0 holding 40 texts: it splits. */
+  private lazy val splitDocs: DataFrame =
+    parquetDocs((0 until 24).map(i => i -> (if (i == 0) 40 else 1)))
 
   private def shingleCount(plan: SparkPlan): Int =
     plan.expressions.map(_.collect { case s: ShinglesExpr => s }.size).sum
@@ -94,7 +102,8 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       override def onFailure(f: String, qe: QueryExecution, e: Exception)
           : Unit = ()
     }
-    docs.count() // the fixture's own write/read stays out of the capture
+    docs.count() // the fixtures' own write/read stays out of the capture
+    splitDocs.count()
     GraftTestAccess.drain(spark.sparkContext)
     spark.listenerManager.register(listener)
     val out = try {
@@ -105,30 +114,57 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     (out, plans.synchronized(plans.toSeq))
   }
 
-  test("split-free SketchBuild.build evaluates graft_shingles once per scan") {
-    val (db, plans) =
-      withPlans(SketchBuild.build(spark, docs, "target", "content", p))
-    assert(db.layout.split.forall(_ == 1), "fixture must be split-free")
-    val hashing = plans.flatMap { plan =>
-      val n = collect(plan) { case node => shingleCount(node) }.sum
-      if (n == 0) None
-      else Some((n, collect(plan) { case s: FileSourceScanExec => s }.size,
-        plan.treeString))
+  test("SketchBuild.build evaluates graft_shingles once per scan, any split") {
+    Seq(docs -> false, splitDocs -> true).foreach { case (fixture, split) =>
+      val (db, plans) =
+        withPlans(SketchBuild.build(spark, fixture, "target", "content", p))
+      assert(db.layout.split.exists(_ > 1) == split,
+        s"fixture must ${if (split) "" else "not "}split")
+      val hashing = plans.flatMap { plan =>
+        val n = collect(plan) { case node => shingleCount(node) }.sum
+        if (n == 0) None
+        else Some((n, collect(plan) { case s: FileSourceScanExec => s }.size,
+          plan.treeString))
+      }
+      // pass 1 (HLL sizing) and pass 2 (shard aggregation)
+      assert(hashing.size == 2, hashing.map(_._3).mkString("\n"))
+      hashing.foreach { case (n, scans, tree) =>
+        assert(n == scans, s"$n kernel evaluations over $scans scans:\n$tree")
+      }
     }
-    // pass 1 (HLL sizing) and pass 2 (shard aggregation)
-    assert(hashing.size == 2, hashing.map(_._3).mkString("\n"))
-    hashing.foreach { case (n, scans, tree) =>
-      assert(n == scans, s"$n kernel evaluations over $scans scans:\n$tree")
+  }
+
+  private def aggregates(plan: SparkPlan): Seq[String] =
+    collect(plan) { case a: BaseAggregateExec =>
+      a.aggregateExpressions.map(_.aggregateFunction.nodeName)
+    }.flatten
+
+  test("no shard-pass plan of any sketch writer holds a join") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_store")
+      .toString + "/store"
+    val grow = splitDocs.filter($"target" === "t1")
+    val (_, plans) = withPlans {
+      val flat = SketchBuild.build(spark, splitDocs, "target", "content", p)
+      SketchBuild.buildTwoLevel(spark, splitDocs, "target", "content", p)
+      SketchBuild.update(spark, flat, grow, "target", "content", Seq("t2"))
+      SketchBuild.buildToStore(spark, splitDocs, "target", "content", dir, p)
+      SketchBuild.updateStored(spark, dir, grow, "target", "content",
+        Seq("t2"))
+      SketchBuild.compactStored(spark, dir,
+        splitDocs.filter($"target" =!= "t2"), "target", "content")
+    }
+    val shardPlans = plans.filter(aggregates(_).contains("IbfShardAgg"))
+    assert(shardPlans.size == 6, s"${shardPlans.size} shard-pass plans")
+    shardPlans.foreach { plan =>
+      assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty,
+        plan.treeString)
     }
   }
 
   test("a flat build aggregates shards only; a two-level build adds the " +
       "coarse union Bloom") {
-    def aggregates(plans: Seq[SparkPlan]): Set[String] = plans.flatMap { plan =>
-      collect(plan) { case a: BaseAggregateExec =>
-        a.aggregateExpressions.map(_.aggregateFunction.nodeName)
-      }.flatten
-    }.toSet
+    def aggregates(plans: Seq[SparkPlan]): Set[String] =
+      plans.flatMap(this.aggregates).toSet
     val (_, flat) =
       withPlans(SketchBuild.build(spark, docs, "target", "content", p))
     val (_, two) =

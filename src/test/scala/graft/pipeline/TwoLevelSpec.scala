@@ -158,6 +158,24 @@ class TwoLevelSpec extends AnyFunSuite {
     assert(counts(ownBin) >= hs.length)
   }
 
+  test("BinLayout.slices: exact per-group subsets; unknown targets route " +
+      "nowhere") {
+    import graft.build.BinLayout
+    val hs = Array.tabulate(500)(i => graft.core.Hashing.hashLong(i, 5L))
+    // "one" is split-free; "wide" spans bins 60..139, i.e. groups 0..2
+    val bins = Map("one" -> ((3, 1)), "wide" -> ((60, 80)))
+    val one = BinLayout.slices(bins, "one", hs).toList
+    assert(one.size == 1 && one.head.grp == 0 && (one.head.hs eq hs))
+    assert(BinLayout.slices(bins, "absent", hs).isEmpty)
+    val wide = BinLayout.slices(bins, "wide", hs).toList
+    assert(wide.map(_.grp).sorted == List(0, 1, 2))
+    wide.foreach { s =>
+      assert(s.base == 60 && s.split == 80)
+      assert(s.hs.forall(h => (60 + BinLayout.routeBin(h, 80)) / 64 == s.grp))
+    }
+    assert(wide.flatMap(_.hs).sorted == hs.toList.sorted)
+  }
+
   test("two-level build survives a whole 64-bin group with zero hashes") {
     // >64 single-bin targets where the name-sorted TAIL (its own group)
     // has content shorter than k: those bins route nothing, the group gets

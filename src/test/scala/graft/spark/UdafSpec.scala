@@ -50,6 +50,23 @@ class UdafSpec extends AnyFunSuite {
     df.unpersist()
   }
 
+  test("hll sketch udaf: per-group sketches merge to the one-pass count") {
+    GraftFunctions.register(spark)
+    val df = hashDs(1500).withColumn("g", pmod($"hs"(0), lit(4L))).cache()
+    df.createOrReplaceTempView("t_hll")
+    val whole = df.agg(GraftFunctions.hllCount($"hs", 14)).first().getLong(0)
+    def merged(sketches: Seq[Array[Byte]]): Long =
+      sketches.map(Hll.fromBytes).reduce(_.merge(_)).estimate
+    val api = df.groupBy("g").agg(GraftFunctions.hllSketch($"hs", 14))
+      .collect().map(_.getAs[Array[Byte]](1)).toSeq
+    val sql = spark.sql("select graft_hll_sketch(hs) from t_hll group by g")
+      .collect().map(_.getAs[Array[Byte]](0)).toSeq
+    assert(api.size == 4 && sql.size == 4)
+    assert(merged(api) == whole && merged(sql) == whole,
+      s"one pass $whole, merged api ${merged(api)}, merged sql ${merged(sql)}")
+    df.unpersist()
+  }
+
   test("cms udaf: never under, within eps*N, split-invariant") {
     val df = hashDs(500).cache()
     val bytes = Seq(1, 4, 11).map { p =>
