@@ -109,6 +109,19 @@ trait ProbeDb extends Serializable {
   /** Split-corrected expected FPR of target `t` (GanonClassify.cpp:968-979:
     * 1 - (1 - fp_bin)^n_bins_target over the average per-bin load). */
   def binFpr(t: Int): Double
+  /** `math.log(binFpr(t))` at 2t and `math.log1p(-binFpr(t))` at 2t+1: the
+    * fpr-query's per-target logs, computed once per db instance (once per
+    * executor for a broadcast db) instead of once per surviving match. */
+  @transient lazy val binFprLogs: Array[Double] = {
+    val out = new Array[Double](2 * targets.length)
+    var t = 0
+    while (t < targets.length) {
+      val p = binFpr(t)
+      out(2 * t) = math.log(p); out(2 * t + 1) = math.log1p(-p)
+      t += 1
+    }
+    out
+  }
   /** Count hash membership per TARGET into `counts` (len >= targets.length).
     * `cutoff` is the per-read threshold known BEFORE probing — a coarse
     * level uses it to prune whole groups (the reference's HIBF pushdown,

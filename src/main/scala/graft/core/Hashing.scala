@@ -84,7 +84,8 @@ object Hashing {
    * (w,k)-minimizers: minimum hash in every window of `w` consecutive
    * characters (= w-k+1 consecutive k-mers), deduplicated & sorted.
    * w == k degenerates to "all distinct k-mer hashes".
-   * Monotone-deque sliding minimum — O(n).
+   * Sliding minimum that rescans the window only when its minimum expires
+   * (see [[minimizersBytes]]), then a linear-time [[sortedDistinct]].
    *
    * Minimum is taken in UNSIGNED 64-bit order (hashes are uniform; the
    * reference's uint64_t comparison is unsigned — GanonBuild.cpp:41).
@@ -93,9 +94,12 @@ object Hashing {
     minimizersBytes(content.getBytes(java.nio.charset.StandardCharsets.UTF_8), k, w, seed)
 
   /**
-   * Fused single pass: rolling k-mer hash + monotone-deque window minimum +
+   * Fused single pass: rolling k-mer hash + sliding window minimum +
    * consecutive-repeat suppression, with no intermediate k-mer array — the
-   * per-row hot loop the engine's throughput rides on.
+   * per-row hot loop the engine's throughput rides on. The window minimum
+   * is kept as a running minimum and recomputed by a rescan of the
+   * window only when it expires: ~1 extra compare per k-mer for uniform
+   * hashes, O(w) per k-mer at worst (a strictly rising hash sequence).
    */
   def minimizersBytes(content: Array[Byte], k: Int, w: Int,
       seed: Long = DefaultSeed): Array[Long] = {
@@ -154,8 +158,7 @@ object Hashing {
       if (ki >= nKmers) {
         // content shorter than one full window: emit the single min
         if (nOut == 0) { out(0) = minU - Long.MinValue; nOut = 1 }
-        return sortedDistinct(
-          if (nOut == out.length) out else java.util.Arrays.copyOf(out, nOut))
+        return sortedDistinct(out, nOut)
       }
       val p = ki + k - 1
       h = (h - (content(ki - 1) & 0xFF) * pk1) * Prime + (content(p) & 0xFF)
@@ -185,24 +188,84 @@ object Hashing {
     sortedDistinct(out)
   }
 
-  @inline private def uLt(a: Long, b: Long): Boolean =
-    (a + Long.MinValue) < (b + Long.MinValue)
+  /** Arrays (and buckets) up to this size sort by plain insertion. */
+  private final val InsertionMax = 32
 
-  /** Sort (unsigned order) + dedupe in place; returns possibly-shorter array. */
-  def sortedDistinct(a: Array[Long]): Array[Long] = {
-    if (a.length <= 1) return a
-    // unsigned sort: flip sign bit, sort signed, flip back
+  /** Sort (unsigned order) + dedupe; returns possibly-shorter array. */
+  def sortedDistinct(a: Array[Long]): Array[Long] = sortedDistinct(a, a.length)
+
+  /**
+   * The distinct values of `a(0 until n)` in unsigned-ascending order, as
+   * an exact-length array (`a` itself when it already is one). `a`'s
+   * contents are unspecified afterwards.
+   *
+   * Linear-time for the engine's inputs: one counting pass scatters the
+   * values into 2^b buckets by their top significant bits, then each
+   * bucket is insertion-sorted. The shift comes from the OR of the
+   * inputs, not from bit 63, because minimizers are window minima and
+   * skew toward zero. Bucket order is unsigned order, and every value in
+   * one bucket shares the sign bit, so an oversize bucket (heavy
+   * duplication, a dense cluster beside an outlier) can take a signed
+   * `Arrays.sort` and worst-case input stays O(n log n).
+   */
+  def sortedDistinct(a: Array[Long], n: Int): Array[Long] = {
+    if (n <= InsertionMax) {
+      insertionSortU(a, 0, n)
+      return distinctPrefix(a, n)
+    }
+    var or = 0L
     var i = 0
-    while (i < a.length) { a(i) ^= Long.MinValue; i += 1 }
-    java.util.Arrays.sort(a)
-    var n = 1
-    i = 1
-    while (i < a.length) {
-      if (a(i) != a(n - 1)) { a(n) = a(i); n += 1 }
+    while (i < n) { or |= a(i); i += 1 }
+    val b = math.min(20, 31 - Integer.numberOfLeadingZeros(n))
+    val shift = math.max(0, 64 - java.lang.Long.numberOfLeadingZeros(or) - b)
+    val end = new Array[Int](1 << b) // bucket sizes, then bucket ends
+    i = 0
+    while (i < n) { end((a(i) >>> shift).toInt) += 1; i += 1 }
+    var acc = 0
+    var j = 0
+    while (j < end.length) { val c = end(j); end(j) = acc; acc += c; j += 1 }
+    val out = new Array[Long](n)
+    i = 0
+    while (i < n) {
+      val v = a(i)
+      val bk = (v >>> shift).toInt
+      out(end(bk)) = v; end(bk) += 1
       i += 1
     }
-    i = 0
-    while (i < n) { a(i) ^= Long.MinValue; i += 1 }
-    if (n == a.length) a else java.util.Arrays.copyOf(a, n)
+    var from = 0
+    j = 0
+    while (j < end.length) {
+      val to = end(j)
+      if (to - from > InsertionMax) java.util.Arrays.sort(out, from, to)
+      else if (to - from > 1) insertionSortU(out, from, to)
+      from = to
+      j += 1
+    }
+    distinctPrefix(out, n)
+  }
+
+  /** Unsigned insertion sort of `a(from until to)`. */
+  private def insertionSortU(a: Array[Long], from: Int, to: Int): Unit = {
+    var i = from + 1
+    while (i < to) {
+      val v = a(i)
+      val vu = v + Long.MinValue
+      var j = i - 1
+      while (j >= from && a(j) + Long.MinValue > vu) { a(j + 1) = a(j); j -= 1 }
+      a(j + 1) = v
+      i += 1
+    }
+  }
+
+  /** Dedupe the sorted `a(0 until n)` in place; exact-length result. */
+  private def distinctPrefix(a: Array[Long], n: Int): Array[Long] = {
+    if (n == 0) return Array.emptyLongArray
+    var m = 1
+    var i = 1
+    while (i < n) {
+      if (a(i) != a(m - 1)) { a(m) = a(i); m += 1 }
+      i += 1
+    }
+    if (m == a.length) a else java.util.Arrays.copyOf(a, m)
   }
 }

@@ -31,30 +31,49 @@ object MathFns {
     }
   }
 
+  /** Size of the log-factorial table: `lgamma(j + 1.0)` for j < 2^16. */
+  private final val LogFactN = 1 << 16
+
+  /** `lgamma(j + 1.0)` for j < [[LogFactN]], built once per JVM (512 KB).
+    * Each entry is the same function on the same argument as a direct
+    * call, so a tail read from the table is bit-identical to one that
+    * calls `lgamma` per term. */
+  private lazy val logFactTable: Array[Double] =
+    Array.tabulate(LogFactN)(j => lgamma(j + 1.0))
+
+  /** log(j!) = `lgamma(j + 1.0)`: a table read below 2^16, else a call. */
+  @inline private def logFact(j: Long, tab: Array[Double]): Double =
+    if (j < LogFactN) tab(j.toInt) else lgamma(j + 1.0)
+
   /**
    * P(X >= k) for X ~ Binomial(n, p). Sums the tail in log space from the
    * largest term down; stops when terms stop contributing.
    */
-  def binomTailUpper(n: Long, k: Long, p: Double): Double = {
+  def binomTailUpper(n: Long, k: Long, p: Double): Double =
+    binomTailUpper(n, k, p, math.log(p), math.log1p(-p))
+
+  /** [[binomTailUpper]] with `lp = math.log(p)` and `lq = math.log1p(-p)`
+    * supplied by the caller — the fpr-query computes them once per target,
+    * not once per match. */
+  def binomTailUpper(n: Long, k: Long, p: Double, lp: Double,
+      lq: Double): Double = {
     if (k <= 0) return 1.0
     if (k > n) return 0.0
     if (p <= 0.0) return 0.0
     if (p >= 1.0) return 1.0
-    val lp = math.log(p)
-    val lq = math.log1p(-p)
     // terms rise to the distribution mode then fall monotonically: once a
     // term past the mode underflows to 0.0 every later term is 0 too, so
     // stop — without this, a confident match in a low-FPR db (q below
-    // double range) would scan all n-k terms at 2 lgamma calls each
+    // double range) would scan all n-k terms
     val mode = math.floor((n + 1) * p).toLong
-    // log C(n, i) = lgamma(n+1) - lgamma(i+1) - lgamma(n-i+1), with
-    // lgamma(n+1) computed once per tail
-    val lgN = lgamma(n + 1.0)
+    // log C(n, i) = log n! - log i! - log (n-i)!, log n! read once per tail
+    val tab = logFactTable
+    val lgN = logFact(n, tab)
     var acc = 0.0
     var i = k
     var consecTiny = 0
     while (i <= n && consecTiny < 3) {
-      val lt = (lgN - lgamma(i + 1.0) - lgamma(n - i + 1.0)) +
+      val lt = (lgN - logFact(i, tab) - logFact(n - i, tab)) +
         i * lp + (n - i) * lq
       val t = math.exp(lt)
       if (t == 0.0 && i >= mode) return math.min(1.0, acc)

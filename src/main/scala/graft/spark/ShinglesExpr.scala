@@ -18,7 +18,9 @@ import graft.core.Hashing
  * String decode (hashes UTF8String bytes directly), and (c) falling out
  * of whole-stage codegen (doGenCode emits a static call). At 200k rows
  * x ~800 hashes the UDF version allocated ~170M boxed longs; this
- * allocates two primitive arrays per row.
+ * allocates only primitive arrays per row (the content bytes, the window
+ * ring, the minimizer buffer, the dedup's buckets and the result) and
+ * boxes nothing.
  */
 case class ShinglesExpr(child: Expression, k: Int, w: Int, seed: Long)
     extends UnaryExpression {
@@ -98,41 +100,31 @@ object TokenHashesExpr {
   def compute(s: UTF8String, seed: Long, distinct: Boolean)
       : UnsafeArrayData = {
     val b = s.getBytes
-    val out = new Array[Long](16.max(b.length / 4))
-    var n = 0
-    var i = 0
     val len = b.length
+    // count the tokens first so the hash buffer is exact-size
+    var nTok = 0
+    var i = 0
+    while (i < len) {
+      while (i < len && isWs(b(i))) i += 1
+      if (i < len) {
+        nTok += 1
+        while (i < len && !isWs(b(i))) i += 1
+      }
+    }
+    val out = new Array[Long](nTok)
+    var n = 0
+    i = 0
     while (i < len) {
       // skip whitespace
       while (i < len && isWs(b(i))) i += 1
       if (i < len) {
         var h = seed
         while (i < len && !isWs(b(i))) { h = h * Prime + (b(i) & 0xFF); i += 1 }
-        val v = Hashing.mix64(h ^ seed)
-        if (n == out.length) return computeGrow(b, seed, distinct) // rare
-        out(n) = v; n += 1
-      }
-    }
-    val trimmed = java.util.Arrays.copyOf(out, n)
-    UnsafeArrayData.fromPrimitiveArray(
-      if (distinct) Hashing.sortedDistinct(trimmed) else trimmed)
-  }
-
-  private def computeGrow(b: Array[Byte], seed: Long, distinct: Boolean)
-      : UnsafeArrayData = {
-    val buf = new scala.collection.mutable.ArrayBuffer[Long]()
-    var i = 0
-    val len = b.length
-    while (i < len) {
-      while (i < len && isWs(b(i))) i += 1
-      if (i < len) {
-        var h = seed
-        while (i < len && !isWs(b(i))) { h = h * Prime + (b(i) & 0xFF); i += 1 }
-        buf += Hashing.mix64(h ^ seed)
+        out(n) = Hashing.mix64(h ^ seed); n += 1
       }
     }
     UnsafeArrayData.fromPrimitiveArray(
-      if (distinct) Hashing.sortedDistinct(buf.toArray) else buf.toArray)
+      if (distinct) Hashing.sortedDistinct(out) else out)
   }
 
   @inline private def isWs(c: Byte): Boolean =

@@ -73,55 +73,11 @@ class CoreMiscSpec extends AnyFunSuite {
     assert(q < 1e-100)
   }
 
-  /** The tail as first written: a fresh Lanczos array per lgamma call and
-    * three lgamma calls per term. */
-  private object ReferenceTail {
-    def lgamma(x0: Double): Double = {
-      val g = 7.0
-      val c = Array(
-        0.99999999999980993, 676.5203681218851, -1259.1392167224028,
-        771.32342877765313, -176.61502916214059, 12.507343278686905,
-        -0.13857109526572012, 9.9843695780195716e-6, 1.5056327351493116e-7)
-      if (x0 < 0.5) math.log(math.Pi / math.sin(math.Pi * x0)) - lgamma(1.0 - x0)
-      else {
-        val x = x0 - 1.0
-        var a = c(0)
-        val t = x + g + 0.5
-        var i = 1
-        while (i < 9) { a += c(i) / (x + i); i += 1 }
-        0.5 * math.log(2.0 * math.Pi) + (x + 0.5) * math.log(t) - t + math.log(a)
-      }
-    }
-    def logChoose(n: Long, k: Long): Double =
-      if (k < 0 || k > n) Double.NegativeInfinity
-      else lgamma(n + 1.0) - lgamma(k + 1.0) - lgamma(n - k + 1.0)
-    def binomTailUpper(n: Long, k: Long, p: Double): Double = {
-      if (k <= 0) return 1.0
-      if (k > n) return 0.0
-      if (p <= 0.0) return 0.0
-      if (p >= 1.0) return 1.0
-      val lp = math.log(p)
-      val lq = math.log1p(-p)
-      val mode = math.floor((n + 1) * p).toLong
-      var acc = 0.0
-      var i = k
-      var consecTiny = 0
-      while (i <= n && consecTiny < 3) {
-        val lt = logChoose(n, i) + i * lp + (n - i) * lq
-        val t = math.exp(lt)
-        if (t == 0.0 && i >= mode) return math.min(1.0, acc)
-        acc += t
-        if (acc > 0 && t < acc * 1e-16) consecTiny += 1 else consecTiny = 0
-        i += 1
-      }
-      math.min(1.0, acc)
-    }
-  }
-
   test("binomTailUpper and lgamma: bit-identical to the reference formula " +
       "over an (n, k, p) grid") {
+    // 65536 and 100000 are past the log-factorial table's last entry
     val ns = Seq(1L, 2L, 3L, 5L, 10L, 31L, 64L, 100L, 151L, 500L, 1000L,
-      4096L, 65535L)
+      4096L, 65535L, 65536L, 100000L)
     val ps = Seq(1e-9, 1e-6, 1e-3, 0.01, 0.05, 0.1, 0.25, 0.5, 0.75, 0.9,
       0.99)
     var cases = 0
@@ -133,10 +89,16 @@ class CoreMiscSpec extends AnyFunSuite {
       assert(java.lang.Double.doubleToRawLongBits(got) ==
         java.lang.Double.doubleToRawLongBits(want),
         s"binomTailUpper($n, $k, $p) = $got, reference $want")
+      // the entry point the fpr-query calls, with per-target logs
+      val pre = MathFns.binomTailUpper(n, k, p, math.log(p), math.log1p(-p))
+      assert(java.lang.Double.doubleToRawLongBits(pre) ==
+        java.lang.Double.doubleToRawLongBits(want),
+        s"binomTailUpper($n, $k, $p, logs) = $pre, reference $want")
       cases += 1
     }
     assert(cases > 500)
-    for (x <- Seq(1e-3, 0.25, 0.5, 1.0, 1.5, 2.0, 7.25, 10.5, 100.0, 65536.0))
+    for (x <- Seq(1e-3, 0.25, 0.5, 1.0, 1.5, 2.0, 7.25, 10.5, 100.0, 65536.0,
+        65537.0, 100001.0))
       assert(java.lang.Double.doubleToRawLongBits(MathFns.lgamma(x)) ==
         java.lang.Double.doubleToRawLongBits(ReferenceTail.lgamma(x)), s"x=$x")
   }
@@ -197,5 +159,51 @@ class CoreMiscSpec extends AnyFunSuite {
     assert(SimHash.hamming(SimHash.simhash(a), SimHash.simhash(c)) <= 16)
     val rnd = Array.tabulate(200)(i => Hashing.hashLong(i.toLong, 777))
     assert(SimHash.hamming(SimHash.simhash(a), SimHash.simhash(rnd)) > 10)
+  }
+}
+
+/** The binomial tail as first written, kept as the independent reference
+  * for `MathFns`: a fresh Lanczos array per lgamma call, three lgamma
+  * calls per term and both logs of p per call. */
+object ReferenceTail {
+  def lgamma(x0: Double): Double = {
+    val g = 7.0
+    val c = Array(
+      0.99999999999980993, 676.5203681218851, -1259.1392167224028,
+      771.32342877765313, -176.61502916214059, 12.507343278686905,
+      -0.13857109526572012, 9.9843695780195716e-6, 1.5056327351493116e-7)
+    if (x0 < 0.5) math.log(math.Pi / math.sin(math.Pi * x0)) - lgamma(1.0 - x0)
+    else {
+      val x = x0 - 1.0
+      var a = c(0)
+      val t = x + g + 0.5
+      var i = 1
+      while (i < 9) { a += c(i) / (x + i); i += 1 }
+      0.5 * math.log(2.0 * math.Pi) + (x + 0.5) * math.log(t) - t + math.log(a)
+    }
+  }
+  def logChoose(n: Long, k: Long): Double =
+    if (k < 0 || k > n) Double.NegativeInfinity
+    else lgamma(n + 1.0) - lgamma(k + 1.0) - lgamma(n - k + 1.0)
+  def binomTailUpper(n: Long, k: Long, p: Double): Double = {
+    if (k <= 0) return 1.0
+    if (k > n) return 0.0
+    if (p <= 0.0) return 0.0
+    if (p >= 1.0) return 1.0
+    val lp = math.log(p)
+    val lq = math.log1p(-p)
+    val mode = math.floor((n + 1) * p).toLong
+    var acc = 0.0
+    var i = k
+    var consecTiny = 0
+    while (i <= n && consecTiny < 3) {
+      val lt = logChoose(n, i) + i * lp + (n - i) * lq
+      val t = math.exp(lt)
+      if (t == 0.0 && i >= mode) return math.min(1.0, acc)
+      acc += t
+      if (acc > 0 && t < acc * 1e-16) consecTiny += 1 else consecTiny = 0
+      i += 1
+    }
+    math.min(1.0, acc)
   }
 }

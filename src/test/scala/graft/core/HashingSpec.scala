@@ -29,8 +29,8 @@ class HashingSpec extends AnyFunSuite {
   test("shingles: w==k gives all distinct kmer hashes") {
     val s = "aaaaabbbbb"
     val sh = Hashing.shingles(s, 3, 3)
-    val expect = Hashing.sortedDistinct(Hashing.kmerHashes(s, 3))
-    assert(sh.toSeq == expect.toSeq)
+    val expect = HashingSpec.refSortedDistinct(Hashing.kmerHashes(s, 3))
+    assert(sh.toSeq == expect)
   }
 
   test("shingles: repeated single token collapses (hand-countable golden)") {
@@ -73,19 +73,60 @@ class HashingSpec extends AnyFunSuite {
     }
   }
 
+  test("sortedDistinct: adversarial inputs against a boxed reference") {
+    import HashingSpec.refSortedDistinct
+    val rnd = new scala.util.Random(7)
+    def check(what: String, xs: Array[Long]): Unit = {
+      val want = refSortedDistinct(xs)
+      val got = Hashing.sortedDistinct(xs.clone())
+      assert(got.length == want.length && got.toSeq == want,
+        s"$what: n=${xs.length}, ${got.length} vs ${want.length} distinct")
+      // the (buffer, length) form reads only the prefix
+      val padded = xs ++ Array.fill(5)(rnd.nextLong())
+      assert(Hashing.sortedDistinct(padded, xs.length).toSeq == want,
+        s"$what: prefix form, n=${xs.length}")
+    }
+    val sizes = Seq(0, 1, 2, 3, 31, 32, 33, 34, 63, 64, 65, 100, 144, 1000,
+      4095, 4096, 4097, 65536, 200000)
+    for (n <- sizes) {
+      check("uniform", Array.fill(n)(rnd.nextLong()))
+      check("all equal", Array.fill(n)(0x1234L))
+      check("all equal, sign bit", Array.fill(n)(-5L))
+      // one outlier sets the OR's top bit: the cluster shares one bucket
+      val cluster = Array.fill(n)(1000L + rnd.nextInt(64))
+      if (n > 0) cluster(rnd.nextInt(n)) = Long.MaxValue - 3
+      check("cluster + outlier", cluster)
+      if (n > 0) cluster(rnd.nextInt(n)) = Long.MinValue + 3
+      check("cluster + sign-bit outlier", cluster)
+      check("straddling the sign bit",
+        Array.fill(n)(Long.MinValue + rnd.nextInt(1000) - 500))
+      check("small integers", Array.fill(n)(rnd.nextInt(50).toLong))
+      check("small integers and zero", Array.fill(n)(rnd.nextInt(2).toLong))
+      // minimum of 13 uniform hashes, as a (31,19)-minimizer is
+      check("window minima", Array.fill(n)(
+        Array.fill(13)(rnd.nextLong()).minBy(_ ^ Long.MinValue)))
+      val pool = Array.fill(math.max(1, n / 50))(rnd.nextLong())
+      check("heavy duplication", Array.fill(n)(pool(rnd.nextInt(pool.length))))
+      check("descending", Array.tabulate(n)(i => (n - i).toLong << 40))
+      check("every bit pattern near the top",
+        Array.fill(n)(rnd.nextLong() | 0x7FFFFFFFFFFFF000L))
+    }
+  }
+
   test("minimizers == brute-force window minimum (randomized equivalence)") {
     def brute(content: String, k: Int, w: Int): Array[Long] = {
       val hs = Hashing.kmerHashes(content, k)
       if (hs.isEmpty) return hs
       val kpw = w - k + 1
-      if (kpw <= 1 || hs.length == 1) return Hashing.sortedDistinct(hs.clone())
+      if (kpw <= 1 || hs.length == 1)
+        return HashingSpec.refSortedDistinct(hs).toArray
       val nWin = hs.length - kpw + 1
       val mins =
         if (nWin <= 0) Array(hs.minBy(_ ^ Long.MinValue))
         else Array.tabulate(nWin) { s =>
           hs.slice(s, s + kpw).minBy(_ ^ Long.MinValue)
         }
-      Hashing.sortedDistinct(mins)
+      HashingSpec.refSortedDistinct(mins).toArray
     }
     val rnd = new scala.util.Random(99)
     val alphabet = "abcdefg "
@@ -108,4 +149,11 @@ class HashingSpec extends AnyFunSuite {
     val sb = Hashing.shingles(b, 8, 8).toSet
     assert((sa intersect sb).size >= common.length - 8)
   }
+}
+
+object HashingSpec {
+  /** Independent reference for `Hashing.sortedDistinct`: boxed distinct,
+    * sorted by the sign-flipped value (= unsigned order). */
+  def refSortedDistinct(xs: Array[Long]): Seq[Long] =
+    xs.toSeq.distinct.sortBy(_ ^ Long.MinValue)
 }

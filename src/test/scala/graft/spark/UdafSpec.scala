@@ -144,6 +144,28 @@ class UdafSpec extends AnyFunSuite {
     }
   }
 
+  test("token hashes of token-dense text (more tokens than len/4)") {
+    val rnd = new scala.util.Random(5)
+    val ws = " \t\n\r\f\u000b"
+    val texts = Seq("a", "a b", "a b c", " a b c ", "x\ty\nz\rq\fw\u000bv",
+      "a  b   c", (0 until 10000).map(i => ('a' + i % 26).toChar).mkString(" "),
+      Array.fill(5000)(s"${('a' + rnd.nextInt(3)).toChar}" +
+        ws(rnd.nextInt(ws.length))).mkString)
+    val rows = texts.toDF("text")
+      .select(GraftFunctions.tokenHashes($"text").as("th"),
+        GraftFunctions.tokenHashesMultiset($"text").as("mh"))
+      .collect()
+    texts.zip(rows).foreach { case (t, row) =>
+      val toks = t.split("\\s+").filter(_.nonEmpty)
+      val th = row.getAs[scala.collection.Seq[Long]](0).toArray
+      val mh = row.getAs[scala.collection.Seq[Long]](1).toArray
+      val what = s"'${t.take(20)}' (${t.length} bytes)"
+      assert(th.sameElements(graft.core.Hashing.tokenHashes(t)), what)
+      assert(mh.length == toks.length, what)
+      assert(mh.sameElements(toks.map(graft.core.Hashing.hashString(_))), what)
+    }
+  }
+
   test("null and empty content flow through the pipeline without error") {
     val df = Seq((1L, "normal content here"), (2L, ""), (3L, null))
       .toDF("id", "text")
