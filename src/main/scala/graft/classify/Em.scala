@@ -27,7 +27,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * relation inside the loop; at 10^7 targets the per-iteration broadcast
  * is ~80 MB, not the ~1 GB a string map would cost. Measured at 10^6
  * targets / 2x10^6 multi-match reads, local[8]: 3 EM iterations in
- * ~28 s wall including the one-time grouping pass (tools/EmScale).
+ * ~28 s wall including the one-time grouping pass. `ReportEmSpec` runs
+ * the large-|targets| branch at 70,000 targets.
  * Tie-break: the reference keeps the FIRST listed match (reassign.py:
  * 227-241 — np.argmax returns the first max index). When the input
  * carries Classify.allMatches' `match_order` column (the read's bin
@@ -126,7 +127,7 @@ object Em {
       //   shuffle stage at all.
       // - LARGE |targets|: treeAggregate depth 2, so the driver merges a
       //   handful of pre-combined arrays instead of one per partition
-      //   (the 10^7-target shape; see tools/EmScale).
+      //   (the 10^7-target shape; `ReportEmSpec` covers it at 70k).
       val seqOp = (a0: Array[Long],
           row: (Any, Array[Int], Array[Long], Array[Long])) => {
         val a = if (a0 == null) new Array[Long](n) else a0

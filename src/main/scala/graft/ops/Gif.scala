@@ -3,24 +3,20 @@ package graft.ops
 import java.io.ByteArrayOutputStream
 
 /**
- * Minimal pure-JVM GIF codec (GIF87a/89a): logical-screen + image
- * descriptor grammar, global/local color tables, extension skipping,
- * INTERLACE de-scrambling, and the real variable-width LZW layer
- * (3-12 bit codes, clear/EOI, dictionary growth with the GIF width-bump
- * rule, deferred-clear tolerance) — the third common scraped-web image
- * format after JPEG and PNG, and like PNG it is LOSSLESS, so decoded
- * pixel oracles are exact by construction. First frame only: for an
- * animated GIF the leading image descriptor is decoded and the rest
- * ignored, which is the meta/stats contract [[Multimodal]] needs.
+ * GIF89a fixture encoder and the GIF signature sniff. Decoding is
+ * [[Multimodal.decodeImage]] (the JDK's `javax.imageio` reader): first
+ * frame only, palette expanded to RGB, which is the meta/stats contract
+ * [[Multimodal]] needs. GIF is LOSSLESS, so decoded pixel oracles are
+ * exact by construction.
  *
  * `encode` synthesizes fixtures: 8-bit grayscale (identity 256-gray
  * palette), optional interlacing, REAL LZW compression (dictionary
  * growth + width bumps + full-table clear), so a decode of its output
- * exercises every decoder path. Interop against `javax.imageio`'s
- * independent GIF plugin is asserted bit-exactly in `GifSpec`.
+ * exercises every decoder path. `GifSpec` asserts the bit-exact
+ * round-trip through the JDK reader.
  *
  * The reference has no media path (SURVEY LLM-ops layer); the decoded
- * raster reuses [[Png.Image]] (palette expanded to RGB).
+ * raster is [[Png.Image]].
  */
 object Gif {
 
@@ -136,149 +132,4 @@ object Gif {
     bw.write(eoi, width)
     bw.finish()
   }
-
-  // ---- decode -----------------------------------------------------------------
-
-  def decode(bytes: Array[Byte]): Png.Image = {
-    require(isGif(bytes), "not a GIF (bad signature)")
-    var pos = 6
-    def u8(): Int = { val v = bytes(pos) & 0xFF; pos += 1; v }
-    def le16(): Int = { val v = (bytes(pos) & 0xFF) |
-      ((bytes(pos + 1) & 0xFF) << 8); pos += 2; v }
-
-    le16(); le16() // logical screen size (frames carry their own)
-    val packed = u8()
-    u8(); u8() // bg index, aspect
-    var palette: Array[Byte] = null
-    if ((packed & 0x80) != 0) {
-      val n = 3 * (2 << (packed & 7))
-      palette = java.util.Arrays.copyOfRange(bytes, pos, pos + n)
-      pos += n
-    }
-
-    while (true) {
-      u8() match {
-        case 0x21 => // extension: label + sub-blocks
-          u8()
-          var n = u8()
-          while (n != 0) { pos += n; n = u8() }
-        case 0x3B => throw new IllegalArgumentException(
-          "GIF trailer before any image descriptor")
-        case 0x2C =>
-          le16(); le16() // left, top (single-frame contract: ignored)
-          val w = le16(); val h = le16()
-          require(w > 0 && h > 0 &&
-            w.toLong * h * 3 <= Png.MaxRasterBytes,
-            s"GIF raster ${w}x$h exceeds the decode cap (corrupt header?)")
-          val ip = u8()
-          var pal = palette
-          if ((ip & 0x80) != 0) { // local color table overrides
-            val n = 3 * (2 << (ip & 7))
-            pal = java.util.Arrays.copyOfRange(bytes, pos, pos + n)
-            pos += n
-          }
-          require(pal != null, "GIF image without a color table")
-          val interlaced = (ip & 0x40) != 0
-          val minCode = u8()
-          // concatenate the sub-blocks into one LZW stream
-          val lzw = new ByteArrayOutputStream()
-          var n = u8()
-          while (n != 0) { lzw.write(bytes, pos, n); pos += n; n = u8() }
-          val indices = lzwDecode(lzw.toByteArray, minCode, w * h)
-          // de-interlace + palette expansion to RGB
-          val rows = rowOrder(h, interlaced)
-          val outPx = new Array[Byte](w * h * 3)
-          var r = 0
-          while (r < h) {
-            val y = rows(r)
-            var x = 0
-            while (x < w) {
-              val idx = (indices(r * w + x) & 0xFF) * 3
-              require(idx + 2 < pal.length, "palette index out of range")
-              val o = (y * w + x) * 3
-              outPx(o) = pal(idx); outPx(o + 1) = pal(idx + 1)
-              outPx(o + 2) = pal(idx + 2)
-              x += 1
-            }
-            r += 1
-          }
-          return Png.Image(w, h, 3, outPx)
-        case b => throw new IllegalArgumentException(
-          f"unknown GIF block 0x$b%02X")
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Variable-width LZW decode (GIF flavor): dictionary growth with the
-    * width bump at 2^width, KwKwK case, full-table freeze until a clear
-    * (deferred-clear files keep sending 12-bit codes), EOI stop. */
-  private def lzwDecode(data: Array[Byte], minCode: Int,
-      expected: Int): Array[Byte] = {
-    val clear = 1 << minCode
-    val eoi = clear + 1
-    val out = new Array[Byte](expected)
-    var outN = 0
-    // dictionary as (prefix code, appended byte) pairs; roots implicit
-    val prefix = new Array[Int](4096)
-    val append = new Array[Byte](4096)
-    var next = eoi + 1
-    var width = minCode + 1
-    var prev = -1
-    var buf = 0L
-    var cnt = 0
-    var pos = 0
-    val tmp = new Array[Byte](4096)
-
-    def emit(code: Int): Byte = { // writes the code's expansion, returns first byte
-      var c = code
-      var n = 0
-      while (c >= clear + 2) { tmp(n) = append(c); n += 1; c = prefix(c) }
-      require(c < clear, s"corrupt GIF LZW: dangling code $code")
-      val first = c.toByte
-      require(outN + n + 1 <= expected, "corrupt GIF LZW: too many pixels")
-      out(outN) = first; outN += 1
-      var i = n - 1
-      while (i >= 0) { out(outN) = tmp(i); outN += 1; i -= 1 }
-      first
-    }
-
-    var done = false
-    while (!done && outN < expected) {
-      while (cnt < width && pos < data.length) {
-        buf |= (data(pos) & 0xFFL) << cnt
-        cnt += 8; pos += 1
-      }
-      require(cnt >= width, "truncated GIF LZW stream")
-      val code = (buf & ((1L << width) - 1)).toInt
-      buf >>>= width; cnt -= width
-      if (code == clear) {
-        next = eoi + 1; width = minCode + 1; prev = -1
-      } else if (code == eoi) {
-        done = true
-      } else {
-        require(code < next || (code == next && prev != -1),
-          s"corrupt GIF LZW: code $code beyond dictionary $next")
-        val first =
-          if (code == next) { // KwKwK: entry being defined right now —
-            // its expansion is prev's expansion followed by prev's own
-            // first byte (which emit returns)
-            val f = emit(prev)
-            require(outN < expected, "corrupt GIF LZW: too many pixels")
-            out(outN) = f; outN += 1
-            f
-          } else emit(code)
-        if (prev != -1 && next < 4096) {
-          prefix(next) = prev; append(next) = first
-          next += 1
-          if (next == (1 << width) && width < 12) width += 1
-        }
-        prev = code
-      }
-    }
-    require(outN == expected,
-      s"GIF pixel count mismatch: decoded $outN of $expected")
-    out
-  }
-
 }

@@ -3,29 +3,21 @@ package graft.ops
 import java.io.ByteArrayOutputStream
 
 /**
- * Minimal pure-JVM baseline JPEG codec (ITU-T T.81 baseline sequential
- * DCT, 8-bit): marker walk (SOI/APPn/DQT/SOF0/DHT/DRI/SOS/EOI), canonical
- * Huffman entropy decode with byte-stuffing and restart markers, run/size
- * AC coefficient expansion, dequantize + dezigzag, double-precision
- * separable IDCT, chroma upsampling (4:4:4 / 4:2:2 / 4:2:0) and JFIF
- * YCbCr -> RGB. JPEG is the dominant format in any scraped web image
- * corpus, and unlike PNG none of it ships with the JVM — the DCT and
- * Huffman layers here are the self-contained part the container's missing
- * codec libraries would otherwise provide. Progressive (SOF2) and
- * arithmetic-coded files are rejected with a saying-so error, not a wrong
- * decode.
+ * Baseline JFIF fixture encoder (ITU-T T.81 sequential DCT, 8-bit) and
+ * the JPEG signature sniff. Decoding is [[Multimodal.decodeImage]] (the
+ * JDK's `javax.imageio` reader), so the fixtures' pixels come back
+ * through an implementation independent of this encoder.
  *
- * `encode` exists to synthesize deterministic fixtures: baseline JFIF,
- * grayscale or RGB (4:4:4 or forced 4:2:0), caller-controlled quant
- * tables and restart interval. With an all-ones quant table a block of
- * CONSTANT samples round-trips bit-exactly (its only nonzero coefficient
- * is the integral DC), which is what lets a SQL oracle predict decoded
- * pixel sums arithmetically; AC-rich content round-trips within a small
- * rounding tolerance, asserted against `javax.imageio` interop in
- * `JpegSpec`.
+ * `encode` writes grayscale or RGB (4:4:4 or forced 4:2:0),
+ * caller-controlled quant tables and restart interval. With an all-ones
+ * quant table a block of CONSTANT samples round-trips bit-exactly (its
+ * only nonzero coefficient is the integral DC), which is what lets a SQL
+ * oracle predict decoded pixel sums arithmetically; AC-rich content
+ * round-trips within a small rounding tolerance. `JpegSpec` asserts both
+ * through the JDK reader.
  *
  * The reference has no media path (SURVEY LLM-ops layer); the decoded
- * raster reuses [[Png.Image]] so [[Multimodal]]'s stats are codec-blind.
+ * raster is [[Png.Image]] so [[Multimodal]]'s stats are codec-blind.
  */
 object Jpeg {
 
@@ -50,8 +42,8 @@ object Jpeg {
   // ---- Huffman tables ---------------------------------------------------------
 
   /** DC table: the T.81 Annex K luminance DC table (12 categories,
-    * variable 2-9 bit codes — exercises real multi-length canonical
-    * decode). AC table: one flat 8-bit code per (run,size) symbol —
+    * variable 2-9 bit codes — a decoder must handle real multi-length
+    * canonical codes). AC table: one flat 8-bit code per (run,size) symbol —
     * spec-legal, trivially canonical, and poor compression, which is fine
     * for fixtures. Both are emitted in DHT, so any decoder reads them. */
   private val DcBits = Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
@@ -80,83 +72,7 @@ object Jpeg {
     out.result()
   }
 
-  /** Canonical decoder tables (T.81 F.2.2.3): per code length, the
-    * smallest/largest code and the index of the first symbol. */
-  private final class HuffDec(bits: Array[Int], vals: Array[Int]) {
-    private val minCode = new Array[Int](17)
-    private val maxCode = Array.fill(17)(-1)
-    private val valPtr = new Array[Int](17)
-    locally {
-      var code = 0
-      var k = 0
-      var l = 1
-      while (l <= 16) {
-        if (bits(l - 1) > 0) {
-          valPtr(l) = k
-          minCode(l) = code
-          code += bits(l - 1); k += bits(l - 1)
-          maxCode(l) = code - 1
-        }
-        code <<= 1
-        l += 1
-      }
-    }
-    def decode(br: BitReader): Int = {
-      var code = br.bit()
-      var l = 1
-      while (l <= 16 && (maxCode(l) < 0 || code > maxCode(l))) {
-        code = (code << 1) | br.bit()
-        l += 1
-      }
-      require(l <= 16, "corrupt JPEG: Huffman code longer than 16 bits")
-      vals(valPtr(l) + code - minCode(l))
-    }
-  }
-
   // ---- bit IO -----------------------------------------------------------------
-
-  /** Entropy-coded-segment reader: 0xFF00 unstuffs to a data 0xFF; any
-    * other marker ends the segment (the decoder then consumes it
-    * explicitly at restart boundaries). Reads past the end pad with zero
-    * bits, as T.81 prescribes for the final truncated byte. */
-  private final class BitReader(data: Array[Byte], var pos: Int) {
-    private var buf = 0
-    private var cnt = 0
-    def bit(): Int = {
-      if (cnt == 0) {
-        if (pos >= data.length) return 0
-        var b = data(pos) & 0xFF
-        pos += 1
-        if (b == 0xFF) {
-          val nxt = if (pos < data.length) data(pos) & 0xFF else 0xD9
-          if (nxt == 0x00) pos += 1
-          else { pos -= 1; return 0 } // marker: stop feeding, pad zeros
-        }
-        buf = b; cnt = 8
-      }
-      cnt -= 1
-      (buf >>> cnt) & 1
-    }
-    def bits(n: Int): Int = {
-      var v = 0; var i = 0
-      while (i < n) { v = (v << 1) | bit(); i += 1 }
-      v
-    }
-    /** Byte-align and consume the expected RSTn marker. Pad bits the
-      * decoder never pulled (and their 0xFF00 stuffing) may sit between
-      * the last coefficient and the marker — skip to the next real
-      * marker first, as T.81 F.2.2.5's byte alignment implies. */
-    def restart(n: Int): Unit = {
-      cnt = 0
-      while (pos + 1 < data.length &&
-          !((data(pos) & 0xFF) == 0xFF && (data(pos + 1) & 0xFF) != 0x00))
-        pos += 1
-      require(pos + 1 < data.length &&
-        (data(pos + 1) & 0xFF) == 0xD0 + n,
-        s"corrupt JPEG: expected RST$n at byte $pos")
-      pos += 2
-    }
-  }
 
   private final class BitWriter(out: ByteArrayOutputStream) {
     private var buf = 0
@@ -177,9 +93,6 @@ object Jpeg {
     /** Pad the final partial byte with 1-bits (T.81 F.1.2.3). */
     def flush(): Unit = if (cnt > 0) { write(0xFF, 8 - cnt) }
   }
-
-  @inline private def extend(v: Int, t: Int): Int =
-    if (t == 0) 0 else if (v < (1 << (t - 1))) v - (1 << t) + 1 else v
 
   @inline private def clamp(v: Int): Int =
     if (v < 0) 0 else if (v > 255) 255 else v
@@ -368,241 +281,8 @@ object Jpeg {
     out.toByteArray
   }
 
-  // ---- decode -----------------------------------------------------------------
-
   /** True iff the payload starts with SOI + a marker byte (FF D8 FF). */
   def isJpeg(bytes: Array[Byte]): Boolean =
     bytes.length >= 3 && (bytes(0) & 0xFF) == 0xFF &&
       (bytes(1) & 0xFF) == 0xD8 && (bytes(2) & 0xFF) == 0xFF
-
-  private final case class Comp(id: Int, hf: Int, vf: Int, tq: Int,
-      var td: Int = 0, var ta: Int = 0)
-
-  def decode(bytes: Array[Byte]): Png.Image = {
-    require(isJpeg(bytes), "not a JPEG (bad signature)")
-    var pos = 2
-    def u8(): Int = { val v = bytes(pos) & 0xFF; pos += 1; v }
-    def u16(): Int = { val v = ((bytes(pos) & 0xFF) << 8) |
-      (bytes(pos + 1) & 0xFF); pos += 2; v }
-
-    val quants = new Array[Array[Int]](4) // zigzag order, as in DQT
-    val huffs = new Array[HuffDec](8) // (class << 2) | id
-    var comps: Array[Comp] = null
-    var width = 0; var height = 0
-    var restartInterval = 0
-    var scanComps: Array[Comp] = null
-
-    var inScan = false
-    while (!inScan) {
-      require(pos + 1 < bytes.length, "truncated JPEG: no SOS before end")
-      require(u8() == 0xFF, "corrupt JPEG: expected marker")
-      var m = u8()
-      while (m == 0xFF) m = u8() // fill bytes are legal
-      m match {
-        case 0xC0 | 0xC1 => // SOF0/1: baseline (extended-sequential ok too)
-          val segLen = u16(); val end = pos + segLen - 2
-          require(u8() == 8, "only 8-bit precision supported")
-          height = u16(); width = u16()
-          comps = Array.fill(u8()) {
-            val id = u8(); val hv = u8(); Comp(id, hv >> 4, hv & 15, u8())
-          }
-          require(comps.length == 1 || comps.length == 3,
-            s"unsupported component count ${comps.length}")
-          comps.foreach(c => require(c.hf >= 1 && c.hf <= 4 &&
-            c.vf >= 1 && c.vf <= 4, s"bad sampling factors ${c.hf}x${c.vf}"))
-          // the chroma upsampler replicates by the integer ratio
-          // hMax/c.hf; a spec-legal NON-integer ratio (e.g. luma 3x1 with
-          // chroma 2x1) would truncate to a wrong factor and decode
-          // garbled pixels silently — reject like every other unsupported
-          // mode (the decoder's reject-don't-guess contract)
-          locally {
-            val hM = comps.map(_.hf).max; val vM = comps.map(_.vf).max
-            comps.foreach(c => require(hM % c.hf == 0 && vM % c.vf == 0,
-              s"unsupported non-integer sampling ratio: max ${hM}x$vM vs " +
-                s"component ${c.hf}x${c.vf}"))
-          }
-          require(width.toLong * height * 3 <= Png.MaxRasterBytes,
-            s"JPEG raster ${width}x$height exceeds the decode cap " +
-              "(corrupt header?)")
-          pos = end
-        case 0xC2 => throw new IllegalArgumentException(
-          "progressive JPEG (SOF2) not supported — baseline only")
-        case 0xC3 | 0xC5 | 0xC6 | 0xC7 | 0xC9 | 0xCA | 0xCB | 0xCD | 0xCE |
-            0xCF => throw new IllegalArgumentException(
-          f"unsupported JPEG coding process (SOF marker 0xFF$m%02X)")
-        case 0xC4 => // DHT: one or more tables per segment
-          val segLen = u16(); val end = pos + segLen - 2
-          while (pos < end) {
-            val tc = u8()
-            val bits = Array.fill(16)(u8())
-            val vals = Array.fill(bits.sum)(u8())
-            huffs(((tc >> 4) << 2) | (tc & 3)) = new HuffDec(bits, vals)
-          }
-        case 0xDB => // DQT: one or more tables per segment
-          val segLen = u16(); val end = pos + segLen - 2
-          while (pos < end) {
-            val pq = u8()
-            quants(pq & 3) =
-              if ((pq >> 4) == 0) Array.fill(64)(u8())
-              else Array.fill(64)(u16())
-          }
-        case 0xDD => u16(); restartInterval = u16()
-        case 0xDA => // SOS
-          u16()
-          scanComps = Array.fill(u8()) {
-            val cs = u8(); val c = comps.find(_.id == cs).getOrElse(
-              throw new IllegalArgumentException(s"SOS names unknown comp $cs"))
-            val tt = u8(); c.td = tt >> 4; c.ta = tt & 15; c
-          }
-          val ss = u8(); val se = u8(); u8()
-          require(ss == 0 && se == 63, "baseline scan must cover 0..63")
-          require(scanComps.length == comps.length,
-            "multi-scan (non-interleaved per-component scans) not supported")
-          inScan = true
-        case 0xD9 => throw new IllegalArgumentException("EOI before SOS")
-        case _ => // APPn / COM / anything else: skip
-          val segLen = u16(); pos += segLen - 2
-      }
-    }
-    require(width > 0 && height > 0, "missing SOF")
-
-    val hMax = comps.map(_.hf).max; val vMax = comps.map(_.vf).max
-    // single-component scans have 1-block MCUs (T.81 A.2.2)
-    val single = comps.length == 1
-    val mcusX = if (single) (width + 7) / 8 else (width + 8 * hMax - 1) / (8 * hMax)
-    val mcusY = if (single) (height + 7) / 8 else (height + 8 * vMax - 1) / (8 * vMax)
-    // padded planes sized to whole MCUs
-    val planes = comps.map { c =>
-      val hf = if (single) 1 else c.hf; val vf = if (single) 1 else c.vf
-      (new Array[Byte](mcusX * hf * 8 * mcusY * vf * 8), mcusX * hf * 8)
-    }
-
-    val br = new BitReader(bytes, pos)
-    val dcPred = new Array[Int](comps.length)
-    val coef = new Array[Int](64)
-    val block = new Array[Int](64)
-    def decodeBlock(ci: Int, plane: Array[Byte], planeW: Int,
-        x0: Int, y0: Int): Unit = {
-      val c = comps(ci)
-      val dc = huffs(c.td); val ac = huffs((1 << 2) | c.ta)
-      require(dc != null && ac != null, "scan references undefined DHT table")
-      val q = quants(c.tq)
-      require(q != null, "scan references undefined DQT table")
-      java.util.Arrays.fill(coef, 0)
-      val t = dc.decode(br)
-      dcPred(ci) += extend(br.bits(t), t)
-      coef(0) = dcPred(ci) * q(0)
-      var k = 1
-      while (k < 64) {
-        val rs = ac.decode(br)
-        val r = rs >> 4; val s = rs & 15
-        if (s == 0) { if (r == 15) k += 16 else k = 64 } // ZRL / EOB
-        else {
-          k += r
-          require(k < 64, "corrupt JPEG: AC run past block end")
-          coef(Zigzag(k)) = extend(br.bits(s), s) * q(k)
-          k += 1
-        }
-      }
-      // separable IDCT: block = C^T coef C, then level shift + clamp
-      var y = 0
-      while (y < 8) {
-        var x = 0
-        while (x < 8) {
-          var s2 = 0.0
-          var v = 0
-          while (v < 8) {
-            var u = 0
-            while (u < 8) {
-              val cv = coef(v * 8 + u)
-              if (cv != 0) s2 += CosTab(u)(x) * CosTab(v)(y) * cv
-              u += 1
-            }
-            v += 1
-          }
-          block(y * 8 + x) = clamp(math.round(s2 + 128.0).toInt)
-          x += 1
-        }
-        y += 1
-      }
-      y = 0
-      while (y < 8) {
-        var x = 0
-        while (x < 8) {
-          plane((y0 + y) * planeW + x0 + x) = block(y * 8 + x).toByte
-          x += 1
-        }
-        y += 1
-      }
-    }
-
-    var rst = 0; var sinceRst = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartInterval > 0 && sinceRst == restartInterval) {
-          br.restart(rst)
-          rst = (rst + 1) % 8; sinceRst = 0
-          java.util.Arrays.fill(dcPred, 0)
-        }
-        var ci = 0
-        while (ci < comps.length) {
-          val (plane, planeW) = planes(ci)
-          val hf = if (single) 1 else comps(ci).hf
-          val vf = if (single) 1 else comps(ci).vf
-          var by = 0
-          while (by < vf) {
-            var bx = 0
-            while (bx < hf) {
-              decodeBlock(ci, plane, planeW,
-                (mx * hf + bx) * 8, (my * vf + by) * 8)
-              bx += 1
-            }
-            by += 1
-          }
-          ci += 1
-        }
-        sinceRst += 1
-        mx += 1
-      }
-      my += 1
-    }
-
-    if (comps.length == 1) {
-      val (p, pw) = planes(0)
-      val out = new Array[Byte](width * height)
-      var y = 0
-      while (y < height) {
-        System.arraycopy(p, y * pw, out, y * width, width)
-        y += 1
-      }
-      Png.Image(width, height, 1, out)
-    } else {
-      // upsample chroma by replication + JFIF YCbCr -> RGB
-      val out = new Array[Byte](width * height * 3)
-      val (py, pyw) = planes(0)
-      val (pcb, pcbw) = planes(1)
-      val (pcr, pcrw) = planes(2)
-      val sxCb = hMax / comps(1).hf; val syCb = vMax / comps(1).vf
-      val sxCr = hMax / comps(2).hf; val syCr = vMax / comps(2).vf
-      var y = 0
-      while (y < height) {
-        var x = 0
-        while (x < width) {
-          val yy = py(y * pyw + x) & 0xFF
-          val cb = (pcb((y / syCb) * pcbw + x / sxCb) & 0xFF) - 128
-          val cr = (pcr((y / syCr) * pcrw + x / sxCr) & 0xFF) - 128
-          val o = (y * width + x) * 3
-          out(o) = clamp(math.round(yy + 1.402 * cr).toInt).toByte
-          out(o + 1) = clamp(math.round(
-            yy - 0.344136 * cb - 0.714136 * cr).toInt).toByte
-          out(o + 2) = clamp(math.round(yy + 1.772 * cb).toInt).toByte
-          x += 1
-        }
-        y += 1
-      }
-      Png.Image(width, height, 3, out)
-    }
-  }
 }

@@ -1,20 +1,25 @@
 package graft.ops
 
+import java.awt.image.{BufferedImage, IndexColorModel}
+import java.io.ByteArrayInputStream
+import javax.imageio.ImageIO
+import javax.imageio.stream.MemoryCacheImageInputStream
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
  * Multimodal plumbing: image/audio/video payloads ride as opaque `binary`
- * columns with typed metadata. Five codecs get a REAL in-JVM decode —
- * PNG images ([[Png]]: inflate + per-scanline unfiltering), baseline JPEG
- * ([[Jpeg]]: Huffman + dequantize + IDCT + chroma upsample), GIF
- * ([[Gif]]: variable-width LZW + palette + interlace), WAV audio
- * ([[Wav]]: RIFF chunk walk + PCM), Y4M video ([[Y4m]]: header grammar +
- * raw planes) — plus exact-integer transform verbs (resize, frame-sample)
- * on top. Codecs that need libraries this container doesn't ship
- * (MP3/H.264) fall back to the clearly-marked stub feature below.
- * The Spark-side plumbing — schema, batched per-partition processing
- * shape, partition sizing — is shared by all paths.
+ * columns with typed metadata. Images (PNG, JPEG, GIF) decode through the
+ * JDK's own `javax.imageio` readers behind one signature-dispatched
+ * [[decodeImage]]; WAV audio ([[Wav]]: RIFF chunk walk + PCM) and Y4M
+ * video ([[Y4m]]: header grammar + raw planes) decode in-JVM here, since
+ * the JDK has no reader for Y4M and its audio reader is not fuzz-safe.
+ * Exact-integer transform verbs (resize, frame-sample) sit on top. Codecs
+ * the container has no library for (MP3/H.264) fall back to the
+ * clearly-marked stub feature below. The Spark-side plumbing — schema,
+ * batched per-partition processing shape, partition sizing — is shared
+ * by all paths.
  *
  * At scale: binary payloads dominate bytes, so the pipeline repartitions
  * by byte budget (`targetPartitionBytes`), processes per-partition in
@@ -28,8 +33,9 @@ object Multimodal {
 
   final case class MediaFeature(doc_id: Long, n_bytes: Long, feature: Array[Float])
 
-  /** Decoded-image row: dimensions straight from IHDR, pixel_sum over the
-    * unfiltered bytes — a value only a correct full decode can produce. */
+  /** Decoded-image row: dimensions from the image header, pixel_sum over
+    * the decoded samples — a value only a correct full decode can
+    * produce. */
   final case class ImageMeta(doc_id: Long, width: Int, height: Int,
       channels: Int, pixel_sum: Long)
 
@@ -179,11 +185,9 @@ object Multimodal {
       v.frames.length.toLong, s, peak)
   }
 
-  /** REAL image decode, dispatched on the payload's signature: PNG
-    * (inflate + unfilter, [[Png.decode]]), baseline JPEG (Huffman + IDCT,
-    * [[Jpeg.decode]]) or GIF (LZW + palette, [[Gif.decode]]) — a scraped
-    * corpus mixes all three in one column, so the verb sniffs per row
-    * rather than asking the caller to pre-split. Emits per-image
+  /** REAL image decode ([[decodeImage]]) of PNG, JPEG and GIF payloads —
+    * a scraped corpus mixes all three in one column, so the verb sniffs
+    * per row rather than asking the caller to pre-split. Emits per-image
     * dimensions plus the pixel sum. */
   def extractImageMeta(spark: SparkSession, media: DataFrame,
       targetPartitionBytes: Long = 128L * 1024 * 1024): Dataset[ImageMeta] = {
@@ -213,12 +217,73 @@ object Multimodal {
     }
   }
 
-  /** Signature-dispatched decode shared by the image verbs. */
-  private def decodeImage(p: Array[Byte]): Option[Png.Image] =
-    if (Png.isPng(p)) Some(Png.decode(p))
-    else if (Jpeg.isJpeg(p)) Some(Jpeg.decode(p))
-    else if (Gif.isGif(p)) Some(Gif.decode(p))
-    else None
+  /** The one image decode path, shared by the image verbs. The payload's
+    * signature picks the JDK reader (PNG, JPEG or GIF); any other payload
+    * is None, never a guess by another registered reader (ImageIO's BMP,
+    * WBMP and TIFF readers would claim payloads the verbs skip). Each call
+    * takes a fresh reader over an in-memory stream (ImageIO's default
+    * stream cache writes temp files on executors), and checks the header's
+    * dimensions against [[Png.MaxRasterBytes]] before any raster exists.
+    * The raster converts to [[Png.Image]]: a palette image (GIF, palette
+    * PNG) expands to 3-channel RGB, anything else keeps its 1-4 bands,
+    * and a sample size other than 8 bits throws. */
+  private[ops] def decodeImage(p: Array[Byte]): Option[Png.Image] = {
+    val format =
+      if (Png.isPng(p)) Some("png")
+      else if (Jpeg.isJpeg(p)) Some("jpeg")
+      else if (Gif.isGif(p)) Some("gif")
+      else None
+    format.map { f =>
+      val reader = ImageIO.getImageReadersByFormatName(f).next()
+      val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(p))
+      try {
+        reader.setInput(in, true, true)
+        val w = reader.getWidth(0); val h = reader.getHeight(0)
+        require(w.toLong * h * 4 <= Png.MaxRasterBytes,
+          s"$f raster ${w}x$h exceeds the ${Png.MaxRasterBytes}-byte " +
+            "decode cap (corrupt header?)")
+        toImage(reader.read(0))
+      } finally { reader.dispose(); in.close() }
+    }
+  }
+
+  private def toImage(bi: BufferedImage): Png.Image = {
+    val r = bi.getRaster
+    val w = r.getWidth; val h = r.getHeight
+    bi.getColorModel match {
+      case cm: IndexColorModel =>
+        val idx = new Array[Int](w)
+        val out = new Array[Byte](w * h * 3)
+        var y = 0
+        while (y < h) {
+          r.getSamples(0, y, w, 1, 0, idx)
+          var x = 0
+          while (x < w) {
+            val rgb = cm.getRGB(idx(x)); val o = (y * w + x) * 3
+            out(o) = (rgb >> 16).toByte; out(o + 1) = (rgb >> 8).toByte
+            out(o + 2) = rgb.toByte
+            x += 1
+          }
+          y += 1
+        }
+        Png.Image(w, h, 3, out)
+      case _ =>
+        val sizes = r.getSampleModel.getSampleSize
+        require(sizes.forall(_ == 8),
+          s"unsupported sample sizes ${sizes.mkString(",")} (8-bit only)")
+        val c = r.getNumBands
+        val row = new Array[Int](w * c)
+        val out = new Array[Byte](w * h * c)
+        var y = 0
+        while (y < h) {
+          r.getPixels(0, y, w, 1, row)
+          var i = 0
+          while (i < row.length) { out(y * w * c + i) = row(i).toByte; i += 1 }
+          y += 1
+        }
+        Png.Image(w, h, c, out)
+    }
+  }
 
   /** Decode + nearest-neighbor RESIZE over image payloads (PNG/JPEG/GIF,
     * dispatched by signature), emitting the resized image's meta

@@ -1,33 +1,28 @@
 package graft.ops
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.{CRC32, Deflater}
 
 /**
- * Minimal pure-JVM PNG codec — the container ships no image libraries,
- * but `java.util.zip` supplies DEFLATE, which IS PNG's compression layer,
- * so a real decode needs only the container format on top: signature +
- * IHDR parse, IDAT concatenation + inflate, and per-scanline unfiltering
- * (all five filters: None/Sub/Up/Average/Paeth). 8-bit depth,
- * gray / gray+alpha / RGB / RGBA color types, no interlacing.
+ * The decoded-raster type shared by every image verb, the PNG signature
+ * sniff, the nearest-neighbor resize, and a fixture encoder. Decoding is
+ * [[Multimodal.decodeImage]] (the JDK's `javax.imageio` reader).
  *
- * `encode` exists to synthesize deterministic fixtures; it deliberately
- * CYCLES through every filter type row by row, so a decode of its output
- * exercises each unfilter path, not just filter 0.
- *
- * The reference has no media path; this implements the training-pipeline
- * multimodal requirement (SURVEY LLM-ops layer) with a real decoder
- * behind [[Multimodal.extractImageMeta]]. PNG format per RFC 2083.
+ * `encode` synthesizes deterministic fixtures: 8-bit gray / gray+alpha /
+ * RGB / RGBA, no interlacing. It deliberately CYCLES through every filter
+ * type row by row (None/Sub/Up/Average/Paeth), so a decode of its output
+ * exercises each unfilter path, not just filter 0. `PngSpec` asserts the
+ * exact round-trip through the JDK reader. PNG format per RFC 2083.
  */
 object Png {
 
   final case class Image(width: Int, height: Int, channels: Int,
       pixels: Array[Byte])
 
-  /** Decode-side allocation cap shared by all the image codecs: the
-    * largest raster a single payload may decode to (1 GiB). Corrupt
-    * headers in a scraped corpus routinely declare absurd dimensions;
-    * the decoders throw (per-row quarantine) instead of allocating. */
+  /** Decode-side allocation cap for every image format: the largest
+    * raster a single payload may decode to (1 GiB). Corrupt headers in a
+    * scraped corpus routinely declare absurd dimensions; the decode throws
+    * (per-row quarantine) instead of allocating. */
   private[ops] val MaxRasterBytes = 1L << 30
 
   private val Signature = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A)
@@ -39,15 +34,6 @@ object Png {
     case 3 => 2 // truecolor
     case 4 => 6 // truecolor + alpha
     case c => throw new IllegalArgumentException(s"unsupported channels $c")
-  }
-
-  private def channelsOf(colorType: Int): Int = colorType match {
-    case 0 => 1
-    case 4 => 2
-    case 2 => 3
-    case 6 => 4
-    case c => throw new IllegalArgumentException(
-      s"unsupported PNG color type $c (palette/16-bit not implemented)")
   }
 
   @inline private def paeth(a: Int, b: Int, c: Int): Int = {
@@ -121,86 +107,9 @@ object Png {
     out.toByteArray
   }
 
-  // ---- decode ----------------------------------------------------------------
-
   /** True iff the payload starts with the PNG signature. */
   def isPng(bytes: Array[Byte]): Boolean =
     bytes.length >= 8 && (0 until 8).forall(i => bytes(i) == Signature(i))
-
-  def decode(bytes: Array[Byte]): Image = {
-    require(isPng(bytes), "not a PNG (bad signature)")
-    val bb = java.nio.ByteBuffer.wrap(bytes, 8, bytes.length - 8)
-    var width = 0; var height = 0; var channels = 0
-    val idat = new ByteArrayOutputStream()
-    var done = false
-    while (!done && bb.remaining() >= 12) {
-      val len = bb.getInt()
-      val typ = new String(Array(bb.get(), bb.get(), bb.get(), bb.get())
-        .map(_.toChar))
-      typ match {
-        case "IHDR" =>
-          width = bb.getInt(); height = bb.getInt()
-          val depth = bb.get() & 0xFF
-          require(depth == 8, s"unsupported bit depth $depth")
-          channels = channelsOf(bb.get() & 0xFF)
-          require((bb.get() & 0xFF) == 0, "unsupported compression method")
-          require((bb.get() & 0xFF) == 0, "unsupported filter method")
-          require((bb.get() & 0xFF) == 0, "interlaced PNGs not supported")
-        case "IDAT" =>
-          idat.write(bytes, bb.position(), len)
-          bb.position(bb.position() + len)
-        case "IEND" => done = true
-        case _ => bb.position(bb.position() + len) // ancillary chunk
-      }
-      if (!done) bb.getInt() // crc (trusted input; integrity not re-checked)
-    }
-    require(width > 0 && height > 0 && channels > 0, "missing IHDR")
-    // size sanity BEFORE allocating: in a scraped corpus a flipped header
-    // byte must throw (quarantined per row), never Int-overflow the
-    // stride math or OOM an executor with a multi-GB raster
-    val rawLen = (width.toLong * channels + 1) * height
-    require(rawLen <= MaxRasterBytes,
-      s"PNG raster ${width}x$height x$channels exceeds the " +
-        s"$MaxRasterBytes-byte decode cap (corrupt header?)")
-    val stride = width * channels
-    val raw = new Array[Byte](rawLen.toInt)
-    val infl = new Inflater()
-    infl.setInput(idat.toByteArray)
-    var off = 0
-    while (!infl.finished() && off < raw.length) {
-      val n = infl.inflate(raw, off, raw.length - off)
-      require(n > 0 || infl.finished(), "truncated IDAT stream")
-      off += n
-    }
-    infl.end()
-    require(off == raw.length, s"short pixel data: $off of ${raw.length}")
-
-    val pixels = new Array[Byte](stride * height)
-    var y = 0
-    while (y < height) {
-      val ft = raw(y * (stride + 1)) & 0xFF
-      var i = 0
-      while (i < stride) {
-        val x = raw(y * (stride + 1) + 1 + i) & 0xFF
-        val a = if (i >= channels) pixels(y * stride + i - channels) & 0xFF else 0
-        val b = if (y > 0) pixels((y - 1) * stride + i) & 0xFF else 0
-        val c = if (y > 0 && i >= channels)
-          pixels((y - 1) * stride + i - channels) & 0xFF else 0
-        val recon = ft match {
-          case 0 => x
-          case 1 => x + a
-          case 2 => x + b
-          case 3 => x + (a + b) / 2
-          case 4 => x + paeth(a, b, c)
-          case f => throw new IllegalArgumentException(s"bad filter type $f")
-        }
-        pixels(y * stride + i) = recon.toByte
-        i += 1
-      }
-      y += 1
-    }
-    Image(width, height, channels, pixels)
-  }
 
   // ---- transforms ------------------------------------------------------------
 

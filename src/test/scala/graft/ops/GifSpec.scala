@@ -2,10 +2,10 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GIF codec: LOSSLESS round-trips (LZW + palette must be bit-exact),
-  * interlace de-scrambling, dictionary growth across width bumps and a
-  * full-table clear, and both-way interop against `javax.imageio`'s
-  * independent GIF plugin. */
+/** The GIF fixture encoder against [[Multimodal.decodeImage]] (the JDK's
+  * independent GIF plugin): LOSSLESS round-trips (LZW + palette must be
+  * bit-exact), interlace de-scrambling, dictionary growth across width
+  * bumps and a full-table clear, and ImageIO-encoded streams. */
 class GifSpec extends AnyFunSuite {
 
   private def gray(w: Int, h: Int)(f: Int => Int): Array[Byte] =
@@ -16,15 +16,15 @@ class GifSpec extends AnyFunSuite {
 
   test("gray round-trip is BIT-EXACT (lossless format)") {
     val px = gray(37, 23)(i => (i * 31 + (i / 37) * 7) % 256)
-    val img = Gif.decode(Gif.encode(37, 23, px))
+    val img = Multimodal.decodeImage(Gif.encode(37, 23, px)).get
     assert(img.width == 37 && img.height == 23 && img.channels == 3)
     assert(img.pixels.sameElements(toRgb(px)))
   }
 
   test("interlaced image de-scrambles to the same exact pixels") {
     val px = gray(16, 11)(i => (i * 13) % 256)
-    val plain = Gif.decode(Gif.encode(16, 11, px, interlace = false))
-    val inter = Gif.decode(Gif.encode(16, 11, px, interlace = true))
+    val plain = Multimodal.decodeImage(Gif.encode(16, 11, px, interlace = false)).get
+    val inter = Multimodal.decodeImage(Gif.encode(16, 11, px, interlace = true)).get
     assert(inter.pixels.sameElements(plain.pixels))
     assert(inter.pixels.sameElements(toRgb(px)))
   }
@@ -35,14 +35,14 @@ class GifSpec extends AnyFunSuite {
     // several width bumps; > 4096 entries forces the mid-stream CLEAR
     val px = gray(200, 200)(i => ((i * 2654435761L >>> 13) % 256).toInt)
     val bytes = Gif.encode(200, 200, px)
-    assert(Gif.decode(bytes).pixels.sameElements(toRgb(px)))
+    assert(Multimodal.decodeImage(bytes).get.pixels.sameElements(toRgb(px)))
   }
 
   test("repetitive content (dictionary-heavy) compresses AND round-trips") {
     val px = gray(128, 64)(i => if ((i / 16) % 2 == 0) 17 else 200)
     val bytes = Gif.encode(128, 64, px)
     assert(bytes.length < 128 * 64 / 2, "LZW should compress runs")
-    assert(Gif.decode(bytes).pixels.sameElements(toRgb(px)))
+    assert(Multimodal.decodeImage(bytes).get.pixels.sameElements(toRgb(px)))
   }
 
   test("interop OUT: javax.imageio reads this encoder's stream bit-exactly") {
@@ -67,7 +67,7 @@ class GifSpec extends AnyFunSuite {
     assert(javax.imageio.ImageIO.write(bi, "gif", bos))
     val bytes = bos.toByteArray
     assert(Gif.isGif(bytes))
-    val mine = Gif.decode(bytes)
+    val mine = Multimodal.decodeImage(bytes).get
     assert(mine.width == w && mine.height == h && mine.channels == 3)
     val back = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(bytes))
@@ -82,10 +82,10 @@ class GifSpec extends AnyFunSuite {
   test("corrupt streams fail loudly (quarantine contract)") {
     val px = gray(8, 8)(identity)
     val bytes = Gif.encode(8, 8, px)
-    intercept[Exception](Gif.decode(bytes.take(30)))
+    intercept[Exception](Multimodal.decodeImage(bytes.take(30)).get)
     assert(!Gif.isGif("PNGX".getBytes))
     // truncated LZW inside an otherwise well-formed file
     val cut = bytes.clone()
-    intercept[Exception](Gif.decode(cut.take(bytes.length - 12)))
+    intercept[Exception](Multimodal.decodeImage(cut.take(bytes.length - 12)).get)
   }
 }

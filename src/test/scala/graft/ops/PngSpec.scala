@@ -1,12 +1,15 @@
 package graft.ops
 
+import java.awt.image.{BufferedImage, IndexColorModel}
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Hashing
 
-/** The pure-JVM PNG codec: exact pixel roundtrip across color types and
-  * sizes (the encoder cycles all five scanline filters, so every unfilter
-  * path is on the line), plus rejection of non-PNG payloads. */
+/** PNG through [[Multimodal.decodeImage]]: exact pixel roundtrip of the
+  * fixture encoder across color types and sizes (it cycles all five
+  * scanline filters, so every unfilter path is on the line), palette
+  * expansion, the 8-bit refusal, and the skip of non-PNG payloads. */
 class PngSpec extends AnyFunSuite {
 
   private def pix(n: Int, seed: Long): Array[Byte] =
@@ -20,7 +23,7 @@ class PngSpec extends AnyFunSuite {
       val px = pix(w * h * channels, 31L * channels + w * 1000 + h)
       val bytes = Png.encode(w, h, channels, px)
       assert(Png.isPng(bytes))
-      val img = Png.decode(bytes)
+      val img = Multimodal.decodeImage(bytes).get
       assert(img.width == w && img.height == h && img.channels == channels)
       assert(img.pixels.sameElements(px),
         s"pixel mismatch at channels=$channels ${w}x$h")
@@ -45,11 +48,59 @@ class PngSpec extends AnyFunSuite {
   }
 
   test("decode rejects non-PNG and truncated payloads") {
-    intercept[IllegalArgumentException] {
-      Png.decode("definitely not a png".getBytes)
+    // a foreign payload is skipped (None), not counted as corrupt
+    assert(Multimodal.decodeImage("definitely not a png".getBytes).isEmpty)
+    val px = pix(64, 7L)
+    val good = Png.encode(8, 8, 1, px)
+    // a cut into the compressed pixel data throws ...
+    intercept[Exception] { Multimodal.decodeImage(good.take(good.length - 30)).get }
+    // ... while a cut that loses only the zlib Adler-32, the IDAT CRC and
+    // IEND keeps every pixel: the JDK reader checks neither checksum and
+    // decodes it exactly
+    assert(Multimodal.decodeImage(good.take(good.length - 20)).get.pixels.sameElements(px))
+    // no truncation ever yields wrong pixels
+    (1 until good.length).foreach { cut =>
+      scala.util.Try(Multimodal.decodeImage(good.take(cut)).get).foreach(img =>
+        assert(img.pixels.sameElements(px), s"cut at $cut decoded wrong pixels"))
     }
-    val good = Png.encode(8, 8, 1, pix(64, 7L))
-    intercept[Exception] { Png.decode(good.take(good.length - 20)) }
+  }
+
+  /** A `javax.imageio`-written PNG of `bi`, with its IHDR bit depth and
+    * color type (bytes 24 and 25) — so a fixture is the kind it claims. */
+  private def imageioPng(bi: BufferedImage): (Array[Byte], Int, Int) = {
+    val bos = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(bi, "png", bos))
+    val b = bos.toByteArray
+    (b, b(24) & 0xFF, b(25) & 0xFF)
+  }
+
+  test("a palette PNG expands to 3-channel RGB, packed indices included") {
+    val w = 13; val h = 7
+    for (bits <- Seq(4, 8)) {
+      val n = 1 << bits
+      val pal = pix(n * 3, bits.toLong)
+      val cm = new IndexColorModel(bits, n, Array.tabulate(n)(i => pal(3 * i)),
+        Array.tabulate(n)(i => pal(3 * i + 1)), Array.tabulate(n)(i => pal(3 * i + 2)))
+      val bi = new BufferedImage(w, h,
+        if (bits == 8) BufferedImage.TYPE_BYTE_INDEXED else BufferedImage.TYPE_BYTE_BINARY, cm)
+      val idx = Array.tabulate(w * h)(i => (Hashing.mix64(i * 7L) & (n - 1)).toInt)
+      for (i <- idx.indices) bi.getRaster.setSample(i % w, i / w, 0, idx(i))
+      val (bytes, depth, colorType) = imageioPng(bi)
+      assert(colorType == 3 && depth == bits, s"fixture is not a $bits-bit palette PNG")
+      val img = Multimodal.decodeImage(bytes).get
+      assert(img.width == w && img.height == h && img.channels == 3)
+      assert(img.pixels.sameElements(idx.flatMap(i => pal.slice(3 * i, 3 * i + 3).toSeq)),
+        s"$bits-bit palette")
+    }
+  }
+
+  test("a 16-bit PNG throws (8-bit samples only)") {
+    val bi = new BufferedImage(9, 5, BufferedImage.TYPE_USHORT_GRAY)
+    for (y <- 0 until 5; x <- 0 until 9) bi.getRaster.setSample(x, y, 0, x * 7000 + y)
+    val (bytes, depth, colorType) = imageioPng(bi)
+    assert(colorType == 0 && depth == 16, "fixture is not a 16-bit gray PNG")
+    val e = intercept[Exception](Multimodal.decodeImage(bytes).get)
+    assert(e.getMessage.contains("8-bit only"))
   }
 
   test("extractImageMeta decodes PNGs, skips foreign and corrupt payloads") {

@@ -156,4 +156,34 @@ class ReportEmSpec extends AnyFunSuite {
       assert(out.forall { case (r, t) => cands(r)(t) }, s"maxIter $maxIter")
     }
   }
+
+  test("em: at 70,000 targets (the treeAggregate merge) every read comes " +
+      "back once, to a candidate, and planted majorities win") {
+    // one unique-match seed read per target, so |targets| = 70,000 >= 65,536.
+    // Each block of 10 targets plants a majority: 3 reads favour t(k+9)
+    // on k-mer count, 2 more tie t(k+3) and t(k+9) exactly. On the seed
+    // priors alone a tie goes to the smaller name, t(k+3); only the
+    // per-target counts merged across iterations move the ties to t(k+9).
+    val nT = 70000
+    def t(i: Int) = f"t$i%05d"
+    val seeds = (0 until nT).map(i => (s"u$i", t(i), 10))
+    val multis = (0 until nT by 10).flatMap { k =>
+      val (a, b) = (t(k + 3), t(k + 9))
+      (0 until 3).flatMap(j => Seq((s"m$k.$j", a, 5), (s"m$k.$j", b, 6))) ++
+        (3 until 5).flatMap(j => Seq((s"m$k.$j", a, 5), (s"m$k.$j", b, 5)))
+    }
+    val rows = seeds ++ multis
+    val all = rows.toDF("read_id", "target", "kmer_count")
+    assert(all.select("target").distinct().count() == nT)
+    val cands = rows.groupBy(_._1).map { case (r, ms) => r -> ms.map(_._2).toSet }
+    val out = Em.reassign(spark, all).collect()
+      .map(r => (r.getString(0), r.getString(1)))
+    assert(out.length == cands.size)
+    val got = out.toMap
+    assert(got.size == cands.size, "a read came back more than once")
+    assert(got.forall { case (r, tg) => cands(r)(tg) }, "assigned off-candidate")
+    val lost = (0 until nT by 10).filter(k =>
+      (0 until 5).exists(j => got(s"m$k.$j") != t(k + 9)))
+    assert(lost.size == 0, s"planted majorities lost, e.g. blocks ${lost.take(3)}")
+  }
 }
