@@ -188,9 +188,10 @@ object Classify {
           // fpr-query: discard if P(Binom(n, p_bin) > c) > fprQuery — the
           // reference computes q = 1 - sum_{i<=c} (GanonClassify.cpp:589-600),
           // so a full-containment match (c == n) always survives (q = 0)
-          val q = MathFns.binomTailUpper(n.toLong, c + 1L, d.binFpr(b),
-            fprLogs(2 * b), fprLogs(2 * b + 1))
-          if (q <= cp.fprQuery) { out(nOut) = MatchRow(d.targets(b), c); nOut += 1 }
+          if (MathFns.binomTailAtMost(n.toLong, c + 1L, d.binFpr(b),
+              fprLogs(2 * b), fprLogs(2 * b + 1), cp.fprQuery)) {
+            out(nOut) = MatchRow(d.targets(b), c); nOut += 1
+          }
           else disFpr += 1
         } else disFilter += 1
       }

@@ -83,4 +83,32 @@ object MathFns {
     }
     math.min(1.0, acc)
   }
+
+  /** Relative safety margin of [[binomTailAtMost]]'s early keep. Inside
+    * the log-factorial table (n < 2^16) a tail term's log is off by well
+    * under 1e-9, so [[binomTailUpper]]'s sum is within 1e-9 of the tail
+    * the geometric bound bounds. */
+  private final val TailMargin = 1e-6
+
+  /**
+   * `binomTailUpper(n, k, p, lp, lq) <= bound` (the fpr-query's keep
+   * test), decided without summing the tail where a bound settles it.
+   * Past the mode the term ratio t(i+1)/t(i) = (n-i)/(i+1) * p/(1-p)
+   * falls with i, so with r its value at k the tail is at most
+   * t(k)/(1 - r): keep when that is below `bound` with the margin. Else
+   * (or n past the table) the full [[binomTailUpper]] sum decides, so
+   * every decision equals its own.
+   */
+  def binomTailAtMost(n: Long, k: Long, p: Double, lp: Double, lq: Double,
+      bound: Double): Boolean = {
+    if (bound >= 1.0) return true // the tail never exceeds 1
+    if (k > 0 && k <= n && p > 0.0 && p < 1.0 && n < LogFactN) {
+      val tab = logFactTable
+      val tk = math.exp((logFact(n, tab) - logFact(k, tab) -
+        logFact(n - k, tab)) + k * lp + (n - k) * lq)
+      val r = (n - k).toDouble / (k + 1) * (p / (1.0 - p))
+      if (r < 1.0 && tk / (1.0 - r) * (1.0 + TailMargin) < bound) return true
+    }
+    binomTailUpper(n, k, p, lp, lq) <= bound
+  }
 }

@@ -44,14 +44,23 @@ final class InterleavedBloom(
     }
   }
 
+  /** Row word w's bits that are real bins: the last word of a row drops
+    * the bits at or above `numBins`. */
+  @inline private def binMask(w: Int): Long =
+    if (w == wordsPerRow - 1 && (numBins & 63) != 0) (1L << (numBins & 63)) - 1L
+    else -1L
+
   /**
    * Bulk count: for each bin, how many of `hashes` are (probabilistically)
    * members. One pass: per hash, AND the numHashes rows into `tmp`, then
-   * popcount-accumulate set bins. `counts` must have length >= numBins.
+   * count the set bins with the shared counter ([[InterleavedBloom.countWord]]).
+   * `counts` must have length >= numBins.
    */
   def bulkCount(hashes: Array[Long], counts: Array[Int]): Unit = {
     if (wordsPerRow == 1) { bulkCount1(hashes, counts, 0); return }
     val tmp = new Array[Long](wordsPerRow)
+    val nPlanes = InterleavedBloom.planesFor(hashes.length)
+    val planes = new Array[Long](wordsPerRow * nPlanes)
     var hi = 0
     while (hi < hashes.length) {
       val hash = hashes(hi)
@@ -75,18 +84,15 @@ final class InterleavedBloom(
       if (any != 0L) {
         w = 0
         while (w < wordsPerRow) {
-          var bits = tmp(w)
-          while (bits != 0L) {
-            val b = java.lang.Long.numberOfTrailingZeros(bits)
-            val bin = (w << 6) + b
-            if (bin < numBins) counts(bin) += 1
-            bits &= bits - 1
-          }
+          val acc = tmp(w) & binMask(w)
+          if (acc != 0L)
+            InterleavedBloom.countWord(acc, counts, w << 6, planes, w * nPlanes)
           w += 1
         }
       }
       hi += 1
     }
+    InterleavedBloom.flushPlanes(planes, wordsPerRow, nPlanes, counts, 0)
   }
 
   /** One-word-per-row bulk count over a PRECOMPUTED position matrix
@@ -99,6 +105,9 @@ final class InterleavedBloom(
     * bins accumulate into counts at `off`. */
   def countAtRowsMatrix1(rowsFlat: Array[Int], nHashes: Int,
       counts: Array[Int], off: Int): Unit = {
+    val mask = binMask(0)
+    val nPlanes = InterleavedBloom.planesFor(nHashes)
+    val planes = new Array[Long](nPlanes)
     var hi = 0
     while (hi < nHashes) {
       val base = hi * numHashes
@@ -107,13 +116,11 @@ final class InterleavedBloom(
       while (i < numHashes && acc != 0L) {
         acc &= words(rowsFlat(base + i)); i += 1
       }
-      while (acc != 0L) {
-        val b = java.lang.Long.numberOfTrailingZeros(acc)
-        if (b < numBins) counts(off + b) += 1
-        acc &= acc - 1
-      }
+      acc &= mask
+      if (acc != 0L) InterleavedBloom.countWord(acc, counts, off, planes, 0)
       hi += 1
     }
+    InterleavedBloom.flushPlanes(planes, 1, nPlanes, counts, off)
   }
 
   /** <=64-bin fast path: the row is ONE word — accumulate in a register
@@ -121,6 +128,9 @@ final class InterleavedBloom(
     * miss most bins, so the early exit usually fires on probe 2-3). Set
     * bins accumulate into counts at `off`. */
   def bulkCount1(hashes: Array[Long], counts: Array[Int], off: Int): Unit = {
+    val mask = binMask(0)
+    val nPlanes = InterleavedBloom.planesFor(hashes.length)
+    val planes = new Array[Long](nPlanes)
     var hi = 0
     while (hi < hashes.length) {
       val hash = hashes(hi)
@@ -132,13 +142,11 @@ final class InterleavedBloom(
         acc &= words(rowOf(h1, h2, i))
         i += 1
       }
-      while (acc != 0L) {
-        val bin = java.lang.Long.numberOfTrailingZeros(acc)
-        if (bin < numBins) counts(off + bin) += 1
-        acc &= acc - 1
-      }
+      acc &= mask
+      if (acc != 0L) InterleavedBloom.countWord(acc, counts, off, planes, 0)
       hi += 1
     }
+    InterleavedBloom.flushPlanes(planes, 1, nPlanes, counts, off)
   }
 
   def bulkCount(hashes: Array[Long]): Array[Int] = {
@@ -237,6 +245,62 @@ final class InterleavedBloom(
 }
 
 object InterleavedBloom {
+
+  /** AND words with at most this many bins set take one increment per set
+    * bin; denser ones go through the bit-sliced planes. Chosen by a
+    * same-JVM kernel A/B (DESIGN.md, "One probe loop, kernel per read"). */
+  private[sketch] final val SparseBits = 8
+
+  /** Planes of the bit-sliced counter for `nHashes` hashes: a bin's
+    * plane-held count is at most nHashes, which fits in this many bits. */
+  @inline private def planesFor(nHashes: Int): Int =
+    32 - Integer.numberOfLeadingZeros(nHashes)
+
+  /** The one per-bin counting rule. One probed hash's AND word `acc` (bins
+    * [at, at + 64) of `counts`) either adds 1 per set bit (a sparse word)
+    * or is added with carries into the bit-sliced counter `planes` from
+    * `p0`, whose plane j holds bit j of each of the 64 bins' counts — a
+    * carry chain per hash instead of one increment per set bin
+    * (positional population count; Klarqvist, Muła & Lemire, Concurrency
+    * and Computation: Practice and Experience 33(17), 2021). The planes
+    * reach `counts` in [[flushPlanes]], once per call. */
+  @inline private def countWord(acc: Long, counts: Array[Int], at: Int,
+      planes: Array[Long], p0: Int): Unit =
+    if (java.lang.Long.bitCount(acc) <= SparseBits) {
+      var bits = acc
+      while (bits != 0L) {
+        counts(at + java.lang.Long.numberOfTrailingZeros(bits)) += 1
+        bits &= bits - 1
+      }
+    } else {
+      var carry = acc
+      var j = p0
+      while (carry != 0L) {
+        val c = planes(j) & carry
+        planes(j) ^= carry
+        carry = c
+        j += 1
+      }
+    }
+
+  /** Add the plane-held counts of `nWords` row words (`nPlanes` planes
+    * each) into `counts` at `off`. */
+  private def flushPlanes(planes: Array[Long], nWords: Int, nPlanes: Int,
+      counts: Array[Int], off: Int): Unit = {
+    var w = 0
+    while (w < nWords) {
+      var j = 0
+      while (j < nPlanes) {
+        var bits = planes(w * nPlanes + j)
+        while (bits != 0L) {
+          counts(off + (w << 6) + java.lang.Long.numberOfTrailingZeros(bits)) += 1 << j
+          bits &= bits - 1
+        }
+        j += 1
+      }
+      w += 1
+    }
+  }
 
   /** Fill `rowsFlat` (length >= hashes.length*numHashes) with every
     * hash's probe rows for filters of (bitsPerBin, numHashes) —

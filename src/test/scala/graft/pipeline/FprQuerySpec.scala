@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.build.{IbfParams, IbfPlan, ProbeDb}
 import graft.classify.{Classify, ClassifyParams}
-import graft.core.{Hashing, ReferenceTail}
+import graft.core.{Hashing, MathFns, ReferenceTail}
 import graft.spark.SparkTestSession
 
 /** A db in which target t holds a hash with probability `hitRate`
@@ -66,5 +66,43 @@ class FprQuerySpec extends AnyFunSuite {
     }
     // the read set must exercise both sides of the threshold
     assert(splitReads >= 10, s"only $splitReads reads split by fpr-query")
+  }
+
+  test("binomTailAtMost decides as the reference tail on an (n, k, p, " +
+      "fprQuery) grid dense at q = fprQuery") {
+    val ns = Seq(1L, 2L, 5L, 10L, 31L, 64L, 144L, 151L, 500L, 1000L, 4096L,
+      65535L, 65536L)
+    val ps = Seq(1e-300, 1e-12, 1e-9, 1e-6, 1e-3, 0.01, 0.0137, 0.05, 0.1,
+      0.25, 0.5, 0.9, 0.99)
+    var cases = 0
+    var undecidedKeeps = 0
+    for (n <- ns; p <- ps) {
+      val mode = math.floor((n + 1) * p).toLong
+      val ks = (Seq(0L, 1L, 2L, mode - 2, mode - 1, mode, mode + 1, mode + 2,
+        mode + 5, n / 4, n / 2, 3 * n / 4, n - 1, n, n + 1) ++
+        (1 to 6).map(j => mode + (math.sqrt(n * p) * j).toLong))
+        .filter(_ >= 0).distinct
+      for (k <- ks) {
+        val q = ReferenceTail.binomTailUpper(n, k, p)
+        val near = (1 to 10).flatMap(j => Seq(q * (1 + j * 1e-7),
+          q * (1 - j * 1e-7)))
+        val bounds = Seq(0.0, 1e-300, 1e-9, 1e-5, 0.01, 0.5, 1.0, 1.5, q,
+          math.nextUp(q), math.nextDown(q), q * (1 + 2e-6), q * (1 - 2e-6),
+          q * 2, q / 2) ++ near
+        for (b <- bounds) {
+          val want = q <= b
+          val got = MathFns.binomTailAtMost(n, k, p, math.log(p),
+            math.log1p(-p), b)
+          assert(got == want, s"binomTailAtMost($n, $k, $p, $b) = $got; " +
+            s"reference tail $q")
+          if (want && b < q * (1 + 1e-6)) undecidedKeeps += 1
+          cases += 1
+        }
+      }
+    }
+    assert(cases > 10000, cases)
+    // the grid holds keeps within the margin above q, which no early exit
+    // may settle
+    assert(undecidedKeeps > 1000, undecidedKeeps)
   }
 }
