@@ -1,13 +1,21 @@
 package graft.build
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.core.Hashing
-import graft.core.sketch.{Bloom, InterleavedBloom}
+import graft.core.sketch.{Bloom, Hll, InterleavedBloom}
 import graft.spark.GraftFunctions
-import graft.spark.udaf.SketchAggs.ShardSlice
 
 /** Shingling + filter-sizing parameters (role of ganon's IBFConfig,
   * src/utils/include/utils/IBFConfig.hpp:5-41). `sizingMode` mirrors the
@@ -58,6 +66,10 @@ object BinLayout {
     else java.lang.Long.remainderUnsigned(
       Hashing.mix64(h ^ RouteSeed), split.toLong).toInt
 
+  /** A row's hashes bound for 64-bin group `grp`, owned by the target at
+    * bins [base, base+split). */
+  final case class Slice(grp: Int, base: Int, split: Int, hs: Array[Long])
+
   /** A row's per-group slices (grp, base, split, hs) under the bin map
     * `bins` (target -> (base, split)). A split-free target gives one slice
     * carrying the row's own array; a split target gives, per spanned
@@ -65,10 +77,10 @@ object BinLayout {
     * bins (a group it sends none gets no slice); a target missing from
     * `bins` gives no slice. */
   def slices(bins: collection.Map[String, (Int, Int)], target: String,
-      hs: Array[Long]): Iterator[ShardSlice] =
+      hs: Array[Long]): Iterator[Slice] =
     bins.get(target) match {
       case None => Iterator.empty
-      case Some((base, 1)) => Iterator.single(ShardSlice(base >> 6, base, 1, hs))
+      case Some((base, 1)) => Iterator.single(Slice(base >> 6, base, 1, hs))
       case Some(_) if hs == null => Iterator.empty
       case Some((base, split)) =>
         val g0 = base >> 6
@@ -81,7 +93,7 @@ object BinLayout {
         }
         out.indices.iterator.collect {
           case k if out(k).length > 0 =>
-            ShardSlice(g0 + k, base, split, out(k).result())
+            Slice(g0 + k, base, split, out(k).result())
         }
     }
 
@@ -94,6 +106,82 @@ object BinLayout {
     while (i < counts.length) { base(i) = acc; acc += split(i); i += 1 }
     BinLayout(base, split, acc)
   }
+}
+
+/** One partition of a build's content scan: row i's target (an index into
+  * `names`, the partition's distinct targets) and its sorted-distinct hash
+  * set (empty for null content). Both build passes fold these blocks, so
+  * each row is shingled once — the role of ganon's minimizer spill, which
+  * the filter pass re-reads instead of re-hashing (GanonBuild.cpp:139-182). */
+private[graft] final class HashBlock(val names: Array[String],
+    val target: Array[Int], val hashes: Array[Array[Long]]) extends Serializable
+
+private[graft] object HashBlock {
+  /** The block of one partition of a (target, hs) projection. */
+  def of(rows: Iterator[InternalRow]): HashBlock = {
+    val index = new java.util.HashMap[String, Integer]
+    val names = ArrayBuffer.empty[String]
+    val target = new ArrayBuilder.ofInt
+    val hashes = ArrayBuffer.empty[Array[Long]]
+    rows.foreach { r =>
+      val t = if (r.isNullAt(0)) null else r.getUTF8String(0).toString
+      var i = index.get(t)
+      if (i == null) { i = names.length; index.put(t, i); names += t }
+      target += i
+      hashes += (if (r.isNullAt(1)) Array.emptyLongArray
+        else r.getArray(1).toLongArray())
+    }
+    new HashBlock(names.toArray, target.result(), hashes.toArray)
+  }
+}
+
+/** One 64-bin group's shard under construction: the interleaved filter
+  * and, when `coarse` gives its (bits, hashes), the group's union Bloom
+  * (the group's bin of a two-level db's coarse filter). Both are allocated
+  * at the first hash, so a group no hash reached stays empty (`shard` is
+  * null). Merge is bitwise OR (GanonBuild.cpp:655-698 inserts; the order
+  * of inserts and merges does not change a bit). */
+private[graft] final class GroupFold(bitsPerBin: Long, numHashes: Int,
+    coarse: Option[(Long, Int)]) extends Serializable {
+  var shard: InterleavedBloom = null
+  var union: Bloom = null
+
+  /** Add hash `h` to the group-local bin `bin`. */
+  def add(h: Long, bin: Int): Unit = {
+    if (shard == null) {
+      shard = InterleavedBloom.empty(64, bitsPerBin, numHashes)
+      union = coarse.map { case (b, k) => Bloom.empty(b, k) }.orNull
+    }
+    shard.add(h, bin)
+    if (union != null) union.add(h)
+  }
+
+  /** Add a routed slice of this group: each hash into its target's bin. */
+  def addSlice(s: BinLayout.Slice): GroupFold = {
+    val off = s.grp * 64
+    var i = 0
+    while (i < s.hs.length) {
+      add(s.hs(i), s.base + BinLayout.routeBin(s.hs(i), s.split) - off)
+      i += 1
+    }
+    this
+  }
+
+  def or(o: GroupFold): GroupFold =
+    if (o.shard == null) this
+    else if (shard == null) o
+    else {
+      val (x, y) = (shard.words, o.shard.words)
+      var i = 0
+      while (i < x.length) { x(i) |= y(i); i += 1 }
+      if (union != null) union.merge(o.union)
+      this
+    }
+
+  /** (shard, union) blobs; null for an empty group or an absent union. */
+  def blobs: (Array[Byte], Array[Byte]) =
+    if (shard == null) (null, null)
+    else (shard.toBytes, if (union == null) null else union.toBytes)
 }
 
 /** Broadcastable probe side of the classify join: a [[SketchDb]] or a
@@ -450,22 +538,26 @@ object SketchDb {
 
 /**
  * Distributed build (Spark shape of ganon-build's two thread pools,
- * src/ganon-build/GanonBuild.cpp:752-921):
+ * src/ganon-build/GanonBuild.cpp:752-921), from ONE content scan:
  *
- *   pass 1  groupBy(target).agg(hll(shingles))   -> per-target cardinalities
+ *   scan    shingle each row once into per-partition [[HashBlock]]s,
+ *           persisted MEMORY_AND_DISK for the writer's duration (ganon's
+ *           minimizer spill, GanonBuild.cpp:139-182)
+ *   pass 1  fold the blocks into per-target HLLs, merged by key
+ *           -> per-target cardinalities
  *   driver  Sizing.optimalHashes: capacity simulation + split-bin layout
- *   pass 2  route each row map-side through the bin map (a lookup the
- *           routing closure carries — no join), groupBy(grp) building
- *           one interleaved SHARD per group on executors
+ *   pass 2  fold the same blocks through the bin map (a lookup the fold's
+ *           closure carries — no join) into one interleaved SHARD per
+ *           64-bin group on executors
  *   driver  keep the G shards as the db's groups (a header re-window
  *           per shard — no OR-merging, no transposing, no per-partition
  *           partials on the driver)
  *
- * Shuffle discipline: per-row-deduped hash subsets shuffle exactly once,
- * keyed by group. When numGroups >= parallelism the aggregation is
- * exchange-free-complete (one task per group, no partial blobs); below
- * that, map-side partials are bounded by numGroups x shardBytes per task.
- * Mega-target skew is structurally gone: every technical bin holds at most
+ * Shuffle discipline: when numGroups >= parallelism each group's routed
+ * hashes ship once, to one task that folds the whole group (no partial
+ * shards); below that, each block folds map-side into per-group partial
+ * shards, so a map task ships at most numGroups x shardBytes. Mega-target
+ * skew is structurally gone: every technical bin holds at most
  * ~maxHashesBin hashes, so reducers are load-balanced by construction
  * (the salting idea, but derived from the same split-bin plan the
  * reference uses — GanonBuild.cpp:619-653).
@@ -482,19 +574,59 @@ object SketchBuild {
     val base =
       if (p.minContentLen > 0) df.filter(octet_length(col(contentCol)) >= p.minContentLen)
       else df
-    base.select(col(targetCol).as("target"),
+    base.select(col(targetCol).cast("string").as("target"),
       GraftFunctions.shingles(col(contentCol), p.k, p.w, p.seed).as("hs"))
+  }
+
+  /** The projection's rows as one [[HashBlock]] per partition. */
+  private def blocksOf(hashed: DataFrame): RDD[HashBlock] =
+    hashed.queryExecution.toRdd.mapPartitions(rows =>
+      Iterator.single(HashBlock.of(rows)))
+
+  /** Run `body` over the blocks of `hashed` (None: no content to scan).
+    * With `reuse` the blocks are persisted MEMORY_AND_DISK, so the passes
+    * after the first fold them without re-reading or re-shingling the
+    * input, and unpersisted when `body` returns or throws. The scan runs
+    * as one SQL execution with the projection's plan. */
+  private def withScan[T](hashed: Option[DataFrame], reuse: Boolean = true)(
+      body: Option[RDD[HashBlock]] => T): T = hashed match {
+    case None => body(None)
+    case Some(h) =>
+      val blocks = blocksOf(h)
+      if (reuse) blocks.persist(StorageLevel.MEMORY_AND_DISK)
+      try SQLExecution.withNewExecutionId(h.queryExecution,
+        Some("sketch build scan"))(body(Some(blocks)))
+      finally if (reuse) blocks.unpersist(blocking = false)
   }
 
   /** Pass-1 result: (target, n_hashes estimate). */
   def targetCardinalities(df: DataFrame, targetCol: String, contentCol: String,
       p: IbfParams): DataFrame =
-    targetCardinalitiesHashed(hashedProjection(df, targetCol, contentCol, p), p)
+    df.sparkSession.createDataFrame(
+      cardinalityFold(blocksOf(hashedProjection(df, targetCol, contentCol, p)),
+        p.hllP).map { case (t, n) => Row(t, n) },
+      StructType(Seq(StructField("target", StringType),
+        StructField("n_hashes", LongType, nullable = false))))
 
-  private def targetCardinalitiesHashed(hashed: DataFrame,
-      p: IbfParams): DataFrame =
-    hashed.groupBy("target")
-      .agg(GraftFunctions.hllCount(col("hs"), p.hllP).as("n_hashes"))
+  /** Pass 1: one HLL per target per block, merged by key (a register max
+    * does not depend on order, so the estimates equal one sketch over all
+    * of a target's hashes). */
+  private def cardinalityFold(blocks: RDD[HashBlock],
+      hllP: Int): RDD[(String, Long)] =
+    blocks.flatMap { b =>
+      val hll = Array.fill(b.names.length)(Hll.empty(hllP))
+      var i = 0
+      while (i < b.target.length) { hll(b.target(i)).addAll(b.hashes(i)); i += 1 }
+      b.names.iterator.zip(hll.iterator)
+    }.combineByKeyWithClassTag[Hll](identity, _ merge _, _ merge _,
+      new HashPartitioner(math.max(1, math.min(blocks.getNumPartitions,
+        blocks.sparkContext.defaultParallelism))), mapSideCombine = false)
+      .mapValues(_.estimate)
+
+  /** Pass 1 collected on the driver, sorted by target. */
+  private def cardinalities(blocks: RDD[HashBlock],
+      hllP: Int): Seq[(String, Long)] =
+    cardinalityFold(blocks, hllP).collect().sortBy(_._1).toSeq
 
   /** Driver-side sizing via the capacity simulation; 5% headroom on the bin
     * size covers the HLL estimate error (1.04/sqrt(2^p)) so the realized FP
@@ -520,9 +652,9 @@ object SketchBuild {
       twoLevel = false)
 
   /**
-   * Two-level build: the SAME single pass also aggregates one coarse
-   * union-Bloom per 64-bin group (no third scan over the content, no
-   * bin re-extraction), so probes prune groups below the read's cutoff.
+   * Two-level build: the SAME shard pass also folds one coarse union-Bloom
+   * per 64-bin group (no second scan over the content, no bin
+   * re-extraction), so probes prune groups below the read's cutoff.
    */
   def buildTwoLevel(spark: SparkSession, df: DataFrame, targetCol: String,
       contentCol: String, p: IbfParams = IbfParams(),
@@ -532,57 +664,56 @@ object SketchBuild {
 
   private def buildResident(spark: SparkSession, df: DataFrame,
       targetCol: String, contentCol: String, p: IbfParams,
-      checkpointDir: Option[String], twoLevel: Boolean): SketchDb = {
-    val (cards, thePlan, layout, bins) =
-      planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
-        twoLevel)
-    val nGroups = layout.numGroups
-    val shards = new Array[InterleavedBloom](nGroups)
-    val coarseBins = bins.collect().toSeq.flatMap { case (g, blob, coarseBlob) =>
-      // re-window the 64-wide shard to the group's real bin count
-      shards(g) = windowed(InterleavedBloom.fromBytes(blob), g, layout.numBins)
-      Option(coarseBlob).map(cb => (g, Bloom.fromBytes(cb)))
+      checkpointDir: Option[String], twoLevel: Boolean): SketchDb =
+    planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
+        twoLevel) { (cards, thePlan, layout, rows) =>
+      val nGroups = layout.numGroups
+      val shards = new Array[InterleavedBloom](nGroups)
+      val coarseBins = rows.collect().toSeq.flatMap { case (g, blob, coarseBlob) =>
+        // re-window the 64-wide shard to the group's real bin count
+        shards(g) = windowed(InterleavedBloom.fromBytes(blob), g, layout.numBins)
+        Option(coarseBlob).map(cb => (g, Bloom.fromBytes(cb)))
+      }
+      // groups whose targets routed ZERO hashes (all content empty/filtered)
+      // produce no shard row: materialize empty shards so probe/sizeBytes
+      // see zero-count bins
+      shards.indices.foreach { g =>
+        if (shards(g) == null) shards(g) = SketchDb.emptyShard(layout, thePlan, g)
+      }
+      SketchDb.resident(if (twoLevel) coarseOf(coarseBins, nGroups) else null,
+        shards, cards.map(_._1).toArray, cards.map(_._2).toArray, layout, p,
+        thePlan)
     }
-    // groups whose targets routed ZERO hashes (all content empty/filtered)
-    // produce no shard row: materialize empty shards so probe/sizeBytes
-    // see zero-count bins
-    shards.indices.foreach { g =>
-      if (shards(g) == null) shards(g) = SketchDb.emptyShard(layout, thePlan, g)
-    }
-    SketchDb.resident(if (twoLevel) coarseOf(coarseBins, nGroups) else null,
-      shards, cards.map(_._1).toArray, cards.map(_._2).toArray, layout, p,
-      thePlan)
-  }
 
-  /** The shared two-pass pipeline with the pass-2 result left DISTRIBUTED:
-    * the shard pass's (grp, shard, coarse) rows. */
-  private def planAndShard(spark: SparkSession, df: DataFrame,
+  /** The shared scan + two passes, handing the cardinalities, plan, layout
+    * and the shard pass's (grp, shard, coarse) rows to `finish`, which
+    * consumes the rows while the scan's blocks are still persisted. */
+  private def planAndShard[T](spark: SparkSession, df: DataFrame,
       targetCol: String, contentCol: String, p: IbfParams,
-      checkpointDir: Option[String], twoLevel: Boolean)
-      : (Seq[(String, Long)], IbfPlan, BinLayout,
-        Dataset[(Int, Array[Byte], Array[Byte])]) = {
+      checkpointDir: Option[String], twoLevel: Boolean)(
+      finish: (Seq[(String, Long)], IbfPlan, BinLayout,
+        RDD[(Int, Array[Byte], Array[Byte])]) => T): T = {
     import spark.implicits._
+    withScan(Some(hashedProjection(df, targetCol, contentCol, p))) { scanned =>
+      val blocks = scanned.get
+      // ---- pass 1 (or resume) ----
+      // v2: pass 2 always has a (possibly null) coarse column, so a pass-2
+      // checkpoint of a flat build from before it is recomputed, not misread
+      val tag = paramsTag(p) +
+        s";target=$targetCol;content=$contentCol;two=$twoLevel;v=2"
+      val cards = checkpointed(spark, checkpointDir, "pass1_cardinalities",
+          tag)(cardinalities(blocks, p.hllP))(_.toDF("target", "n_hashes"),
+        _.as[(String, Long)].collect().sortBy(_._1).toSeq)
+      val (thePlan, layout) = plan(cards, p)
 
-    val hashed = hashedProjection(df, targetCol, contentCol, p)
-
-    // ---- pass 1 (or resume) ----
-    // v2: pass 2 always has a (possibly null) coarse column, so a pass-2
-    // checkpoint of a flat build from before it is recomputed, not misread
-    val tag = paramsTag(p) +
-      s";target=$targetCol;content=$contentCol;two=$twoLevel;v=2"
-    val cards = checkpointed(spark, checkpointDir, "pass1_cardinalities",
-        tag) {
-      targetCardinalitiesHashed(hashed, p).as[(String, Long)]
-    }.collect().sortBy(_._1).toSeq
-    val (thePlan, layout) = plan(cards, p)
-
-    // ---- pass 2 (or resume): route -> one shard per 64-bin group ----
-    val bins = checkpointed(spark, checkpointDir, "pass2_group_shards",
-        tag) {
-      shardPass(spark, hashed, thePlan, entriesOf(cards, layout),
-        if (twoLevel) Some(coarseSizing(cards, layout, p.maxFp)) else None)
+      // ---- pass 2 (or resume): fold -> one shard per 64-bin group ----
+      val rows = checkpointed(spark, checkpointDir, "pass2_group_shards",
+          tag)(shardFold(spark, blocks, thePlan, entriesOf(cards, layout),
+            if (twoLevel) Some(coarseSizing(cards, layout, p.maxFp)) else None))(
+        _.toDF("grp", "shard", "coarse"),
+        _.as[(Int, Array[Byte], Array[Byte])].rdd)
+      finish(cards, thePlan, layout, rows)
     }
-    (cards, thePlan, layout, bins)
   }
 
   /** Bin-map entries (target, base, split) of a planned layout. */
@@ -642,13 +773,12 @@ object SketchBuild {
   def buildToStore(spark: SparkSession, df: DataFrame, targetCol: String,
       contentCol: String, dir: String, p: IbfParams = IbfParams(),
       checkpointDir: Option[String] = None,
-      commitTag: Option[(String, Long)] = None): SketchDb = {
-    val (cards, thePlan, layout, bins) =
-      planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
-        twoLevel = true)
-    storeGeneration(spark, dir, p, cards, thePlan, layout, bins,
-      commitTag = commitTag)
-  }
+      commitTag: Option[(String, Long)] = None): SketchDb =
+    planAndShard(spark, df, targetCol, contentCol, p, checkpointDir,
+        twoLevel = true) { (cards, thePlan, layout, rows) =>
+      storeGeneration(spark, dir, p, cards, thePlan, layout, rows,
+        commitTag = commitTag)
+    }
 
   /** The executor-blob-writing tail shared by [[buildToStore]] and
     * [[compactStored]]: commit the next generation (base+1 when the plan
@@ -657,10 +787,9 @@ object SketchBuild {
     * stitching the coarse filter driver-side. */
   private def storeGeneration(spark: SparkSession, dir: String, p: IbfParams,
       cards: Seq[(String, Long)], thePlan: IbfPlan, layout: BinLayout,
-      bins: Dataset[(Int, Array[Byte], Array[Byte])],
+      bins: RDD[(Int, Array[Byte], Array[Byte])],
       basedOnGen: Option[Int] = None,
       commitTag: Option[(String, Long)] = None): SketchDb = {
-    import spark.implicits._
     val numBins = layout.numBins
     val nGroups = layout.numGroups
     val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
@@ -692,65 +821,86 @@ object SketchBuild {
     }
   }
 
-  /** The one shard pass of every sketch writer: route each (target, hs)
-    * row through the bin-map entries (target, base, split) and aggregate
-    * one interleaved shard per touched 64-bin group. Returns
-    * (grp, shard, coarse) rows, `coarse` being the group's union Bloom when
-    * `coarse` gives its (bits, hashes) and null otherwise; each of
-    * `maskGroups` also gets a row, with a null shard when no hash routed
-    * to it. Rows of targets missing from the entries route nowhere. The
-    * shuffle is as wide as the groups the entries and `maskGroups` span:
-    * every group for a build, only the touched ones for an update. */
-  private def shardPass(spark: SparkSession, hashed: DataFrame,
-      thePlan: IbfPlan, entries: Seq[(String, Int, Int)],
-      coarse: Option[(Long, Int)], maskGroups: Seq[Int] = Nil)
-      : Dataset[(Int, Array[Byte], Array[Byte])] = {
-    import spark.implicits._
-    // the bin map rides in the routing closure, so it ships with the
+  /** The one shard pass of every sketch writer: fold the blocks' hashes,
+    * routed through the bin-map entries (target, base, split), into one
+    * interleaved shard per touched 64-bin group. Returns (grp, shard,
+    * coarse) rows, `coarse` being the group's union Bloom when `coarse`
+    * gives its (bits, hashes) and null otherwise; each of `maskGroups` also
+    * gets a row, with a null shard when no hash routed to it. Rows of
+    * targets missing from the entries route nowhere. The shuffle is as
+    * wide as the groups the entries and `maskGroups` span: every group for
+    * a build, only the touched ones for an update.
+    *
+    * With at least as many groups as the shuffle is wide, each group's
+    * routed slices ship, sorted by group, to one task, which folds its
+    * groups one at a time (no partial shards). With fewer, each block folds
+    * map-side into one partial shard per group it touches (a map task
+    * ships at most numGroups x shardBytes), OR-merged in the reduce. */
+  private[graft] def shardFold(spark: SparkSession, blocks: RDD[HashBlock],
+      thePlan: IbfPlan,
+      entries: Seq[(String, Int, Int)], coarse: Option[(Long, Int)],
+      maskGroups: Seq[Int] = Nil): RDD[(Int, Array[Byte], Array[Byte])] = {
+    val sc = blocks.sparkContext
+    // the bin map rides in the fold's closure, so it ships with the
     // stage's task binary: no join, no job, no broadcast handle
     val bins = entries.map { case (t, b, n) => t -> ((b, n)) }.toMap
-    val parts = math.max(spark.sparkContext.defaultParallelism,
-      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
     val numGroups = (entries.flatMap { case (_, b, n) =>
       b / 64 to (b + n - 1) / 64 } ++ maskGroups).distinct.size
+    val (bits, h) = (thePlan.bitsPerBin, thePlan.numHashes)
+    val mk = () => new GroupFold(bits, h, coarse)
+    // one hash-less entry per mask group lands in the group's fold, so the
+    // group comes out even when no delta reaches it
+    def withMasks[V: scala.reflect.ClassTag](rdd: RDD[(Int, V)], v: Int => V) =
+      if (maskGroups.isEmpty) rdd
+      else rdd.union(sc.parallelize(maskGroups.map(g => (g, v(g))), 1))
+    val parts = math.max(sc.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    def slicesOf(b: HashBlock): Iterator[BinLayout.Slice] =
+      b.target.indices.iterator.flatMap { i =>
+        BinLayout.slices(bins, b.names(b.target(i)), b.hashes(i))
+      }.filter(_.hs.length > 0)
+    val folded =
+      if (numGroups >= parts)
+        // sorted by group, so a task folds one group at a time
+        withMasks(blocks.flatMap(slicesOf(_).map(s => (s.grp, s))),
+            g => BinLayout.Slice(g, g * 64, 1, Array.emptyLongArray))
+          .repartitionAndSortWithinPartitions(new HashPartitioner(parts))
+          .mapPartitions(foldRuns(_, mk))
+      else {
+        val partials = blocks.flatMap { b =>
+          val folds = scala.collection.mutable.HashMap.empty[Int, GroupFold]
+          slicesOf(b).foreach(s => folds.getOrElseUpdate(s.grp, mk()).addSlice(s))
+          folds.iterator
+        }
+        // a reduce task takes as many groups' partials (at most one per map
+        // task and group) as fit Spark SQL's advisory shuffle-partition
+        // size, as the adaptive coalescing of a SQL shuffle would
+        val groupBytes = (blocks.getNumPartitions + 1L) *
+          (8L * bits + coarse.fold(0L)(_._1 / 8))
+        val perTask = math.max(1L, JavaUtils.byteStringAsBytes(spark.conf.get(
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")) / groupBytes)
+        val width = math.min(sc.defaultParallelism.toLong,
+          (numGroups + perTask - 1) / perTask).toInt
+        withMasks(partials, _ => mk())
+          .combineByKeyWithClassTag[GroupFold](identity, _ or _, _ or _,
+            new HashPartitioner(math.max(1, width)), mapSideCombine = false)
+      }
+    folded.map { case (g, f) => val (s, c) = f.blobs; (g, s, c) }
+  }
 
-    // per-(row x spanned-group) hash subsets, computed map-side so the one
-    // shuffle carries exactly the per-row-deduped hashes. NOTE: no
-    // row-level empty-hs filter here — a predicate on `hs` gets pushed
-    // through the shingle projection by substitution and re-runs the
-    // kernel per row (asserted by PlanShapeSpec); empty slices are instead
-    // ignored by IbfShardAgg and never-fed groups drop via the null-shard
-    // filter after the aggregation. One hash-less slice per mask group
-    // lands in the group's aggregation, so the group comes out even when
-    // no delta reaches it
-    val routed = hashed.as[(String, Array[Long])]
-      .flatMap { case (t, hs) => BinLayout.slices(bins, t, hs) }
-      .union(maskGroups.map(g => ShardSlice(g, g * 64, 1, null)).toDS())
-    // enough groups -> exchange-free complete aggregation (one task per
-    // group, zero partial blobs); few groups -> map-side partials are
-    // cheap (numGroups x shardBytes per task) and keep input parallelism
-    // (coalescing the map side to the core count was measured neutral
-    // here — lz4 absorbs the duplicate partial buffers — and costs scan
-    // balance on SMT-capped cores, so input parallelism wins)
-    val pre =
-      if (numGroups >= parts) routed.repartition(numGroups, col("grp"))
-      else routed
-    val coarseCol = coarse.fold(lit(null).cast("binary")) { case (bits, h) =>
-      GraftFunctions.bloomSketch(col("hs"), bits, h)
+  /** Group-sorted slices folded one group (one run) at a time. */
+  private def foldRuns(it: Iterator[(Int, BinLayout.Slice)],
+      mk: () => GroupFold): Iterator[(Int, GroupFold)] = {
+    val in = it.buffered
+    new Iterator[(Int, GroupFold)] {
+      def hasNext: Boolean = in.hasNext
+      def next(): (Int, GroupFold) = {
+        val g = in.head._1
+        val f = mk()
+        while (in.hasNext && in.head._1 == g) f.addSlice(in.next()._2)
+        (g, f)
+      }
     }
-    // a null shard marks a group that never received a non-empty slice
-    // (all its targets' content empty/filtered): drop it, preserving the
-    // untouched-group semantics (NoBlobGen sentinel / implicit empty),
-    // unless it is a mask group
-    val keep =
-      if (maskGroups.isEmpty) col("shard").isNotNull
-      else col("shard").isNotNull || col("grp").isin(maskGroups: _*)
-    pre.groupBy("grp")
-      .agg(GraftFunctions.ibfShard(col("grp"), col("base"), col("split"),
-          col("hs"), thePlan.bitsPerBin, thePlan.numHashes).as("shard"),
-        coarseCol.as("coarse"))
-      .filter(keep)
-      .as[(Int, Array[Byte], Array[Byte])]
   }
 
   /**
@@ -771,33 +921,33 @@ object SketchBuild {
    */
   def update(spark: SparkSession, db: SketchDb, addDf: DataFrame,
       targetCol: String, contentCol: String,
-      removeTargets: Seq[String] = Nil): SketchDb = {
-    val hashedOpt =
-      Option(addDf).map(hashedProjection(_, targetCol, contentCol, db.params))
-    val a = appendLayout(spark, db, hashedOpt, removeTargets)
-    // aggregate the delta into the groups it touches, then apply every
-    // group on the driver; old shards are read through the db's own
-    // accessor, so a store-backed db updates too
-    val delta = hashedOpt.filter(_ => a.delta.nonEmpty)
-      .map(shardPass(spark, _, db.plan, a.delta, coarseParams(db)).collect())
-      .getOrElse(Array.empty)
-    val deltaOf = delta.map { case (g, shard, _) => g -> shard }.toMap
-    val numBins = a.layout.numBins
-    val shards = Array.tabulate(a.layout.numGroups) { g =>
-      val old = if (g < db.layout.numGroups) Some(db.shard(g)) else None
-      val mask = a.masks.getOrElse(g, Array.empty[(Int, Int)])
-      // the mask zeroes in place: never in the old db's own shard
-      applyGroup(g, if (mask.isEmpty) old else old.map(o => new InterleavedBloom(
-          o.numBins, o.bitsPerBin, o.numHashes, o.words.clone())),
-        deltaOf.getOrElse(g, null), mask, numBins)
-        .map(windowed(_, g, numBins))
-        .getOrElse(SketchDb.emptyShard(a.layout, a.plan, g))
+      removeTargets: Seq[String] = Nil): SketchDb =
+    withScan(Option(addDf).map(hashedProjection(_, targetCol, contentCol,
+        db.params))) { blocksOpt =>
+      val a = appendLayout(db, blocksOpt, removeTargets)
+      // fold the delta into the groups it touches, then apply every group on
+      // the driver; old shards are read through the db's own accessor, so a
+      // store-backed db updates too
+      val delta = blocksOpt.filter(_ => a.delta.nonEmpty)
+        .map(shardFold(spark, _, db.plan, a.delta, coarseParams(db)).collect())
+        .getOrElse(Array.empty)
+      val deltaOf = delta.map { case (g, shard, _) => g -> shard }.toMap
+      val numBins = a.layout.numBins
+      val shards = Array.tabulate(a.layout.numGroups) { g =>
+        val old = if (g < db.layout.numGroups) Some(db.shard(g)) else None
+        val mask = a.masks.getOrElse(g, Array.empty[(Int, Int)])
+        // the mask zeroes in place: never in the old db's own shard
+        applyGroup(g, if (mask.isEmpty) old else old.map(o => new InterleavedBloom(
+            o.numBins, o.bitsPerBin, o.numHashes, o.words.clone())),
+          deltaOf.getOrElse(g, null), mask, numBins)
+          .map(windowed(_, g, numBins))
+          .getOrElse(SketchDb.emptyShard(a.layout, a.plan, g))
+      }
+      SketchDb.resident(
+        coarseWith(db.coarse, a.layout.numGroups,
+          delta.map { case (g, _, c) => (g, c) }),
+        shards, a.targets, a.counts, a.layout, db.params, a.plan)
     }
-    SketchDb.resident(
-      coarseWith(db.coarse, a.layout.numGroups,
-        delta.map { case (g, _, c) => (g, c) }),
-      shards, a.targets, a.counts, a.layout, db.params, a.plan)
-  }
 
   /** The frozen-plan layout append shared by [[update]] and
     * [[updateStored]]: `targets`/`counts`/`layout`/`plan` of the updated
@@ -813,16 +963,13 @@ object SketchBuild {
     * holes, new targets get fresh bins after the current layout (split at
     * the planned capacity), and rows for existing targets route into
     * their existing bins. */
-  private def appendLayout(spark: SparkSession, db: SketchDb,
-      hashedOpt: Option[DataFrame], removeTargets: Seq[String]): Appended = {
-    import spark.implicits._
+  private def appendLayout(db: SketchDb, blocksOpt: Option[RDD[HashBlock]],
+      removeTargets: Seq[String]): Appended = {
     val removeSet = removeTargets.toSet
     val unknown = removeSet.filterNot(db.targetIndex.contains)
     require(unknown.isEmpty,
       s"removeTargets not in the db: ${unknown.toSeq.sorted.mkString(", ")}")
-    val addCards = hashedOpt
-      .map(h => targetCardinalitiesHashed(h, db.params)
-        .as[(String, Long)].collect().sortBy(_._1).toSeq)
+    val addCards = blocksOpt.map(cardinalities(_, db.params.hllP))
       .getOrElse(Seq.empty[(String, Long)])
     require(addCards.forall(c => !removeSet.contains(c._1)),
       "cannot add and remove the same target")
@@ -943,79 +1090,78 @@ object SketchBuild {
       targetCol: String, contentCol: String,
       removeTargets: Seq[String] = Nil,
       commitTag: Option[(String, Long)] = None): SketchDb = {
-    import spark.implicits._
     val db0 = graft.io.SketchStore.loadAny(spark, dir)
     require(!db0.isResident, s"$dir holds a legacy flat-layout store, " +
       "which has no shard blobs to rewrite: load it, update() it in memory " +
       "and save the result as a new store")
     val p = db0.params
-    // pass 1 on the delta only; the same projection feeds the shard pass
-    val hashedOpt =
-      Option(addDf).map(hashedProjection(_, targetCol, contentCol, p))
-    val a = appendLayout(spark, db0, hashedOpt, removeTargets)
-    val nGroupsNew = a.layout.numGroups
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val gens0 = db0.shardGens
-    val oldNumGroups = db0.layout.numGroups
+    // pass 1 on the delta only; the same blocks feed the shard pass
+    withScan(Option(addDf).map(hashedProjection(_, targetCol, contentCol, p))) {
+        blocksOpt =>      val a = appendLayout(db0, blocksOpt, removeTargets)
+      val nGroupsNew = a.layout.numGroups
+      val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+      val gens0 = db0.shardGens
+      val oldNumGroups = db0.layout.numGroups
 
-    // commit the NEXT generation of the one this update was planned from,
-    // writing only into its shard dir; the old generation's blobs are
-    // read-only inputs (snapshot isolation)
-    graft.io.SketchStore.commitGeneration(spark, dir, Some(db0.generation),
-        commitTag) { (gen, newShardDir) =>
-      // 1. ONE executor job rewrites every touched group: delta groups come
-      //    out of the shard pass, masked groups ride along as null-shard
-      //    rows. Each row's executor reads the OLD blob (pinned
-      //    generation), applies the group (no driver-side blob I/O) and
-      //    writes the NEW generation's blob; only the written groups and
-      //    their coarse deltas return to the driver
-      val numBinsNew = a.layout.numBins
-      // the masks ride in the rewrite closure, like the shard pass's bin map
-      val masks = a.masks
-      val masked = masks.keys.toSeq.sorted
-      val rows: Option[Dataset[(Int, Array[Byte], Array[Byte])]] =
-        hashedOpt.filter(_ => a.delta.nonEmpty) match {
-          case Some(h) =>
-            Some(shardPass(spark, h, db0.plan, a.delta, coarseParams(db0),
-              masked))
-          case None if masked.nonEmpty =>
-            Some(masked.map(g => (g, null: Array[Byte], null: Array[Byte]))
-              .toDS())
-          case None => None
-        }
-      val written: Array[(Int, Array[Byte])] = rows.map(_.mapPartitions { iter =>
-        iter.flatMap { case (g, blob, coarseBlob) =>
-          val old =
-            if (g < oldNumGroups)
-              graft.io.SketchStore.readShardBlob(conf.value, dir, gens0, g)
-            else None
-          // a masked sentinel group has no old blob and no delta: nothing
-          // to write, so its pointer keeps the sentinel
-          applyGroup(g, old, blob, masks.getOrElse(g, Array.empty), numBinsNew)
-            .map { sh =>
-              graft.io.SketchStore.writeShardBlob(conf.value, newShardDir, g,
-                sh.toBytes)
-              (g, if (blob == null) null else coarseBlob)
-            }
-        }
-      }.collect()).getOrElse(Array.empty)
+      // commit the NEXT generation of the one this update was planned from,
+      // writing only into its shard dir; the old generation's blobs are
+      // read-only inputs (snapshot isolation)
+      graft.io.SketchStore.commitGeneration(spark, dir, Some(db0.generation),
+          commitTag) { (gen, newShardDir) =>
+        // 1. ONE executor job rewrites every touched group: delta groups come
+        //    out of the shard pass, masked groups ride along as null-shard
+        //    rows. Each row's executor reads the OLD blob (pinned
+        //    generation), applies the group (no driver-side blob I/O) and
+        //    writes the NEW generation's blob; only the written groups and
+        //    their coarse deltas return to the driver
+        val numBinsNew = a.layout.numBins
+        // the masks ride in the rewrite closure, like the shard pass's bin map
+        val masks = a.masks
+        val masked = masks.keys.toSeq.sorted
+        val rows: Option[RDD[(Int, Array[Byte], Array[Byte])]] =
+          blocksOpt.filter(_ => a.delta.nonEmpty) match {
+            case Some(b) =>
+              Some(shardFold(spark, b, db0.plan, a.delta, coarseParams(db0),
+                masked))
+            case None if masked.nonEmpty =>
+              Some(spark.sparkContext.parallelize(
+                masked.map(g => (g, null: Array[Byte], null: Array[Byte])), 1))
+            case None => None
+          }
+        val written: Array[(Int, Array[Byte])] = rows.map(_.mapPartitions { iter =>
+          iter.flatMap { case (g, blob, coarseBlob) =>
+            val old =
+              if (g < oldNumGroups)
+                graft.io.SketchStore.readShardBlob(conf.value, dir, gens0, g)
+              else None
+            // a masked sentinel group has no old blob and no delta: nothing
+            // to write, so its pointer keeps the sentinel
+            applyGroup(g, old, blob, masks.getOrElse(g, Array.empty), numBinsNew)
+              .map { sh =>
+                graft.io.SketchStore.writeShardBlob(conf.value, newShardDir, g,
+                  sh.toBytes)
+                (g, if (blob == null) null else coarseBlob)
+              }
+          }
+        }.collect()).getOrElse(Array.empty)
 
-      // 2. per-group generation pointers: groups whose blob was WRITTEN
-      //    this generation point at it; untouched groups keep their old
-      //    pointers (the O(delta) property — nothing is copied or
-      //    hard-linked)
-      val writtenSet = written.map(_._1).toSet
-      val gens1 = Array.tabulate(nGroupsNew) { g =>
-        if (writtenSet(g)) gen
-        else if (g < gens0.length) gens0(g)
-        // appended group with no delta rows: no blob on disk — the
-        // sentinel says so explicitly, so readers probe it as empty
-        // instead of mistaking it for a lost blob (which fails fast)
-        else graft.io.SketchStore.NoBlobGen
+        // 2. per-group generation pointers: groups whose blob was WRITTEN
+        //    this generation point at it; untouched groups keep their old
+        //    pointers (the O(delta) property — nothing is copied or
+        //    hard-linked)
+        val writtenSet = written.map(_._1).toSet
+        val gens1 = Array.tabulate(nGroupsNew) { g =>
+          if (writtenSet(g)) gen
+          else if (g < gens0.length) gens0(g)
+          // appended group with no delta rows: no blob on disk — the
+          // sentinel says so explicitly, so readers probe it as empty
+          // instead of mistaking it for a lost blob (which fails fast)
+          else graft.io.SketchStore.NoBlobGen
+        }
+        SketchDb.stored(spark,
+          coarseWith(db0.coarse, nGroupsNew, written.toSeq), a.targets,
+          a.counts, a.layout, p, a.plan, dir, gen, gens1)
       }
-      SketchDb.stored(spark,
-        coarseWith(db0.coarse, nGroupsNew, written.toSeq), a.targets,
-        a.counts, a.layout, p, a.plan, dir, gen, gens1)
     }
   }
 
@@ -1074,11 +1220,14 @@ object SketchBuild {
     // capacity re-fit, split counts re-derived
     val cards = m.targets.zip(m.counts).sortBy(_._1).toSeq
     val (thePlan, layout) = plan(cards, p)
-    val bins = shardPass(spark, hashedProjection(df, targetCol, contentCol, p),
-      thePlan, entriesOf(cards, layout),
-      Some(coarseSizing(cards, layout, p.maxFp)))
-    storeGeneration(spark, dir, p, cards, thePlan, layout, bins,
-      basedOnGen = Some(m.generation))
+    // one pass over the blocks: nothing to persist
+    withScan(Some(hashedProjection(df, targetCol, contentCol, p)),
+        reuse = false) { blocks =>
+      storeGeneration(spark, dir, p, cards, thePlan, layout,
+        shardFold(spark, blocks.get, thePlan, entriesOf(cards, layout),
+          Some(coarseSizing(cards, layout, p.maxFp))),
+        basedOnGen = Some(m.generation))
+    }
   }
 
   /** Resume guard: a checkpoint is only valid for the PARAMS that produced
@@ -1091,9 +1240,12 @@ object SketchBuild {
     s"k=${p.k};w=${p.w};seed=${p.seed};maxFp=${p.maxFp};hllP=${p.hllP};" +
       s"minLen=${p.minContentLen};mode=${p.sizingMode}"
 
-  private def checkpointed[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, dir: Option[String], stage: String, tag: String)(
-      make: => Dataset[T]): Dataset[T] = dir match {
+  /** `make`, or with `dir` the rows an earlier run with the same tag left
+    * under `dir/stage` (computed by `make`, written through `save`, first
+    * when there are none); read back through `load`. */
+  private def checkpointed[T](spark: SparkSession, dir: Option[String],
+      stage: String, tag: String)(make: => T)(save: T => DataFrame,
+      load: DataFrame => T): T = dir match {
     case None => make
     case Some(d) =>
       val path = s"$d/$stage"
@@ -1103,11 +1255,11 @@ object SketchBuild {
       val tagPath = new org.apache.hadoop.fs.Path(path + "/_PARAMS")
       val tagMatches = graft.io.SketchStore.readSmall(conf, tagPath).contains(tag)
       if (!fs.exists(ok) || !tagMatches) {
-        make.write.mode("overwrite").parquet(path)
+        save(make).write.mode("overwrite").parquet(path)
         val out = fs.create(tagPath, true)
         try out.write(tag.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         finally out.close()
       }
-      spark.read.parquet(path).as[T]
+      load(spark.read.parquet(path))
   }
 }

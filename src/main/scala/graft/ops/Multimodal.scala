@@ -3,6 +3,7 @@ package graft.ops
 import java.awt.image.{BufferedImage, IndexColorModel}
 import java.io.ByteArrayInputStream
 import javax.imageio.ImageIO
+import javax.imageio.spi.ImageReaderSpi
 import javax.imageio.stream.MemoryCacheImageInputStream
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -221,8 +222,9 @@ object Multimodal {
     * signature picks the JDK reader (PNG, JPEG or GIF); any other payload
     * is None, never a guess by another registered reader (ImageIO's BMP,
     * WBMP and TIFF readers would claim payloads the verbs skip). Each call
-    * takes a fresh reader over an in-memory stream (ImageIO's default
-    * stream cache writes temp files on executors), and checks the header's
+    * takes a fresh reader from the format's provider (looked up once per
+    * JVM) over an in-memory stream (ImageIO's default stream cache writes
+    * temp files on executors), and checks the header's
     * dimensions against [[Png.MaxRasterBytes]] before any raster exists.
     * The raster converts to [[Png.Image]]: a palette image (GIF, palette
     * PNG) expands to 3-channel RGB, anything else keeps its 1-4 bands,
@@ -234,7 +236,7 @@ object Multimodal {
       else if (Gif.isGif(p)) Some("gif")
       else None
     format.map { f =>
-      val reader = ImageIO.getImageReadersByFormatName(f).next()
+      val reader = readerSpis(f).createReaderInstance()
       val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(p))
       try {
         reader.setInput(in, true, true)
@@ -246,6 +248,15 @@ object Multimodal {
       } finally { reader.dispose(); in.close() }
     }
   }
+
+  /** Each image format's reader provider, found once per JVM: the one
+    * whose reader `ImageIO.getImageReadersByFormatName` lists first, so a
+    * call gets the reader a registry search would give it. */
+  private lazy val readerSpis: Map[String, ImageReaderSpi] =
+    Seq("png", "jpeg", "gif").map { f =>
+      val r = ImageIO.getImageReadersByFormatName(f).next()
+      try f -> r.getOriginatingProvider finally r.dispose()
+    }.toMap
 
   private def toImage(bi: BufferedImage): Png.Image = {
     val r = bi.getRaster

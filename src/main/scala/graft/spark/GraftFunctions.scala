@@ -87,14 +87,6 @@ object GraftFunctions {
   def bloomSketch(hashes: Column, numBits: Long, numHashes: Int): Column =
     udaf(new BloomSketchAgg(numBits, numHashes)).apply(hashes)
 
-  /** One 64-bin interleaved shard of the sketch db (executor-side IBF
-    * assembly) — see [[graft.spark.udaf.SketchAggs.IbfShardAgg]]. */
-  def ibfShard(grp: Column, base: Column, split: Column, hashes: Column,
-      bitsPerBin: Long, numHashes: Int): Column = {
-    val agg = new IbfShardAgg(bitsPerBin, numHashes)
-    udaf(agg, agg.inputEncoder).apply(grp, base, split, hashes)
-  }
-
   /** Band-cap primitive: k smallest ids per group + dropped count
     * (struct<ids: array<bigint>, dropped: bigint>) — see
     * [[graft.spark.udaf.SketchAggs.MinKIdsAgg]]. */

@@ -4,15 +4,13 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
-import graft.build.BinLayout
-import graft.core.sketch.{Bloom, CountMin, Hll, InterleavedBloom, Kll, TDigest}
+import graft.core.sketch.{Bloom, CountMin, Hll, Kll, TDigest}
 
 /**
  * Mergeable sketches as typed Catalyst Aggregators (the north rule's core):
  * partial sketch per partition (map-side), associative `merge` in reduce —
  * the same two-phase algebra the reference applies to its thread-local maps
- * (ganon: src/ganon-classify/GanonClassify.cpp:475-490) and to IBF bin
- * insertion (src/ganon-build/GanonBuild.cpp:655-698, merge == bitwise OR).
+ * (ganon: src/ganon-classify/GanonClassify.cpp:475-490).
  *
  * All buffers are Kryo-encoded objects → Spark plans ObjectHashAggregate:
  * buffers live as JVM objects during partial aggregation; serialization
@@ -53,64 +51,6 @@ object SketchAggs {
     def finish(b: Bloom): Array[Byte] = b.toBytes
     def bufferEncoder: Encoder[Bloom] = Encoders.kryo[Bloom]
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** One input slice for the shard builder: a row's hash subset destined
-    * for 64-bin group `grp`, owned by the target at bins
-    * [base, base+split). */
-  final case class ShardSlice(grp: Int, base: Int, split: Int, hs: Array[Long])
-
-  /** Mutable shard buffer: a 64-bin-wide interleaved Bloom column (one
-    * word per hash position). grp = -1 until the first input lands. */
-  final class ShardBuf(var grp: Int, val shard: InterleavedBloom)
-      extends Serializable
-
-  /**
-   * Builds ONE 64-bin group of the final interleaved filter directly in
-   * its probe layout (no transpose step, no per-bin Bloom blobs): the
-   * executor-side assembly of the reference's IBF insert pass
-   * (GanonBuild.cpp:655-698), with hash->technical-bin routing replacing
-   * the index-range bin map (:619-653). merge == bitwise OR.
-   */
-  class IbfShardAgg(bitsPerBin: Long, numHashes: Int)
-      extends Aggregator[ShardSlice, ShardBuf, Array[Byte]] {
-    def zero: ShardBuf =
-      new ShardBuf(-1, InterleavedBloom.empty(64, bitsPerBin, numHashes))
-    def reduce(b: ShardBuf, in: ShardSlice): ShardBuf = {
-      // empty slices leave grp at -1: a group fed ONLY empty hash sets
-      // finishes as null and its row is dropped post-agg — the same
-      // "untouched group" semantics the routing explode used to enforce
-      // row-side (the split-free fast path no longer filters rows, which
-      // would push a shingle-expression predicate through the projection
-      // and re-evaluate the kernel per row)
-      if (in != null && in.hs != null && in.hs.length > 0) {
-        if (b.grp == -1) b.grp = in.grp
-        val off = in.grp * 64
-        var i = 0
-        while (i < in.hs.length) {
-          val h = in.hs(i)
-          val local = in.base + BinLayout.routeBin(h, in.split) - off
-          if (local >= 0 && local < 64) b.shard.add(h, local)
-          i += 1
-        }
-      }
-      b
-    }
-    def merge(x: ShardBuf, y: ShardBuf): ShardBuf = {
-      if (x.grp == -1) y
-      else if (y.grp == -1) x
-      else {
-        val xw = x.shard.words; val yw = y.shard.words
-        var i = 0
-        while (i < xw.length) { xw(i) |= yw(i); i += 1 }
-        x
-      }
-    }
-    def finish(b: ShardBuf): Array[Byte] =
-      if (b.grp == -1) null else b.shard.toBytes
-    def bufferEncoder: Encoder[ShardBuf] = Encoders.kryo[ShardBuf]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    def inputEncoder: Encoder[ShardSlice] = ExpressionEncoder[ShardSlice]()
   }
 
   /** Result of the band-cap aggregation: the group's k smallest ids plus

@@ -115,20 +115,22 @@ object MergeProps extends Properties("sketch-merge") {
 
   property("ibf shard: split-invariant OR-merge == bulk insert, routed bins") =
     forAll(genSplit, Gen.chooseNum(1, 5)) { case ((xs, chunks), split) =>
-      import graft.build.BinLayout
-      import graft.spark.udaf.SketchAggs.{IbfShardAgg, ShardSlice}
-      val agg = new IbfShardAgg(4096, 3)
-      // bulk: everything through one buffer
-      val bulk = agg.reduce(agg.zero, ShardSlice(0, 2, split, xs))
-      // split: one buffer per chunk, merged in arbitrary (reversed) order
-      val parts = chunks.map(c => agg.reduce(agg.zero, ShardSlice(0, 2, split, c)))
-      val merged = parts.reverse.foldLeft(agg.zero)(agg.merge)
-      val same = java.util.Arrays.equals(bulk.shard.words, merged.shard.words)
-      // every hash routed in [2, 2+split) and present in its bin
+      import graft.build.{BinLayout, GroupFold}
+      def fold() = new GroupFold(4096, 3, Some((2048L, 2)))
+      def slice(hs: Array[Long]) = BinLayout.Slice(0, 2, split, hs)
+      // bulk: everything through one fold
+      val bulk = fold().addSlice(slice(xs))
+      // split: one fold per chunk, merged in arbitrary (reversed) order
+      val parts = chunks.map(c => fold().addSlice(slice(c)))
+      val merged = parts.reverse.foldLeft(fold())(_ or _)
+      val same = if (xs.isEmpty) bulk.shard == null && merged.shard == null
+        else java.util.Arrays.equals(bulk.shard.words, merged.shard.words) &&
+          java.util.Arrays.equals(bulk.union.words, merged.union.words)
+      // every hash routed in [2, 2+split), present in its bin and the union
       val routedOk = xs.forall { h =>
         val bin = 2 + BinLayout.routeBin(h, split)
-        merged.grp == -1 && xs.isEmpty ||
-          merged.shard.bulkCount(Array(h)).apply(bin) >= 1
+        merged.shard.bulkCount(Array(h)).apply(bin) >= 1 &&
+          merged.union.contains(h)
       }
       Prop(same && (xs.isEmpty || routedOk)) :| s"n=${xs.length} split=$split"
     }

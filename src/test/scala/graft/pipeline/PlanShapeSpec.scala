@@ -3,26 +3,26 @@ package graft.pipeline
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.GraftTestAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec,
   ProjectExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.build.{IbfParams, SketchBuild}
+import graft.build.{IbfParams, SketchBuild, SketchDb}
 import graft.classify.{Classify, ClassifyParams}
 import graft.core.Lca
 import graft.spark.{GraftFunctions, ShinglesExpr, SparkTestSession}
 
 /** Physical-plan properties the engine's design relies on: every classify
-  * entry point is one map-only probe over the shingle projection, the
-  * build evaluates the shingle kernel once per scan whether or not a
-  * target splits, no sketch writer's shard pass plans a join, only a
-  * two-level build aggregates a coarse filter, and LSH candidate
+  * entry point is one map-only probe over the shingle projection, a build
+  * plans one content scan that evaluates the shingle kernel once per file
+  * scan whether or not a target splits, no sketch writer plans a join,
+  * only a two-level build folds a coarse filter, and LSH candidate
   * generation plans no Window. */
 class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
@@ -114,36 +114,49 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     (out, plans.synchronized(plans.toSeq))
   }
 
+  /** The plans of `plans` that evaluate the shingle kernel, each with its
+    * kernel count, scan count and tree. */
+  private def kernelPlans(plans: Seq[SparkPlan]): Seq[(Int, Int, String)] =
+    plans.flatMap { plan =>
+      val n = collect(plan) { case node => shingleCount(node) }.sum
+      if (n == 0) None
+      else Some((n, collect(plan) { case s: FileSourceScanExec => s }.size,
+        plan.treeString))
+    }
+
   test("SketchBuild.build evaluates graft_shingles once per scan, any split") {
     Seq(docs -> false, splitDocs -> true).foreach { case (fixture, split) =>
-      val (db, plans) =
-        withPlans(SketchBuild.build(spark, fixture, "target", "content", p))
-      assert(db.layout.split.exists(_ > 1) == split,
-        s"fixture must ${if (split) "" else "not "}split")
-      val hashing = plans.flatMap { plan =>
-        val n = collect(plan) { case node => shingleCount(node) }.sum
-        if (n == 0) None
-        else Some((n, collect(plan) { case s: FileSourceScanExec => s }.size,
-          plan.treeString))
-      }
-      // pass 1 (HLL sizing) and pass 2 (shard aggregation)
-      assert(hashing.size == 2, hashing.map(_._3).mkString("\n"))
-      hashing.foreach { case (n, scans, tree) =>
-        assert(n == scans, s"$n kernel evaluations over $scans scans:\n$tree")
+      Seq[(String, () => SketchDb)](
+        "build" -> (() => SketchBuild.build(spark, fixture, "target", "content", p)),
+        "buildTwoLevel" -> (() =>
+          SketchBuild.buildTwoLevel(spark, fixture, "target", "content", p))
+      ).foreach { case (name, run) =>
+        val (db, plans) = withPlans(run())
+        assert(db.layout.split.exists(_ > 1) == split,
+          s"fixture must ${if (split) "" else "not "}split")
+        // one content scan feeds both passes: one plan evaluates the
+        // kernel, once per file scan
+        val hashing = kernelPlans(plans)
+        assert(hashing.size == 1, s"$name:\n" + hashing.map(_._3).mkString("\n"))
+        hashing.foreach { case (n, scans, tree) =>
+          assert(n == scans, s"$name: $n kernel evaluations over $scans scans:\n$tree")
+        }
       }
     }
   }
-
-  private def aggregates(plan: SparkPlan): Seq[String] =
-    collect(plan) { case a: BaseAggregateExec =>
-      a.aggregateExpressions.map(_.aggregateFunction.nodeName)
-    }.flatten
 
   test("no shard-pass plan of any sketch writer holds a join") {
     val dir = java.nio.file.Files.createTempDirectory("graft_plan_store")
       .toString + "/store"
     val grow = splitDocs.filter($"target" === "t1")
-    val (_, plans) = withPlans {
+    // a join planned on RDDs (no SQL plan) shows as a CoGroupedRDD
+    val rddNames = ArrayBuffer.empty[String]
+    val stages = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        rddNames.synchronized { rddNames ++= e.stageInfo.rddInfos.map(_.name) }
+    }
+    spark.sparkContext.addSparkListener(stages)
+    val (_, plans) = try withPlans {
       val flat = SketchBuild.build(spark, splitDocs, "target", "content", p)
       SketchBuild.buildTwoLevel(spark, splitDocs, "target", "content", p)
       SketchBuild.update(spark, flat, grow, "target", "content", Seq("t2"))
@@ -152,27 +165,43 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         Seq("t2"))
       SketchBuild.compactStored(spark, dir,
         splitDocs.filter($"target" =!= "t2"), "target", "content")
-    }
-    val shardPlans = plans.filter(aggregates(_).contains("IbfShardAgg"))
-    assert(shardPlans.size == 6, s"${shardPlans.size} shard-pass plans")
-    shardPlans.foreach { plan =>
+    } finally spark.sparkContext.removeSparkListener(stages)
+    // each writer's one content scan, then its folds
+    assert(kernelPlans(plans).size == 6, s"${kernelPlans(plans).size} scans")
+    plans.foreach { plan =>
       assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty,
         plan.treeString)
     }
+    assert(rddNames.nonEmpty && !rddNames.exists(_.contains("CoGrouped")),
+      rddNames.distinct.mkString(", "))
   }
 
   test("a flat build aggregates shards only; a two-level build adds the " +
       "coarse union Bloom") {
-    def aggregates(plans: Seq[SparkPlan]): Set[String] =
-      plans.flatMap(this.aggregates).toSet
-    val (_, flat) =
-      withPlans(SketchBuild.build(spark, docs, "target", "content", p))
-    val (_, two) =
-      withPlans(SketchBuild.buildTwoLevel(spark, docs, "target", "content", p))
-    assert(aggregates(flat).contains("IbfShardAgg"), aggregates(flat))
-    assert(!aggregates(flat).contains("BloomSketchAgg"), aggregates(flat))
-    assert(Set("IbfShardAgg", "BloomSketchAgg").subsetOf(aggregates(two)),
-      aggregates(two))
+    // the shard pass's own rows, as a checkpointed build saves them:
+    // (grp, shard, coarse)
+    def shardRows(twoLevel: Boolean): Seq[(Int, Array[Byte], Array[Byte])] = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_plan_ckpt")
+        .toString
+      val db =
+        if (twoLevel) SketchBuild.buildTwoLevel(spark, splitDocs, "target",
+          "content", p, Some(dir))
+        else SketchBuild.build(spark, splitDocs, "target", "content", p,
+          Some(dir))
+      assert((db.coarse != null) == twoLevel)
+      spark.read.parquet(s"$dir/pass2_group_shards")
+        .as[(Int, Array[Byte], Array[Byte])].collect().toSeq
+    }
+    val flat = shardRows(twoLevel = false)
+    val two = shardRows(twoLevel = true)
+    assert(flat.nonEmpty && flat.forall(r => r._2 != null && r._3 == null),
+      flat.map(r => (r._1, r._3 == null)))
+    assert(two.map(_._1).sorted == flat.map(_._1).sorted)
+    assert(two.forall(r => r._2 != null && r._3 != null &&
+      graft.core.sketch.Bloom.fromBytes(r._3).cardinalityBitsSet > 0))
+    // the coarse level changes no fine bit
+    val flatShards = flat.map(r => r._1 -> r._2.toSeq).toMap
+    two.foreach(r => assert(r._2.toSeq == flatShards(r._1), s"group ${r._1}"))
   }
 
   test("Dedup.minhashPairs plans no Window") {
