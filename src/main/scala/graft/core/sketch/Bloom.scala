@@ -15,7 +15,7 @@ import graft.core.Hashing
  * [nWords: Int][words...: Long].
  */
 final class Bloom(val numBits: Long, val numHashes: Int, val words: Array[Long])
-    extends Serializable {
+    extends HashSketch[Bloom] with Serializable {
   require(numBits > 0 && numHashes > 0)
   require(words.length.toLong == (numBits + 63) / 64)
 

@@ -16,7 +16,7 @@ import graft.core.Hashing
  * Serialized layout: [depth: Int][width: Int][total: Long][counts: Long * d*w].
  */
 final class CountMin(val depth: Int, val width: Int, val counts: Array[Long],
-    private var _total: Long) extends Serializable {
+    private var _total: Long) extends HashSketch[CountMin] with Serializable {
   require(depth > 0 && width > 0)
   require(counts.length == depth * width)
 
@@ -27,7 +27,9 @@ final class CountMin(val depth: Int, val width: Int, val counts: Array[Long],
     row * width + ((h & Long.MaxValue) % width).toInt
   }
 
-  def add(key: Long, c: Long = 1L): Unit = {
+  def add(key: Long): Unit = add(key, 1L)
+
+  def add(key: Long, c: Long): Unit = {
     var r = 0
     while (r < depth) { counts(cell(r, key)) += c; r += 1 }
     _total += c

@@ -16,7 +16,8 @@ package graft.core.sketch
  *
  * Serialized layout: [p: Int][registers: Byte * 2^p].
  */
-final class Hll(val p: Int, val registers: Array[Byte]) extends Serializable {
+final class Hll(val p: Int, val registers: Array[Byte])
+    extends HashSketch[Hll] with Serializable {
   require(p >= 4 && p <= 18, s"p=$p out of [4,18]")
   val m: Int = 1 << p
   require(registers.length == m)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.UserDefinedFunction
 
 import graft.core.{Hashing, MinHash, SimHash}
+import graft.core.sketch.HashSketch
+import graft.spark.udaf.{BloomSpec, CmsSpec, HashSketchAgg, HllSpec, SketchSpec}
 import graft.spark.udaf.SketchAggs._
 
 /**
@@ -79,13 +81,13 @@ object GraftFunctions {
   // ---- sketch aggregations ---------------------------------------------
 
   def hllCount(hashes: Column, p: Int = 14): Column =
-    udaf(new HllCountAgg(p)).apply(hashes)
+    HashSketchAgg.col(hashes, HllSpec(p, count = true))
 
   def hllSketch(hashes: Column, p: Int = 14): Column =
-    udaf(new HllSketchAgg(p)).apply(hashes)
+    HashSketchAgg.col(hashes, HllSpec(p, count = false))
 
   def bloomSketch(hashes: Column, numBits: Long, numHashes: Int): Column =
-    udaf(new BloomSketchAgg(numBits, numHashes)).apply(hashes)
+    HashSketchAgg.col(hashes, BloomSpec(numBits, numHashes))
 
   /** Band-cap primitive: k smallest ids per group + dropped count
     * (struct<ids: array<bigint>, dropped: bigint>) — see
@@ -94,7 +96,7 @@ object GraftFunctions {
     udaf(new MinKIdsAgg(k)).apply(id)
 
   def cmsSketch(hashes: Column, depth: Int = 7, width: Int = 8192): Column =
-    udaf(new CmsSketchAgg(depth, width)).apply(hashes)
+    HashSketchAgg.col(hashes, CmsSpec(depth, width))
 
   def kllSketch(value: Column, k: Int = 256): Column =
     udaf(new KllSketchAgg(k)).apply(value)
@@ -147,6 +149,17 @@ object GraftFunctions {
     }
   }
 
+  /** A SQL sketch function over one hash array, its parameters fixed. */
+  private def registerSketch[S <: HashSketch[S]](spark: SparkSession,
+      spec: SketchSpec[S]): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(spec.name,
+      es => {
+        if (es.length != 1) throw new IllegalArgumentException(
+          s"${spec.name} takes one array<bigint> argument, got ${es.length}")
+        HashSketchAgg(es.head, spec)
+      },
+      "scala_udf")
+
   /** Register the engine's functions for spark.sql use. */
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
@@ -172,9 +185,9 @@ object GraftFunctions {
     spark.udf.register("graft_band_keys",
       udf((s: Array[Long], bands: Int) =>
         if (s == null) Array.empty[Long] else MinHash.bandKeys(s, bands)))
-    spark.udf.register("graft_hll_count", udaf(new HllCountAgg(14)))
-    spark.udf.register("graft_hll_sketch", udaf(new HllSketchAgg(14)))
-    spark.udf.register("graft_cms_sketch", udaf(new CmsSketchAgg(7, 8192)))
+    registerSketch(spark, HllSpec(14, count = true))
+    registerSketch(spark, HllSpec(14, count = false))
+    registerSketch(spark, CmsSpec(7, 8192))
     spark.udf.register("graft_kll_sketch", udaf(new KllSketchAgg(256)))
     // UDAF registration fixes constructor params at registration time, so
     // the SQL surface carries the library default cap (10000); a different

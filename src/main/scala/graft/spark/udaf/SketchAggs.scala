@@ -4,54 +4,26 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 
-import graft.core.sketch.{Bloom, CountMin, Hll, Kll, TDigest}
+import graft.core.sketch.{Kll, TDigest}
 
 /**
- * Mergeable sketches as typed Catalyst Aggregators (the north rule's core):
+ * Mergeable sketches as Catalyst aggregates (the north rule's core):
  * partial sketch per partition (map-side), associative `merge` in reduce —
  * the same two-phase algebra the reference applies to its thread-local maps
  * (ganon: src/ganon-classify/GanonClassify.cpp:475-490).
  *
- * All buffers are Kryo-encoded objects → Spark plans ObjectHashAggregate:
- * buffers live as JVM objects during partial aggregation; serialization
- * happens only at the exchange.
- *
- * Inputs are `Array[Long]` hash sets (one row's distinct shingles/tokens),
- * so no explode() shuffle-amplification ever happens: the per-row array is
- * folded straight into the sketch buffer.
+ * HLL, Bloom and count-min over hash arrays are one native aggregate,
+ * [[HashSketchAgg]], with a sparse-first buffer in its own byte format.
+ * The typed `Aggregator`s here keep Kryo-encoded buffers, so Spark plans
+ * them as ObjectHashAggregate too (buffers live as JVM objects during
+ * partial aggregation; serialization happens only at the exchange). They
+ * stay typed on purpose: `TDigest.toBytes` flushes its buffer and
+ * `fromBytes` replays centroids, so a byte-format buffer would flush at
+ * every exchange and change the digest's centroid layout, while Kryo ships
+ * the unflushed buffer as it is; KLL and the band-cap heap run once per
+ * value, not per hash array, and gain nothing from the array fold.
  */
 object SketchAggs {
-
-  /** HLL distinct count of all hashes across rows -> estimate. */
-  class HllCountAgg(p: Int) extends Aggregator[Array[Long], Hll, Long] {
-    def zero: Hll = Hll.empty(p)
-    def reduce(b: Hll, a: Array[Long]): Hll = { if (a != null) b.addAll(a); b }
-    def merge(x: Hll, y: Hll): Hll = x.merge(y)
-    def finish(b: Hll): Long = b.estimate
-    def bufferEncoder: Encoder[Hll] = Encoders.kryo[Hll]
-    def outputEncoder: Encoder[Long] = Encoders.scalaLong
-  }
-
-  /** HLL, returning the serialized mergeable sketch itself. */
-  class HllSketchAgg(p: Int) extends Aggregator[Array[Long], Hll, Array[Byte]] {
-    def zero: Hll = Hll.empty(p)
-    def reduce(b: Hll, a: Array[Long]): Hll = { if (a != null) b.addAll(a); b }
-    def merge(x: Hll, y: Hll): Hll = x.merge(y)
-    def finish(b: Hll): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[Hll] = Encoders.kryo[Hll]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Per-group Bloom filter (one bin of the IBF), fixed (numBits, numHashes). */
-  class BloomSketchAgg(numBits: Long, numHashes: Int)
-      extends Aggregator[Array[Long], Bloom, Array[Byte]] {
-    def zero: Bloom = Bloom.empty(numBits, numHashes)
-    def reduce(b: Bloom, a: Array[Long]): Bloom = { if (a != null) b.addAll(a); b }
-    def merge(x: Bloom, y: Bloom): Bloom = x.merge(y)
-    def finish(b: Bloom): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[Bloom] = Encoders.kryo[Bloom]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
 
   /** Result of the band-cap aggregation: the group's k smallest ids plus
     * how many members were dropped (observable truncation). */
@@ -125,20 +97,6 @@ object SketchAggs {
     def finish(b: MinKBuf): MinKIds = b.result()
     def bufferEncoder: Encoder[MinKBuf] = Encoders.kryo[MinKBuf]
     def outputEncoder: Encoder[MinKIds] = ExpressionEncoder[MinKIds]()
-  }
-
-  /** Count-min over hash multisets (each array element counts once). */
-  class CmsSketchAgg(depth: Int, width: Int)
-      extends Aggregator[Array[Long], CountMin, Array[Byte]] {
-    def zero: CountMin = CountMin.empty(depth, width)
-    def reduce(b: CountMin, a: Array[Long]): CountMin = {
-      if (a != null) { var i = 0; while (i < a.length) { b.add(a(i)); i += 1 } }
-      b
-    }
-    def merge(x: CountMin, y: CountMin): CountMin = x.merge(y)
-    def finish(b: CountMin): Array[Byte] = b.toBytes
-    def bufferEncoder: Encoder[CountMin] = Encoders.kryo[CountMin]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
   /** KLL quantile sketch over a double column -> serialized sketch. */

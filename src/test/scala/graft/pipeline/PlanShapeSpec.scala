@@ -8,6 +8,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec,
   ProjectExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, ScalaAggregator}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -17,6 +19,7 @@ import graft.build.{IbfParams, SketchBuild, SketchDb}
 import graft.classify.{Classify, ClassifyParams}
 import graft.core.Lca
 import graft.spark.{GraftFunctions, ShinglesExpr, SparkTestSession}
+import graft.spark.udaf.HashSketchAgg
 
 /** Physical-plan properties the engine's design relies on: every classify
   * entry point is one map-only probe over the shingle projection, a build
@@ -202,6 +205,38 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // the coarse level changes no fine bit
     val flatShards = flat.map(r => r._1 -> r._2.toSeq).toMap
     two.foreach(r => assert(r._2.toSeq == flatShards(r._1), s"group ${r._1}"))
+  }
+
+  test("a sketch groupBy plans ObjectHashAggregate partial -> exchange -> " +
+      "final over HashSketchAgg, with no ScalaAggregator") {
+    GraftFunctions.register(spark)
+    val df = (0 until 200).map(i => (s"g${i % 5}", s"tok${i % 17} tok${i % 5} x$i"))
+      .toDF("g", "text")
+      .select($"g", GraftFunctions.tokenHashes($"text").as("hs"))
+    df.createOrReplaceTempView("t_plan_sketch")
+    Seq(
+      "api" -> df.groupBy("g").agg(GraftFunctions.hllCount($"hs"),
+        GraftFunctions.hllSketch($"hs"), GraftFunctions.bloomSketch($"hs", 4096, 3),
+        GraftFunctions.cmsSketch($"hs")),
+      "sql" -> spark.sql("select g, graft_hll_count(hs), graft_hll_sketch(hs), " +
+        "graft_cms_sketch(hs) from t_plan_sketch group by g")
+    ).foreach { case (name, q) =>
+      assert(q.collect().length == 5, name)
+      val plan = q.queryExecution.executedPlan
+      val tree = s"$name:\n${plan.treeString}"
+      val aggs = collect(plan) { case a: ObjectHashAggregateExec => a }
+      assert(aggs.size == 2, tree)
+      def modes(a: ObjectHashAggregateExec) = a.aggregateExpressions.map(_.mode).toSet
+      val top = aggs.find(a => modes(a) == Set(Final)).getOrElse(fail(tree))
+      val exchanges = collect(top) { case e: Exchange => e }
+      assert(exchanges.size == 1, tree)
+      val below = collect(exchanges.head) { case a: ObjectHashAggregateExec => a }
+      assert(below.size == 1 && modes(below.head) == Set(Partial), tree)
+      assert(aggs.forall(_.aggregateExpressions.forall(
+        _.aggregateFunction.isInstanceOf[HashSketchAgg[_]])), tree)
+      assert(collect(plan) { case n => n.expressions.flatMap(_.collect {
+        case s: ScalaAggregator[_, _, _] => s }) }.flatten.isEmpty, tree)
+    }
   }
 
   test("Dedup.minhashPairs plans no Window") {
