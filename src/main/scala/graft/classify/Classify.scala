@@ -1,8 +1,13 @@
 package graft.classify
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.LongAccumulator
 
 import graft.build.{IbfParams, ProbeDb}
 import graft.core.{Lca, MathFns}
@@ -45,6 +50,15 @@ final case class ReadResult(
  */
 object Classify {
 
+  // encoders derived by Scala reflection once, not on every call (a
+  // stream calls once per micro-batch); lazy, so an executor that only
+  // runs classifyOne never derives them
+  private lazy val readEnc = Encoders.product[(String, Int, Array[Long])]
+  private lazy val sampleReadEnc =
+    Encoders.product[(String, String, Int, Array[Long])]
+  private lazy val resultEnc = Encoders.product[ReadResult]
+  private lazy val sampleResultEnc = Encoders.product[(String, ReadResult)]
+
   /**
    * Classify `reads` (columns idCol, contentCol) against `db`.
    * Returns the per-read results dataset (one row per read).
@@ -86,14 +100,47 @@ object Classify {
   private def classifyReads(spark: SparkSession, reads: DataFrame,
       idCol: String, contentCol: String, content2Col: Option[String],
       dbB: Broadcast[ProbeDb], cp: ClassifyParams,
-      lcaOpt: Option[Lca]): Dataset[ReadResult] = {
-    import spark.implicits._
+      lcaOpt: Option[Lca]): Dataset[ReadResult] =
     probeStage(spark,
       readProjection(reads, idCol, contentCol, content2Col, dbB.value.params)
-        .as[(String, Int, Array[Long])], dbB, cp, lcaOpt) {
+        .as(readEnc), dbB, cp, lcaOpt) {
       case ((id, len, hs), one) => one(id, len, hs)
+    }(resultEnc)
+
+  /** `allMatches(classifyB(...))` as one pass over InternalRows, for the
+    * per-micro-batch live-store path: the shingle projection's rows go
+    * straight through the partition classifier into `.all` rows, with no
+    * `ReadResult` serializer, `posexplode` or second row pass to analyze
+    * and plan per batch. Same rows and schema as the Dataset path;
+    * `executed` gains 1 per executed partition. */
+  private[graft] def allMatchesB(reads: DataFrame, idCol: String,
+      contentCol: String, dbB: Broadcast[ProbeDb], cp: ClassifyParams,
+      executed: LongAccumulator): DataFrame = {
+    val rows = readProjection(reads, idCol, contentCol, None,
+      dbB.value.params).queryExecution.toRdd
+    val out = rows.mapPartitions { iter =>
+      executed.add(1L)
+      val one = partitionClassifier(dbB, cp, None)
+      iter.flatMap { r =>
+        // toRdd reuses its row buffers: copy the id before it outlives r.
+        // It rides beside the result, of which only the matches are read
+        val id = if (r.isNullAt(0)) null else r.getUTF8String(0).clone()
+        val ms = one(null, r.getInt(1), r.getArray(2).toLongArray()).matches
+        Iterator.tabulate(ms.length) { i =>
+          InternalRow(id, UTF8String.fromString(ms(i).target), ms(i).count, i)
+        }
+      }
     }
+    GraftColumnBridge.internalCreateDataFrame(reads.sparkSession, out,
+      allMatchesSchema)
   }
+
+  /** Schema of [[allMatches]]. */
+  private val allMatchesSchema = StructType(Seq(
+    StructField("read_id", StringType),
+    StructField("target", StringType),
+    StructField("kmer_count", IntegerType),
+    StructField("match_order", IntegerType, nullable = false)))
 
   /** The one read projection: `lead` columns, then (read_id, len, hs). The
     * shingles run inside whole-stage codegen (native expression), so the
@@ -134,13 +181,20 @@ object Classify {
       emit: (I, (String, Int, Array[Long]) => ReadResult) => O): Dataset[O] = {
     val lcaB = lcaOpt.map(spark.sparkContext.broadcast(_))
     rows.mapPartitions { iter =>
-      val d = dbB.value
-      val lca = lcaB.map(_.value)
-      val counts = new Array[Int](d.targets.length)
-      val one = (id: String, len: Int, hs: Array[Long]) =>
-        classifyOne(id, len, hs, d, cp, lca, counts)
+      val one = partitionClassifier(dbB, cp, lcaB)
       iter.map(emit(_, one))
     }
+  }
+
+  /** One partition's classifier: the broadcast values and a `counts`
+    * scratch fetched and allocated once, shared by every read of the
+    * partition. Every probe emitter goes through it. */
+  private def partitionClassifier(dbB: Broadcast[ProbeDb], cp: ClassifyParams,
+      lcaB: Option[Broadcast[Lca]]): (String, Int, Array[Long]) => ReadResult = {
+    val d = dbB.value
+    val lca = lcaB.map(_.value)
+    val counts = new Array[Int](d.targets.length)
+    (id, len, hs) => classifyOne(id, len, hs, d, cp, lca, counts)
   }
 
   private[classify] def classifyOne(id: String, contentLen: Int,
@@ -354,17 +408,14 @@ object Classify {
       sampleCol: String, idCol: String, contentCol: String, db: ProbeDb,
       cp: ClassifyParams = ClassifyParams(),
       lcaOpt: Option[Lca] = None,
-      content2Col: Option[String] = None): DataFrame = {
-    import spark.implicits._
+      content2Col: Option[String] = None): DataFrame =
     probeStage(spark,
       readProjection(reads, idCol, contentCol, content2Col, db.params,
-        col(sampleCol).cast("string").as("sample"))
-        .as[(String, String, Int, Array[Long])],
+        col(sampleCol).cast("string").as("sample")).as(sampleReadEnc),
       spark.sparkContext.broadcast(db), cp, lcaOpt) {
       case ((sample, id, len, hs), one) => (sample, one(id, len, hs))
-    }.toDF("sample", "r")
+    }(sampleResultEnc).toDF("sample", "r")
       .select(col("sample"), col("r.*"))
-  }
 
   /** Per-sample `.rep`: (sample, target, matches, unique_reads, lca_reads)
     * — the reference's per-prefix report rows in one aggregation

@@ -92,13 +92,17 @@ object StreamClassify {
    * ONLY refresh trigger, and it is atomic at a batch boundary: one batch
    * is classified entirely by one generation, never a mix.
    *
+   * Each batch is one pass over InternalRows (`Classify.allMatchesB`):
+   * the shingle projection's rows go through the partition classifier
+   * straight into `.all` rows (read_id, target, kmer_count, match_order),
+   * so the batch plans no object serializer, generator or second row pass.
+   *
    * Broadcast discipline: ONE broadcast per generation, reused across
-   * batches (`Classify.classifyB`), so each executor's lazy shard
-   * cache persists between micro-batches instead of re-fetching every
-   * touched shard per batch; the superseded generation's broadcast is
-   * destroyed at rotation — foreachBatch bodies run synchronously, so
-   * every batch that used it has already completed and no in-flight task
-   * can still hold it.
+   * batches, so each executor's lazy shard cache persists between
+   * micro-batches instead of re-fetching every touched shard per batch;
+   * the superseded generation's broadcast is destroyed at rotation —
+   * foreachBatch bodies run synchronously, so every batch that used it
+   * has already completed and no in-flight task can still hold it.
    *
    * `sink` receives (batch output, batchId, generation that classified
    * it) and must MATERIALIZE the output before returning (write/collect/
@@ -227,12 +231,10 @@ object StreamClassify {
           if (old != null) old.destroy()
           (fresh, cur)
         }
-      val out0 = Classify.allMatches(Classify.classifyB(
-        spark, batch.toDF(), idCol, contentCol, dbForBatch, cp))
       val before = execAcc.value
-      val out = out0.mapPartitions { it => execAcc.add(1L); it }(
-        org.apache.spark.sql.Encoders.row(out0.schema))
-      sink(out.toDF(), batchId, genForBatch)
+      val out = Classify.allMatchesB(batch.toDF(), idCol, contentCol,
+        dbForBatch, cp, execAcc)
+      sink(out, batchId, genForBatch)
       // happy path (sink ran the plan) costs nothing extra; the batch
       // check on the raw input runs only when no task ever executed
       if (execAcc.value == before && !batch.isEmpty)

@@ -1,10 +1,20 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to the private[sql] Expression <-> Column converters (the classic
-  * pre-Connect API). Lives in the sql package solely for access. */
+  * pre-Connect API) and to the InternalRow DataFrame constructor. Lives in
+  * the sql package solely for access. */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** A DataFrame over rows already in Catalyst's internal form: its plan is
+    * one RDD scan, with no encoder to derive, analyze or run. */
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

@@ -157,6 +157,30 @@ class SketchSpec extends AnyFunSuite {
     hashes(300, 9).foreach(k => assert(r.estimate(k) == cm.estimate(k)))
   }
 
+  test("cms: cells equal the remainder rule at power-of-two and other widths") {
+    val rnd = new scala.util.Random(17)
+    val keys = Array.fill(100000)(rnd.nextLong()) // about half negative
+    assert(keys.count(_ < 0) > 40000)
+    val depth = 7
+    Seq(256, 2048, 4096, 8192, 2719).foreach { width =>
+      val cm = CountMin.empty(depth, width)
+      val want = new Array[Long](depth * width)
+      keys.foreach { k =>
+        cm.add(k)
+        var r = 0
+        while (r < depth) {
+          val h = Hashing.mix64(k ^ (0x9E3779B97F4A7C15L * (r + 1)))
+          want(r * width + ((h & Long.MaxValue) % width).toInt) += 1
+          r += 1
+        }
+      }
+      assert(cm.counts.sameElements(want), s"width $width: counters differ")
+      assert(cm.toBytes.sameElements(
+        new CountMin(depth, width, want, keys.length.toLong).toBytes),
+        s"width $width: bytes differ")
+    }
+  }
+
   // ---------------- KLL ----------------
 
   test("kll: rank error within bound on uniform and skewed data") {

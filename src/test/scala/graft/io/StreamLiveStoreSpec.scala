@@ -36,16 +36,24 @@ class StreamLiveStoreSpec extends AnyFunSuite {
 
     // content for a target that does NOT exist at generation 1
     val zContent = "ZYXWVUTSRQPONMLKJIHGFEDCBA" * 4
-    val probeRows = corpus.select($"path".as("id"), $"content")
-      .limit(20).collect().map(r => (r.getString(0), r.getString(1))) :+
-      (("zprobe", zContent))
+    val files = corpus.select($"repo", $"path", $"content").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    // two files of different repos and like length joined: a read
+    // matching both
+    val a = files.head
+    val b = files.filter(_._1 != a._1).minBy(f => math.abs(f._3.length - a._3.length))
+    val probeRows = files.take(20).map(f => (f._2, f._3)) ++
+      Seq(("mixprobe", a._3 + b._3), ("zprobe", zContent))
 
     val ms = MemoryStream[(String, String)]
     val got = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Int, Array[String])]
+    val schemas = scala.collection.mutable.ArrayBuffer
+      .empty[org.apache.spark.sql.types.StructType]
     val q = StreamClassify.classifyLiveStore(spark,
         ms.toDF().toDF("id", "content"), "id", "content", dir, cp) {
         (out, batchId, gen) =>
+          schemas += out.schema
           got += ((batchId, gen,
             out.collect().map(_.toString).sorted))
       }
@@ -59,7 +67,8 @@ class StreamLiveStoreSpec extends AnyFunSuite {
     SketchBuild.updateStored(spark, dir,
       Seq(("zrepo", zContent)).toDF("repo", "content"), "repo", "content")
 
-    // batch 2 runs on generation 2 and must see the new target
+    // batch 2 runs on generation 2 and must see the new target; it also
+    // holds the two-repo read
     ms.addData(probeRows.drop(15): _*); q.processAllAvailable()
     q.stop()
 
@@ -82,6 +91,17 @@ class StreamLiveStoreSpec extends AnyFunSuite {
     assert(got(0)._3.sameElements(batchAnswer(probeRows.take(10), db1)))
     assert(got(1)._3.sameElements(batchAnswer(probeRows.slice(10, 15), db1)))
     assert(got(2)._3.sameElements(batchAnswer(probeRows.drop(15), db2)))
+
+    // every batch has the schema (names and types) of the batch-mode .all
+    val want = Classify.allMatches(Classify.classify(spark,
+      probeRows.toSeq.toDF("id", "content"), "id", "content", db2, cp)).schema
+    assert(schemas.size == 3 && schemas.forall(sc =>
+      sc.map(f => (f.name, f.dataType)) == want.map(f => (f.name, f.dataType))),
+      s"${schemas.map(_.simpleString)} vs ${want.simpleString}")
+    // the two-repo read lists both repos, one of them at match_order 1
+    assert(got(2)._3.count(_.startsWith("[mixprobe,")) >= 2 &&
+      got(2)._3.exists(s => s.startsWith("[mixprobe,") && s.endsWith(",1]")),
+      got(2)._3.filter(_.contains("mixprobe")).mkString("; "))
 
     // the z-probe resolves to the added target at generation 2 only
     assert(got(2)._3.exists(s => s.contains("zprobe") && s.contains("zrepo")))
@@ -181,6 +201,25 @@ class StreamLiveStoreSpec extends AnyFunSuite {
       IbfParams(k = 8, w = 8, maxFp = 1e-5))
     val probe = corpus.select($"path".as("id"), $"content").limit(3)
       .collect().map(r => (r.getString(0), r.getString(1)))
+
+    // sinks that materialize only through count() or only through a write
+    val outDir = java.nio.file.Files
+      .createTempDirectory("graft_lazysink_out").toString + "/out"
+    var counted = 0L
+    Seq[DataFrame => Unit](
+      out => counted += out.count(),
+      out => out.write.mode("append").parquet(outDir)
+    ).foreach { materialize =>
+      val ms = MemoryStream[(String, String)]
+      val q = StreamClassify.classifyLiveStore(spark,
+          ms.toDF().toDF("id", "content"), "id", "content", dir, cp) {
+          (out, _, _) => materialize(out)
+        }.start()
+      try { ms.addData(probe: _*); q.processAllAvailable() }
+      finally q.stop()
+    }
+    assert(counted > 0)
+    assert(spark.read.parquet(outDir).count() == counted)
 
     val ms = MemoryStream[(String, String)]
     var held: DataFrame = null

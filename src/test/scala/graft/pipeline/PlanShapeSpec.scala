@@ -5,8 +5,10 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.GraftTestAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec,
-  ProjectExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, FileSourceScanExec,
+  GenerateExec, MapPartitionsExec, ProjectExec, QueryExecution,
+  SerializeFromObjectExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, ScalaAggregator}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
@@ -20,6 +22,7 @@ import graft.classify.{Classify, ClassifyParams}
 import graft.core.Lca
 import graft.spark.{GraftFunctions, ShinglesExpr, SparkTestSession}
 import graft.spark.udaf.HashSketchAgg
+import graft.streaming.StreamClassify
 
 /** Physical-plan properties the engine's design relies on: every classify
   * entry point is one map-only probe over the shingle projection, a build
@@ -96,8 +99,10 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     ).foreach { case (name, ds) => assertProbeShape(name, ds) }
   }
 
-  /** `body`'s result and the executed plans of every query it ran. */
-  private def withPlans[T](body: => T): (T, Seq[SparkPlan]) = {
+  /** `body`'s result and the executed plans of every query it ran in
+    * session `on`. */
+  private def withPlans[T](body: => T,
+      on: org.apache.spark.sql.SparkSession = spark): (T, Seq[SparkPlan]) = {
     val plans = ArrayBuffer.empty[SparkPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
@@ -108,12 +113,12 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     docs.count() // the fixtures' own write/read stays out of the capture
     splitDocs.count()
     GraftTestAccess.drain(spark.sparkContext)
-    spark.listenerManager.register(listener)
+    on.listenerManager.register(listener)
     val out = try {
       val built = body
       GraftTestAccess.drain(spark.sparkContext)
       built
-    } finally spark.listenerManager.unregister(listener)
+    } finally on.listenerManager.unregister(listener)
     (out, plans.synchronized(plans.toSeq))
   }
 
@@ -126,6 +131,58 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       else Some((n, collect(plan) { case s: FileSourceScanExec => s }.size,
         plan.treeString))
     }
+
+  test("a classifyLiveStore micro-batch sink plans no object serializer, " +
+      "generator or MapPartitions, and the batch plans the kernel once") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_live")
+      .toString
+    SketchBuild.buildToStore(spark, docs, "target", "content", dir, p)
+    val reads = docs.select($"id".cast("string"), $"content").collect()
+      .map(r => (r.getString(0), r.getString(1)))
+    // every logical node planned while the strategy is installed, with
+    // its kernel count: the planner asks each strategy about each node
+    val planned = ArrayBuffer.empty[Int]
+    val recorder = new SparkStrategy {
+      override def apply(plan: LogicalPlan): Seq[SparkPlan] = {
+        planned.synchronized {
+          planned += plan.expressions.map(_.collect { case s: ShinglesExpr => s }.size).sum
+        }
+        Nil
+      }
+    }
+    val ms = MemoryStream[(String, String)]
+    var rows = 0L
+    // the stream plans in its own clone of the session
+    var streamSession: org.apache.spark.sql.SparkSession = null
+    val q = StreamClassify.classifyLiveStore(spark, ms.toDF().toDF("id", "content"),
+        "id", "content", dir, ClassifyParams()) { (out, _, _) =>
+      streamSession = out.sparkSession
+      rows += out.collect().length
+    }.start()
+    try {
+      // the first batch loads and broadcasts the generation; the second
+      // is the steady state
+      ms.addData(reads.take(12): _*); q.processAllAvailable()
+      val before = rows
+      val (_, plans) = withPlans({
+        streamSession.experimental.extraStrategies = Seq(recorder)
+        try { ms.addData(reads.drop(12): _*); q.processAllAvailable() }
+        finally streamSession.experimental.extraStrategies = Nil
+      }, on = streamSession)
+      assert(rows > before, "the sink saw no match rows")
+      assert(plans.nonEmpty, "no sink plan captured")
+      plans.foreach { plan =>
+        val objectOps = collect(plan) {
+          case n @ (_: DeserializeToObjectExec | _: SerializeFromObjectExec |
+              _: GenerateExec | _: MapPartitionsExec) => n.nodeName
+        }
+        assert(objectOps.isEmpty, s"$objectOps in:\n${plan.treeString}")
+      }
+      assert(planned.sum == 1, s"kernel planned ${planned.sum} times")
+    } finally q.stop()
+  }
 
   test("SketchBuild.build evaluates graft_shingles once per scan, any split") {
     Seq(docs -> false, splitDocs -> true).foreach { case (fixture, split) =>
