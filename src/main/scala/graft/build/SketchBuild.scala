@@ -5,7 +5,7 @@ import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 import org.apache.spark.HashPartitioner
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
@@ -568,12 +568,6 @@ object SketchDb {
  */
 object SketchBuild {
 
-  // the checkpoint rows' encoders, built once: (target, n_hashes) and
-  // (grp, shard, coarse)
-  private val cardsEnc = Encoders.tuple(Encoders.STRING, Encoders.scalaLong)
-  private val shardRowEnc =
-    Encoders.tuple(Encoders.scalaInt, Encoders.BINARY, Encoders.BINARY)
-
   /** The (target, hs) shingle projection both passes consume. */
   private def hashedProjection(df: DataFrame, targetCol: String,
       contentCol: String, p: IbfParams): DataFrame = {
@@ -699,6 +693,7 @@ object SketchBuild {
       checkpointDir: Option[String], twoLevel: Boolean)(
       finish: (Seq[(String, Long)], IbfPlan, BinLayout,
         RDD[(Int, Array[Byte], Array[Byte])]) => T): T = {
+    import spark.implicits._
     withScan(Some(hashedProjection(df, targetCol, contentCol, p))) { scanned =>
       val blocks = scanned.get
       // ---- pass 1 (or resume) ----
@@ -707,17 +702,16 @@ object SketchBuild {
       val tag = paramsTag(p) +
         s";target=$targetCol;content=$contentCol;two=$twoLevel;v=2"
       val cards = checkpointed(spark, checkpointDir, "pass1_cardinalities",
-          tag)(cardinalities(blocks, p.hllP))(
-        spark.createDataset(_)(cardsEnc).toDF("target", "n_hashes"),
-        _.as(cardsEnc).collect().sortBy(_._1).toSeq)
+          tag)(cardinalities(blocks, p.hllP))(_.toDF("target", "n_hashes"),
+        _.as[(String, Long)].collect().sortBy(_._1).toSeq)
       val (thePlan, layout) = plan(cards, p)
 
       // ---- pass 2 (or resume): fold -> one shard per 64-bin group ----
       val rows = checkpointed(spark, checkpointDir, "pass2_group_shards",
           tag)(shardFold(spark, blocks, thePlan, entriesOf(cards, layout),
             if (twoLevel) Some(coarseSizing(cards, layout, p.maxFp)) else None))(
-        spark.createDataset(_)(shardRowEnc).toDF("grp", "shard", "coarse"),
-        _.as(shardRowEnc).rdd)
+        _.toDF("grp", "shard", "coarse"),
+        _.as[(Int, Array[Byte], Array[Byte])].rdd)
       finish(cards, thePlan, layout, rows)
     }
   }

@@ -1,7 +1,7 @@
 package graft.classify
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder,
   GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
@@ -50,15 +50,6 @@ final case class ReadResult(
  */
 object Classify {
 
-  // encoders derived by Scala reflection once, not on every call (a
-  // stream calls once per micro-batch); lazy, so an executor that only
-  // runs classifyOne never derives them
-  private lazy val readEnc = Encoders.product[(String, Int, Array[Long])]
-  private lazy val sampleReadEnc =
-    Encoders.product[(String, String, Int, Array[Long])]
-  private lazy val resultEnc = Encoders.product[ReadResult]
-  private lazy val sampleResultEnc = Encoders.product[(String, ReadResult)]
-
   /**
    * Classify `reads` (columns idCol, contentCol) against `db`.
    * Returns the per-read results dataset (one row per read).
@@ -100,12 +91,14 @@ object Classify {
   private def classifyReads(spark: SparkSession, reads: DataFrame,
       idCol: String, contentCol: String, content2Col: Option[String],
       dbB: Broadcast[ProbeDb], cp: ClassifyParams,
-      lcaOpt: Option[Lca]): Dataset[ReadResult] =
+      lcaOpt: Option[Lca]): Dataset[ReadResult] = {
+    import spark.implicits._
     probeStage(spark,
       readProjection(reads, idCol, contentCol, content2Col, dbB.value.params)
-        .as(readEnc), dbB, cp, lcaOpt) {
+        .as[(String, Int, Array[Long])], dbB, cp, lcaOpt) {
       case ((id, len, hs), one) => one(id, len, hs)
-    }(resultEnc)
+    }
+  }
 
   /** `allMatches(classifyB(...))` as one pass over InternalRows, for the
     * per-micro-batch live-store path: the shingle projection's rows go
@@ -408,14 +401,17 @@ object Classify {
       sampleCol: String, idCol: String, contentCol: String, db: ProbeDb,
       cp: ClassifyParams = ClassifyParams(),
       lcaOpt: Option[Lca] = None,
-      content2Col: Option[String] = None): DataFrame =
+      content2Col: Option[String] = None): DataFrame = {
+    import spark.implicits._
     probeStage(spark,
       readProjection(reads, idCol, contentCol, content2Col, db.params,
-        col(sampleCol).cast("string").as("sample")).as(sampleReadEnc),
+        col(sampleCol).cast("string").as("sample"))
+        .as[(String, String, Int, Array[Long])],
       spark.sparkContext.broadcast(db), cp, lcaOpt) {
       case ((sample, id, len, hs), one) => (sample, one(id, len, hs))
-    }(sampleResultEnc).toDF("sample", "r")
+    }.toDF("sample", "r")
       .select(col("sample"), col("r.*"))
+  }
 
   /** Per-sample `.rep`: (sample, target, matches, unique_reads, lca_reads)
     * — the reference's per-prefix report rows in one aggregation

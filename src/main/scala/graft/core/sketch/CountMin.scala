@@ -22,14 +22,9 @@ final class CountMin(val depth: Int, val width: Int, val counts: Array[Long],
 
   def total: Long = _total
 
-  // a power-of-two width takes the column from a mask, the same cell as
-  // `% width` without a 64-bit division; `forGuarantee`'s ceil(e/eps)
-  // widths are not powers of two and keep the remainder
-  private val mask: Long = if ((width & (width - 1)) == 0) width - 1 else -1L
-
   @inline private def cell(row: Int, key: Long): Int = {
-    val h = Hashing.mix64(key ^ (0x9E3779B97F4A7C15L * (row + 1))) & Long.MaxValue
-    row * width + (if (mask >= 0) h & mask else h % width).toInt
+    val h = Hashing.mix64(key ^ (0x9E3779B97F4A7C15L * (row + 1)))
+    row * width + ((h & Long.MaxValue) % width).toInt
   }
 
   def add(key: Long): Unit = add(key, 1L)

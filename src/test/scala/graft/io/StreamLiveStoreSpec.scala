@@ -92,12 +92,12 @@ class StreamLiveStoreSpec extends AnyFunSuite {
     assert(got(1)._3.sameElements(batchAnswer(probeRows.slice(10, 15), db1)))
     assert(got(2)._3.sameElements(batchAnswer(probeRows.drop(15), db2)))
 
-    // every batch has the schema (names and types) of the batch-mode .all
+    // every batch has the schema of the batch-mode .all: names, types and
+    // nullability
     val want = Classify.allMatches(Classify.classify(spark,
       probeRows.toSeq.toDF("id", "content"), "id", "content", db2, cp)).schema
-    assert(schemas.size == 3 && schemas.forall(sc =>
-      sc.map(f => (f.name, f.dataType)) == want.map(f => (f.name, f.dataType))),
-      s"${schemas.map(_.simpleString)} vs ${want.simpleString}")
+    assert(schemas.size == 3 && schemas.forall(_ == want),
+      s"${schemas.map(_.treeString)} vs ${want.treeString}")
     // the two-repo read lists both repos, one of them at match_order 1
     assert(got(2)._3.count(_.startsWith("[mixprobe,")) >= 2 &&
       got(2)._3.exists(s => s.startsWith("[mixprobe,") && s.endsWith(",1]")),
