@@ -16,76 +16,106 @@ import scala.collection.mutable.ArrayBuffer
  * (the north-rule "published bound" check uses a conservative 1.65*e(k)
  * envelope, e(k) ~ 2.3/k per the KLL paper's constant-factor regime).
  *
+ * Each level is one primitive `double[]` plus a length (no boxing on
+ * `add`), and the level capacities are computed once per depth.
+ *
  * No analog in the reference; required by the north rule for file-size /
  * shingle-count quantile queries.
  *
  * Serialized layout: [k: Int][nLevels: Int][n: Long][flags: Long]
- * then per level [len: Int][items: Double*len].
+ * then per level [len: Int][items: Double*len]. `toBytes` carries the
+ * whole state, so `fromBytes(toBytes)` continues exactly as the original.
  */
 final class Kll(val k: Int) extends Serializable {
   require(k >= 8)
-  private[sketch] var levels: ArrayBuffer[ArrayBuffer[Double]] =
-    ArrayBuffer(ArrayBuffer.empty[Double])
-  private[sketch] var alternate: Long = 0L // bit per level: keep odd vs even next time
-  private[sketch] var _n: Long = 0L
+  private var depth = 1
+  private var items: Array[Array[Double]] = Array(new Array[Double](8))
+  private var lens: Array[Int] = new Array[Int](1)
+  private var alternate: Long = 0L // bit per level: keep odd vs even next time
+  private var _n: Long = 0L
+  /** Capacity of each level at the current depth, and their sum. */
+  private var caps: Array[Int] = capacities(1)
+  private var totalCapacity: Int = caps(0)
+  /** Items retained over all levels. */
+  private var size = 0
 
   def n: Long = _n
 
-  private def capacity(level: Int): Int = {
-    val depth = levels.length
-    val h = depth - 1 - level // 0 for the top level
+  private def capacities(d: Int): Array[Int] = Array.tabulate(d) { level =>
+    val h = d - 1 - level // 0 for the top level
     math.max(2, math.ceil(k * math.pow(2.0 / 3.0, h.toDouble)).toInt)
   }
 
+  private def setDepth(d: Int): Unit = if (d > depth) {
+    items = java.util.Arrays.copyOf(items, d)
+    lens = java.util.Arrays.copyOf(lens, d)
+    var l = depth
+    while (l < d) { items(l) = new Array[Double](8); l += 1 }
+    depth = d
+    caps = capacities(d)
+    totalCapacity = caps.sum
+  }
+
+  /** Room for `extra` more items at level `l`. */
+  private def reserve(l: Int, extra: Int): Array[Double] = {
+    val need = lens(l) + extra
+    if (need > items(l).length)
+      items(l) = java.util.Arrays.copyOf(items(l), math.max(need, 2 * items(l).length))
+    items(l)
+  }
+
   def add(x: Double): Unit = {
-    levels(0) += x
+    reserve(0, 1)(lens(0)) = x
+    lens(0) += 1
+    size += 1
     _n += 1
     compress()
-  }
-
-  private def totalCapacity: Int = {
-    var s = 0; var l = 0
-    while (l < levels.length) { s += capacity(l); l += 1 }
-    s
-  }
-
-  private def size: Int = {
-    var s = 0; var l = 0
-    while (l < levels.length) { s += levels(l).length; l += 1 }
-    s
   }
 
   private def compress(): Unit = {
     while (size >= totalCapacity) {
       // compact the lowest level at/over its capacity
       var l = 0
-      while (l < levels.length && levels(l).length < capacity(l)) l += 1
-      if (l == levels.length) return
+      while (l < depth && lens(l) < caps(l)) l += 1
+      if (l == depth) return
       compactLevel(l)
     }
   }
 
   private def compactLevel(l: Int): Unit = {
-    if (l + 1 == levels.length) levels += ArrayBuffer.empty[Double]
-    val sorted = levels(l).sorted
+    if (l + 1 == depth) setDepth(depth + 1)
+    // Arrays.sort orders as java.lang.Double.compare; the values it ties
+    // are bit-equal (bar NaN payloads), so no order among them shows
+    val sorted = items(l)
+    val len = lens(l)
+    java.util.Arrays.sort(sorted, 0, len)
     // weight conservation: only an even count can be halved-and-promoted;
     // an odd buffer leaves its last item behind at this level.
-    val odd = sorted.length % 2 == 1
-    val m = if (odd) sorted.length - 1 else sorted.length
+    val odd = len % 2 == 1
+    val m = if (odd) len - 1 else len
     val keepOdd = ((alternate >>> l) & 1L) == 1L
     alternate ^= (1L << l)
-    val start = if (keepOdd) 1 else 0
-    val up = levels(l + 1)
-    var i = start
-    while (i < m) { up += sorted(i); i += 2 }
-    levels(l) = if (odd) ArrayBuffer(sorted(m)) else ArrayBuffer.empty[Double]
+    val up = reserve(l + 1, m / 2)
+    var u = lens(l + 1)
+    var i = if (keepOdd) 1 else 0
+    while (i < m) { up(u) = sorted(i); u += 1; i += 2 }
+    lens(l + 1) = u
+    if (odd) sorted(0) = sorted(m)
+    lens(l) = if (odd) 1 else 0
+    size -= m / 2
   }
 
   def merge(other: Kll): Kll = {
     require(other.k == k, s"incompatible KLL k=$k vs ${other.k}")
-    while (levels.length < other.levels.length) levels += ArrayBuffer.empty[Double]
+    setDepth(other.depth)
     var l = 0
-    while (l < other.levels.length) { levels(l) ++= other.levels(l); l += 1 }
+    while (l < other.depth) {
+      val len = other.lens(l)
+      System.arraycopy(other.items(l), 0, reserve(l, len), lens(l), len)
+      lens(l) += len
+      l += 1
+    }
+    size += other.size
     _n += other._n
     compress()
     this
@@ -95,28 +125,32 @@ final class Kll(val k: Int) extends Serializable {
   private def weighted: Array[(Double, Long)] = {
     val out = ArrayBuffer.empty[(Double, Long)]
     var l = 0
-    while (l < levels.length) {
+    while (l < depth) {
       val wgt = 1L << l
-      levels(l).foreach(v => out += ((v, wgt)))
+      var i = 0
+      while (i < lens(l)) { out += ((items(l)(i), wgt)); i += 1 }
       l += 1
     }
     out.sortBy(_._1).toArray
   }
 
   /** Estimated value at rank fraction q in [0,1]. */
-  def quantile(q: Double): Double = {
-    require(q >= 0.0 && q <= 1.0)
+  def quantile(q: Double): Double = quantiles(Array(q))(0)
+
+  /** [[quantile]] at each of `qs`, sorting the retained items once. */
+  def quantiles(qs: Array[Double]): Array[Double] = {
+    qs.foreach(q => require(q >= 0.0 && q <= 1.0))
     val w = weighted
-    if (w.isEmpty) return Double.NaN
-    val target = q * _n
-    var cum = 0L
-    var i = 0
-    while (i < w.length) {
-      cum += w(i)._2
-      if (cum >= target) return w(i)._1
-      i += 1
+    qs.map { q =>
+      if (w.isEmpty) Double.NaN
+      else {
+        val target = q * _n
+        var cum = 0L
+        var i = 0
+        while (i < w.length && cum + w(i)._2 < target) { cum += w(i)._2; i += 1 }
+        if (i < w.length) w(i)._1 else w.last._1
+      }
     }
-    w.last._1
   }
 
   /** Estimated rank fraction of value x. */
@@ -124,9 +158,10 @@ final class Kll(val k: Int) extends Serializable {
     if (_n == 0) return Double.NaN
     var below = 0L
     var l = 0
-    while (l < levels.length) {
+    while (l < depth) {
       val wgt = 1L << l
-      levels(l).foreach(v => if (v <= x) below += wgt)
+      var i = 0
+      while (i < lens(l)) { if (items(l)(i) <= x) below += wgt; i += 1 }
       l += 1
     }
     below.toDouble / _n
@@ -136,13 +171,15 @@ final class Kll(val k: Int) extends Serializable {
   def rankErrorBound: Double = math.min(0.5, 1.65 * 2.3 / k)
 
   def toBytes: Array[Byte] = {
-    var sz = 4 + 4 + 8 + 8
-    levels.foreach(b => sz += 4 + b.length * 8)
-    val bb = java.nio.ByteBuffer.allocate(sz).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(k).putInt(levels.length).putLong(_n).putLong(alternate)
-    levels.foreach { b =>
-      bb.putInt(b.length)
-      b.foreach(bb.putDouble)
+    val bb = java.nio.ByteBuffer.allocate(4 + 4 + 8 + 8 + 4 * depth + 8 * size)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.putInt(k).putInt(depth).putLong(_n).putLong(alternate)
+    var l = 0
+    while (l < depth) {
+      bb.putInt(lens(l))
+      var i = 0
+      while (i < lens(l)) { bb.putDouble(items(l)(i)); i += 1 }
+      l += 1
     }
     bb.array()
   }
@@ -155,17 +192,19 @@ object Kll {
     val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     val k = bb.getInt(); val nLevels = bb.getInt()
     val sk = new Kll(k)
-    val n = bb.getLong(); val alt = bb.getLong()
-    sk.levels = ArrayBuffer.fill(nLevels)(ArrayBuffer.empty[Double])
+    sk._n = bb.getLong()
+    sk.alternate = bb.getLong()
+    sk.setDepth(nLevels)
     var l = 0
     while (l < nLevels) {
       val len = bb.getInt()
+      val a = sk.reserve(l, len)
       var i = 0
-      while (i < len) { sk.levels(l) += bb.getDouble(); i += 1 }
+      while (i < len) { a(i) = bb.getDouble(); i += 1 }
+      sk.lens(l) = len
+      sk.size += len
       l += 1
     }
-    sk.alternate = alt
-    sk._n = n
     sk
   }
 }

@@ -24,14 +24,21 @@ final class TDigest private (
     private var nCentroids: Int,
     private var total: Double) extends Serializable {
 
-  private var bufMeans = new Array[Double](64)
-  private var bufWeights = new Array[Double](64)
+  // pending values, flushed every TDigest.BufferSize; the arrays grow to
+  // that size, so a digest that sees a few values allocates a few slots
+  private var bufMeans = Array.emptyDoubleArray
+  private var bufWeights = Array.emptyDoubleArray
   private var nBuf = 0
 
   def n: Double = { flush(); total }
 
   def add(x: Double, w: Double = 1.0): Unit = {
-    if (nBuf == bufMeans.length) flush()
+    if (nBuf == TDigest.BufferSize) flush()
+    if (nBuf == bufMeans.length) {
+      val len = math.min(TDigest.BufferSize, math.max(8, 2 * nBuf))
+      bufMeans = java.util.Arrays.copyOf(bufMeans, len)
+      bufWeights = java.util.Arrays.copyOf(bufWeights, len)
+    }
     bufMeans(nBuf) = x; bufWeights(nBuf) = w; nBuf += 1
   }
 
@@ -46,19 +53,40 @@ final class TDigest private (
     this
   }
 
+  /** Stable insertion sort of the pending (mean, weight) pairs by mean in
+    * `java.lang.Double.compare` order: ties keep insertion order. */
+  private def sortBuffer(): Unit = {
+    var i = 1
+    while (i < nBuf) {
+      val m = bufMeans(i); val w = bufWeights(i)
+      var j = i - 1
+      while (j >= 0 && java.lang.Double.compare(bufMeans(j), m) > 0) {
+        bufMeans(j + 1) = bufMeans(j); bufWeights(j + 1) = bufWeights(j)
+        j -= 1
+      }
+      bufMeans(j + 1) = m; bufWeights(j + 1) = w
+      i += 1
+    }
+  }
+
   private def flush(): Unit = {
     if (nBuf == 0) return
     // sort the buffer (insertion order independence up to merge sweep)
-    val idx = (0 until nBuf).sortBy(bufMeans)
-    val m2 = new Array[Double](nCentroids + nBuf)
-    val w2 = new Array[Double](nCentroids + nBuf)
+    sortBuffer()
+    val size = nCentroids + nBuf
+    val walk = TDigest.walk.get()
+    if (walk(0).length < size) {
+      walk(0) = new Array[Double](2 * size); walk(1) = new Array[Double](2 * size)
+    }
+    val m2 = walk(0)
+    val w2 = walk(1)
     // merge-sorted walk of (centroids, buffer)
     var a = 0; var b = 0; var k = 0
     while (a < nCentroids || b < nBuf) {
       val takeA = b >= nBuf ||
-        (a < nCentroids && means(a) <= bufMeans(idx(b)))
+        (a < nCentroids && means(a) <= bufMeans(b))
       if (takeA) { m2(k) = means(a); w2(k) = weights(a); a += 1 }
-      else { m2(k) = bufMeans(idx(b)); w2(k) = bufWeights(idx(b)); b += 1 }
+      else { m2(k) = bufMeans(b); w2(k) = bufWeights(b); b += 1 }
       k += 1
     }
     val newTotal = {
@@ -149,9 +177,36 @@ final class TDigest private (
     while (i < nCentroids) { bb.putDouble(means(i)); bb.putDouble(weights(i)); i += 1 }
     bb.array()
   }
+
+  /** The whole state, pending values included, for an aggregation buffer
+    * that crosses an exchange: unlike [[toBytes]] it does not flush, so a
+    * digest read back with [[TDigest.fromBufferBytes]] flushes, merges and
+    * serializes exactly as this one would.
+    * Layout: [compression: Double][total: Double][count: Int]
+    * [mean: Double, weight: Double]*count [pending: Int]
+    * [mean: Double, weight: Double]*pending. */
+  def toBufferBytes: Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(8 + 8 + 4 + nCentroids * 16 + 4 + nBuf * 16)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.putDouble(compression).putDouble(total).putInt(nCentroids)
+    var i = 0
+    while (i < nCentroids) { bb.putDouble(means(i)); bb.putDouble(weights(i)); i += 1 }
+    bb.putInt(nBuf)
+    i = 0
+    while (i < nBuf) { bb.putDouble(bufMeans(i)); bb.putDouble(bufWeights(i)); i += 1 }
+    bb.array()
+  }
 }
 
 object TDigest {
+  /** Pending values a digest holds before it flushes them. */
+  private final val BufferSize = 64
+
+  /** The flush's merge-walk scratch (means, weights), one per thread, so
+    * a digest keeps no scratch of its own between flushes. */
+  private val walk = ThreadLocal.withInitial[Array[Array[Double]]](
+    () => Array(Array.emptyDoubleArray, Array.emptyDoubleArray))
+
   def empty(compression: Double = 100.0): TDigest =
     new TDigest(compression, new Array[Double](0), new Array[Double](0), 0, 0.0)
 
@@ -165,6 +220,20 @@ object TDigest {
       td.add(m, w)
       i += 1
     }
+    td
+  }
+
+  def fromBufferBytes(bytes: Array[Byte]): TDigest = {
+    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val comp = bb.getDouble(); val total = bb.getDouble(); val k = bb.getInt()
+    val means = new Array[Double](k)
+    val weights = new Array[Double](k)
+    var i = 0
+    while (i < k) { means(i) = bb.getDouble(); weights(i) = bb.getDouble(); i += 1 }
+    val td = new TDigest(comp, means, weights, k, total)
+    val pending = bb.getInt()
+    i = 0
+    while (i < pending) { td.add(bb.getDouble(), bb.getDouble()); i += 1 }
     td
   }
 

@@ -102,7 +102,7 @@ object Dedup {
   }
 
   /** Shared band-cap: aggregate each bucket to its maxBucket smallest ids
-    * (graft.spark.udaf.SketchAggs.MinKIdsAgg), return the exploded
+    * (graft.spark.udaf.MinKSpec), return the exploded
     * (keyCol, id) frame twice — side A counts dropped members into an
     * accumulator, side B is the pure twin for the self-join (the join
     * duplicates its child subtree, so a counting udf on both sides would

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.UserDefinedFunction
 
 import graft.core.{Hashing, MinHash, SimHash}
-import graft.core.sketch.HashSketch
-import graft.spark.udaf.{BloomSpec, CmsSpec, HashSketchAgg, HllSpec, SketchSpec}
-import graft.spark.udaf.SketchAggs._
+import graft.spark.udaf.{AggSpec, BloomSpec, CmsSpec, HllSpec, KllSpec, MinKSpec,
+  SketchAgg, TDigestSpec}
 
 /**
  * Column-function surface of the engine. The shingle/token hashing runs as
@@ -81,35 +80,35 @@ object GraftFunctions {
   // ---- sketch aggregations ---------------------------------------------
 
   def hllCount(hashes: Column, p: Int = 14): Column =
-    HashSketchAgg.col(hashes, HllSpec(p, count = true))
+    SketchAgg.col(hashes, HllSpec(p, count = true))
 
   def hllSketch(hashes: Column, p: Int = 14): Column =
-    HashSketchAgg.col(hashes, HllSpec(p, count = false))
+    SketchAgg.col(hashes, HllSpec(p, count = false))
 
   def bloomSketch(hashes: Column, numBits: Long, numHashes: Int): Column =
-    HashSketchAgg.col(hashes, BloomSpec(numBits, numHashes))
+    SketchAgg.col(hashes, BloomSpec(numBits, numHashes))
 
   /** Band-cap primitive: k smallest ids per group + dropped count
     * (struct<ids: array<bigint>, dropped: bigint>) — see
-    * [[graft.spark.udaf.SketchAggs.MinKIdsAgg]]. */
+    * [[graft.spark.udaf.MinKSpec]]. */
   def minKIds(id: Column, k: Int): Column =
-    udaf(new MinKIdsAgg(k)).apply(id)
+    SketchAgg.col(id, MinKSpec(k))
 
   def cmsSketch(hashes: Column, depth: Int = 7, width: Int = 8192): Column =
-    HashSketchAgg.col(hashes, CmsSpec(depth, width))
+    SketchAgg.col(hashes, CmsSpec(depth, width))
 
   def kllSketch(value: Column, k: Int = 256): Column =
-    udaf(new KllSketchAgg(k)).apply(value)
+    SketchAgg.col(value, KllSpec(k))
 
   def kllQuantiles(value: Column, qs: Array[Double], k: Int = 256): Column =
-    udaf(new KllQuantilesAgg(k, qs)).apply(value)
+    SketchAgg.col(value, KllSpec(k, Some(qs.toSeq)))
 
   def tdigestSketch(value: Column, compression: Double = 100.0): Column =
-    udaf(new TDigestSketchAgg(compression)).apply(value)
+    SketchAgg.col(value, TDigestSpec(compression))
 
   def tdigestQuantiles(value: Column, qs: Array[Double],
       compression: Double = 100.0): Column =
-    udaf(new TDigestQuantilesAgg(compression, qs)).apply(value)
+    SketchAgg.col(value, TDigestSpec(compression, Some(qs.toSeq)))
 
   // ---- SQL registration --------------------------------------------------
 
@@ -149,14 +148,13 @@ object GraftFunctions {
     }
   }
 
-  /** A SQL sketch function over one hash array, its parameters fixed. */
-  private def registerSketch[S <: HashSketch[S]](spark: SparkSession,
-      spec: SketchSpec[S]): Unit =
+  /** A SQL sketch function over one column, its parameters fixed. */
+  private def registerSketch[B](spark: SparkSession, spec: AggSpec[B]): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(spec.name,
       es => {
         if (es.length != 1) throw new IllegalArgumentException(
-          s"${spec.name} takes one array<bigint> argument, got ${es.length}")
-        HashSketchAgg(es.head, spec)
+          s"${spec.name} takes one ${spec.inputType.simpleString} argument, got ${es.length}")
+        SketchAgg(es.head, spec)
       },
       "scala_udf")
 
@@ -188,11 +186,11 @@ object GraftFunctions {
     registerSketch(spark, HllSpec(14, count = true))
     registerSketch(spark, HllSpec(14, count = false))
     registerSketch(spark, CmsSpec(7, 8192))
-    spark.udf.register("graft_kll_sketch", udaf(new KllSketchAgg(256)))
-    // UDAF registration fixes constructor params at registration time, so
-    // the SQL surface carries the library default cap (10000); a different
-    // maxBucket needs the Scala API (GraftFunctions.minKIds(col, k)) or a
-    // re-registration under another name
-    spark.udf.register("graft_min_k_ids", udaf(new MinKIdsAgg(10000)))
+    registerSketch(spark, KllSpec(256))
+    // registration fixes the parameters, so the SQL surface carries the
+    // library default cap (10000); a different maxBucket needs the Scala
+    // API (GraftFunctions.minKIds(col, k)) or a re-registration under
+    // another name
+    registerSketch(spark, MinKSpec(10000))
   }
 }

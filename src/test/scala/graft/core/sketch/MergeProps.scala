@@ -99,11 +99,10 @@ object MergeProps extends Properties("sketch-merge") {
 
   property("minK: split-invariant merge == single-pass k-smallest + dropped") =
     forAll(genSplit, Gen.chooseNum(1, 64)) { case ((xs, chunks), k) =>
-      import graft.spark.udaf.SketchAggs.MinKIdsAgg
-      val agg = new MinKIdsAgg(k)
-      val bulk = agg.finish(xs.foldLeft(agg.zero)(agg.reduce))
-      val parts = chunks.map(c => c.foldLeft(agg.zero)(agg.reduce))
-      val merged = agg.finish(parts.reverse.foldLeft(agg.zero)(agg.merge))
+      def fold(vs: Array[Long]): MinK = { val m = MinK.empty(k); vs.foreach(m.add); m }
+      val bulk = fold(xs)
+      val parts = chunks.map(c => fold(c))
+      val merged = parts.reverse.foldLeft(MinK.empty(k))(_.merge(_))
       val expect = xs.distinct.sorted.take(k) // ids are distinct by construction
       Prop(merged.ids.sameElements(bulk.ids) &&
         bulk.ids.sameElements(expect.take(bulk.ids.length)) &&

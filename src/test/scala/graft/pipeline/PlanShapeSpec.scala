@@ -21,7 +21,7 @@ import graft.build.{IbfParams, SketchBuild, SketchDb}
 import graft.classify.{Classify, ClassifyParams}
 import graft.core.Lca
 import graft.spark.{GraftFunctions, ShinglesExpr, SparkTestSession}
-import graft.spark.udaf.HashSketchAgg
+import graft.spark.udaf.SketchAgg
 import graft.streaming.StreamClassify
 
 /** Physical-plan properties the engine's design relies on: every classify
@@ -267,16 +267,24 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("a sketch groupBy plans ObjectHashAggregate partial -> exchange -> " +
       "final over HashSketchAgg, with no ScalaAggregator") {
     GraftFunctions.register(spark)
-    val df = (0 until 200).map(i => (s"g${i % 5}", s"tok${i % 17} tok${i % 5} x$i"))
-      .toDF("g", "text")
-      .select($"g", GraftFunctions.tokenHashes($"text").as("hs"))
+    // the aggregate was named HashSketchAgg when it held only the hash
+    // sketches; it is SketchAgg now, and the quantile and band-cap
+    // aggregates must plan the same way
+    val df = (0 until 200).map(i => (s"g${i % 5}", s"tok${i % 17} tok${i % 5} x$i",
+        i.toLong, math.sqrt(i.toDouble)))
+      .toDF("g", "text", "id", "v")
+      .select($"g", GraftFunctions.tokenHashes($"text").as("hs"), $"id", $"v")
     df.createOrReplaceTempView("t_plan_sketch")
+    val qs = Array(0.25, 0.5)
     Seq(
       "api" -> df.groupBy("g").agg(GraftFunctions.hllCount($"hs"),
         GraftFunctions.hllSketch($"hs"), GraftFunctions.bloomSketch($"hs", 4096, 3),
-        GraftFunctions.cmsSketch($"hs")),
+        GraftFunctions.cmsSketch($"hs"), GraftFunctions.kllSketch($"v"),
+        GraftFunctions.kllQuantiles($"v", qs), GraftFunctions.tdigestSketch($"v"),
+        GraftFunctions.tdigestQuantiles($"v", qs), GraftFunctions.minKIds($"id", 8)),
       "sql" -> spark.sql("select g, graft_hll_count(hs), graft_hll_sketch(hs), " +
-        "graft_cms_sketch(hs) from t_plan_sketch group by g")
+        "graft_cms_sketch(hs), graft_kll_sketch(v), graft_min_k_ids(id) " +
+        "from t_plan_sketch group by g")
     ).foreach { case (name, q) =>
       assert(q.collect().length == 5, name)
       val plan = q.queryExecution.executedPlan
@@ -290,7 +298,7 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val below = collect(exchanges.head) { case a: ObjectHashAggregateExec => a }
       assert(below.size == 1 && modes(below.head) == Set(Partial), tree)
       assert(aggs.forall(_.aggregateExpressions.forall(
-        _.aggregateFunction.isInstanceOf[HashSketchAgg[_]])), tree)
+        _.aggregateFunction.isInstanceOf[SketchAgg[_]])), tree)
       assert(collect(plan) { case n => n.expressions.flatMap(_.collect {
         case s: ScalaAggregator[_, _, _] => s }) }.flatten.isEmpty, tree)
     }
