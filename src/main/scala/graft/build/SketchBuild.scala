@@ -3,7 +3,6 @@ package graft.build
 import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -117,14 +116,16 @@ private[graft] final class HashBlock(val names: Array[String],
     val target: Array[Int], val hashes: Array[Array[Long]]) extends Serializable
 
 private[graft] object HashBlock {
-  /** The block of one partition of a (target, hs) projection. */
-  def of(rows: Iterator[InternalRow]): HashBlock = {
+  /** The block of one partition of a (target, hs) projection whose target
+    * column is named `targetCol`; a null target is refused. */
+  def of(rows: Iterator[InternalRow], targetCol: String): HashBlock = {
     val index = new java.util.HashMap[String, Integer]
     val names = ArrayBuffer.empty[String]
     val target = new ArrayBuilder.ofInt
     val hashes = ArrayBuffer.empty[Array[Long]]
     rows.foreach { r =>
-      val t = if (r.isNullAt(0)) null else r.getUTF8String(0).toString
+      require(!r.isNullAt(0), s"a row has a null target in column '$targetCol'")
+      val t = r.getUTF8String(0).toString
       var i = index.get(t)
       if (i == null) { i = names.length; index.put(t, i); names += t }
       target += i
@@ -135,41 +136,44 @@ private[graft] object HashBlock {
   }
 }
 
-/** One 64-bin group's shard under construction: the interleaved filter
-  * and, when `coarse` gives its (bits, hashes), the group's union Bloom
-  * (the group's bin of a two-level db's coarse filter). Both are allocated
-  * at the first hash, so a group no hash reached stays empty (`shard` is
-  * null). Merge is bitwise OR (GanonBuild.cpp:655-698 inserts; the order
-  * of inserts and merges does not change a bit). */
+/** One 64-bin group's shard under construction, sparse first: it holds its
+  * routed slices while their hashes, at 8 bytes each, weigh no more than
+  * the dense form (`limit` hashes), as HLL++ keeps a sparse list (Heule,
+  * Nunkesser & Hall, EDBT 2013). One more hash densifies it into the
+  * interleaved filter and, when `coarse` gives its (bits, hashes), the
+  * group's union Bloom (the group's bin of a two-level db's coarse
+  * filter). A group no hash reached stays empty (a null shard blob).
+  * Merge is concatenation or bitwise OR (GanonBuild.cpp:655-698 inserts;
+  * the order of inserts and merges does not change a bit). */
 private[graft] final class GroupFold(bitsPerBin: Long, numHashes: Int,
     coarse: Option[(Long, Int)]) extends Serializable {
-  var shard: InterleavedBloom = null
-  var union: Bloom = null
+  private var shard: InterleavedBloom = null
+  private var union: Bloom = null
+  private var pending = List.empty[BinLayout.Slice]
+  private var n = 0L
 
-  /** Add hash `h` to the group-local bin `bin`. */
-  def add(h: Long, bin: Int): Unit = {
-    if (shard == null) {
-      shard = InterleavedBloom.empty(64, bitsPerBin, numHashes)
-      union = coarse.map { case (b, k) => Bloom.empty(b, k) }.orNull
-    }
-    shard.add(h, bin)
-    if (union != null) union.add(h)
-  }
+  /** Most hashes the sparse form holds: 8 bytes a hash against the dense
+    * form's `8 * bitsPerBin` bytes plus the union's `bits / 8`. */
+  def limit: Long = bitsPerBin + coarse.fold(0L)(_._1 / 64)
+  def isDense: Boolean = shard != null
 
   /** Add a routed slice of this group: each hash into its target's bin. */
   def addSlice(s: BinLayout.Slice): GroupFold = {
-    val off = s.grp * 64
-    var i = 0
-    while (i < s.hs.length) {
-      add(s.hs(i), s.base + BinLayout.routeBin(s.hs(i), s.split) - off)
-      i += 1
+    if (shard == null && n + s.hs.length <= limit) {
+      pending = s :: pending
+      n += s.hs.length
+    } else {
+      densify()
+      fold(s)
     }
     this
   }
 
+  /** Merge `o` in: a sparse side's slices are added to the other side, two
+    * dense ones OR. Either side may be returned. */
   def or(o: GroupFold): GroupFold =
-    if (o.shard == null) this
-    else if (shard == null) o
+    if (o.shard == null) { o.pending.foreach(addSlice); this }
+    else if (shard == null) o.or(this)
     else {
       val (x, y) = (shard.words, o.shard.words)
       var i = 0
@@ -179,9 +183,30 @@ private[graft] final class GroupFold(bitsPerBin: Long, numHashes: Int,
     }
 
   /** (shard, union) blobs; null for an empty group or an absent union. */
-  def blobs: (Array[Byte], Array[Byte]) =
+  def blobs: (Array[Byte], Array[Byte]) = {
+    if (n > 0) densify()
     if (shard == null) (null, null)
     else (shard.toBytes, if (union == null) null else union.toBytes)
+  }
+
+  private def densify(): Unit = if (shard == null) {
+    shard = InterleavedBloom.empty(64, bitsPerBin, numHashes)
+    union = coarse.map { case (b, k) => Bloom.empty(b, k) }.orNull
+    pending.foreach(fold)
+    pending = Nil
+    n = 0
+  }
+
+  private def fold(s: BinLayout.Slice): Unit = {
+    val off = s.grp * 64
+    var i = 0
+    while (i < s.hs.length) {
+      val h = s.hs(i)
+      shard.add(h, s.base + BinLayout.routeBin(h, s.split) - off)
+      if (union != null) union.add(h)
+      i += 1
+    }
+  }
 }
 
 /** Broadcastable probe side of the classify join: a [[SketchDb]] or a
@@ -553,10 +578,10 @@ object SketchDb {
  *           per shard — no OR-merging, no transposing, no per-partition
  *           partials on the driver)
  *
- * Shuffle discipline: when numGroups >= parallelism each group's routed
- * hashes ship once, to one task that folds the whole group (no partial
- * shards); below that, each block folds map-side into per-group partial
- * shards, so a map task ships at most numGroups x shardBytes. Mega-target
+ * Shuffle discipline: each block fills one sparse-first buffer per group
+ * it reaches, which ships its routed hashes while they weigh no more than
+ * the dense shard and the dense partial shard after, so a map task ships
+ * at most min(its hashes, numGroups x shardBytes). Mega-target
  * skew is structurally gone: every technical bin holds at most
  * ~maxHashesBin hashes, so reducers are load-balanced by construction
  * (the salting idea, but derived from the same split-bin plan the
@@ -568,20 +593,23 @@ object SketchDb {
  */
 object SketchBuild {
 
-  /** The (target, hs) shingle projection both passes consume. */
+  /** The (target, hs) shingle projection both passes consume; the target
+    * keeps its column's name. */
   private def hashedProjection(df: DataFrame, targetCol: String,
       contentCol: String, p: IbfParams): DataFrame = {
     val base =
       if (p.minContentLen > 0) df.filter(octet_length(col(contentCol)) >= p.minContentLen)
       else df
-    base.select(col(targetCol).cast("string").as("target"),
+    base.select(col(targetCol).cast("string").as(targetCol),
       GraftFunctions.shingles(col(contentCol), p.k, p.w, p.seed).as("hs"))
   }
 
   /** The projection's rows as one [[HashBlock]] per partition. */
-  private def blocksOf(hashed: DataFrame): RDD[HashBlock] =
+  private def blocksOf(hashed: DataFrame): RDD[HashBlock] = {
+    val targetCol = hashed.columns.head
     hashed.queryExecution.toRdd.mapPartitions(rows =>
-      Iterator.single(HashBlock.of(rows)))
+      Iterator.single(HashBlock.of(rows, targetCol)))
+  }
 
   /** Run `body` over the blocks of `hashed` (None: no content to scan).
     * With `reuse` the blocks are persisted MEMORY_AND_DISK, so the passes
@@ -827,15 +855,14 @@ object SketchBuild {
     * coarse) rows, `coarse` being the group's union Bloom when `coarse`
     * gives its (bits, hashes) and null otherwise; each of `maskGroups` also
     * gets a row, with a null shard when no hash routed to it. Rows of
-    * targets missing from the entries route nowhere. The shuffle is as
-    * wide as the groups the entries and `maskGroups` span: every group for
-    * a build, only the touched ones for an update.
+    * targets missing from the entries route nowhere.
     *
-    * With at least as many groups as the shuffle is wide, each group's
-    * routed slices ship, sorted by group, to one task, which folds its
-    * groups one at a time (no partial shards). With fewer, each block folds
-    * map-side into one partial shard per group it touches (a map task
-    * ships at most numGroups x shardBytes), OR-merged in the reduce. */
+    * Each block fills one sparse-first [[GroupFold]] per group it reaches,
+    * so a group's few hashes ship as their slices and its many as a dense
+    * partial shard, whichever weighs less; one exchange merges them. The
+    * shuffle is as wide as the groups the entries and `maskGroups` span
+    * (every group for a build, only the touched ones for an update),
+    * capped at the session's parallelism. */
   private[graft] def shardFold(spark: SparkSession, blocks: RDD[HashBlock],
       thePlan: IbfPlan,
       entries: Seq[(String, Int, Int)], coarse: Option[(Long, Int)],
@@ -847,60 +874,27 @@ object SketchBuild {
     val numGroups = (entries.flatMap { case (_, b, n) =>
       b / 64 to (b + n - 1) / 64 } ++ maskGroups).distinct.size
     val (bits, h) = (thePlan.bitsPerBin, thePlan.numHashes)
-    val mk = () => new GroupFold(bits, h, coarse)
-    // one hash-less entry per mask group lands in the group's fold, so the
-    // group comes out even when no delta reaches it
-    def withMasks[V: scala.reflect.ClassTag](rdd: RDD[(Int, V)], v: Int => V) =
-      if (maskGroups.isEmpty) rdd
-      else rdd.union(sc.parallelize(maskGroups.map(g => (g, v(g))), 1))
+    val buffers = blocks.flatMap { b =>
+      val folds = scala.collection.mutable.HashMap.empty[Int, GroupFold]
+      b.target.indices.foreach { i =>
+        BinLayout.slices(bins, b.names(b.target(i)), b.hashes(i)).foreach { s =>
+          if (s.hs.length > 0)
+            folds.getOrElseUpdate(s.grp, new GroupFold(bits, h, coarse)).addSlice(s)
+        }
+      }
+      folds.iterator
+    }
+    // one empty buffer per mask group, so the group comes out even when no
+    // delta reaches it
+    val withMasks = if (maskGroups.isEmpty) buffers
+      else buffers.union(sc.parallelize(
+        maskGroups.map(g => (g, new GroupFold(bits, h, coarse))), 1))
     val parts = math.max(sc.defaultParallelism,
       spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    def slicesOf(b: HashBlock): Iterator[BinLayout.Slice] =
-      b.target.indices.iterator.flatMap { i =>
-        BinLayout.slices(bins, b.names(b.target(i)), b.hashes(i))
-      }.filter(_.hs.length > 0)
-    val folded =
-      if (numGroups >= parts)
-        // sorted by group, so a task folds one group at a time
-        withMasks(blocks.flatMap(slicesOf(_).map(s => (s.grp, s))),
-            g => BinLayout.Slice(g, g * 64, 1, Array.emptyLongArray))
-          .repartitionAndSortWithinPartitions(new HashPartitioner(parts))
-          .mapPartitions(foldRuns(_, mk))
-      else {
-        val partials = blocks.flatMap { b =>
-          val folds = scala.collection.mutable.HashMap.empty[Int, GroupFold]
-          slicesOf(b).foreach(s => folds.getOrElseUpdate(s.grp, mk()).addSlice(s))
-          folds.iterator
-        }
-        // a reduce task takes as many groups' partials (at most one per map
-        // task and group) as fit Spark SQL's advisory shuffle-partition
-        // size, as the adaptive coalescing of a SQL shuffle would
-        val groupBytes = (blocks.getNumPartitions + 1L) *
-          (8L * bits + coarse.fold(0L)(_._1 / 8))
-        val perTask = math.max(1L, JavaUtils.byteStringAsBytes(spark.conf.get(
-          "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")) / groupBytes)
-        val width = math.min(sc.defaultParallelism.toLong,
-          (numGroups + perTask - 1) / perTask).toInt
-        withMasks(partials, _ => mk())
-          .combineByKeyWithClassTag[GroupFold](identity, _ or _, _ or _,
-            new HashPartitioner(math.max(1, width)), mapSideCombine = false)
-      }
-    folded.map { case (g, f) => val (s, c) = f.blobs; (g, s, c) }
-  }
-
-  /** Group-sorted slices folded one group (one run) at a time. */
-  private def foldRuns(it: Iterator[(Int, BinLayout.Slice)],
-      mk: () => GroupFold): Iterator[(Int, GroupFold)] = {
-    val in = it.buffered
-    new Iterator[(Int, GroupFold)] {
-      def hasNext: Boolean = in.hasNext
-      def next(): (Int, GroupFold) = {
-        val g = in.head._1
-        val f = mk()
-        while (in.hasNext && in.head._1 == g) f.addSlice(in.next()._2)
-        (g, f)
-      }
-    }
+    withMasks.combineByKeyWithClassTag[GroupFold](identity, _ or _, _ or _,
+        new HashPartitioner(math.max(1, math.min(parts, numGroups))),
+        mapSideCombine = false)
+      .map { case (g, f) => val (s, c) = f.blobs; (g, s, c) }
   }
 
   /**

@@ -64,10 +64,12 @@ class StoreRetrySpec extends AnyFunSuite {
     val s = SparkSession.builder()
       .master("local[4,2]")
       .appName("graft-retry-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // two slices for a handle's blob copy: with a few groups, some task
-      // copies more than one blob, so the injected fault can fire
-      .config("spark.default.parallelism", "2")
+      // one shard-pass reducer (the pass is min(max(default parallelism,
+      // shuffle partitions), groups) wide) and one slice for a handle's
+      // blob copy: every writer has a task that writes more than one
+      // blob, so the injected fault can fire
+      .config("spark.sql.shuffle.partitions", "1")
+      .config("spark.default.parallelism", "1")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl",

@@ -113,24 +113,30 @@ object MergeProps extends Properties("sketch-merge") {
     }
 
   property("ibf shard: split-invariant OR-merge == bulk insert, routed bins") =
-    forAll(genSplit, Gen.chooseNum(1, 5)) { case ((xs, chunks), split) =>
+    forAll(genSplit, Gen.chooseNum(1, 62)) { case ((xs, chunks), split) =>
       import graft.build.{BinLayout, GroupFold}
-      def fold() = new GroupFold(4096, 3, Some((2048L, 2)))
+      // a buffer holds at most 256 + 4096 / 64 = 320 hashes sparse, so
+      // genSplit's chunks fall on both sides of the limit
+      def fold() = new GroupFold(256, 2, Some((4096L, 2)))
       def slice(hs: Array[Long]) = BinLayout.Slice(0, 2, split, hs)
-      // bulk: everything through one fold
+      // bulk: everything through one buffer
       val bulk = fold().addSlice(slice(xs))
-      // split: one fold per chunk, merged in arbitrary (reversed) order
+      // split: one buffer per chunk, merged in arbitrary (reversed) order
       val parts = chunks.map(c => fold().addSlice(slice(c)))
+      val forms = parts.map(b => if (b.isDense) 'd' else 's').mkString
       val merged = parts.reverse.foldLeft(fold())(_ or _)
-      val same = if (xs.isEmpty) bulk.shard == null && merged.shard == null
-        else java.util.Arrays.equals(bulk.shard.words, merged.shard.words) &&
-          java.util.Arrays.equals(bulk.union.words, merged.union.words)
+      val ((bs, bu), (ms, mu)) = (bulk.blobs, merged.blobs)
+      val same = if (xs.isEmpty) bs == null && ms == null
+        else java.util.Arrays.equals(bs, ms) && java.util.Arrays.equals(bu, mu)
       // every hash routed in [2, 2+split), present in its bin and the union
-      val routedOk = xs.forall { h =>
-        val bin = 2 + BinLayout.routeBin(h, split)
-        merged.shard.bulkCount(Array(h)).apply(bin) >= 1 &&
-          merged.union.contains(h)
+      val routedOk = xs.isEmpty || {
+        val (shard, union) = (InterleavedBloom.fromBytes(ms), Bloom.fromBytes(mu))
+        xs.forall { h =>
+          shard.bulkCount(Array(h)).apply(2 + BinLayout.routeBin(h, split)) >= 1 &&
+            union.contains(h)
+        }
       }
-      Prop(same && (xs.isEmpty || routedOk)) :| s"n=${xs.length} split=$split"
+      Prop.classify(forms.distinct.length == 2, "sparse and dense parts")(
+        Prop(same && routedOk) :| s"n=${xs.length} split=$split forms=$forms")
     }
 }
